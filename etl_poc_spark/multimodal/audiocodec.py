@@ -5,12 +5,15 @@ PARSE are decoded for REAL (RIFF/WAVE PCM via the `wave` module);
 everything else (mp3, ogg, flac — all need entropy coders the stdlib
 lacks) is the caller's honest-fallback problem. The per-sample math is
 numpy-vectorized (r17, guide §4.2 — numpy is already a hard dependency
-of the Arrow/pandas path these kernels run inside), and it is EXACT, not
-just close: every PCM-derived sample is a dyadic rational v / 2^k with
-|Σ v²| < 2^53 under the MAX_SAMPLES cap, so every partial sum — in any
-association order, numpy pairwise or Python sequential — is exactly
-representable and the results are bit-identical to the scalar loops
-they replaced (the pinned audio_feature_stats values are unchanged).
+of the Arrow/pandas path these kernels run inside). For 1-, 2- and
+4-channel PCM it is EXACT, not just close: every mono sample is then a
+dyadic rational v / 2^k with |Σ v²| < 2^53 under the MAX_SAMPLES cap,
+so every partial sum — in any association order, numpy pairwise or
+Python sequential — is exactly representable and the results are
+bit-identical to the scalar loops they replaced (the pinned
+audio_feature_stats values are unchanged). Other channel counts divide
+by a non-power of two, so the mono samples are rounded and the sum of
+squares can differ from a sequential sum in the last ulp.
 
 Reference tie-in: the reference pipeline is text-only
 (`airflow/dags/zara_hybrid_etl.py`); audio columns are part of the
@@ -46,8 +49,9 @@ def sniff_audio_format(data: bytes) -> str:
 def decode_wav(data: bytes) -> tuple[int, int, int, "np.ndarray"]:
     """RIFF/WAVE PCM -> (sample_rate, n_channels, n_frames, mono float64
     samples in [-1, 1], first MAX_SAMPLES frames, channels averaged).
-    Raises wave.Error/ValueError/struct.error on non-WAV or compressed
-    input — callers map those to their fallback, mirroring imagecodec.
+    Raises wave.Error (non-WAV or compressed input), EOFError (truncated
+    header) or ValueError (unsupported sample width, odd-length PCM) —
+    callers map those to their fallback, mirroring imagecodec.
 
     Vectorized (r17), value-identical to the scalar loop it replaced:
     int16/uint8 decode is a reinterpret, the per-frame channel average is
@@ -77,11 +81,11 @@ def decode_wav(data: bytes) -> tuple[int, int, int, "np.ndarray"]:
 def audio_stats(samples) -> tuple[float, float, float]:
     """(rms, peak, zero_crossing_rate) of a mono sample array; zeros for
     an empty one. Vectorized over the capped prefix — bounded CPU per
-    file, and EXACT for PCM-derived input (see module docstring: dyadic
-    samples keep every partial sum of squares under 2^53, so numpy's
-    pairwise summation computes the same exact value the sequential
-    Python sum did, and sqrt/abs/max are correctly-rounded per IEEE
-    either way)."""
+    file, and EXACT for 1-, 2- and 4-channel PCM input (see module
+    docstring: dyadic samples keep every partial sum of squares under
+    2^53, so numpy's pairwise summation computes the same exact value
+    the sequential Python sum did, and sqrt/abs/max are correctly-
+    rounded per IEEE either way)."""
     s = np.asarray(samples, dtype=np.float64)
     n = s.size
     if n == 0:

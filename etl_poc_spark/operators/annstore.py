@@ -35,6 +35,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import (
+    DeltaStoreSpec,
+    foreach_batch_writer,
+    load_compaction_manifest,
+    read_delta_store,
+    tag_slot,
+)
 from etl_poc_spark.operators.similarity import (
     _assign_centroid,
     _pair_cosine,
@@ -46,6 +53,9 @@ from etl_poc_spark.operators.similarity import (
 from etl_poc_spark.operators.upsert import read_versioned, upsert_versioned
 
 _MODEL_PART = "centroids"
+
+# (cluster, id, vector, model_seq, slot) postings: a set, one row per vector
+ANN_POSTINGS = DeltaStoreSpec()
 
 
 def build_ann_index(
@@ -165,11 +175,9 @@ def incremental_ann_ingest(
     reindex can rewrite exactly the slots that hold stale rows (NULL for
     loose appends, which reindex refuses — it cannot rewrite rows it
     cannot address). Returns the written postings frame."""
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
     cents, seq = _current_model(spark, index_dir)
     assigned = _assign_centroid(batch, cents, id_col, vec_col, nprobe=1)
-    slot = f"tag={_safe_tag(batch_tag)}" if batch_tag is not None else None
+    slot = tag_slot(batch_tag)
     postings = (
         batch.select(id_col, vec_col)
         .join(assigned, id_col)
@@ -178,10 +186,7 @@ def incremental_ann_ingest(
             F.lit(slot).cast("string").alias("slot"),
         )
     )
-    if batch_tag is not None:
-        postings.write.mode("overwrite").parquet(f"{store_dir}/{slot}")
-    else:
-        postings.write.mode("append").parquet(store_dir)
+    ANN_POSTINGS.append(postings, store_dir, slot)
     return postings
 
 
@@ -210,8 +215,6 @@ def reindex_ann_store(
     assignment for every vector ever ingested (pytest-pinned against
     the one-shot IVF). Returns {"model_seq", "slots_reindexed",
     "rows_reindexed"}."""
-    from etl_poc_spark.operators.deltastore import load_compaction_manifest
-
     cents, seq = _current_model(spark, index_dir)
     store = read_ann_store(spark, store_dir)
     if "slot" not in store.columns:
@@ -256,7 +259,7 @@ def reindex_ann_store(
                 F.lit(slot).alias("slot"),
             )
         )
-        out.write.mode("overwrite").parquet(f"{store_dir}/{slot}")
+        ANN_POSTINGS.append(out, store_dir, slot)
         n_rows += rows.count()
     return {
         "model_seq": seq,
@@ -300,16 +303,9 @@ def streaming_ann_ingest(
     a configured DataStreamWriter — call .trigger(...).start(); serve
     probes any time with ann_store_topk, which reads index + postings
     live."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        ann_handle_batch(
-            batch_df, batch_id,
-            index_dir=index_dir, store_dir=store_dir,
-            id_col=id_col, vec_col=vec_col,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_writer(
+        stream, checkpoint_dir, ann_handle_batch, index_dir=index_dir,
+        store_dir=store_dir, id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -319,11 +315,7 @@ def read_ann_store(
     """The accumulated postings (cluster, id, vector, model_seq) — a SET,
     so no fold: each vector appears once under the single-writer-per-tag
     contract. Compaction-manifest aware via read_delta_store."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
-    excl = f"tag={_safe_tag(exclude_tag)}" if exclude_tag is not None else None
-    return read_delta_store(spark, store_dir, exclude_slot=excl)
+    return read_delta_store(spark, store_dir, exclude_slot=tag_slot(exclude_tag))
 
 
 def ann_store_topk(

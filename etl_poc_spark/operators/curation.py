@@ -31,6 +31,20 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_poc_spark.operators.deltastore import (
+    DeltaStoreSpec,
+    foreach_batch_writer,
+    read_delta_store,
+    tag_slot,
+)
+
+# additive per-domain partials: DoReMi (n examples, s clipped-excess sum);
+# badwords (n docs, f flagged, h hits)
+DOREMI_STORE = DeltaStoreSpec(("domain",), (("n", "sum"), ("s", "sum")))
+BADWORDS_STORE = DeltaStoreSpec(
+    ("domain",), (("n", "sum"), ("f", "sum"), ("h", "sum"))
+)
+
 
 def hash_bucket(col: Column, n_buckets: int = 100, salt: str = "") -> Column:
     """Deterministic engine-portable bucket in [0, n_buckets): the first 6
@@ -702,13 +716,9 @@ def incremental_doremi_ingest(
     store equals the one-shot aggregation over the union of every batch
     in any slicing (exact BIGINTs; equivalence pytest).
 
-    Idempotency/replay: a stable `batch_tag` slots the delta under
-    tag=<tag> with overwrite semantics (at-least-once replay replaces its
-    own slot — the ngram_lm/dsir delta-log discipline). Concurrency
-    contract: single writer per tag (tests/test_store_concurrency.py
-    class)."""
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
+    Idempotency/replay: a stable `batch_tag` slots the delta as
+    tag=<tag>, so an at-least-once replay replaces its own slot. Slot,
+    replay and concurrency contract: operators/deltastore.py."""
     deltas = (
         batch.select(
             F.col(domain_col).alias("domain"),
@@ -717,12 +727,7 @@ def incremental_doremi_ingest(
         .groupBy("domain")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("__e").alias("s"))
     )
-    if batch_tag is not None:
-        deltas.write.mode("overwrite").parquet(
-            f"{store_dir}/tag={_safe_tag(batch_tag)}"
-        )
-    else:
-        deltas.write.mode("append").parquet(store_dir)
+    DOREMI_STORE.append(deltas, store_dir, tag_slot(batch_tag))
 
 
 def read_doremi_store(
@@ -730,28 +735,15 @@ def read_doremi_store(
 ) -> DataFrame:
     """Fold the delta log to the current per-domain stats frame
     (domain, n_examples, sum_excess) — ≤ k rows. `exclude_tag` drops
-    that batch's slot (the replay seam)."""
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    excl = f"tag={_safe_tag(exclude_tag)}" if exclude_tag is not None else None
-    df = read_delta_store(spark, store_dir, exclude_slot=excl)
-    return df.groupBy("domain").agg(
-        F.sum("n").alias("n_examples"), F.sum("s").alias("sum_excess")
+    that batch's slot (the replay seam). Additive BIGINT partials keep
+    doremi_store_weights bit-equal after compact_doremi_store."""
+    log = read_delta_store(spark, store_dir, exclude_slot=tag_slot(exclude_tag))
+    return DOREMI_STORE.fold(log).select(
+        "domain", F.col("n").alias("n_examples"), F.col("s").alias("sum_excess")
     )
 
 
-def compact_doremi_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold the DoReMi stats store's old tag slots into one consolidated
-    slot (operators/deltastore.py protocol; additive BIGINT partials, so
-    doremi_store_weights is bit-equal before and after)."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return compact_delta_store(
-        spark, store_dir,
-        key_cols=["domain"], agg=[("n", "sum"), ("s", "sum")], **kwargs,
-    )
+compact_doremi_store = DOREMI_STORE.compact
 
 
 def doremi_store_weights(
@@ -811,18 +803,9 @@ def streaming_doremi_ingest(
     exactly-once. Returns a configured DataStreamWriter — call
     .trigger(...).start(); read the live weights any time with
     doremi_store_weights."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        doremi_handle_batch(
-            batch_df,
-            batch_id,
-            store_dir=store_dir,
-            domain_col=domain_col,
-            excess_col=excess_col,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_writer(
+        stream, checkpoint_dir, doremi_handle_batch,
+        store_dir=store_dir, domain_col=domain_col, excess_col=excess_col,
     )
 
 
@@ -1180,11 +1163,9 @@ def incremental_badwords_ingest(
     the content-safety dashboard a continuous web-crawl ingest keeps
     live: which sources are trending dirty, before the filter drops them.
 
-    Idempotency/replay: a stable `batch_tag` slots the delta under
-    tag=<tag> with overwrite semantics. Concurrency contract: single
-    writer per tag (tests/test_store_concurrency.py class)."""
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
+    Idempotency/replay: a stable `batch_tag` slots the delta as
+    tag=<tag>. Slot, replay and concurrency contract:
+    operators/deltastore.py."""
     flagged = c4_badwords_flags(batch, badwords, text_col=text_col)
     deltas = (
         flagged.select(
@@ -1199,40 +1180,22 @@ def incremental_badwords_ingest(
             F.sum("__h").alias("h"),
         )
     )
-    if batch_tag is not None:
-        deltas.write.mode("overwrite").parquet(
-            f"{store_dir}/tag={_safe_tag(batch_tag)}"
-        )
-    else:
-        deltas.write.mode("append").parquet(store_dir)
+    BADWORDS_STORE.append(deltas, store_dir, tag_slot(batch_tag))
 
 
 def read_badwords_store(spark, store_dir: str) -> DataFrame:
     """Fold the delta log to the current per-domain badwords stats
-    (domain, n_docs, n_flagged, n_hits) — ≤ k rows. Compaction-aware
-    (operators/deltastore.py); additive partials keep the fold bit-equal
-    after compact_badwords_store."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    df = read_delta_store(spark, store_dir)
-    return df.groupBy("domain").agg(
-        F.sum("n").cast("bigint").alias("n_docs"),
-        F.sum("f").cast("bigint").alias("n_flagged"),
-        F.sum("h").cast("bigint").alias("n_hits"),
+    (domain, n_docs, n_flagged, n_hits) — ≤ k rows. Additive partials
+    keep the fold bit-equal after compact_badwords_store."""
+    return BADWORDS_STORE.fold(read_delta_store(spark, store_dir)).select(
+        "domain",
+        F.col("n").cast("bigint").alias("n_docs"),
+        F.col("f").cast("bigint").alias("n_flagged"),
+        F.col("h").cast("bigint").alias("n_hits"),
     )
 
 
-def compact_badwords_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold the badwords stats store's old tag slots into one
-    consolidated slot (operators/deltastore.py protocol; all three
-    partials are additive, so the dashboard fold is bit-equal)."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return compact_delta_store(
-        spark, store_dir,
-        key_cols=["domain"], agg=[("n", "sum"), ("f", "sum"), ("h", "sum")],
-        **kwargs,
-    )
+compact_badwords_store = BADWORDS_STORE.compact
 
 
 def badwords_handle_batch(
@@ -1272,17 +1235,7 @@ def streaming_badwords_ingest(
     exactly-once. Returns a configured DataStreamWriter — call
     .trigger(...).start(); read the live dashboard any time with
     read_badwords_store."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        badwords_handle_batch(
-            batch_df,
-            batch_id,
-            store_dir=store_dir,
-            badwords=badwords,
-            domain_col=domain_col,
-            text_col=text_col,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_writer(
+        stream, checkpoint_dir, badwords_handle_batch, store_dir=store_dir,
+        badwords=badwords, domain_col=domain_col, text_col=text_col,
     )

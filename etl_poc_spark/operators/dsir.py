@@ -32,8 +32,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import (
+    DeltaStoreLogs,
+    DeltaStoreSpec,
+    foreach_batch_writer,
+    read_delta_store,
+    tag_slot,
+    write_batch_slot,
+)
 from etl_poc_spark.operators.ngram_lm import words_col
 from etl_poc_spark.operators.pins import pin
+
+# per-role (bucket, n) histogram deltas; 'raw' and 'target' are the two
+# sides of the likelihood ratio, each its own log
+DSIR_LOG = DeltaStoreSpec(("bucket",), (("n", "sum"),))
+DSIR_STORE = DeltaStoreLogs((("raw", DSIR_LOG), ("target", DSIR_LOG)))
 
 DEFAULT_BUCKETS = 1024
 
@@ -315,8 +328,8 @@ def dsir_resample(
 
 
 # ---------------------------------------------------------------------------
-# Incremental / streaming model maintenance (the ngram_lm store discipline:
-# append-only tag-slotted delta logs, replay-idempotent, crash-healable)
+# Incremental / streaming model maintenance (DSIR_STORE; slot/replay
+# contract in operators/deltastore.py)
 # ---------------------------------------------------------------------------
 
 
@@ -346,33 +359,22 @@ def incremental_dsir_ingest(
     `role` ('raw' or 'target' — the two sides of the likelihood ratio;
     each is an independent append-only delta log).
 
-    Idempotency: a stable `batch_tag` slots the delta under tag=<tag>
-    with overwrite semantics, so an at-least-once replay replaces its
-    own delta instead of double-counting (the streaming twin passes the
-    micro-batch id). After any sequence of ingests, read_dsir_store
-    equals the one-shot histogram over the union of every batch —
-    exact integers, bit-equal under any batch slicing.
-
-    Concurrency contract: single writer per tag (sequential same-tag
-    rewrite = last-writer-wins replay; concurrent distinct tags safe;
-    concurrent same-tag out of contract, heals on replay) — stated and
-    pinned in tests/test_store_concurrency.py."""
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
-    deltas = _dsir_batch_deltas(batch, text_col, n_buckets)
-    sub = f"{store_dir}/{role}"
-    if batch_tag is not None:
-        deltas.write.mode("overwrite").parquet(f"{sub}/tag={_safe_tag(batch_tag)}")
-    else:
-        deltas.write.mode("append").parquet(sub)
+    Idempotency: a stable `batch_tag` slots the delta as tag=<tag>, so
+    an at-least-once replay replaces its own delta instead of
+    double-counting (the streaming twin passes the micro-batch id).
+    After any sequence of ingests, read_dsir_store equals the one-shot
+    histogram over the union of every batch — exact integers, bit-equal
+    under any batch slicing. Slot, replay and concurrency contract:
+    operators/deltastore.py."""
+    DSIR_LOG.append(
+        _dsir_batch_deltas(batch, text_col, n_buckets),
+        f"{store_dir}/{role}",
+        tag_slot(batch_tag),
+    )
 
 
-def dsir_store_exists(spark, store_dir: str, role: str = "raw") -> bool:
-    """Hadoop-FS existence probe for a role's delta log (portable to
-    HDFS/S3 URIs; no exception-message string matching)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{store_dir}/{role}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
+def _dsir_hist(log: DataFrame) -> DataFrame:
+    return DSIR_LOG.fold(log).withColumnRenamed("n", "c")
 
 
 def read_dsir_store(
@@ -381,32 +383,16 @@ def read_dsir_store(
     """Fold a role's delta log to its current histogram (bucket, c) —
     ≤ n_buckets rows. `exclude_tag` drops that batch's slot from the
     fold (the replay seam: a replayed tagged batch reads the store as it
-    stood before its own crashed attempt). Compaction-aware
-    (operators/deltastore.py): after compact_dsir_store folds old tag
-    slots the histogram is bit-equal while the listing cost drops to
-    O(tail)."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-    from etl_poc_spark.operators.ngram_lm import _safe_tag
-
-    excl = f"tag={_safe_tag(exclude_tag)}" if exclude_tag is not None else None
-    df = read_delta_store(spark, f"{store_dir}/{role}", exclude_slot=excl)
-    return df.groupBy("bucket").agg(F.sum("n").alias("c"))
-
-
-def compact_dsir_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold each existing role log ('raw'/'target') of the DSIR store
-    into one consolidated slot (operators/deltastore.py protocol; reads
-    bit-equal — exact integer bucket counts). Returns per-role reports."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return {
-        role: compact_delta_store(
-            spark, f"{store_dir}/{role}",
-            key_cols=["bucket"], agg=[("n", "sum")], **kwargs,
+    stood before its own crashed attempt). Bit-equal after
+    compact_dsir_store."""
+    return _dsir_hist(
+        read_delta_store(
+            spark, f"{store_dir}/{role}", exclude_slot=tag_slot(exclude_tag)
         )
-        for role in ("raw", "target")
-        if dsir_store_exists(spark, store_dir, role)
-    }
+    )
+
+
+compact_dsir_store = DSIR_STORE.compact
 
 
 def read_dsir_model(
@@ -421,14 +407,18 @@ def read_dsir_model(
     NEW documents never drops an unseen bucket; c=0 rows realize add-1
     smoothing). Same (bucket, c_raw, c_tgt, t_raw, t_tgt) shape
     _model_frame builds in batch mode; ≤ n_buckets rows, broadcastable."""
-    for role in ("raw", "target"):
-        if not dsir_store_exists(spark, store_dir, role):
+    hists = {}
+    for role, spec in DSIR_STORE.logs:
+        log = spec.read(
+            spark, f"{store_dir}/{role}", exclude_slot=tag_slot(exclude_tag)
+        )
+        if log is None:
             raise ValueError(
                 f"DSIR store at {store_dir!r} has no {role!r} model — seed it "
                 f"with incremental_dsir_ingest(..., role={role!r}) first"
             )
-    raw_h = read_dsir_store(spark, store_dir, "raw", exclude_tag=exclude_tag)
-    tgt_h = read_dsir_store(spark, store_dir, "target", exclude_tag=exclude_tag)
+        hists[role] = _dsir_hist(log)
+    raw_h, tgt_h = hists["raw"], hists["target"]
     w = Window.partitionBy().rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -480,9 +470,8 @@ def dsir_handle_batch(
     text_col: str = "text",
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> None:
-    """One micro-batch of streaming_dsir_ingest, module-level so the
-    replay contract is directly testable: same batch_id twice ==
-    once (the tag slot overwrites)."""
+    """One micro-batch of streaming_dsir_ingest: the batch id is the tag
+    slot (<role>-b<id>), so the same batch_id twice == once."""
     incremental_dsir_ingest(
         batch_df.sparkSession,
         batch_df,
@@ -508,19 +497,9 @@ def streaming_dsir_ingest(
     slot). Returns a configured DataStreamWriter — call
     .trigger(...).start(). Read the live model any time with
     read_dsir_model; score with score_dsir_store."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        dsir_handle_batch(
-            batch_df,
-            batch_id,
-            store_dir=store_dir,
-            role=role,
-            text_col=text_col,
-            n_buckets=n_buckets,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_writer(
+        stream, checkpoint_dir, dsir_handle_batch,
+        store_dir=store_dir, role=role, text_col=text_col, n_buckets=n_buckets,
     )
 
 
@@ -539,10 +518,10 @@ def dsir_monitor_handle_batch(
     log weights against the PRE-BATCH raw model (target model is the
     pre-seeded reference — it never folds), write a 1-row drift record,
     then fold the batch into the raw model. The perplexity-monitor
-    recovery contract verbatim: both sinks are batch_id-slotted with
-    overwrite, the store read EXCLUDES the batch's own tag slot, so
-    every replay point (post-monitor/pre-fold, mid-fold, post-fold
-    pre-checkpoint) converges to single-delivery state.
+    recovery contract verbatim: both sinks are batch_id-slotted, the
+    store read EXCLUDES the batch's own tag slot, so every replay point
+    (post-monitor/pre-fold, mid-fold, post-fold pre-checkpoint)
+    converges to single-delivery state.
 
     Drift reading: mean_log_weight RISING means incoming data looks
     more like the target corpus than the accumulated raw stream did;
@@ -553,10 +532,10 @@ def dsir_monitor_handle_batch(
     no prior raw model and records n_scored=0."""
     spark = batch_df.sparkSession
     tag = f"raw-b{int(batch_id)}"
+    raw = DSIR_LOG.read(spark, f"{store_dir}/raw", exclude_slot=tag_slot(tag))
     prior_total = 0
-    if dsir_store_exists(spark, store_dir, "raw"):
-        raw_h = read_dsir_store(spark, store_dir, "raw", exclude_tag=tag)
-        row = raw_h.agg(F.sum("c").alias("t")).first()
+    if raw is not None:
+        row = raw.agg(F.sum("n").alias("t")).first()
         prior_total = (row["t"] if row else 0) or 0
     if prior_total > 0:
         scored = score_dsir_store(
@@ -583,11 +562,7 @@ def dsir_monitor_handle_batch(
             [(0, None, None)],
             "n_scored long, mean_log_weight double, share_target_leaning double",
         )
-    (
-        stats.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .parquet(f"{monitor_dir}/batch_id={int(batch_id)}")
-    )
+    write_batch_slot(stats, monitor_dir, batch_id)
     if fold:
         dsir_handle_batch(
             batch_df,
@@ -617,21 +592,10 @@ def streaming_dsir_monitor(
     everything that came before, then folded into the raw model.
     Returns a configured DataStreamWriter; read the drift series with
     spark.read.parquet(monitor_dir)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        dsir_monitor_handle_batch(
-            batch_df,
-            batch_id,
-            store_dir=store_dir,
-            monitor_dir=monitor_dir,
-            id_col=id_col,
-            text_col=text_col,
-            n_buckets=n_buckets,
-            fold=fold,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_writer(
+        stream, checkpoint_dir, dsir_monitor_handle_batch,
+        store_dir=store_dir, monitor_dir=monitor_dir, id_col=id_col,
+        text_col=text_col, n_buckets=n_buckets, fold=fold,
     )
 
 

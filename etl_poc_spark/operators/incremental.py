@@ -28,7 +28,6 @@ sets for the whole corpus, which is exactly what the band store avoids.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +38,22 @@ from etl_poc_spark.operators.dedup import (
     minhash_signatures,
     shingle_docs,
 )
+from etl_poc_spark.operators.deltastore import (
+    DeltaStoreSpec,
+    batch_slot,
+    foreach_batch_writer,
+    ingest_to_sink,
+    read_delta_store,
+    tag_slot,
+    write_batch_slot,
+)
+
+# (band, band_val, id) postings are facts without counts: the SET fold,
+# DISTINCT over the whole row (every reader is a semi-join, for which
+# duplicates were already invisible)
+NEAR_DUP_STORE = DeltaStoreSpec()
+# (fp, min_id, n_copies) deltas: MIN and SUM are associative
+EXACT_DEDUP_STORE = DeltaStoreSpec(("fp",), (("min_id", "min"), ("n_copies", "sum")))
 
 
 def batch_band_signatures(
@@ -73,38 +88,15 @@ def incremental_near_dup_ingest(
     kept (novel, batch-deduped) rows of `batch` and appends their bands to
     the store. See module docstring for the decision rule and scale shape.
 
-    `batch_id` (the streaming seam, same protocol as
-    incremental_line_dedup_ingest): when set, the store rows write
-    PARTITIONED by batch_id with dynamic partition overwrite and the
-    history read EXCLUDES the current batch_id — a replayed micro-batch
-    overwrites its own partition instead of double-appending, and never
-    sees its prior attempt's bands as history (which would drop every
-    row as a self-hit and lose the batch's kept output)."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
+    `batch_id` (the streaming seam) slots the bands as `batch_id=<n>` and
+    excludes that slot from the history read — the replay contract of
+    operators/deltastore.py."""
     bands = batch_band_signatures(
         batch, id_col, text_col, n_hashes, rows_per_band, hash_mode
     )
-    try:
-        # compaction-aware read (operators/deltastore.py); slot-level
-        # replay exclusion, and a batch_id replay against a loose-append
-        # store raises DeltaStoreModeError instead of silently counting
-        # the prior attempt's bands as history (ADVICE r15)
-        store = read_delta_store(
-            spark, store_dir,
-            exclude_slot=(
-                f"batch_id={int(batch_id)}" if batch_id is not None else None
-            ),
-        )
-        have_store = True
-    except AnalysisException as exc:
-        # first ingest only: the store path does not exist yet. Any OTHER
-        # analysis failure (corrupt footer, schema mismatch) must surface —
-        # treating it as "no history" would silently dedup against nothing.
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        have_store = False
-    if have_store:
+    slot = batch_slot(batch_id)
+    store = NEAR_DUP_STORE.read(spark, store_dir, exclude_slot=slot)
+    if store is not None:
         # ids sharing >= 1 full band with history are near-dups of history
         hit_ids = (
             bands.join(store, ["band", "band_val"], "left_semi")
@@ -134,39 +126,11 @@ def incremental_near_dup_ingest(
     # documents too short to shingle produce no bands: they can never be
     # caught by the store filter, so they pass through (documented; exact
     # dedup upstream is the right guard for tiny docs)
-    if batch_id is None:
-        kept_bands.write.mode("append").parquet(store_dir)
-    else:
-        (
-            kept_bands.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_dir)
-        )
+    NEAR_DUP_STORE.append(kept_bands, store_dir, slot)
     return kept
 
 
-def compact_near_dup_store(spark: SparkSession, store_dir: str, **kwargs) -> dict:
-    """Fold the band store's old batch_id slots into one consolidated
-    slot (operators/deltastore.py protocol, SET fold: the postings carry
-    no counts, so consolidation is DISTINCT over (band, band_val, id) —
-    every reader is a semi-join, for which duplicates were already
-    invisible, hence reads are bit-equal before/after). keep_slots
-    (default 1) protects the in-flight micro-batch's replay exclusion.
-
-    Note the id column is whatever the ingest's id_col was; the store
-    schema is discovered from the slots themselves (key_cols = all
-    columns minus none — DISTINCT over the full row)."""
-    from etl_poc_spark.operators.deltastore import (
-        compact_delta_store,
-        read_delta_store,
-    )
-
-    cols = read_delta_store(spark, store_dir).columns
-    return compact_delta_store(
-        spark, store_dir, key_cols=list(cols), agg=[], **kwargs
-    )
+compact_near_dup_store = NEAR_DUP_STORE.compact
 
 
 def streaming_near_dup_ingest(
@@ -179,37 +143,15 @@ def streaming_near_dup_ingest(
     **ingest_kwargs,
 ):
     """Continuous ingestion: each micro-batch runs the same
-    incremental_near_dup_ingest against the shared band store and appends
-    its survivors to `kept_dir`. Returns a configured DataStreamWriter —
-    call .trigger(...).start() to run.
-
-    foreachBatch is the right seam: the dedup decision needs the batch as
-    a finite frame (self-pairs + store anti-join), which pure streaming
-    operators can't express. foreachBatch delivery is AT-LEAST-ONCE — a
-    batch interrupted mid-write replays on restart — so both side effects
-    are keyed by batch_id with dynamic partition overwrite (the same
-    protocol as streaming_line_dedup_ingest): the replay overwrites its
-    own store and kept partitions rather than double-appending, and the
-    store read excludes the current batch_id so the replayed batch never
-    self-hits. Read kept via spark.read.parquet(kept_dir) — batch_id is
-    an inferred partition column."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        kept = incremental_near_dup_ingest(
-            batch_df.sparkSession, batch_df, store_dir,
-            id_col=id_col, text_col=text_col, batch_id=batch_id,
-            **ingest_kwargs,
-        )
-        (
-            kept.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(kept_dir)
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    incremental_near_dup_ingest against the shared band store and writes
+    its survivors as the batch's `batch_id=<n>` partition of `kept_dir`.
+    Returns a configured DataStreamWriter — call .trigger(...).start() to
+    run. Store and sink are both keyed by the batch id, so an
+    at-least-once replay is effectively-once (operators/deltastore.py)."""
+    return foreach_batch_writer(
+        stream, checkpoint_dir, ingest_to_sink,
+        ingest=incremental_near_dup_ingest, store_dir=store_dir,
+        kept_dir=kept_dir, id_col=id_col, text_col=text_col, **ingest_kwargs,
     )
 
 
@@ -261,48 +203,24 @@ def incremental_exact_dedup_ingest(
     store total equals a from-scratch exact_dedup over everything ever
     ingested) but are not returned as kept rows.
 
-    Idempotency: pass a stable `batch_tag` to slot the delta under
-    tag=<batch_tag> with overwrite semantics — re-ingesting the same
-    batch replaces its own delta instead of double-counting. The
-    streaming twin gets this for free from foreachBatch checkpointing
-    (exactly-once per batch id) and passes the batch id as the tag.
-
-    Concurrency contract: single writer per tag (sequential same-tag
-    rewrite = last-writer-wins replay; concurrent distinct tags safe;
-    concurrent same-tag out of contract, heals on replay) — stated and
-    pinned in tests/test_store_concurrency.py."""
+    Idempotency: a stable `batch_tag` slots the delta as tag=<batch_tag>,
+    so re-ingesting the same batch replaces its own delta instead of
+    double-counting, and the history read excludes that slot (a replay
+    must not see its own prior delta as history — every fp would read as
+    a store hit and the replay would lose the representatives the crashed
+    attempt never flushed). The streaming twin passes the batch id as
+    the tag. Slot, replay and concurrency contract: operators/
+    deltastore.py."""
     fps = exact_fingerprints(batch, key_cols, id_col, hash_mode)
     delta = fps.groupBy("fp").agg(
         F.min("id").alias("min_id"), F.count(F.lit(1)).alias("n_copies")
     )
-    safe = (
-        "".join(ch if ch.isalnum() or ch in "-_." else "_" for ch in batch_tag)
-        if batch_tag is not None
-        else None
+    slot = tag_slot(batch_tag)
+    store = EXACT_DEDUP_STORE.read(spark, store_dir, exclude_slot=slot)
+    novel = (
+        delta if store is None
+        else delta.join(store.select("fp").distinct(), "fp", "left_anti")
     )
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    try:
-        # compaction-aware read (operators/deltastore.py); the exclude
-        # drops a REPLAYED tagged batch's own prior delta — otherwise
-        # every fp reads as a store hit, kept recomputes as empty, and
-        # the replay loses the representatives the crashed attempt never
-        # flushed to the kept sink
-        store = read_delta_store(
-            spark, store_dir,
-            exclude_slot=f"tag={safe}" if safe is not None else None,
-        )
-        store = store.select("fp").distinct()
-        have_store = True
-    except AnalysisException as exc:
-        # first ingest only: the store path does not exist yet. Any OTHER
-        # analysis failure must surface — treating a corrupt/unreadable
-        # store as "first ingest" would emit duplicates as kept and
-        # silently fork the store instead of failing loudly.
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        have_store = False
-    novel = delta.join(store, "fp", "left_anti") if have_store else delta
     # representatives materialize BEFORE the store append (the plan reads
     # the store through the anti-join; parquet listing happens at action
     # time — same seam as incremental_near_dup_ingest)
@@ -311,10 +229,7 @@ def incremental_exact_dedup_ingest(
         F.col("id").alias(id_col)
     )
     kept = batch.join(kept_ids, id_col, "left_semi").localCheckpoint(eager=True)
-    if safe is not None:
-        delta.write.mode("overwrite").parquet(f"{store_dir}/tag={safe}")
-    else:
-        delta.write.mode("append").parquet(store_dir)
+    EXACT_DEDUP_STORE.append(delta, store_dir, slot)
     return kept
 
 
@@ -324,26 +239,10 @@ def read_exact_dedup_store(spark: SparkSession, store_dir: str) -> DataFrame:
     ever ingested (mergeable: MIN and SUM are associative). Compaction-
     aware: after compact_exact_dedup_store the fold is bit-equal while
     the listing cost drops to O(tail)."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    log = read_delta_store(spark, store_dir)
-    return log.groupBy("fp").agg(
-        F.min("min_id").alias("min_id"), F.sum("n_copies").alias("n_copies")
-    )
+    return EXACT_DEDUP_STORE.fold(read_delta_store(spark, store_dir))
 
 
-def compact_exact_dedup_store(spark: SparkSession, store_dir: str, **kwargs) -> dict:
-    """Fold the fingerprint store's old tag slots into one consolidated
-    slot (operators/deltastore.py protocol). MIN(min_id) and
-    SUM(n_copies) are associative, so reads before and after are
-    bit-equal; keep_slots (default 1) protects the in-flight replay."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return compact_delta_store(
-        spark, store_dir,
-        key_cols=["fp"], agg=[("min_id", "min"), ("n_copies", "sum")],
-        **kwargs,
-    )
+compact_exact_dedup_store = EXACT_DEDUP_STORE.compact
 
 
 def streaming_exact_dedup_ingest(
@@ -356,28 +255,14 @@ def streaming_exact_dedup_ingest(
     hash_mode: str = "xxhash64",
 ):
     """Continuous exact dedup: each micro-batch runs
-    incremental_exact_dedup_ingest against the shared fingerprint store
-    and appends its novel representatives to `kept_dir`. Returns a
-    configured DataStreamWriter — call .trigger(...).start().
-
-    The batch id doubles as the store slot tag, so a replayed micro-batch
-    (restart before checkpoint commit) overwrites its own delta instead
-    of double-counting — exactly-once store semantics without a
-    transaction log. The kept sink is slotted the same way (batch_id
-    partition, dynamic overwrite): a replay REPLACES its own kept rows
-    rather than re-appending the same representatives — without this the
-    store was exactly-once but the output wasn't. Read kept via
-    spark.read.parquet(kept_dir); batch_id is an inferred partition
-    column."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        exact_dedup_handle_batch(
-            batch_df, batch_id, store_dir=store_dir, kept_dir=kept_dir,
-            key_cols=key_cols, id_col=id_col, hash_mode=hash_mode,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    exact_dedup_handle_batch against the shared fingerprint store.
+    Returns a configured DataStreamWriter — call .trigger(...).start().
+    Read kept via spark.read.parquet(kept_dir); batch_id is an inferred
+    partition column."""
+    return foreach_batch_writer(
+        stream, checkpoint_dir, exact_dedup_handle_batch,
+        store_dir=store_dir, kept_dir=kept_dir, key_cols=key_cols,
+        id_col=id_col, hash_mode=hash_mode,
     )
 
 
@@ -391,23 +276,16 @@ def exact_dedup_handle_batch(
     id_col: str = "doc_id",
     hash_mode: str = "xxhash64",
 ) -> None:
-    """One micro-batch of streaming_exact_dedup_ingest, module-level so the
-    replay contract is directly testable: calling this twice with the same
-    batch_id (at-least-once delivery) leaves store AND kept sink in the
-    same state as calling it once — the store via the tag slot, the kept
-    sink via batch_id dynamic partition overwrite."""
+    """One micro-batch of streaming_exact_dedup_ingest: the batch id is
+    the store tag (b<id>) and the kept sink's batch_id partition, so
+    calling this twice with the same batch_id (at-least-once delivery)
+    leaves store AND kept sink as one call does."""
     kept = incremental_exact_dedup_ingest(
         batch_df.sparkSession, batch_df, store_dir,
         key_cols=key_cols, id_col=id_col, hash_mode=hash_mode,
         batch_tag=f"b{batch_id}",
     )
-    (
-        kept.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(kept_dir)
-    )
+    write_batch_slot(kept, kept_dir, batch_id)
 
 
 from etl_poc_spark._serde import register_by_value as _rbv  # noqa: E402

@@ -22,9 +22,18 @@ Spark-first shape, designed for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from etl_poc_spark.operators.deltastore import (
+    DeltaStoreSpec,
+    batch_slot,
+    foreach_batch_writer,
+    ingest_to_sink,
+)
+
+# (seg_hash, n_docs) per batch; the cumulative count is their SUM
+LINE_DEDUP_STORE = DeltaStoreSpec(("seg_hash",), (("n_docs", "sum"),))
 
 
 def segment_docs(
@@ -156,55 +165,28 @@ def incremental_line_dedup_ingest(
     boilerplate detection needs a threshold signal, not an exact census —
     CCNet itself thresholds on rough document frequency.
 
-    `batch_id` (the streaming seam): when set, the store rows are written
-    PARTITIONED by batch_id with dynamic partition overwrite, and the
-    history read EXCLUDES the current batch_id — so a replayed micro-batch
-    (foreachBatch is at-least-once) overwrites its own partition instead of
-    double-appending, and never sees its prior attempt's rows as history.
-    Replay therefore produces byte-identical store state and output.
-
-    Concurrency contract: single writer per batch_id slot (sequential
-    same-id rewrite = last-writer-wins replay; concurrent distinct ids
-    safe; concurrent same-id out of contract, heals on replay) — stated
-    and pinned in tests/test_store_concurrency.py."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
+    `batch_id` (the streaming seam) slots the batch's counts as
+    `batch_id=<n>` and excludes that slot from the history read, so a
+    replay produces byte-identical store state and output. Slot, replay
+    and concurrency contract: operators/deltastore.py."""
     segments = segment_docs(batch, id_col, text_col, words_per_segment)
     seg_h = segments.withColumn("__h", F.md5(F.col("seg")))
     batch_counts = seg_h.groupBy("__h").agg(F.countDistinct(id_col).alias("n_docs"))
-    try:
-        # compaction-aware read (operators/deltastore.py); the replay
-        # exclusion is SLOT-level (batch_id=N directory), and mixing a
-        # batch_id replay into a store first written with batch_id=None
-        # (loose appends) now raises DeltaStoreModeError instead of
-        # silently double-counting the prior attempt as history (ADVICE
-        # r15)
-        store = read_delta_store(
-            spark, store_dir,
-            exclude_slot=(
-                f"batch_id={int(batch_id)}" if batch_id is not None else None
-            ),
+    slot = batch_slot(batch_id)
+    store = LINE_DEDUP_STORE.read(spark, store_dir, exclude_slot=slot)
+    if store is None:
+        total = batch_counts.select("__h", F.col("n_docs").alias("total_docs"))
+    else:
+        hist = LINE_DEDUP_STORE.fold(store).select(
+            F.col("seg_hash").alias("__h"), F.col("n_docs").alias("hist_docs")
         )
-        have_store = True
-    except AnalysisException as exc:
-        # first ingest only: the store path does not exist yet. Any OTHER
-        # analysis failure (corrupt footer, schema mismatch) must surface —
-        # treating it as "no history" would silently dedup against nothing
-        # and mask real history loss as success.
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        have_store = False
-    if have_store:
-        hist = store.groupBy("seg_hash").agg(F.sum("n_docs").alias("hist_docs"))
         total = (
-            batch_counts.join(hist.withColumnRenamed("seg_hash", "__h"), "__h", "left")
+            batch_counts.join(hist, "__h", "left")
             .select(
                 "__h",
                 (F.col("n_docs") + F.coalesce(F.col("hist_docs"), F.lit(0))).alias("total_docs"),
             )
         )
-    else:
-        total = batch_counts.select("__h", F.col("n_docs").alias("total_docs"))
     dup = total.filter(F.col("total_docs") >= min_docs).select("__h")
     kept = seg_h.join(dup, "__h", "left_anti")
     # MATERIALIZE before the store append: the output plan reads the store
@@ -212,32 +194,13 @@ def incremental_line_dedup_ingest(
     # without this, an action on the returned frame after the append would
     # recount the batch's own rows as history
     out = _rebuild_stats(segments, kept, id_col).localCheckpoint(eager=True)
-    counts_out = batch_counts.withColumnRenamed("__h", "seg_hash")
-    if batch_id is None:
-        counts_out.write.mode("append").parquet(store_dir)
-    else:
-        (
-            counts_out.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_dir)
-        )
+    LINE_DEDUP_STORE.append(
+        batch_counts.withColumnRenamed("__h", "seg_hash"), store_dir, slot
+    )
     return out
 
 
-def compact_line_dedup_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold the boilerplate store's old batch_id slots into one
-    consolidated slot (operators/deltastore.py protocol). SUM(n_docs) by
-    seg_hash is the readers' own fold, so history reads are bit-equal
-    before and after; keep_slots (default 1) protects the in-flight
-    micro-batch's replay exclusion."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return compact_delta_store(
-        spark, store_dir,
-        key_cols=["seg_hash"], agg=[("n_docs", "sum")], **kwargs,
-    )
+compact_line_dedup_store = LINE_DEDUP_STORE.compact
 
 
 def streaming_line_dedup_ingest(
@@ -250,34 +213,16 @@ def streaming_line_dedup_ingest(
     **ingest_kwargs,
 ):
     """Continuous segment dedup: each micro-batch runs
-    incremental_line_dedup_ingest against the shared boilerplate store and
-    appends its rewritten documents to `kept_dir`. Returns a configured
-    DataStreamWriter — call .trigger(...).start() to run.
-
-    foreachBatch is the right seam (as in streaming_near_dup_ingest): the
-    boilerplate decision needs the batch as a finite frame for the
-    cross-document count. foreachBatch delivery is AT-LEAST-ONCE — a batch
-    interrupted mid-write replays on restart — so both side effects are
-    keyed by batch_id and written with dynamic partition overwrite: the
-    replay overwrites its own store and kept partitions (never
-    double-appends), and the store read excludes the current batch_id, so
-    the composed result is effectively-once."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        out = incremental_line_dedup_ingest(
-            batch_df.sparkSession, batch_df, store_dir,
-            id_col=id_col, text_col=text_col, batch_id=batch_id, **ingest_kwargs,
-        )
-        (
-            out.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(kept_dir)
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    incremental_line_dedup_ingest against the shared boilerplate store
+    and writes its rewritten documents as the batch's `batch_id=<n>`
+    partition of `kept_dir`. Returns a configured DataStreamWriter — call
+    .trigger(...).start() to run. Store and sink are both keyed by the
+    batch id, so an at-least-once replay is effectively-once
+    (operators/deltastore.py)."""
+    return foreach_batch_writer(
+        stream, checkpoint_dir, ingest_to_sink,
+        ingest=incremental_line_dedup_ingest, store_dir=store_dir,
+        kept_dir=kept_dir, id_col=id_col, text_col=text_col, **ingest_kwargs,
     )
 
 

@@ -38,6 +38,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import (
+    DeltaStoreLogs,
+    DeltaStoreSpec,
+    foreach_batch_writer,
+    read_delta_store,
+    tag_slot,
+    write_batch_slot,
+)
+
+# two count logs per batch slot: (bigram, n) and (tok, n_tok, n_hist)
+LM_BIGRAMS = DeltaStoreSpec(("bigram",), (("n", "sum"),))
+LM_TOKENS = DeltaStoreSpec(("tok",), (("n_tok", "sum"), ("n_hist", "sum")))
+LM_STORE = DeltaStoreLogs((("bigrams", LM_BIGRAMS), ("tokens", LM_TOKENS)))
+
 
 def words_col(text_col: str = "text") -> Column:
     """Whitespace tokens of the trimmed body — the engine's shared
@@ -187,11 +201,11 @@ def perplexity_filter(
 
 
 # ---------------------------------------------------------------------------
-# incremental / streaming LM count maintenance — the same log-structured
-# discipline as the exact-dedup fingerprint store (operators/incremental.py):
-# append-only per-batch deltas, reads fold (SUM is associative/mergeable),
-# tag-slotted overwrite for idempotent replay. Corpus-scale counts never
-# rewrite; each ingest shuffles only (token, partial_count) rows.
+# incremental / streaming LM count maintenance — append-only per-batch
+# deltas in two logs (LM_STORE), folded on read with an exact-integer SUM;
+# the slot/replay contract is operators/deltastore.py's. Corpus-scale
+# counts never rewrite; each ingest shuffles only (token, partial_count)
+# rows.
 # ---------------------------------------------------------------------------
 
 
@@ -232,45 +246,30 @@ def incremental_bigram_lm_ingest(
     """Fold `batch` into the bigram-LM count store at `store_dir`
     (subdirs bigrams/ and tokens/, each an append-only delta log).
 
-    Idempotency: pass a stable `batch_tag` to slot both deltas under
-    tag=<batch_tag> with overwrite semantics — a replayed batch replaces
-    its own deltas instead of double-counting (the streaming twin passes
-    the micro-batch id). After any sequence of ingests,
-    read_bigram_lm_store equals train_bigram_lm over the union of every
-    batch ever ingested.
-
-    Concurrency contract (tests/test_store_concurrency.py): SINGLE
-    WRITER PER TAG — tags come from streaming batch ids, serialized by
-    the checkpoint. A sequential same-tag rewrite is a replay and
-    replaces the slot (last-writer-wins); concurrent DISTINCT tags are
-    safe (independent dirs, associative fold); concurrent SAME-tag
-    writers are out of contract, with damage confined to that slot and
-    healed by one sequential replay."""
+    Idempotency: a stable `batch_tag` slots both deltas as
+    tag=<batch_tag>, so a replayed batch replaces its own deltas instead
+    of double-counting (the streaming twin passes the micro-batch id).
+    After any sequence of ingests, read_bigram_lm_store equals
+    train_bigram_lm over the union of every batch ever ingested. Slot,
+    replay and concurrency contract: operators/deltastore.py."""
     bi, toks = _lm_batch_deltas(batch, text_col)
-    if batch_tag is not None:
-        safe = _safe_tag(batch_tag)
-        bi.write.mode("overwrite").parquet(f"{store_dir}/bigrams/tag={safe}")
-        toks.write.mode("overwrite").parquet(f"{store_dir}/tokens/tag={safe}")
-    else:
-        bi.write.mode("append").parquet(f"{store_dir}/bigrams")
-        toks.write.mode("append").parquet(f"{store_dir}/tokens")
+    slot = tag_slot(batch_tag)
+    LM_BIGRAMS.append(bi, f"{store_dir}/bigrams", slot)
+    LM_TOKENS.append(toks, f"{store_dir}/tokens", slot)
 
 
-def _safe_tag(batch_tag: str) -> str:
-    return "".join(
-        ch if ch.isalnum() or ch in "-_." else "_" for ch in batch_tag
+def _lm_from_logs(
+    bi_log: DataFrame, tok_log: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(bigram_counts, unigram_counts, vocab_size) folded from the two
+    delta logs."""
+    bi = LM_BIGRAMS.fold(bi_log).withColumnRenamed("n", "c_bi")
+    toks = LM_TOKENS.fold(tok_log)
+    uni = toks.where(F.col("n_hist") > 0).select(
+        F.col("tok").alias("w1"), F.col("n_hist").alias("c_uni")
     )
-
-
-def lm_store_exists(spark, store_dir: str) -> bool:
-    """Explicit store-exists probe (Hadoop FS, portable to HDFS/S3 URIs)
-    — the seam that keeps the streaming path free of exception-message
-    string matching. Probes the bigrams/ subdir: both subdirs are
-    written per ingest, bigrams first, so its absence means no ingest
-    has ever started."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{store_dir}/bigrams")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
+    vocab = toks.agg(F.count(F.lit(1)).alias("v"))
+    return bi, uni, vocab
 
 
 def read_bigram_lm_store(
@@ -280,68 +279,27 @@ def read_bigram_lm_store(
     (bigram_counts, unigram_counts, vocab_size) in the exact shape
     train_bigram_lm produces, so score_bigram_logprob consumes either
     interchangeably (and bit-identically — counts are exact integers
-    regardless of batch slicing).
+    regardless of batch slicing, and after compact_bigram_lm_store).
 
-    `exclude_tag` drops that batch's tag slot from the fold (same
-    replay seam as incremental_exact_dedup_ingest): a REPLAYED tagged
-    batch must be able to read the store exactly as it stood before its
-    own crashed attempt folded in — otherwise the replay scores the
-    batch against its own counts. Also heals a crash BETWEEN the two
-    subdir writes of incremental_bigram_lm_ingest (bigrams/tag=X
-    written, tokens/tag=X not): excluding X restores a consistent
-    pre-batch view, and the replay's overwrite completes the pair."""
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    # compaction-aware reads (operators/deltastore.py): after
-    # compact_bigram_lm_store folds old tag slots, this fold is bit-equal
-    # (exact integer counts under any regrouping) while the file listing
-    # drops from O(#batches) to O(tail)
-    excl = f"tag={_safe_tag(exclude_tag)}" if exclude_tag is not None else None
-    bi = (
-        read_delta_store(spark, f"{store_dir}/bigrams", exclude_slot=excl)
-        .groupBy("bigram")
-        .agg(F.sum("n").alias("c_bi"))
+    `exclude_tag` drops that batch's tag slot from both logs: the replay
+    seam, which also heals a crash BETWEEN the two writes of
+    incremental_bigram_lm_ingest (operators/deltastore.py)."""
+    slot = tag_slot(exclude_tag)
+    return _lm_from_logs(
+        read_delta_store(spark, f"{store_dir}/bigrams", exclude_slot=slot),
+        read_delta_store(spark, f"{store_dir}/tokens", exclude_slot=slot),
     )
-    toks = (
-        read_delta_store(spark, f"{store_dir}/tokens", exclude_slot=excl)
-        .groupBy("tok")
-        .agg(F.sum("n_tok").alias("n_tok"), F.sum("n_hist").alias("n_hist"))
-    )
-    uni = toks.where(F.col("n_hist") > 0).select(
-        F.col("tok").alias("w1"), F.col("n_hist").alias("c_uni")
-    )
-    vocab = toks.agg(F.count(F.lit(1)).alias("v"))
-    return bi, uni, vocab
 
 
-def compact_bigram_lm_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold the LM store's old tag slots into one consolidated slot per
-    subdir log (operators/deltastore.py protocol; reads bit-equal before
-    and after — the counts are exact integers). Run it from the ingest
-    maintenance loop; keep_slots (default 1) protects the in-flight
-    replay seam. Returns {"bigrams": report, "tokens": report}."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return {
-        "bigrams": compact_delta_store(
-            spark, f"{store_dir}/bigrams",
-            key_cols=["bigram"], agg=[("n", "sum")], **kwargs,
-        ),
-        "tokens": compact_delta_store(
-            spark, f"{store_dir}/tokens",
-            key_cols=["tok"], agg=[("n_tok", "sum"), ("n_hist", "sum")],
-            **kwargs,
-        ),
-    }
+compact_bigram_lm_store = LM_STORE.compact
 
 
 def bigram_lm_handle_batch(
     batch_df: DataFrame, batch_id: int, *, store_dir: str, text_col: str = "text"
 ) -> None:
-    """One micro-batch of streaming_bigram_lm_ingest, module-level so the
-    replay contract is directly testable: calling this twice with the
-    same batch_id (at-least-once delivery) leaves the store in the same
-    state as calling it once — the tag slot overwrites."""
+    """One micro-batch of streaming_bigram_lm_ingest: the batch id is the
+    tag slot (b<id>), so calling this twice with the same batch_id
+    (at-least-once delivery) leaves the store as one call does."""
     incremental_bigram_lm_ingest(
         batch_df.sparkSession,
         batch_df,
@@ -362,14 +320,9 @@ def streaming_bigram_lm_ingest(
     shared store exactly-once (batch id = tag slot). Returns a configured
     DataStreamWriter — call .trigger(...).start(). Read the live LM any
     time with read_bigram_lm_store; scoring stays a batch concern."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        bigram_lm_handle_batch(
-            batch_df, batch_id, store_dir=store_dir, text_col=text_col
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_writer(
+        stream, checkpoint_dir, bigram_lm_handle_batch,
+        store_dir=store_dir, text_col=text_col,
     )
 
 
@@ -394,7 +347,7 @@ def perplexity_monitor_handle_batch(
     came before" means), write a 1-row drift record, then fold the batch
     into the store. Both sinks are batch_id-slotted with overwrite, so
     an at-least-once replay leaves store AND monitor exactly as a single
-    delivery would (same contract as exact_dedup_handle_batch).
+    delivery would (operators/deltastore.py).
 
     `fold=False` is the HELD-OUT mode (CCNet's fixed-reference setup):
     the store is a pre-seeded reference LM that batches score against
@@ -412,8 +365,7 @@ def perplexity_monitor_handle_batch(
     the fold, before the checkpoint commit: exclusion removes the
     already-folded tag b, so the replay scores against the same
     pre-batch LM a single delivery saw instead of the batch's own
-    counts. Store existence is an explicit FS probe (lm_store_exists),
-    not exception-message matching.
+    counts. A missing log (no ingest has completed) means no prior LM.
 
     The drift statistic is decimal-mean of the per-doc avg_nll values
     (each itself a deterministic fixed-order fold), so the record is
@@ -421,10 +373,14 @@ def perplexity_monitor_handle_batch(
     records n_scored=0 (a replayed first batch likewise: its own slot
     is excluded, leaving an empty prior vocabulary)."""
     spark = batch_df.sparkSession
-    tag = f"b{int(batch_id)}"
+    slot = tag_slot(f"b{int(batch_id)}")
+    logs = [
+        spec.read(spark, f"{store_dir}/{name}", exclude_slot=slot)
+        for name, spec in LM_STORE.logs
+    ]
     prior_vocab = 0
-    if lm_store_exists(spark, store_dir):
-        bi, uni, v = read_bigram_lm_store(spark, store_dir, exclude_tag=tag)
+    if None not in logs:
+        bi, uni, v = _lm_from_logs(*logs)
         prior_vocab = (v.first() or {"v": 0})["v"] or 0  # 1-row driver probe
     if prior_vocab > 0:
         scored = score_bigram_logprob(
@@ -440,11 +396,7 @@ def perplexity_monitor_handle_batch(
         stats = spark.createDataFrame(
             [(0, None)], "n_scored long, mean_nll double"
         )
-    (
-        stats.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .parquet(f"{monitor_dir}/batch_id={int(batch_id)}")
-    )
+    write_batch_slot(stats, monitor_dir, batch_id)
     if fold:
         bigram_lm_handle_batch(
             batch_df, batch_id, store_dir=store_dir, text_col=text_col
@@ -469,13 +421,8 @@ def streaming_perplexity_monitor(
     flood). Returns a configured DataStreamWriter; read the drift series
     with spark.read.parquet(monitor_dir) (batch_id is an inferred
     partition column)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        perplexity_monitor_handle_batch(
-            batch_df, batch_id, store_dir=store_dir, monitor_dir=monitor_dir,
-            id_col=id_col, text_col=text_col, k=k, fold=fold,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_batch_writer(
+        stream, checkpoint_dir, perplexity_monitor_handle_batch,
+        store_dir=store_dir, monitor_dir=monitor_dir, id_col=id_col,
+        text_col=text_col, k=k, fold=fold,
     )

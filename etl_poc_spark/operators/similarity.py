@@ -894,8 +894,10 @@ def train_pq_codebooks(
         by: dict = {}
         for r in rows:
             by.setdefault((r["s"], r["cluster"]), [0.0] * sub)[r["si"]] = r["c"]
+        # new_books starts as a copy of books: a cluster with no members
+        # this iteration keeps the previous iteration's centroid
         for (s, cid), vec in by.items():
-            new_books[s][cid] = vec  # untouched (empty) clusters keep init
+            new_books[s][cid] = vec
         books = new_books
     return books
 

@@ -11,6 +11,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import (
+    DeltaStoreSpec,
+    batch_slot,
+    foreach_batch_writer,
+    ingest_to_sink,
+)
+
+# (win_hash, n_docs) per batch; the cumulative count is their SUM
+SPAN_STORE = DeltaStoreSpec(("win_hash",), (("n_docs", "sum"),))
+
 
 def span_coverage(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", window: int = 8
@@ -258,48 +268,30 @@ def incremental_span_removal_ingest(
     window across batches — acceptable: the threshold needs a signal,
     not an exact census (the linededup caveat verbatim).
 
-    `batch_id` (the streaming seam): store rows are written PARTITIONED
-    by batch_id with dynamic partition overwrite, and the history read
-    EXCLUDES the current batch_id — an at-least-once foreachBatch replay
-    overwrites its own partition and never sees its prior attempt as
-    history, so replay is byte-identical.
+    `batch_id` (the streaming seam) slots the batch's counts as
+    `batch_id=<n>` and excludes that slot from the history read, so a
+    replay is byte-identical. Slot, replay and concurrency contract:
+    operators/deltastore.py.
 
     Scale shape: only window hashes and counts persist or shuffle —
     historical span BODIES are never stored; the rebuild tail is shared
     with span_removal (one doc_id window + the text join)."""
-    from pyspark.errors import AnalysisException
-
     w = int(window)
     if w <= 0:
         raise ValueError("window must be positive")
     d = _token_arrays(batch, id_col, text_col)
     wins = _window_hashes(d, id_col, w)
     batch_counts = wins.groupBy("h").agg(F.countDistinct(id_col).alias("n_docs"))
-    from etl_poc_spark.operators.deltastore import read_delta_store
-
-    try:
-        # compaction-aware read (operators/deltastore.py); slot-level
-        # replay exclusion — a batch_id replay against a loose-append
-        # store raises DeltaStoreModeError instead of silently counting
-        # its own prior attempt as history (ADVICE r15)
-        store = read_delta_store(
-            spark, store_dir,
-            exclude_slot=(
-                f"batch_id={int(batch_id)}" if batch_id is not None else None
-            ),
+    slot = batch_slot(batch_id)
+    store = SPAN_STORE.read(spark, store_dir, exclude_slot=slot)
+    if store is None:
+        total = batch_counts.select("h", F.col("n_docs").alias("total_docs"))
+    else:
+        hist = SPAN_STORE.fold(store).select(
+            F.col("win_hash").alias("h"), F.col("n_docs").alias("hist_docs")
         )
-        have_store = True
-    except AnalysisException as exc:
-        # first ingest only — any OTHER analysis failure must surface
-        # (treating a corrupt store as "no history" would silently dedup
-        # against nothing; the linededup rule)
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        have_store = False
-    if have_store:
-        hist = store.groupBy("win_hash").agg(F.sum("n_docs").alias("hist_docs"))
         total = (
-            batch_counts.join(hist.withColumnRenamed("win_hash", "h"), "h", "left")
+            batch_counts.join(hist, "h", "left")
             .select(
                 "h",
                 (
@@ -307,8 +299,6 @@ def incremental_span_removal_ingest(
                 ).alias("total_docs"),
             )
         )
-    else:
-        total = batch_counts.select("h", F.col("n_docs").alias("total_docs"))
     dup = total.filter(F.col("total_docs") >= 2).select("h")
     flagged = wins.join(dup, "h").select(id_col, "start")
     # MATERIALIZE before the store append: the output plan reads the store
@@ -316,31 +306,13 @@ def incremental_span_removal_ingest(
     # without this, an action after the append would recount the batch's
     # own rows as history (the linededup lesson)
     out = _rebuild_without_spans(d, flagged, id_col, w).localCheckpoint(eager=True)
-    counts_out = batch_counts.withColumnRenamed("h", "win_hash")
-    if batch_id is None:
-        counts_out.write.mode("append").parquet(store_dir)
-    else:
-        (
-            counts_out.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_dir)
-        )
+    SPAN_STORE.append(
+        batch_counts.withColumnRenamed("h", "win_hash"), store_dir, slot
+    )
     return out
 
 
-def compact_span_store(spark, store_dir: str, **kwargs) -> dict:
-    """Fold the duplicated-window store's old batch_id slots into one
-    consolidated slot (operators/deltastore.py protocol). SUM(n_docs) by
-    win_hash is the readers' own fold — bit-equal before/after; keep_slots
-    (default 1) protects the in-flight micro-batch's replay exclusion."""
-    from etl_poc_spark.operators.deltastore import compact_delta_store
-
-    return compact_delta_store(
-        spark, store_dir,
-        key_cols=["win_hash"], agg=[("n_docs", "sum")], **kwargs,
-    )
+compact_span_store = SPAN_STORE.compact
 
 
 def streaming_span_removal_ingest(
@@ -354,27 +326,15 @@ def streaming_span_removal_ingest(
 ):
     """Continuous span dedup: each micro-batch runs
     incremental_span_removal_ingest against the shared window store and
-    appends its rewritten documents to `kept_dir`. Returns a configured
-    DataStreamWriter — call .trigger(...).start() to run. Both side
-    effects are keyed by batch_id with dynamic partition overwrite, so
-    foreachBatch's at-least-once replay composes to effectively-once
-    (the streaming_line_dedup_ingest contract verbatim)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        out = incremental_span_removal_ingest(
-            batch_df.sparkSession, batch_df, store_dir,
-            id_col=id_col, text_col=text_col, batch_id=batch_id, **ingest_kwargs,
-        )
-        (
-            out.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(kept_dir)
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    writes its rewritten documents as the batch's `batch_id=<n>`
+    partition of `kept_dir`. Returns a configured DataStreamWriter — call
+    .trigger(...).start() to run. Store and sink are both keyed by the
+    batch id, so an at-least-once replay is effectively-once
+    (operators/deltastore.py)."""
+    return foreach_batch_writer(
+        stream, checkpoint_dir, ingest_to_sink,
+        ingest=incremental_span_removal_ingest, store_dir=store_dir,
+        kept_dir=kept_dir, id_col=id_col, text_col=text_col, **ingest_kwargs,
     )
 
 

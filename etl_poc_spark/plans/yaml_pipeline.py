@@ -1334,46 +1334,38 @@ def run_streaming_pipeline(
             raise PipelineConfigError(f"streaming block missing required key {key!r}")
     stream = _open_stream(spark, spec["source"])
     op = spec["op"]
-    summary: dict[str, Any] = {"op": op, "store_dir": spec["store_dir"]}
+    store_dir = spec["store_dir"]
+    summary: dict[str, Any] = {"op": op, "store_dir": store_dir}
 
+    # every op is one foreachBatch handler over its store; the handler and
+    # its keyword arguments besides store_dir are all that differ
     if op == "exact_dedup":
-        from etl_poc_spark.operators.incremental import streaming_exact_dedup_ingest
+        from etl_poc_spark.operators.incremental import exact_dedup_handle_batch
 
         if "kept_dir" not in spec or "keys" not in spec:
             raise PipelineConfigError("streaming exact_dedup requires 'keys' and 'kept_dir'")
-        writer = streaming_exact_dedup_ingest(
-            stream,
-            spec["store_dir"],
-            spec["kept_dir"],
-            spec["checkpoint_dir"],
+        handle = exact_dedup_handle_batch
+        kwargs = dict(
+            kept_dir=spec["kept_dir"],
             key_cols=list(spec["keys"]),
             id_col=spec.get("id", "doc_id"),
         )
     elif op == "lm_counts":
-        from etl_poc_spark.operators.ngram_lm import streaming_bigram_lm_ingest
+        from etl_poc_spark.operators.ngram_lm import bigram_lm_handle_batch
 
-        writer = streaming_bigram_lm_ingest(
-            stream,
-            spec["store_dir"],
-            spec["checkpoint_dir"],
-            text_col=spec.get("text_key", "text"),
-        )
+        handle = bigram_lm_handle_batch
+        kwargs = dict(text_col=spec.get("text_key", "text"))
     elif op == "dsir_counts":
         # continuous DSIR model maintenance (operators/dsir.py): fold each
         # micro-batch's bucket histogram into the store under `role`
         # (raw|target); batch scoring reads it via score_dsir_store
-        from etl_poc_spark.operators.dsir import (
-            DEFAULT_BUCKETS,
-            streaming_dsir_ingest,
-        )
+        from etl_poc_spark.operators.dsir import DEFAULT_BUCKETS, dsir_handle_batch
 
         role = spec.get("role", "raw")
         if role not in ("raw", "target"):
             raise PipelineConfigError("dsir_counts: role must be raw|target")
-        writer = streaming_dsir_ingest(
-            stream,
-            spec["store_dir"],
-            spec["checkpoint_dir"],
+        handle = dsir_handle_batch
+        kwargs = dict(
             role=role,
             text_col=spec.get("text_key", "text"),
             n_buckets=int(spec.get("n_buckets", DEFAULT_BUCKETS)),
@@ -1384,12 +1376,10 @@ def run_streaming_pipeline(
         # fold each micro-batch's per-domain (count, clipped-excess-sum)
         # partials into the store; the live mixture weights are
         # doremi_store_weights over it at any time
-        from etl_poc_spark.operators.curation import streaming_doremi_ingest
+        from etl_poc_spark.operators.curation import doremi_handle_batch
 
-        writer = streaming_doremi_ingest(
-            stream,
-            spec["store_dir"],
-            spec["checkpoint_dir"],
+        handle = doremi_handle_batch
+        kwargs = dict(
             domain_col=spec.get("stratify_key", "source"),
             excess_col=spec.get("excess_key", "excess"),
         )
@@ -1400,13 +1390,11 @@ def run_streaming_pipeline(
         # live view any time with read_badwords_store
         from etl_poc_spark.operators.curation import (
             C4_BADWORDS_PLACEHOLDER,
-            streaming_badwords_ingest,
+            badwords_handle_batch,
         )
 
-        writer = streaming_badwords_ingest(
-            stream,
-            spec["store_dir"],
-            spec["checkpoint_dir"],
+        handle = badwords_handle_batch
+        kwargs = dict(
             badwords=spec.get("badwords", list(C4_BADWORDS_PLACEHOLDER)),
             domain_col=spec.get("stratify_key", "source"),
             text_col=spec.get("text_key", "text"),
@@ -1419,8 +1407,8 @@ def run_streaming_pipeline(
         # folds into raw
         from etl_poc_spark.operators.dsir import (
             DEFAULT_BUCKETS,
+            dsir_monitor_handle_batch,
             incremental_dsir_ingest,
-            streaming_dsir_monitor,
         )
 
         if "monitor_dir" not in spec:
@@ -1435,18 +1423,16 @@ def run_streaming_pipeline(
         incremental_dsir_ingest(
             spark,
             tgtdf,
-            spec["store_dir"],
+            store_dir,
             role="target",
             text_col=tgt_spec.get("text_key", spec.get("text_key", "text")),
             n_buckets=nb,
             batch_tag="reference",
         )
         summary["target_rows"] = tgtdf.count()
-        writer = streaming_dsir_monitor(
-            stream,
-            spec["store_dir"],
-            spec["monitor_dir"],
-            spec["checkpoint_dir"],
+        handle = dsir_monitor_handle_batch
+        kwargs = dict(
+            monitor_dir=spec["monitor_dir"],
             id_col=spec.get("id", "doc_id"),
             text_col=spec.get("text_key", "text"),
             n_buckets=nb,
@@ -1455,7 +1441,7 @@ def run_streaming_pipeline(
     elif op == "lm_perplexity_monitor":
         from etl_poc_spark.operators.ngram_lm import (
             incremental_bigram_lm_ingest,
-            streaming_perplexity_monitor,
+            perplexity_monitor_handle_batch,
         )
 
         if "monitor_dir" not in spec:
@@ -1468,16 +1454,14 @@ def run_streaming_pipeline(
             incremental_bigram_lm_ingest(
                 spark,
                 refdf,
-                spec["store_dir"],
+                store_dir,
                 text_col=ref.get("text_key", spec.get("text_key", "text")),
                 batch_tag="reference",
             )
             summary["reference_rows"] = refdf.count()
-        writer = streaming_perplexity_monitor(
-            stream,
-            spec["store_dir"],
-            spec["monitor_dir"],
-            spec["checkpoint_dir"],
+        handle = perplexity_monitor_handle_batch
+        kwargs = dict(
+            monitor_dir=spec["monitor_dir"],
             id_col=spec.get("id", "doc_id"),
             text_col=spec.get("text_key", "text"),
             k=float(spec.get("k", 1.0)),
@@ -1488,6 +1472,11 @@ def run_streaming_pipeline(
     else:
         raise PipelineConfigError(f"unknown streaming op {op!r}")
 
+    from etl_poc_spark.operators.deltastore import foreach_batch_writer
+
+    writer = foreach_batch_writer(
+        stream, spec["checkpoint_dir"], handle, store_dir=store_dir, **kwargs
+    )
     q = writer.trigger(availableNow=True).start()
     q.awaitTermination(timeout_seconds)
     summary["stream_stopped"] = not q.isActive

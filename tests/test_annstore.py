@@ -176,8 +176,7 @@ def test_reindex_refuses_unaddressable_stale_rows(spark, tmp_path):
     """Loose-appended stale rows (no slot to rewrite) and stale slots
     already folded by compaction both raise instead of reindexing
     partially."""
-    from etl_poc_spark.operators.annstore import reindex_ann_store
-    from etl_poc_spark.operators.deltastore import compact_delta_store
+    from etl_poc_spark.operators.annstore import ANN_POSTINGS, reindex_ann_store
 
     idx = str(tmp_path / "idx")
     build_ann_index(spark, _vecs(spark, range(12)), idx, n_centroids=3, n_iters=1)
@@ -191,8 +190,7 @@ def test_reindex_refuses_unaddressable_stale_rows(spark, tmp_path):
     store = str(tmp_path / "store")
     incremental_ann_ingest(spark, _vecs(spark, range(6)), idx, store, batch_tag="b0")
     incremental_ann_ingest(spark, _vecs(spark, range(6, 12)), idx, store, batch_tag="b1")
-    cols = ["cluster", "vec_id", "embedding", "model_seq", "slot"]
-    compact_delta_store(spark, store, key_cols=cols, agg=[])  # folds b0
+    ANN_POSTINGS.compact(spark, store)  # folds b0
     build_ann_index(spark, _vecs(spark, range(5, 17)), idx, n_centroids=3, n_iters=1)
     with pytest.raises(ValueError, match="folded by compaction"):
         reindex_ann_store(spark, idx, store)

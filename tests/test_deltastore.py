@@ -5,15 +5,21 @@ protocol's three steps must never change what a reader sees."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+import os
+import shutil
+from collections.abc import Callable
+from dataclasses import dataclass
 
+import pytest
+
+from etl_poc_spark.operators import deltastore
 from etl_poc_spark.operators.deltastore import (
     CompactedSlotReplayError,
     DeltaStoreModeError,
     compact_delta_store,
     load_compaction_manifest,
     read_delta_store,
+    tag_slot,
     vacuum_delta_store,
 )
 
@@ -39,38 +45,163 @@ def _ingest_exact(spark, store, docs, tag):
     )
 
 
-@pytest.mark.slow
-def test_exact_dedup_compaction_reads_bit_equal(spark, tmp_path):
-    """Fold-of-folds equivalence: a store compacted mid-history reads
-    exactly like its never-compacted twin — including ingests that land
-    AFTER the compaction."""
-    from etl_poc_spark.operators.incremental import (
-        compact_exact_dedup_store,
-        read_exact_dedup_store,
-    )
+# ---------------------------------------------------------------------------
+# the store families, one row each: how a batch ingests, how the family
+# reads its current state, and its delta logs (subdir, spec)
+# ---------------------------------------------------------------------------
 
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    batches = [
-        [(1, "x"), (2, "y")],
-        [(3, "x"), (4, "z")],          # x duplicates batch 1
-        [(5, "w"), (6, "y"), (7, "y")],
-        [(8, "v"), (9, "x")],
-        [(10, "z"), (11, "u")],
+
+@dataclass(frozen=True)
+class Family:
+    name: str
+    ingest: Callable  # (spark, store, batch i) -> output frame | None
+    read: Callable  # (spark, store) -> sorted row tuples of the current state
+    logs: tuple  # ((subdir or "", DeltaStoreSpec), ...)
+    compact: Callable
+
+
+def _words(i, n=12):
+    return " ".join(f"w{i}_{j}" for j in range(n))
+
+
+_BOILER = " ".join(f"b{i}" for i in range(10))
+_TEXT_DOCS = [  # boilerplate shared across batches, plus unique text
+    [(1, f"{_BOILER} {_words(1, 10)}"), (2, f"{_BOILER} {_words(2, 10)}")],
+    [(3, f"{_BOILER} {_words(3, 10)}"), (4, _words(4, 10))],
+    [(5, f"{_BOILER} {_words(5, 10)}"), (6, f"{_words(4, 10)} tail")],
+]
+_NEAR_DUP_DOCS = [
+    [(1, _words(1)), (2, _words(2))],
+    [(3, _words(3)), (4, _words(4))],
+    # 10 duplicates stored doc 3; 13/14 are a near-pair within the batch
+    [(10, _words(3)), (13, _words(13)), (14, _words(13))],
+]
+_EXACT_DOCS = [
+    [(1, "x"), (2, "y")],
+    [(3, "x"), (4, "z")],
+    [(5, "w"), (6, "y"), (7, "y"), (8, "x"), (9, "u")],
+]
+_LM_TEXTS = [
+    ["the cat sat", "the dog sat"],
+    ["the cat ran", "a dog ran far"],
+    ["the end", "cat and dog", "a cat sat far"],
+]
+_SOURCED = [  # (source, text, excess)
+    [("s1", "clean text", 5), ("s2", "badword here", 9)],
+    [("s1", "more badword", 0), ("s3", "plain words", 3)],
+    [("s2", "clean again", 7), ("s1", "badword badword", 2), ("s3", "fine", 4)],
+]
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _family_table():
+    from etl_poc_spark.operators import curation, dsir, incremental, linededup, ngram_lm
+    from etl_poc_spark.operators import spandedup
+
+    def sourced(spark, i):
+        return spark.createDataFrame(
+            _SOURCED[i], "source string, text string, excess long"
+        )
+
+    def batch_id_ingest(fn, data):
+        return lambda spark, store, i: fn(spark, _docs(spark, data[i]), store, batch_id=i)
+
+    def dsir_ingest(spark, store, i):
+        for role in ("raw", "target"):
+            dsir.incremental_dsir_ingest(
+                spark, sourced(spark, i), store, role=role, n_buckets=64,
+                batch_tag=f"b{i}",
+            )
+
+    def folded(spec):  # stores without a family reader: the spec's own fold
+        return lambda spark, store: _sorted_rows(spec.fold(read_delta_store(spark, store)))
+
+    return [
+        Family(
+            "exact_dedup",
+            lambda spark, store, i: incremental.incremental_exact_dedup_ingest(
+                spark, _docs(spark, _EXACT_DOCS[i]), store, ["text"], batch_tag=f"b{i}"
+            ),
+            lambda spark, store: _sorted_rows(incremental.read_exact_dedup_store(spark, store)),
+            (("", incremental.EXACT_DEDUP_STORE),),
+            incremental.compact_exact_dedup_store,
+        ),
+        Family(
+            "near_dup",
+            batch_id_ingest(incremental.incremental_near_dup_ingest, _NEAR_DUP_DOCS),
+            folded(incremental.NEAR_DUP_STORE),  # the DISTINCT set of postings
+            (("", incremental.NEAR_DUP_STORE),),
+            incremental.compact_near_dup_store,
+        ),
+        Family(
+            "line_dedup",
+            batch_id_ingest(linededup.incremental_line_dedup_ingest, _TEXT_DOCS),
+            folded(linededup.LINE_DEDUP_STORE),
+            (("", linededup.LINE_DEDUP_STORE),),
+            linededup.compact_line_dedup_store,
+        ),
+        Family(
+            "span_dedup",
+            batch_id_ingest(spandedup.incremental_span_removal_ingest, _TEXT_DOCS),
+            folded(spandedup.SPAN_STORE),
+            (("", spandedup.SPAN_STORE),),
+            spandedup.compact_span_store,
+        ),
+        Family(
+            "bigram_lm",
+            lambda spark, store, i: ngram_lm.incremental_bigram_lm_ingest(
+                spark,
+                spark.createDataFrame([(t,) for t in _LM_TEXTS[i]], "text string"),
+                store,
+                batch_tag=f"b{i}",
+            ),
+            lambda spark, store: [
+                _sorted_rows(df) for df in ngram_lm.read_bigram_lm_store(spark, store)
+            ],
+            ngram_lm.LM_STORE.logs,
+            ngram_lm.compact_bigram_lm_store,
+        ),
+        Family(
+            "dsir",
+            dsir_ingest,
+            lambda spark, store: _sorted_rows(dsir.read_dsir_model(spark, store, n_buckets=64)),
+            dsir.DSIR_STORE.logs,
+            dsir.compact_dsir_store,
+        ),
+        Family(
+            "doremi",
+            lambda spark, store, i: curation.incremental_doremi_ingest(
+                spark, sourced(spark, i), store, batch_tag=f"b{i}"
+            ),
+            lambda spark, store: _sorted_rows(curation.read_doremi_store(spark, store)),
+            (("", curation.DOREMI_STORE),),
+            curation.compact_doremi_store,
+        ),
+        Family(
+            "badwords",
+            lambda spark, store, i: curation.incremental_badwords_ingest(
+                spark, sourced(spark, i), store, batch_tag=f"b{i}"
+            ),
+            lambda spark, store: _sorted_rows(curation.read_badwords_store(spark, store)),
+            (("", curation.BADWORDS_STORE),),
+            curation.compact_badwords_store,
+        ),
     ]
-    for i, rows in enumerate(batches[:3]):
-        for store in (a, b):
-            _ingest_exact(spark, store, _docs(spark, rows), f"b{i}")
-    rep = compact_exact_dedup_store(spark, a)  # folds b0,b1; keeps b2
-    assert rep["gen"] == 1 and rep["slots_folded"] == 2 and rep["slots_live"] == 1
-    assert rep["data_files_after"] < rep["data_files_before"]
-    for i, rows in enumerate(batches[3:], start=3):
-        ka = _ingest_exact(spark, a, _docs(spark, rows), f"b{i}")
-        kb = _ingest_exact(spark, b, _docs(spark, rows), f"b{i}")
-        assert _rows(ka, "doc_id") == _rows(kb, "doc_id")
-    cols = ("fp", "min_id", "n_copies")
-    assert _rows(read_exact_dedup_store(spark, a), *cols) == _rows(
-        read_exact_dedup_store(spark, b), *cols
-    )
+
+
+FAMILIES = [f.name for f in _family_table()]
+
+
+def _family(name):
+    return next(f for f in _family_table() if f.name == name)
+
+
+def _reports(fam, rep):
+    """Per-log compaction reports (multi-log families return a dict)."""
+    return [rep[sub] for sub, _spec in fam.logs] if len(fam.logs) > 1 else [rep]
 
 
 @pytest.mark.slow
@@ -168,6 +299,117 @@ def test_compaction_noops(spark, tmp_path):
     assert single["slots_folded"] == 0  # keep_slots=1 protects the only slot
     with pytest.raises(ValueError, match="unknown agg fn"):
         compact_delta_store(spark, a, key_cols=["fp"], agg=[("n_copies", "avg")])
+    # every family: a missing store is a gen=0 no-op, never an error
+    for fam in _family_table():
+        store = str(tmp_path / f"missing_{fam.name}")
+        for rep in _reports(fam, fam.compact(spark, store)):
+            assert rep == {"gen": 0, "slots_folded": 0, "slots_live": 0,
+                           "data_files_before": 0, "data_files_after": 0}, fam.name
+        assert all(spec.read(spark, store) is None for _sub, spec in fam.logs)
+
+
+def test_crash_window_before_manifest_publish(spark, tmp_path, monkeypatch):
+    """A crash between step 1 (the hidden `_compacted/<gen>` rows are
+    written) and step 2 (the manifest publish) leaves an orphan no reader
+    sees; the next compaction overwrites it and reads stay bit-equal."""
+    from etl_poc_spark.operators.incremental import (
+        EXACT_DEDUP_STORE,
+        compact_exact_dedup_store,
+        read_exact_dedup_store,
+    )
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    for i in range(3):
+        rows = [(10 * i, f"t{i}"), (10 * i + 1, "t0")]
+        for store in (a, b):
+            _ingest_exact(spark, store, _docs(spark, rows), f"b{i}")
+    cols = ("fp", "min_id", "n_copies")
+    before = _rows(read_exact_dedup_store(spark, a), *cols)
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(deltastore, "_publish_manifest", crash)
+    with pytest.raises(RuntimeError, match="crash before publish"):
+        compact_exact_dedup_store(spark, a)  # folds b0, b1 into the orphan
+    monkeypatch.undo()
+    assert os.listdir(f"{a}/_compacted") == ["00000001"]
+    assert load_compaction_manifest(spark, a) is None
+    assert {"tag=b0", "tag=b1", "tag=b2"} <= set(os.listdir(a))
+    assert _rows(read_exact_dedup_store(spark, a), *cols) == before
+
+    # one more batch, then the retry: same gen, the orphan is overwritten
+    # with the fold of b0..b2 (b3 is the protected tail)
+    for store in (a, b):
+        _ingest_exact(spark, store, _docs(spark, [(30, "t0"), (31, "t9")]), "b3")
+    rep = compact_exact_dedup_store(spark, a)
+    assert (rep["gen"], rep["slots_folded"], rep["slots_live"]) == (1, 3, 1)
+    assert _rows(read_exact_dedup_store(spark, a), *cols) == _rows(
+        read_exact_dedup_store(spark, b), *cols
+    )
+    orphan_overwritten = read_delta_store(spark, f"{a}/_compacted/00000001")
+    folded_b0_b2 = EXACT_DEDUP_STORE.fold(read_delta_store(spark, b, exclude_slot="tag=b3"))
+    assert _sorted_rows(orphan_overwritten) == _sorted_rows(folded_b0_b2)
+
+
+@pytest.mark.parametrize("name", FAMILIES)
+def test_store_compaction_bit_equal(spark, tmp_path, name):
+    """Fold-of-folds equivalence for every family: compacting a store
+    changes nothing its reader returns (set-equality for the near-dup
+    postings), and an ingest landing AFTER the compaction — read from
+    the consolidated rows plus the live tail — returns and stores
+    exactly what it does on the never-compacted twin."""
+    fam = _family(name)
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    for i in range(2):
+        fam.ingest(spark, a, i)
+    shutil.copytree(a, b)  # the never-compacted twin
+    before = fam.read(spark, a)
+    for rep in _reports(fam, fam.compact(spark, a, keep_slots=0)):
+        assert (rep["gen"], rep["slots_folded"], rep["slots_live"]) == (1, 2, 0), name
+        assert rep["data_files_after"] < rep["data_files_before"], name
+    assert fam.read(spark, a) == before, name
+    out_a, out_b = fam.ingest(spark, a, 2), fam.ingest(spark, b, 2)
+    if out_a is not None:
+        assert _sorted_rows(out_a) == _sorted_rows(out_b), name
+    assert fam.read(spark, a) == fam.read(spark, b), name
+
+
+@pytest.mark.parametrize("name", FAMILIES)
+def test_corrupt_store_raises(spark, tmp_path, name):
+    """A corrupt store must raise, not silently reset history to empty
+    (the first-ingest seam only forgives a MISSING store)."""
+    fam = _family(name)
+    store = tmp_path / "store"
+    for sub, _spec in fam.logs:
+        slot = (store / sub if sub else store) / "tag=corrupt"
+        slot.mkdir(parents=True)
+        (slot / "part-0.parquet").write_bytes(b"this is not parquet")
+    with pytest.raises(Exception) as ei:
+        # the dedup families read history while ingesting; the count
+        # stores only append, so their reader is the history read
+        out = fam.ingest(spark, str(store), 0)
+        if out is None:
+            fam.read(spark, str(store))
+        else:
+            out.collect()
+    assert "footer" in str(ei.value).lower()
+    assert "PATH_NOT_FOUND" not in str(ei.value)
+
+
+def test_tag_outside_safe_set_is_refused(spark, tmp_path):
+    """Distinct tags must never share a slot: 'x/1' used to be rewritten
+    to 'x_1', so its ingest overwrote the 'x_1' batch's history."""
+    assert tag_slot("x_1") == "tag=x_1" and tag_slot("raw-b7.2") == "tag=raw-b7.2"
+    assert tag_slot(None) is None
+    for bad in ("x/1", "x 1", "", "tag=x", "é"):
+        with pytest.raises(ValueError, match="batch tag"):
+            tag_slot(bad)
+    a = str(tmp_path / "a")
+    _ingest_exact(spark, a, _docs(spark, [(1, "x")]), "x_1")
+    with pytest.raises(ValueError, match="batch tag"):
+        _ingest_exact(spark, a, _docs(spark, [(2, "y")]), "x/1")
+    assert [n for n in os.listdir(a) if not n.startswith((".", "_"))] == ["tag=x_1"]
 
 
 # ---------------------------------------------------------------------------
@@ -192,169 +434,6 @@ def test_batch_id_replay_against_loose_store_raises(spark, tmp_path):
     incremental_span_removal_ingest(spark, docs, span_store)  # loose mode
     with pytest.raises(DeltaStoreModeError, match="loose"):
         incremental_span_removal_ingest(spark, docs, span_store, batch_id=7)
-
-
-# ---------------------------------------------------------------------------
-# per-family equivalence: compacted == never-compacted
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.slow
-def test_bigram_lm_store_compaction_bit_equal(spark, tmp_path):
-    from etl_poc_spark.operators.ngram_lm import (
-        compact_bigram_lm_store,
-        incremental_bigram_lm_ingest,
-        read_bigram_lm_store,
-    )
-
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    batches = [
-        ["the cat sat", "the dog sat"],
-        ["the cat ran", "a dog ran far"],
-        ["the end", "cat and dog"],
-    ]
-    for i, texts in enumerate(batches):
-        df = spark.createDataFrame([(t,) for t in texts], "text string")
-        for store in (a, b):
-            incremental_bigram_lm_ingest(spark, df, store, batch_tag=f"b{i}")
-    rep = compact_bigram_lm_store(spark, a)
-    assert rep["bigrams"]["slots_folded"] == 2 and rep["tokens"]["slots_folded"] == 2
-    bi_a, uni_a, v_a = read_bigram_lm_store(spark, a)
-    bi_b, uni_b, v_b = read_bigram_lm_store(spark, b)
-    assert _rows(bi_a, "bigram", "c_bi") == _rows(bi_b, "bigram", "c_bi")
-    assert _rows(uni_a, "w1", "c_uni") == _rows(uni_b, "w1", "c_uni")
-    assert v_a.collect()[0]["v"] == v_b.collect()[0]["v"]
-    # the protected newest tag still honors the replay exclusion
-    bi_x, _, _ = read_bigram_lm_store(spark, a, exclude_tag="b2")
-    bi_y, _, _ = read_bigram_lm_store(spark, b, exclude_tag="b2")
-    assert _rows(bi_x, "bigram", "c_bi") == _rows(bi_y, "bigram", "c_bi")
-
-
-@pytest.mark.slow
-def test_line_and_span_store_compaction_bit_equal(spark, tmp_path):
-    from etl_poc_spark.operators.linededup import (
-        compact_line_dedup_store,
-        incremental_line_dedup_ingest,
-    )
-    from etl_poc_spark.operators.spandedup import (
-        compact_span_store,
-        incremental_span_removal_ingest,
-    )
-
-    boiler = " ".join(f"b{i}" for i in range(10))
-    uniq = lambda i: " ".join(f"u{i}_{j}" for j in range(10))  # noqa: E731
-    batches = [
-        [(1, f"{boiler} {uniq(1)}"), (2, f"{boiler} {uniq(2)}")],
-        [(3, f"{boiler} {uniq(3)}"), (4, uniq(4))],
-        [(5, f"{boiler} {uniq(5)}"), (6, uniq(6))],
-    ]
-    for fam, ingest, compact in (
-        ("lines", incremental_line_dedup_ingest, compact_line_dedup_store),
-        ("spans", incremental_span_removal_ingest, compact_span_store),
-    ):
-        a, b = str(tmp_path / f"{fam}_a"), str(tmp_path / f"{fam}_b")
-        outs_a, outs_b = [], []
-        for i, rows in enumerate(batches[:2]):
-            outs_a.append(ingest(spark, _docs(spark, rows), a, batch_id=i))
-            outs_b.append(ingest(spark, _docs(spark, rows), b, batch_id=i))
-        rep = compact(spark, a)
-        assert rep["slots_folded"] == 1 and rep["slots_live"] == 1, fam
-        oa = ingest(spark, _docs(spark, batches[2]), a, batch_id=2)
-        ob = ingest(spark, _docs(spark, batches[2]), b, batch_id=2)
-        cols = tuple(oa.columns)
-        assert _rows(oa, *cols) == _rows(ob, *cols), fam
-        # and the protected newest batch replays byte-identically
-        ra = ingest(spark, _docs(spark, batches[2]), a, batch_id=2)
-        assert _rows(ra, *cols) == _rows(oa, *cols), fam
-
-
-@pytest.mark.slow
-def test_near_dup_band_store_compaction_set_equal(spark, tmp_path):
-    """The SET-store fold (agg=[] → DISTINCT): compacting the band store
-    must leave every semi-join verdict unchanged — kept outputs for
-    post-compaction ingests equal the never-compacted twin's."""
-    from etl_poc_spark.operators.incremental import (
-        compact_near_dup_store,
-        incremental_near_dup_ingest,
-    )
-
-    words = lambda i: " ".join(f"w{i}_{j}" for j in range(12))  # noqa: E731
-    batches = [
-        [(1, words(1)), (2, words(2))],
-        [(3, words(3)), (4, words(4))],
-        # 10 duplicates stored doc 1; 13/14 near-pair within the batch
-        [(10, words(1)), (13, words(13)), (14, words(13))],
-    ]
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    for i, rows in enumerate(batches[:2]):
-        incremental_near_dup_ingest(spark, _docs(spark, rows), a, batch_id=i)
-        incremental_near_dup_ingest(spark, _docs(spark, rows), b, batch_id=i)
-    rep = compact_near_dup_store(spark, a)
-    assert rep["slots_folded"] == 1 and rep["slots_live"] == 1
-    ka = incremental_near_dup_ingest(spark, _docs(spark, batches[2]), a, batch_id=2)
-    kb = incremental_near_dup_ingest(spark, _docs(spark, batches[2]), b, batch_id=2)
-    assert _rows(ka, "doc_id") == _rows(kb, "doc_id") == [(13,)]
-
-
-@pytest.mark.slow
-def test_dsir_badwords_doremi_store_compaction_bit_equal(spark, tmp_path):
-    from etl_poc_spark.operators.curation import (
-        compact_badwords_store,
-        compact_doremi_store,
-        incremental_badwords_ingest,
-        incremental_doremi_ingest,
-        read_badwords_store,
-        read_doremi_store,
-    )
-    from etl_poc_spark.operators.dsir import (
-        compact_dsir_store,
-        incremental_dsir_ingest,
-        read_dsir_model,
-    )
-
-    # DSIR: both roles, 3 tagged batches each
-    a, b = str(tmp_path / "dsir_a"), str(tmp_path / "dsir_b")
-    for i in range(3):
-        df = spark.createDataFrame(
-            [(f"alpha beta doc{i} gamma w{j}",) for j in range(4)], "text string"
-        )
-        for store in (a, b):
-            incremental_dsir_ingest(spark, df, store, role="raw", batch_tag=f"b{i}")
-            incremental_dsir_ingest(
-                spark, df.limit(2), store, role="target", batch_tag=f"b{i}"
-            )
-    rep = compact_dsir_store(spark, a)
-    assert rep["raw"]["slots_folded"] == 2 and rep["target"]["slots_folded"] == 2
-    cols = ("bucket", "c_raw", "c_tgt", "t_raw", "t_tgt")
-    ma = read_dsir_model(spark, a, n_buckets=64)
-    mb = read_dsir_model(spark, b, n_buckets=64)
-    assert _rows(ma, *cols) == _rows(mb, *cols)
-
-    # badwords + doremi: additive per-domain partials
-    docs = spark.createDataFrame(
-        [("s1", "clean text"), ("s2", "badword here"), ("s1", "more badword")],
-        "source string, text string",
-    )
-    losses = spark.createDataFrame(
-        [("s1", 5), ("s2", 9), ("s1", 0)], "source string, excess long"
-    )
-    bw_a, bw_b = str(tmp_path / "bw_a"), str(tmp_path / "bw_b")
-    dm_a, dm_b = str(tmp_path / "dm_a"), str(tmp_path / "dm_b")
-    for i in range(3):
-        for store in (bw_a, bw_b):
-            incremental_badwords_ingest(spark, docs, store, batch_tag=f"b{i}")
-        for store in (dm_a, dm_b):
-            incremental_doremi_ingest(spark, losses, store, batch_tag=f"b{i}")
-    assert compact_badwords_store(spark, bw_a)["slots_folded"] == 2
-    assert compact_doremi_store(spark, dm_a)["slots_folded"] == 2
-    cols = ("domain", "n_docs", "n_flagged", "n_hits")
-    assert _rows(read_badwords_store(spark, bw_a), *cols) == _rows(
-        read_badwords_store(spark, bw_b), *cols
-    )
-    cols = ("domain", "n_examples", "sum_excess")
-    assert _rows(read_doremi_store(spark, dm_a), *cols) == _rows(
-        read_doremi_store(spark, dm_b), *cols
-    )
 
 
 def test_exclude_only_slot_reads_empty_with_schema(spark, tmp_path):

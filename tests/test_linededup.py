@@ -206,23 +206,6 @@ def test_incremental_batch_replay_is_idempotent(spark, tmp_path):
     assert out2[10].dedup_text == "j k l" and out2[10].n_dropped == 1
 
 
-def test_incremental_store_read_failure_surfaces(spark, tmp_path):
-    """A corrupt store must raise, not silently reset history to empty."""
-    import pytest
-
-    from etl_poc_spark.operators.linededup import incremental_line_dedup_ingest
-
-    store = tmp_path / "store"
-    store.mkdir()
-    (store / "part-0.parquet").write_bytes(b"this is not parquet")
-    b = _mk(spark, [(1, "a b c d e f")])
-    with pytest.raises(Exception) as ei:
-        incremental_line_dedup_ingest(
-            spark, b, str(store), words_per_segment=3
-        ).collect()
-    assert "PATH_NOT_FOUND" not in str(ei.value)
-
-
 def test_registered_query_runs(spark, sf_dir):
     from etl_poc_spark.queries.linededup_q import line_dedup_stats
 
