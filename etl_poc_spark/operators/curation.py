@@ -701,6 +701,23 @@ def doremi_weights_from_stats(
     )
 
 
+def max_normalized_rates(strata: DataFrame, stratum_col: str, raw: Column) -> DataFrame:
+    """(stratum_col, __rate): each stratum's `raw` keep-weight divided by
+    the largest one, so the most-boosted stratum keeps 100% (one-pass
+    subsampling cannot upsample). DoReMi passes raw = α_d / n_d, the
+    temperature mix n^(tau-1). The frame is the ≤n_strata-row model
+    frame; the normalizer attaches by unpartitioned window — no scalar
+    crossJoin, no collect."""
+    wall = Window.partitionBy().rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    return (
+        strata.withColumn("__raw", raw)
+        .withColumn("__mx", F.max("__raw").over(wall))
+        .select(stratum_col, (F.col("__raw") / F.col("__mx")).alias("__rate"))
+    )
+
+
 def incremental_doremi_ingest(
     spark,
     batch: DataFrame,

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_poc_spark.io import load_table
+from etl_poc_spark.operators.behavior import association_rules, pps_systematic
 from etl_poc_spark.registry import query
 
 
@@ -224,69 +225,13 @@ def purchase_attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFr
     """,
 )
 def part_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket association rules over co-purchased parts: top pair
-    counts with support, confidence(A->B), and lift — the retail /
-    recommendation staple. Scale discipline: the min-support prefilter
-    (>= 5 orders) prunes the long tail BEFORE the pair self-join — the
-    A-priori downward-closure step that keeps the join linear-ish in the
-    frequent subset rather than quadratic in baskets; the join itself is
-    an equi-join on orderkey. Ratios are single int/int double divisions
-    (lift's integer cross-products stay well under 2^53)."""
+    """Market-basket association rules over co-purchased parts: the top
+    20 pair counts with support, confidence(A->B), and lift, parts in
+    >= 5 orders only (operators/behavior.py::association_rules)."""
     li = load_table(spark, sf_dir, "lineitem")
-    ol = li.select("l_orderkey", "l_partkey").distinct()
-    freq = (
-        ol.groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("n_part"))
-        .where(F.col("n_part") >= 5)
-    )
-    fol = ol.join(freq, "l_partkey")
-    a = fol.select(
-        "l_orderkey",
-        F.col("l_partkey").alias("part_a"),
-        F.col("n_part").alias("n_a"),
-    )
-    b = fol.select(
-        "l_orderkey",
-        F.col("l_partkey").alias("part_b"),
-        F.col("n_part").alias("n_b"),
-    )
-    pairs = (
-        a.join(b, "l_orderkey")
-        .where(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_both"),
-            F.first("n_a").alias("n_a"),
-            F.first("n_b").alias("n_b"),
-        )
-    )
-    # the top-20 cut depends only on (n_both, part_a, part_b) — take it
-    # BEFORE attaching the basket-count scalar, so the denominator
-    # broadcast-joins a 20-row frame on a literal key (BroadcastHashJoin,
-    # not a nested-loop cross shape) rather than the full pair space
-    top = pairs.orderBy(F.desc("n_both"), "part_a", "part_b").limit(20)
-    # 1-row basket-count scalar x the 20-row top frame: the scalar comes
-    # from a DIFFERENT table, so this is the whitelisted 1-row-broadcast
-    # scalar join (bm25_search / vocab_stats class), not a window attach.
-    # Count orderkeys off the RAW lineitem scan (same value — every order
-    # in ol has >= 1 part) so the distinct-pair frame isn't computed twice.
-    n_row = li.groupBy().agg(F.countDistinct("l_orderkey").alias("n"))
-    top = top.crossJoin(F.broadcast(n_row))
     return (
-        top.select(
-            "part_a",
-            "part_b",
-            "n_both",
-            F.round(F.col("n_both").cast("double") / F.col("n"), 9).alias("support"),
-            F.round(F.col("n_both").cast("double") / F.col("n_a"), 9).alias(
-                "confidence"
-            ),
-            F.round(
-                (F.col("n_both") * F.col("n")).cast("double")
-                / (F.col("n_a") * F.col("n_b")).cast("double"),
-                9,
-            ).alias("lift"),
-        )
+        association_rules(li, "l_orderkey", "l_partkey", 5, 20)
+        .withColumnsRenamed({"item_a": "part_a", "item_b": "part_b"})
         .orderBy(F.desc("n_both"), "part_a", "part_b")
     )
 
@@ -516,48 +461,19 @@ def weekday_revenue_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pps_token_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Systematic probability-proportional-to-size sampling: per source,
-    walk documents in deterministic md5 order and pick every document
-    whose token mass crosses a k-th (k=10) of the source's total — docs
-    are selected with probability proportional to length WITHOUT
-    replacement, the standard way to sample pretraining shards so token
-    mass (not doc count) is preserved. All integer arithmetic: the
-    boundary test is (cum*k)//total stepping, no float stride, so both
-    engines pick identical docs. One window shuffle partitioned by
-    source (the token_budget_sample prefix-sum idiom); zero-token docs
-    can never cross a boundary and drop out by construction."""
+    every document whose token mass crosses a tenth of the source's total
+    in md5 order is picked (operators/behavior.py::pps_systematic); the
+    rollup counts picked docs and tokens against the source's total."""
     from etl_poc_spark.functions.text import word_count
 
     d = load_table(spark, sf_dir, "documents")
-    t = d.select(
-        "source",
-        word_count(F.col("text")).alias("n_tokens"),
-        F.md5(F.col("doc_id").cast("string")).alias("h"),
-    )
-    wcum = (
-        Window.partitionBy("source")
-        .orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("source")
-    c = t.select(
-        "source",
-        "n_tokens",
-        F.sum("n_tokens").over(wcum).alias("cum"),
-        F.sum("n_tokens").over(wall).alias("total"),
-    ).where(F.col("total") > 0)
-    picked = F.floor(F.col("cum") * 10 / F.col("total")) > F.floor(
-        (F.col("cum") - F.col("n_tokens")) * 10 / F.col("total")
-    )
-    return (
-        c.withColumn("picked", picked)
-        .groupBy("source")
-        .agg(
-            F.count(F.when(F.col("picked"), 1)).alias("n_selected"),
-            F.coalesce(
-                F.sum(F.when(F.col("picked"), F.col("n_tokens"))), F.lit(0)
-            ).alias("tokens_selected"),
-            F.sum("n_tokens").alias("tokens_total"),
-        )
+    c = pps_systematic(d, word_count(F.col("text")), "doc_id", 10, "source")
+    return c.groupBy("source").agg(
+        F.count(F.when(F.col("__picked"), 1)).alias("n_selected"),
+        F.coalesce(F.sum(F.when(F.col("__picked"), F.col("__w"))), F.lit(0)).alias(
+            "tokens_selected"
+        ),
+        F.sum("__w").alias("tokens_total"),
     )
 
 

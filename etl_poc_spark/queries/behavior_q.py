@@ -17,6 +17,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_poc_spark.io import load_table
+from etl_poc_spark.operators.behavior import (
+    abc_classes,
+    daily_streaks,
+    grouping_sets,
+    last_touch_attribution,
+    rfm_scores,
+    time_weighted_average,
+    transition_matrix,
+)
 from etl_poc_spark.registry import query
 
 
@@ -43,31 +52,8 @@ from etl_poc_spark.registry import query
 )
 def user_daily_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands: each user's longest run of consecutive active
-    days. The island anchor is day minus the day's per-user rank — equal
-    for every day of one consecutive run — so the whole computation is
-    one window + two aggregates on a per-user partitioning that holds a
-    few hundred distinct DATES per user regardless of event volume (the
-    distinct collapses first). No self-joins, no driver loops."""
-    days = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", F.to_date("ts").alias("day"))
-        .distinct()
-    )
-    w = Window.partitionBy("user_id").orderBy("day")
-    isl = days.withColumn(
-        "anchor", F.date_sub(F.col("day"), F.row_number().over(w))
-    )
-    runs = isl.groupBy("user_id", "anchor").agg(
-        F.count(F.lit(1)).alias("run_len")
-    )
-    return (
-        runs.groupBy("user_id")
-        .agg(
-            F.max("run_len").alias("longest_streak"),
-            F.sum("run_len").alias("n_active_days"),
-            F.count(F.lit(1)).alias("n_streaks"),
-        )
-    )
+    days (operators/behavior.py::daily_streaks)."""
+    return daily_streaks(load_table(spark, sf_dir, "events"), "user_id", "ts")
 
 
 @query(
@@ -94,30 +80,10 @@ def user_daily_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix of user event sequences:
-    count and conditional probability of each event-type bigram. One
-    shuffle on user_id for the lag window, then a 25-cell aggregate; the
-    probability is a single int/int double division. The behavioral
-    fingerprint a product-analytics pipeline monitors for drift."""
+    """First-order Markov transition matrix of user event sequences
+    (operators/behavior.py::transition_matrix)."""
     e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(
-        F.lag("event_type").over(w).alias("from_type"),
-        F.col("event_type").alias("to_type"),
-    ).where(F.col("from_type").isNotNull())
-    t = seq.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).alias("n_transitions")
-    )
-    wf = Window.partitionBy("from_type")
-    return (
-        t.withColumn("n_from", F.sum("n_transitions").over(wf))
-        .select(
-            "from_type",
-            "to_type",
-            "n_transitions",
-            (F.col("n_transitions").cast("double") / F.col("n_from")).alias("p"),
-        )
-    )
+    return transition_matrix(e, "user_id", "event_type", "ts", "event_id")
 
 
 @query(
@@ -147,38 +113,12 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def purchase_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution: each purchase credits the user's most
-    recent non-purchase event within the hour before it, else 'direct'.
-    Both the crediting type and its timestamp come from the SAME
-    conditional last-value window (one user shuffle serves both), and
-    the window predicate is integer-microsecond arithmetic. The
-    marketing-attribution query every event pipeline grows."""
+    recent non-purchase event within the hour before it, else 'direct'
+    (operators/behavior.py::last_touch_attribution)."""
     e = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    non_purchase = F.when(F.col("event_type") != "purchase", F.col("event_type"))
-    np_ts = F.when(F.col("event_type") != "purchase", F.col("ts"))
-    seq = e.select(
-        "event_type",
-        "ts",
-        F.last(non_purchase, ignorenulls=True).over(w).alias("prev_type"),
-        F.last(np_ts, ignorenulls=True).over(w).alias("prev_ts"),
-    ).where(F.col("event_type") == "purchase")
-    channel = F.when(
-        F.col("prev_ts").isNotNull()
-        & (
-            F.unix_micros(F.col("ts")) - F.unix_micros(F.col("prev_ts"))
-            <= 3_600_000_000
-        ),
-        F.col("prev_type"),
-    ).otherwise(F.lit("direct"))
-    return (
-        seq.select(channel.alias("channel"))
-        .groupBy("channel")
-        .agg(F.count(F.lit(1)).alias("n_purchases"))
-    )
+    return last_touch_attribution(
+        e, "user_id", "event_type", "ts", "event_id", "purchase", 3600
+    ).withColumnRenamed("n_conversions", "n_purchases")
 
 
 @query(
@@ -205,33 +145,12 @@ def purchase_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation: recency/frequency/monetary quintiles per
-    customer (score 1 = best), rolled up to cell counts. Ordering ties
-    break on custkey so the ntile assignment is deterministic in both
-    engines; monetary accumulates in DECIMAL. The quintile windows run
-    on the customer-grained aggregate (dim-sized, not order-sized) under
-    a non-foldable single-group key — the same bounded-frame idiom as
-    dates_q — so no event-volume data ever crosses a global sort."""
+    customer (operators/behavior.py::rfm_scores), rolled up to cell
+    counts."""
     o = load_table(spark, sf_dir, "orders")
-    m = o.groupBy("o_custkey").agg(
-        F.max("o_orderdate").alias("recency"),
-        F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("monetary"),
-    )
-    zero = F.col("o_custkey") * F.lit(0)
-    scored = m.select(
-        F.ntile(5)
-        .over(Window.partitionBy(zero).orderBy(F.desc("recency"), "o_custkey"))
-        .alias("r_score"),
-        F.ntile(5)
-        .over(Window.partitionBy(zero).orderBy(F.desc("frequency"), "o_custkey"))
-        .alias("f_score"),
-        F.ntile(5)
-        .over(Window.partitionBy(zero).orderBy(F.desc("monetary"), "o_custkey"))
-        .alias("m_score"),
-    )
-    return (
-        scored.groupBy("r_score", "f_score", "m_score")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
+    scored = rfm_scores(o, "o_custkey", "o_orderdate", "o_totalprice", 5)
+    return scored.groupBy("r_score", "f_score", "m_score").agg(
+        F.count(F.lit(1)).alias("n_customers")
     )
 
 
@@ -255,40 +174,10 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def event_type_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average value per event type: each event's value is
-    held until the user's next event, so the weight is the exact
-    microsecond duration (a user's last event has no duration and drops
-    out). Products accumulate as DECIMAL(38,2) — value is 2-decimal and
-    the duration an integer, so the product is exact and the sum
-    order-independent; one double division at the end, rounded to 9
-    places (the house big-decimal-to-double seam policy). Compare with the
-    unweighted mean to read dwell-time bias directly off the gate."""
+    """Time-weighted average value per event type, each value held until
+    the user's next event (operators/behavior.py::time_weighted_average)."""
     e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(
-        "event_type",
-        F.col("value").cast("decimal(18,2)").alias("v"),
-        (
-            F.unix_micros(F.lead("ts").over(w)) - F.unix_micros(F.col("ts"))
-        ).alias("dur_us"),
-    ).where(F.col("dur_us").isNotNull())
-    return (
-        seq.groupBy("event_type")
-        .agg(
-            F.count("dur_us").alias("n_weighted"),
-            F.round(
-                F.sum((F.col("v") * F.col("dur_us")).cast("decimal(38,2)"))
-                .cast("double")
-                / F.sum("dur_us").cast("double"),
-                9,
-            ).alias("twap"),
-            F.round(
-                F.sum(F.col("v").cast("decimal(38,2)")).cast("double")
-                / F.count("v"),
-                9,
-            ).alias("plain_mean"),
-        )
-    )
+    return time_weighted_average(e, "user_id", "event_type", "ts", "value", "event_id")
 
 
 @query(
@@ -602,38 +491,16 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC / Pareto classification of parts by revenue: A = parts whose
-    cumulative revenue share stays within 80%, B to 95%, C the tail. The
-    share thresholds compare as INTEGER-DECIMAL cross-products
-    (cum*5 <= total*4), so class boundaries are division-free and
-    engine-exact — no float share ever decides a class. The running sum
-    is one window over the part-grained aggregate (part-cardinality,
-    not lineitem-cardinality), under a non-foldable single-group key;
-    ties break on partkey for a deterministic cut."""
+    cumulative revenue share stays within 80%, B to 95%, C the tail
+    (operators/behavior.py::abc_classes); the decimal class revenue is
+    cast to double once, at the boundary."""
     li = load_table(spark, sf_dir, "lineitem")
-    rev = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("r")
-    )
-    zero = F.col("l_partkey") * F.lit(0)
-    wcum = (
-        Window.partitionBy(zero)
-        .orderBy(F.desc("r"), F.asc("l_partkey"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy(zero)
-    ranked = rev.select(
-        "r",
-        F.sum("r").over(wcum).alias("cum"),
-        F.sum("r").over(wall).alias("total"),
-    )
-    abc = F.when(F.col("cum") * 5 <= F.col("total") * 4, "A").when(
-        F.col("cum") * 20 <= F.col("total") * 19, "B"
-    ).otherwise("C")
     return (
-        ranked.select(abc.alias("abc_class"), "r")
+        abc_classes(li, "l_partkey", "l_extendedprice", 80, 95)
         .groupBy("abc_class")
         .agg(
             F.count(F.lit(1)).alias("n_parts"),
-            F.sum("r").cast("double").alias("class_revenue"),
+            F.sum("total_value").cast("double").alias("class_revenue"),
         )
     )
 
@@ -711,8 +578,9 @@ def segment_year_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The general GROUPING SETS form (beyond the cube/rollup queries):
     revenue at (segment, year), per-segment, per-year, and grand-total
     grains in ONE Expand + aggregate pass, with the standard grouping_id
-    disambiguating real NULLs from rolled-up cells. Decimal revenue,
-    cast at the boundary."""
+    disambiguating real NULLs from rolled-up cells
+    (operators/behavior.py::grouping_sets). Decimal revenue, cast at the
+    boundary."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     j = o.join(c, o.o_custkey == c.c_custkey).select(
@@ -720,17 +588,10 @@ def segment_year_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").cast("int").alias("year"),
         F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
     )
-    j.createOrReplaceTempView("__gs_j")
-    return j.sparkSession.sql(
-        """
-        SELECT segment, year,
-               CAST(GROUPING(segment) * 2 + GROUPING(year) AS INT)
-                 AS grouping_id,
-               COUNT(*) AS n_orders,
-               CAST(SUM(p) AS DOUBLE) AS revenue
-        FROM __gs_j
-        GROUP BY GROUPING SETS ((segment, year), (segment), (year), ())
-        """
+    return grouping_sets(
+        j,
+        [["segment", "year"], ["segment"], ["year"], []],
+        [F.count(F.lit(1)).alias("n_orders"), F.sum("p").cast("double").alias("revenue")],
     )
 
 

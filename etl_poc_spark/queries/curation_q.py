@@ -1063,11 +1063,9 @@ def doremi_resample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors per source. Every stage — solver, rate divisions, uniform
     draw, counts — is engine-portable, so the whole resample is
     hash-exact."""
-    from pyspark.sql import Window
-
     from etl_poc_spark.operators.curation import (
         doremi_domain_weights,
-        hash_uniform,
+        max_normalized_rates,
     )
 
     d = load_table(spark, sf_dir, "documents")
@@ -1079,15 +1077,8 @@ def doremi_resample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights = doremi_domain_weights(
         per_doc, "source", "ex", n_steps=4, eta_shift=8, smoothing_shift=6
     )
-    wall = Window.partitionBy().rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    rates = (
-        weights.withColumn(
-            "__raw", F.col("alpha") / F.col("n_examples").cast("double")
-        )
-        .withColumn("__mx", F.max("__raw").over(wall))
-        .select("source", (F.col("__raw") / F.col("__mx")).alias("__rate"))
+    rates = max_normalized_rates(
+        weights, "source", F.col("alpha") / F.col("n_examples").cast("double")
     )
     keep = (
         hash_uniform(F.col("doc_id"), "doremi") < F.col("__rate")

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_poc_spark.io import load_table
+from etl_poc_spark.operators.behavior import column_profile
 from etl_poc_spark.registry import query
 
 # (column, min/max rendering) — shared between the Spark query and the
@@ -24,15 +25,6 @@ _PROFILE_COLS = [
     ("o_orderdate", "date"),
     ("o_orderpriority", "plain"),
 ]
-
-
-def _render_spark(c: str, kind: str) -> F.Column:
-    col = F.col(c)
-    if kind == "money":
-        col = col.cast("decimal(18,2)")
-    elif kind == "date":
-        col = col.cast("date")
-    return col
 
 
 def _render_sql(c: str, kind: str) -> str:
@@ -59,40 +51,12 @@ _PROFILE_ORACLE = "\nUNION ALL\n".join(
 @query("orders_column_profile", oracle=_PROFILE_ORACLE)
 def orders_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long-format column profile of orders — per column: null count,
-    exact distinct count, min/max rendered to strings. TWO aggregate
-    passes over the table compute every metric — one Expand + aggregate
-    for all 6 countDistinct, one plain aggregate for nulls/min/max —
-    cross-joined as 1-row frames; the 6x4 wide row is then unpivoted
-    driver-free with stack(). The first query a data engineer runs on an
-    unfamiliar 100 TB table — and the profile's cost is the two scans,
-    not the table's width in queries."""
+    exact distinct count, min/max rendered to strings, in two scans
+    (operators/behavior.py::column_profile). The first query a data
+    engineer runs on an unfamiliar 100 TB table — and the profile's cost
+    is the two scans, not the table's width in queries."""
     o = load_table(spark, sf_dir, "orders")
-    # r16 optimization (guide §1.2 "per-task work"): mixing the 6
-    # countDistinct with the 18 regular aggregates in ONE aggregate forces
-    # Catalyst's Expand plan to evaluate every regular aggregate on every
-    # row × 7 expansion groups — measured 2.7s solo, vs 0.59s for the
-    # distinct-only aggregate plus 0.20s for the regular-only aggregate.
-    # Splitting them and cross-joining the two 1-row results (broadcast,
-    # free) computes the identical values ~3x faster; at 100 TB it is the
-    # same two scans the Expand plan already cost, minus the 7x row blowup
-    # carrying 18 live aggregate buffers.
-    nd_aggs = [F.countDistinct(F.col(c)).alias(f"{c}__nd") for c, _ in _PROFILE_COLS]
-    rest_aggs = []
-    for c, k in _PROFILE_COLS:
-        r = _render_spark(c, k)
-        rest_aggs += [
-            F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}__nulls"),
-            F.min(r).cast("string").alias(f"{c}__min"),
-            F.max(r).cast("string").alias(f"{c}__max"),
-        ]
-    wide = o.agg(*rest_aggs).crossJoin(F.broadcast(o.agg(*nd_aggs)))
-    stack_args = ", ".join(
-        f"'{c}', {c}__nulls, {c}__nd, {c}__min, {c}__max" for c, _ in _PROFILE_COLS
-    )
-    return wide.selectExpr(
-        f"stack({len(_PROFILE_COLS)}, {stack_args}) AS "
-        "(column_name, n_nulls, n_distinct, min_str, max_str)"
-    ).orderBy("column_name")
+    return column_profile(o, _PROFILE_COLS).orderBy("column_name")
 
 
 @query(

@@ -3,16 +3,32 @@ matter at scale (SCALING.md) true as the code evolves."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.sql import functions as F
 
 from etl_poc_spark import registry
+from etl_poc_spark.functions.text import word_count
 
 registry.load_all()
 
 
+@pytest.fixture(scope="module")
+def parity_sf_dir(sf_dir):
+    """The sf0.01 tables beside the configured test scale — large enough
+    that every analytics op sees non-trivial groups (min-support pairs,
+    several ABC classes); the configured scale when they are absent."""
+    p = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    return p if os.path.isdir(p) else sf_dir
+
+
 def formatted_plan(spark, name, sf_dir) -> str:
-    df = registry.QUERIES[name](spark, sf_dir)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return explain_formatted(registry.QUERIES[name](spark, sf_dir))
+
+
+def explain_formatted(df) -> str:
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     return df._jdf.queryExecution().explainString(mode)
 
 
@@ -847,13 +863,173 @@ def test_column_profile_is_one_scan_one_expand(spark, sf_dir):
     aggregate on every Expand-multiplied row, measured 2.7s vs 0.8s), and
     the two 1-row results meet in a broadcast join — never N scans, never
     a regular aggregate inside the Expand blowup."""
-    p = formatted_plan(spark, "orders_column_profile", sf_dir)
-    # count scans in the TREE section only (ADVICE r16: the old ==4 over
-    # the whole text encoded the tree+detail duplication, so a harmless
-    # formatting change or future exchange reuse would flip it)
-    assert tree_section(p).count("Scan parquet") == 2
-    assert "Expand" in p
-    assert "BroadcastNestedLoopJoin" in p  # the 1-row x 1-row stitch
+    from etl_poc_spark.io import load_table
+    from etl_poc_spark.llm.provider import StubProvider
+    from etl_poc_spark.plans.yaml_pipeline import _apply_op
+
+    # the YAML `profile` op runs the same operator, so it plans the same
+    op = {"name": "p", "type": "profile"}
+    yaml_plan = explain_formatted(
+        _apply_op(load_table(spark, sf_dir, "orders"), op, StubProvider())
+    )
+    for p in (formatted_plan(spark, "orders_column_profile", sf_dir), yaml_plan):
+        # count scans in the TREE section only (ADVICE r16: the old ==4
+        # over the whole text encoded the tree+detail duplication, so a
+        # harmless formatting change or future exchange reuse would flip it)
+        assert tree_section(p).count("Scan parquet") == 2
+        assert "Expand" in p
+        assert "BroadcastNestedLoopJoin" in p  # the 1-row x 1-row stitch
+
+
+def _yaml_run(spark, ops, inp, frames):
+    """Run `ops` as one pipeline step over `inp`, every frame injected."""
+    from etl_poc_spark.plans.yaml_pipeline import run_pipeline
+
+    cfg = {
+        "default_model": "stub",
+        "datasets": {n: {"path": "injected"} for n in frames},
+        "operations": [{"name": f"op{i}", **op} for i, op in enumerate(ops)],
+        "pipeline": {"steps": [
+            {"name": "s", "input": inp, "operations": [f"op{i}" for i in range(len(ops))]}
+        ]},
+    }
+    return run_pipeline(spark, cfg, datasets=frames)["__final__"]
+
+
+def _renamed(mapping):
+    return lambda df: df.withColumnsRenamed(mapping)
+
+
+_EVENTS = {"entity_key": "user_id", "ts_key": "ts", "tiebreak": "event_id"}
+# (query, input table, YAML ops with the query's parameters, the query's
+# projection/rollup applied to the op's output)
+_OP_QUERY_PARITY = [
+    ("user_daily_streaks", "events", [{"type": "streaks", **_EVENTS}], None),
+    ("event_transition_matrix", "events",
+     [{"type": "transition_matrix", "state_key": "event_type", **_EVENTS}], None),
+    ("purchase_attribution_last_touch", "events",
+     [{"type": "attribution", "state_key": "event_type", "conversion_type": "purchase",
+       "within_seconds": 3600, **_EVENTS}],
+     _renamed({"n_conversions": "n_purchases"})),
+    ("customer_rfm_segments", "orders",
+     [{"type": "rfm", "entity_key": "o_custkey", "ts_key": "o_orderdate",
+       "value_key": "o_totalprice", "n_tiles": 5, "rollup": True}],
+     _renamed({"n_entities": "n_customers"})),
+    ("event_type_twap", "events",
+     [{"type": "twap", "group_key": "event_type", "value_key": "value", **_EVENTS}], None),
+    ("part_abc_classification", "lineitem",
+     [{"type": "abc", "key": "l_partkey", "value_key": "l_extendedprice",
+       "a_pct": 80, "b_pct": 95, "rollup": True}],
+     _renamed({"n_keys": "n_parts", "class_value": "class_revenue"})),
+    ("segment_year_grouping_sets", "orders",
+     [{"type": "join", "right": "customer", "on": "o_custkey = c_custkey"},
+      {"type": "select", "columns": [
+          "c_mktsegment AS segment", "CAST(year(o_orderdate) AS INT) AS year",
+          "CAST(o_totalprice AS DECIMAL(18,2)) AS p"]},
+      {"type": "grouping_sets", "sets": [["segment", "year"], ["segment"], ["year"], []],
+       "aggs": {"n_orders": "COUNT(*)", "revenue": "CAST(SUM(p) AS DOUBLE)"}}], None),
+    ("orders_column_profile", "orders",
+     [{"type": "select", "columns": [
+          "o_orderkey", "o_custkey", "o_orderstatus",
+          "CAST(o_totalprice AS DECIMAL(18,2)) AS o_totalprice",
+          "CAST(o_orderdate AS DATE) AS o_orderdate", "o_orderpriority"]},
+      {"type": "profile"}], None),
+    ("part_association_rules", "lineitem",
+     [{"type": "association_rules", "basket_key": "l_orderkey", "item_key": "l_partkey",
+       "min_support_count": 5, "top_n": 20}],
+     _renamed({"item_a": "part_a", "item_b": "part_b"})),
+    # the op keeps the picked docs; the query's rollup counts them and
+    # their tokens (tokens_total also counts unpicked docs, so it has no
+    # op-side counterpart)
+    ("pps_token_sample", "documents",
+     [{"type": "pps_sample", "id": "doc_id", "stratify_key": "source",
+       "text_key": "text", "k": 10}],
+     lambda df: df.groupBy("source").agg(
+         F.count(F.lit(1)).alias("n_selected"),
+         F.sum(word_count(F.col("text"))).alias("tokens_selected"))),
+]
+
+
+@pytest.mark.parametrize(
+    "query,table,ops,project", _OP_QUERY_PARITY, ids=[c[0] for c in _OP_QUERY_PARITY]
+)
+def test_yaml_analytics_op_matches_query(spark, parity_sf_dir, query, table, ops, project):
+    """Each analytics op runs the same operator as its registered query:
+    over the query's tables with the query's parameters, the op's output
+    after the query's own projection/rollup equals the query's rows."""
+    from etl_poc_spark.io import load_table
+
+    frames = {t: load_table(spark, parity_sf_dir, t) for t in (table, "customer")}
+    got = _yaml_run(spark, ops, table, frames)
+    if project is not None:
+        got = project(got)
+    want = registry.QUERIES[query](spark, parity_sf_dir)
+    unmatched = {"tokens_total"} if query == "pps_token_sample" else set()
+    assert set(want.columns) - set(got.columns) == unmatched
+    want = want.select(*got.columns)
+    want_rows = sorted(want.collect(), key=repr)
+    assert want_rows and sorted(got.collect(), key=repr) == want_rows
+
+
+def test_yaml_unknown_op_type_fails_before_any_step_runs(spark, tmp_path):
+    """An op type outside the table is a config error raised by
+    validate_config — before any dataset loads or any step writes its
+    intermediate checkpoint."""
+    from etl_poc_spark.plans.yaml_pipeline import PipelineConfigError, run_pipeline
+
+    inter = tmp_path / "intermediate"
+    inter.mkdir()
+    cfg = {
+        "default_model": "stub",
+        "datasets": {"docs": {"path": "injected"}},
+        "operations": [
+            {"name": "keep", "type": "filter", "condition": "doc_id > 0"},
+            {"name": "dedup", "type": "exact_dedupe"},
+        ],
+        "pipeline": {
+            "steps": [
+                {"name": "s1", "input": "docs", "operations": ["keep"]},
+                {"name": "s2", "input": "s1", "operations": ["dedup"]},
+            ],
+            "output": {"intermediate_dir": str(inter)},
+        },
+    }
+    docs = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    with pytest.raises(PipelineConfigError, match="exact_dedupe"):
+        run_pipeline(spark, cfg, datasets={"docs": docs})
+    assert list(inter.iterdir()) == []
+
+
+def test_yaml_abc_rollup_sums_decimals(spark):
+    """The abc rollup sums the DECIMAL per-key values and casts once:
+    0.2 + 0.1 accumulated in doubles is 0.30000000000000004, in decimal
+    exactly 0.3 — independent of the fold order a partitioning picks."""
+    sales = spark.createDataFrame([(1, 0.2), (2, 0.1)], "k long, v double")
+    # a_pct/b_pct below the top key's 2/3 share: both keys land in C
+    op = {"type": "abc", "key": "k", "value_key": "v", "a_pct": 10, "b_pct": 50,
+          "rollup": True}
+    rows = _yaml_run(spark, [op], "sales", {"sales": sales}).collect()
+    assert [(r["abc_class"], r["n_keys"], r["class_value"]) for r in rows] == [("C", 2, 0.3)]
+
+
+def test_grouping_sets_leave_no_temp_views(spark, sf_dir):
+    """grouping_sets (query and op) build on DataFrame.groupingSets, so
+    the session catalog gains no view; the op still rejects column names
+    that are not plain identifiers."""
+    from etl_poc_spark.plans.yaml_pipeline import PipelineConfigError
+
+    before = {t.name for t in spark.catalog.listTables()}
+    registry.QUERIES["segment_year_grouping_sets"](spark, sf_dir).collect()
+    events = spark.createDataFrame([("view", 1.0), ("buy", 2.0)], "event_type string, v double")
+    op = {"type": "grouping_sets", "sets": [["event_type"], []]}
+    rows = _yaml_run(spark, [op], "events", {"events": events}).collect()
+    assert [(r["event_type"], r["grouping_id"], r["n_rows"]) for r in rows] == [
+        ("buy", 0, 1), ("view", 0, 1), (None, 1, 2)
+    ]
+    assert {t.name for t in spark.catalog.listTables()} == before
+    bad = {"type": "grouping_sets", "sets": [["event_type; DROP"]]}
+    with pytest.raises(PipelineConfigError, match="invalid column name"):
+        _yaml_run(spark, [bad], "events", {"events": events})
 
 
 def test_transition_matrix_single_user_shuffle(spark, sf_dir):
