@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 
 from etl_poc_spark.operators.deltastore import (
     DeltaStoreSpec,
-    foreach_batch_writer,
     load_compaction_manifest,
     read_delta_store,
     tag_slot,
@@ -277,35 +276,16 @@ def ann_handle_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """One micro-batch of streaming_ann_ingest, module-level so the
-    replay contract is directly testable: calling this twice with the
-    same batch_id overwrites the same postings slot (exactly-once store
-    state under foreachBatch's at-least-once delivery)."""
+    """foreachBatch body of continuous vector ingest against the
+    persisted index (run it with deltastore.foreach_batch_writer): each
+    micro-batch assigns its vectors with the current persisted centroids
+    and writes its own postings slot. Calling this twice with the same
+    batch_id overwrites the same slot (exactly-once store state under
+    foreachBatch's at-least-once delivery). Serve probes any time with
+    ann_store_topk, which reads index + postings live."""
     incremental_ann_ingest(
         batch_df.sparkSession, batch_df, index_dir, store_dir,
         id_col=id_col, vec_col=vec_col, batch_tag=f"batch-{batch_id}",
-    )
-
-
-def streaming_ann_ingest(
-    stream: DataFrame,
-    index_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Continuous vector ingest against the persisted index: each
-    micro-batch assigns its vectors with the current persisted centroids
-    and writes its own postings slot (batch id = tag — replay overwrites,
-    never duplicates; the streaming_exact_dedup_ingest contract). Returns
-    a configured DataStreamWriter — call .trigger(...).start(); serve
-    probes any time with ann_store_topk, which reads index + postings
-    live."""
-    return foreach_batch_writer(
-        stream, checkpoint_dir, ann_handle_batch, index_dir=index_dir,
-        store_dir=store_dir, id_col=id_col, vec_col=vec_col,
     )
 
 

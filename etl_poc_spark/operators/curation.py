@@ -33,7 +33,6 @@ from pyspark.sql import types as T
 
 from etl_poc_spark.operators.deltastore import (
     DeltaStoreSpec,
-    foreach_batch_writer,
     read_delta_store,
     tag_slot,
 )
@@ -794,8 +793,11 @@ def doremi_handle_batch(
     domain_col: str = "source",
     excess_col: str = "excess",
 ) -> None:
-    """foreachBatch body for streaming DoReMi stats maintenance —
-    batch id = tag slot, so at-least-once delivery folds exactly once."""
+    """foreachBatch body for continuous DoReMi stats maintenance over a
+    stream of per-example excess losses (run it with
+    deltastore.foreach_batch_writer) — batch id = tag slot, so
+    at-least-once delivery folds exactly once. Read the live weights any
+    time with doremi_store_weights."""
     incremental_doremi_ingest(
         batch_df.sparkSession,
         batch_df,
@@ -803,26 +805,6 @@ def doremi_handle_batch(
         domain_col=domain_col,
         excess_col=excess_col,
         batch_tag=f"batch-{batch_id}",
-    )
-
-
-def streaming_doremi_ingest(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    *,
-    domain_col: str = "source",
-    excess_col: str = "excess",
-):
-    """Continuous DoReMi stats maintenance over a stream of per-example
-    excess losses (e.g. a training job's eval log landing zone): each
-    micro-batch folds its per-domain partials into the store
-    exactly-once. Returns a configured DataStreamWriter — call
-    .trigger(...).start(); read the live weights any time with
-    doremi_store_weights."""
-    return foreach_batch_writer(
-        stream, checkpoint_dir, doremi_handle_batch,
-        store_dir=store_dir, domain_col=domain_col, excess_col=excess_col,
     )
 
 
@@ -1224,8 +1206,10 @@ def badwords_handle_batch(
     domain_col: str = "source",
     text_col: str = "text",
 ) -> None:
-    """foreachBatch body for streaming badwords monitoring — batch id =
-    tag slot, so at-least-once delivery folds exactly once."""
+    """foreachBatch body for continuous per-domain badwords monitoring
+    (run it with deltastore.foreach_batch_writer) — batch id = tag slot,
+    so at-least-once delivery folds exactly once. Read the live
+    dashboard any time with read_badwords_store."""
     incremental_badwords_ingest(
         batch_df.sparkSession,
         batch_df,
@@ -1234,25 +1218,4 @@ def badwords_handle_batch(
         domain_col=domain_col,
         text_col=text_col,
         batch_tag=f"batch-{batch_id}",
-    )
-
-
-def streaming_badwords_ingest(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    *,
-    badwords: tuple[str, ...] | list[str] = C4_BADWORDS_PLACEHOLDER,
-    domain_col: str = "source",
-    text_col: str = "text",
-):
-    """Continuous per-domain badwords monitoring over a document stream
-    (the content-safety twin of streaming_doremi_ingest): each
-    micro-batch folds its per-domain flag partials into the store
-    exactly-once. Returns a configured DataStreamWriter — call
-    .trigger(...).start(); read the live dashboard any time with
-    read_badwords_store."""
-    return foreach_batch_writer(
-        stream, checkpoint_dir, badwords_handle_batch, store_dir=store_dir,
-        badwords=badwords, domain_col=domain_col, text_col=text_col,
     )

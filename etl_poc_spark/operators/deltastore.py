@@ -507,9 +507,16 @@ def ingest_to_sink(
     **kwargs,
 ) -> None:
     """foreachBatch body of the ingest-then-sink families (near-dup, line
-    and span dedup): `ingest` runs against the shared store with the
-    micro-batch id as its slot, and its kept rows replace the batch's
-    sink partition."""
+    and span dedup): `ingest` (incremental_near_dup_ingest,
+    incremental_line_dedup_ingest or incremental_span_removal_ingest)
+    runs against the shared store with the micro-batch id as its slot,
+    and its kept rows replace the batch's `batch_id=<n>` partition of
+    `kept_dir`. Store and sink are both keyed by the batch id, so an
+    at-least-once replay is effectively-once:
+
+        foreach_batch_writer(stream, ckpt, ingest_to_sink,
+                             ingest=incremental_near_dup_ingest,
+                             store_dir=store, kept_dir=kept)"""
     kept = ingest(
         batch_df.sparkSession, batch_df, store_dir, batch_id=batch_id, **kwargs
     )
@@ -522,7 +529,10 @@ def foreach_batch_writer(stream: DataFrame, checkpoint_dir: str, handle, **kwarg
     call .trigger(...).start() to run. foreachBatch is the seam every
     store family needs: the ingest decision takes the batch as a finite
     frame (store joins, self-pairs), which pure streaming operators
-    cannot express."""
+    cannot express. This is the package's only foreachBatch call; a
+    handle is a family's `*_handle_batch`, `ingest_to_sink` with
+    `ingest=`, or a lambda over a batch-mode ingest that takes
+    (spark, batch_df, ...)."""
     return stream.writeStream.foreachBatch(
         lambda batch_df, batch_id: handle(batch_df, batch_id, **kwargs)
     ).option("checkpointLocation", checkpoint_dir)

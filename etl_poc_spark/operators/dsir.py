@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from etl_poc_spark.operators.deltastore import (
     DeltaStoreLogs,
     DeltaStoreSpec,
-    foreach_batch_writer,
     read_delta_store,
     tag_slot,
     write_batch_slot,
@@ -365,7 +364,11 @@ def incremental_dsir_ingest(
     After any sequence of ingests, read_dsir_store equals the one-shot
     histogram over the union of every batch — exact integers, bit-equal
     under any batch slicing. Slot, replay and concurrency contract:
-    operators/deltastore.py."""
+    operators/deltastore.py. Any other role raises ValueError before
+    anything is written: read_dsir_store would never fold its log."""
+    roles = [name for name, _ in DSIR_STORE.logs]
+    if role not in roles:
+        raise ValueError(f"DSIR role must be one of {roles}, got {role!r}")
     DSIR_LOG.append(
         _dsir_batch_deltas(batch, text_col, n_buckets),
         f"{store_dir}/{role}",
@@ -470,8 +473,10 @@ def dsir_handle_batch(
     text_col: str = "text",
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> None:
-    """One micro-batch of streaming_dsir_ingest: the batch id is the tag
-    slot (<role>-b<id>), so the same batch_id twice == once."""
+    """foreachBatch body of continuous DSIR model maintenance (run it
+    with deltastore.foreach_batch_writer): the batch id is the tag slot
+    (<role>-b<id>), so the same batch_id twice == once. Read the live
+    model any time with read_dsir_model; score with score_dsir_store."""
     incremental_dsir_ingest(
         batch_df.sparkSession,
         batch_df,
@@ -480,26 +485,6 @@ def dsir_handle_batch(
         text_col=text_col,
         n_buckets=n_buckets,
         batch_tag=f"{role}-b{batch_id}",
-    )
-
-
-def streaming_dsir_ingest(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    *,
-    role: str = "raw",
-    text_col: str = "text",
-    n_buckets: int = DEFAULT_BUCKETS,
-):
-    """Continuous DSIR model maintenance: each micro-batch folds its
-    bucket histogram into the shared store exactly-once (batch id = tag
-    slot). Returns a configured DataStreamWriter — call
-    .trigger(...).start(). Read the live model any time with
-    read_dsir_model; score with score_dsir_store."""
-    return foreach_batch_writer(
-        stream, checkpoint_dir, dsir_handle_batch,
-        store_dir=store_dir, role=role, text_col=text_col, n_buckets=n_buckets,
     )
 
 
@@ -514,10 +499,13 @@ def dsir_monitor_handle_batch(
     n_buckets: int = DEFAULT_BUCKETS,
     fold: bool = True,
 ) -> None:
-    """One micro-batch of streaming_dsir_monitor: score the batch's DSIR
-    log weights against the PRE-BATCH raw model (target model is the
-    pre-seeded reference — it never folds), write a 1-row drift record,
-    then fold the batch into the raw model. The perplexity-monitor
+    """foreachBatch body of the target-affinity drift monitor (run it
+    with deltastore.foreach_batch_writer): score the batch's DSIR log
+    weights against the PRE-BATCH raw model, write a 1-row drift record
+    to `monitor_dir`, then fold the batch into the raw model. The target
+    model is the reference corpus: seed the 'target' role ONCE with
+    incremental_dsir_ingest(role='target', batch_tag='reference') before
+    starting the stream — it never folds. The perplexity-monitor
     recovery contract verbatim: both sinks are batch_id-slotted, the
     store read EXCLUDES the batch's own tag slot, so every replay point
     (post-monitor/pre-fold, mid-fold, post-fold pre-checkpoint)
@@ -572,31 +560,6 @@ def dsir_monitor_handle_batch(
             text_col=text_col,
             n_buckets=n_buckets,
         )
-
-
-def streaming_dsir_monitor(
-    stream: DataFrame,
-    store_dir: str,
-    monitor_dir: str,
-    checkpoint_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = DEFAULT_BUCKETS,
-    fold: bool = True,
-):
-    """Target-affinity drift monitor for a document stream: every
-    micro-batch is scored against the target reference model (seed the
-    'target' role ONCE with incremental_dsir_ingest(batch_tag=
-    'reference') before starting) relative to the raw model of
-    everything that came before, then folded into the raw model.
-    Returns a configured DataStreamWriter; read the drift series with
-    spark.read.parquet(monitor_dir)."""
-    return foreach_batch_writer(
-        stream, checkpoint_dir, dsir_monitor_handle_batch,
-        store_dir=store_dir, monitor_dir=monitor_dir, id_col=id_col,
-        text_col=text_col, n_buckets=n_buckets, fold=fold,
-    )
 
 
 from etl_poc_spark._serde import register_by_value as _rbv  # noqa: E402

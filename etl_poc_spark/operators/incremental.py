@@ -41,8 +41,6 @@ from etl_poc_spark.operators.dedup import (
 from etl_poc_spark.operators.deltastore import (
     DeltaStoreSpec,
     batch_slot,
-    foreach_batch_writer,
-    ingest_to_sink,
     read_delta_store,
     tag_slot,
     write_batch_slot,
@@ -131,28 +129,6 @@ def incremental_near_dup_ingest(
 
 
 compact_near_dup_store = NEAR_DUP_STORE.compact
-
-
-def streaming_near_dup_ingest(
-    stream: DataFrame,
-    store_dir: str,
-    kept_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **ingest_kwargs,
-):
-    """Continuous ingestion: each micro-batch runs the same
-    incremental_near_dup_ingest against the shared band store and writes
-    its survivors as the batch's `batch_id=<n>` partition of `kept_dir`.
-    Returns a configured DataStreamWriter — call .trigger(...).start() to
-    run. Store and sink are both keyed by the batch id, so an
-    at-least-once replay is effectively-once (operators/deltastore.py)."""
-    return foreach_batch_writer(
-        stream, checkpoint_dir, ingest_to_sink,
-        ingest=incremental_near_dup_ingest, store_dir=store_dir,
-        kept_dir=kept_dir, id_col=id_col, text_col=text_col, **ingest_kwargs,
-    )
 
 
 # --- EXACT dedup: the incremental + streaming twins (near-dup has all
@@ -245,27 +221,6 @@ def read_exact_dedup_store(spark: SparkSession, store_dir: str) -> DataFrame:
 compact_exact_dedup_store = EXACT_DEDUP_STORE.compact
 
 
-def streaming_exact_dedup_ingest(
-    stream: DataFrame,
-    store_dir: str,
-    kept_dir: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
-):
-    """Continuous exact dedup: each micro-batch runs
-    exact_dedup_handle_batch against the shared fingerprint store.
-    Returns a configured DataStreamWriter — call .trigger(...).start().
-    Read kept via spark.read.parquet(kept_dir); batch_id is an inferred
-    partition column."""
-    return foreach_batch_writer(
-        stream, checkpoint_dir, exact_dedup_handle_batch,
-        store_dir=store_dir, kept_dir=kept_dir, key_cols=key_cols,
-        id_col=id_col, hash_mode=hash_mode,
-    )
-
-
 def exact_dedup_handle_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -276,10 +231,13 @@ def exact_dedup_handle_batch(
     id_col: str = "doc_id",
     hash_mode: str = "xxhash64",
 ) -> None:
-    """One micro-batch of streaming_exact_dedup_ingest: the batch id is
-    the store tag (b<id>) and the kept sink's batch_id partition, so
-    calling this twice with the same batch_id (at-least-once delivery)
-    leaves store AND kept sink as one call does."""
+    """foreachBatch body of continuous exact dedup (run it with
+    deltastore.foreach_batch_writer): the batch id is the store tag
+    (b<id>) and the kept sink's batch_id partition, so calling this
+    twice with the same batch_id (at-least-once delivery) leaves store
+    AND kept sink as one call does. Read kept via
+    spark.read.parquet(kept_dir); batch_id is an inferred partition
+    column."""
     kept = incremental_exact_dedup_ingest(
         batch_df.sparkSession, batch_df, store_dir,
         key_cols=key_cols, id_col=id_col, hash_mode=hash_mode,

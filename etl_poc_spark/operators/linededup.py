@@ -25,12 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_poc_spark.operators.deltastore import (
-    DeltaStoreSpec,
-    batch_slot,
-    foreach_batch_writer,
-    ingest_to_sink,
-)
+from etl_poc_spark.operators.deltastore import DeltaStoreSpec, batch_slot
 
 # (seg_hash, n_docs) per batch; the cumulative count is their SUM
 LINE_DEDUP_STORE = DeltaStoreSpec(("seg_hash",), (("n_docs", "sum"),))
@@ -201,29 +196,6 @@ def incremental_line_dedup_ingest(
 
 
 compact_line_dedup_store = LINE_DEDUP_STORE.compact
-
-
-def streaming_line_dedup_ingest(
-    stream: DataFrame,
-    store_dir: str,
-    kept_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **ingest_kwargs,
-):
-    """Continuous segment dedup: each micro-batch runs
-    incremental_line_dedup_ingest against the shared boilerplate store
-    and writes its rewritten documents as the batch's `batch_id=<n>`
-    partition of `kept_dir`. Returns a configured DataStreamWriter — call
-    .trigger(...).start() to run. Store and sink are both keyed by the
-    batch id, so an at-least-once replay is effectively-once
-    (operators/deltastore.py)."""
-    return foreach_batch_writer(
-        stream, checkpoint_dir, ingest_to_sink,
-        ingest=incremental_line_dedup_ingest, store_dir=store_dir,
-        kept_dir=kept_dir, id_col=id_col, text_col=text_col, **ingest_kwargs,
-    )
 
 
 from etl_poc_spark._serde import register_by_value as _rbv  # noqa: E402

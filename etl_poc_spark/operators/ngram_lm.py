@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 from etl_poc_spark.operators.deltastore import (
     DeltaStoreLogs,
     DeltaStoreSpec,
-    foreach_batch_writer,
     read_delta_store,
     tag_slot,
     write_batch_slot,
@@ -297,32 +296,17 @@ compact_bigram_lm_store = LM_STORE.compact
 def bigram_lm_handle_batch(
     batch_df: DataFrame, batch_id: int, *, store_dir: str, text_col: str = "text"
 ) -> None:
-    """One micro-batch of streaming_bigram_lm_ingest: the batch id is the
-    tag slot (b<id>), so calling this twice with the same batch_id
-    (at-least-once delivery) leaves the store as one call does."""
+    """foreachBatch body of continuous LM count maintenance (run it with
+    deltastore.foreach_batch_writer): the batch id is the tag slot
+    (b<id>), so calling this twice with the same batch_id (at-least-once
+    delivery) leaves the store as one call does. Read the live LM any
+    time with read_bigram_lm_store; scoring stays a batch concern."""
     incremental_bigram_lm_ingest(
         batch_df.sparkSession,
         batch_df,
         store_dir,
         text_col=text_col,
         batch_tag=f"b{batch_id}",
-    )
-
-
-def streaming_bigram_lm_ingest(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    *,
-    text_col: str = "text",
-):
-    """Continuous LM count maintenance: each micro-batch folds into the
-    shared store exactly-once (batch id = tag slot). Returns a configured
-    DataStreamWriter — call .trigger(...).start(). Read the live LM any
-    time with read_bigram_lm_store; scoring stays a batch concern."""
-    return foreach_batch_writer(
-        stream, checkpoint_dir, bigram_lm_handle_batch,
-        store_dir=store_dir, text_col=text_col,
     )
 
 
@@ -342,12 +326,16 @@ def perplexity_monitor_handle_batch(
     k: float = 1.0,
     fold: bool = True,
 ) -> None:
-    """One micro-batch of streaming_perplexity_monitor: score the batch
-    against the PRE-BATCH LM state (what "this data looks unlike what
-    came before" means), write a 1-row drift record, then fold the batch
-    into the store. Both sinks are batch_id-slotted with overwrite, so
-    an at-least-once replay leaves store AND monitor exactly as a single
-    delivery would (operators/deltastore.py).
+    """foreachBatch body of the concept-drift monitor (run it with
+    deltastore.foreach_batch_writer): score the batch against the
+    PRE-BATCH LM state (what "this data looks unlike what came before"
+    means), write a 1-row drift record, then fold the batch into the
+    store. A rising mean_nll series means the incoming data is drifting
+    away from the accumulated corpus (new domain, new language, spam
+    flood); read it with spark.read.parquet(monitor_dir). Both sinks are
+    batch_id-slotted with overwrite, so an at-least-once replay leaves
+    store AND monitor exactly as a single delivery would
+    (operators/deltastore.py).
 
     `fold=False` is the HELD-OUT mode (CCNet's fixed-reference setup):
     the store is a pre-seeded reference LM that batches score against
@@ -401,28 +389,3 @@ def perplexity_monitor_handle_batch(
         bigram_lm_handle_batch(
             batch_df, batch_id, store_dir=store_dir, text_col=text_col
         )
-
-
-def streaming_perplexity_monitor(
-    stream: DataFrame,
-    store_dir: str,
-    monitor_dir: str,
-    checkpoint_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: float = 1.0,
-    fold: bool = True,
-):
-    """Concept-drift monitor for a document stream: every micro-batch is
-    scored against the LM of everything that came BEFORE it, then folded
-    in — a rising mean_nll series means the incoming data is drifting
-    away from the accumulated corpus (new domain, new language, spam
-    flood). Returns a configured DataStreamWriter; read the drift series
-    with spark.read.parquet(monitor_dir) (batch_id is an inferred
-    partition column)."""
-    return foreach_batch_writer(
-        stream, checkpoint_dir, perplexity_monitor_handle_batch,
-        store_dir=store_dir, monitor_dir=monitor_dir, id_col=id_col,
-        text_col=text_col, k=k, fold=fold,
-    )

@@ -144,7 +144,9 @@ def incremental_scd2_ingest(
     the open episode is a no-op (scd2_merge collapses repeats), but a
     replayed batch with intermediate values would re-derive the same
     episodes — idempotent as long as batch boundaries are stable, which
-    the checkpointed streaming front-end guarantees."""
+    a checkpointed stream guarantees. Streaming: deltastore.
+    foreach_batch_writer(stream, ckpt, lambda b, _: incremental_scd2_ingest(
+    b.sparkSession, b, store_dir, ...))."""
     import uuid as _uuid
 
     from pyspark.errors import AnalysisException
@@ -171,30 +173,6 @@ def incremental_scd2_ingest(
         fs.delete(jpath, True)
     except Exception:  # noqa: BLE001 — cleanup must never fail the ingest
         pass
-
-
-def streaming_scd2_ingest(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    key_cols: Sequence[str],
-    attr_cols: Sequence[str],
-    ts_col: str,
-    tiebreak_cols: Sequence[str] = (),
-):
-    """Structured Streaming front-end: each micro-batch folds via
-    incremental_scd2_ingest. Returns a configured DataStreamWriter —
-    call .trigger(...).start() (same convention as streaming/rollup.py)."""
-
-    def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        incremental_scd2_ingest(
-            batch_df.sparkSession, batch_df, store_dir,
-            key_cols, attr_cols, ts_col, tiebreak_cols,
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
 
 
 def pit_join(

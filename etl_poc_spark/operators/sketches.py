@@ -136,6 +136,8 @@ def incremental_kmv_ingest(
     leave the store byte-identical — exactly-once state for free, with no
     batch-id bookkeeping (contrast linededup's counter store, which needs
     batch_id partition overwrite because counters are not idempotent).
+    Streaming: deltastore.foreach_batch_writer(stream, ckpt, lambda b, _:
+    incremental_kmv_ingest(b.sparkSession, b, key_col, store_dir, k)).
 
     The k-row collect to refresh the store is bounded by construction
     (same class as the centroid-model fetches in operators/similarity.py);
@@ -155,28 +157,6 @@ def incremental_kmv_ingest(
     fresh = spark.createDataFrame(rows, "h long")
     fresh.coalesce(1).write.mode("overwrite").parquet(store_dir)
     return kmv_estimate(spark.read.parquet(store_dir), k)
-
-
-def streaming_kmv_ingest(
-    stream: DataFrame,
-    key_col: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    k: int = 64,
-):
-    """Structured Streaming front-end for the KMV store: each micro-batch
-    folds via incremental_kmv_ingest. Replay-safe without checkpoint
-    coordination because the min-k-union merge is idempotent (see
-    incremental_kmv_ingest). Returns a configured DataStreamWriter —
-    call .trigger(...).start() to run (same convention as
-    operators/incremental.py::streaming_near_dup_ingest)."""
-
-    def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        incremental_kmv_ingest(batch_df.sparkSession, batch_df, key_col, store_dir, k=k)
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
 
 
 def cms_inner_product(

@@ -25,11 +25,10 @@ reference's split/map/reduce the engine adds a relational, curation,
 selection/mixing and analytics vocabulary. The analytics builders call
 the same operators/behavior.py functions as the registered queries.
 
-A config may instead declare a `streaming:` block (round 11) to run one
-of the continuous operators over a landing-zone source — see
-run_streaming_pipeline for the shape (ops: exact_dedup, lm_counts,
-lm_perplexity_monitor incl. the held-out `reference:` mode, and
-dsir_counts for continuous DSIR model maintenance).
+A config may instead declare a `streaming:` block to run one of the
+continuous operators over a landing-zone source — see
+run_streaming_pipeline for the shape and the `_STREAM_OPS` table for
+the ops and their keys.
 
 Static validation mirrors the reference's DocETLOperator checks
 (airflow/plugins/docetl_operator.py:126-158): default_model present,
@@ -43,6 +42,7 @@ reference's per-op JSON intermediates.
 
 from __future__ import annotations
 
+import inspect
 import os
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass
@@ -1120,10 +1120,9 @@ def run_pipeline(
 
 
 # ---------------------------------------------------------------------------
-# config-declared STREAMING pipelines (round 11): the batch surface above
-# covers the reference's whole DAG; this exposes the engine's continuous
-# operators (exact dedup, LM count maintenance, the perplexity drift /
-# held-out quality monitor) to the same YAML + CLI front-end, so a config
+# config-declared STREAMING pipelines: the batch surface above covers the
+# reference's whole DAG; this exposes the engine's continuous operators
+# (the _STREAM_OPS table) to the same YAML + CLI front-end, so a config
 # can declare a landing-zone tail end to end without touching library code.
 # ---------------------------------------------------------------------------
 
@@ -1160,6 +1159,175 @@ def _open_stream(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
     raise PipelineConfigError(f"unknown streaming source format {fmt!r}")
 
 
+_StreamBuilder = Callable[
+    [SparkSession, dict[str, Any], dict[str, Any], dict[str, Any]], Callable
+]
+
+
+@dataclass(frozen=True)
+class _StreamOp:
+    """One `streaming.op`: `build(spark, spec, kwargs, summary)` imports
+    and returns the foreachBatch handle (seeding the store first where
+    the op has a reference corpus, and adding kwargs no key sets);
+    `params` maps a YAML key to the handle kwarg it sets, with its
+    coercion; `extra` are optional keys only the builder reads. Only
+    keys present in the block are passed, so every default lives on the
+    handle."""
+
+    build: _StreamBuilder
+    params: Mapping[str, tuple[str, Callable[[Any], Any]]]
+    required: tuple[str, ...]
+    extra: tuple[str, ...]
+
+
+_STREAM_KEYS = ("source", "op", "store_dir", "checkpoint_dir")
+_STREAM_OPS: dict[str, _StreamOp] = {}
+
+
+def _stream_op(
+    op: str,
+    params: Mapping[str, str | tuple[str, Callable[[Any], Any]]],
+    required: tuple[str, ...] = (),
+    extra: tuple[str, ...] = (),
+) -> Callable[[_StreamBuilder], _StreamBuilder]:
+    """Register one streaming op (the @_op idiom); a bare string param
+    is a kwarg name passed through uncoerced."""
+
+    def deco(fn: _StreamBuilder) -> _StreamBuilder:
+        if op in _STREAM_OPS:
+            raise ValueError(f"duplicate streaming op {op!r}")
+        _STREAM_OPS[op] = _StreamOp(
+            fn,
+            {k: (v, lambda x: x) if isinstance(v, str) else v for k, v in params.items()},
+            required,
+            extra,
+        )
+        return fn
+
+    return deco
+
+
+def _reference_kwargs(ref: dict[str, Any], kwargs: dict[str, Any], *names: str) -> dict[str, Any]:
+    """Seed kwargs of a monitor's reference corpus: the stream's `names`
+    and text column, the reference's own `text_key` taking precedence."""
+    out = {n: kwargs[n] for n in (*names, "text_col") if n in kwargs}
+    if "text_key" in ref:
+        out["text_col"] = ref["text_key"]
+    return out
+
+
+@_stream_op(
+    "exact_dedup",
+    {"keys": ("key_cols", list), "id": "id_col", "kept_dir": "kept_dir"},
+    required=("keys", "kept_dir"),
+)
+def _exact_dedup_stream(spark, spec, kwargs, summary):
+    from etl_poc_spark.operators.incremental import exact_dedup_handle_batch
+
+    return exact_dedup_handle_batch
+
+
+@_stream_op("lm_counts", {"text_key": "text_col"})
+def _lm_counts_stream(spark, spec, kwargs, summary):
+    from etl_poc_spark.operators.ngram_lm import bigram_lm_handle_batch
+
+    return bigram_lm_handle_batch
+
+
+@_stream_op(
+    "dsir_counts",
+    {"role": "role", "text_key": "text_col", "n_buckets": ("n_buckets", int)},
+)
+def _dsir_counts_stream(spark, spec, kwargs, summary):
+    # fold each micro-batch's bucket histogram into the store under
+    # `role` (raw|target — incremental_dsir_ingest rejects any other);
+    # batch scoring reads it via score_dsir_store
+    from etl_poc_spark.operators.dsir import dsir_handle_batch
+
+    default = inspect.signature(dsir_handle_batch).parameters["role"].default
+    summary["role"] = kwargs.get("role", default)
+    return dsir_handle_batch
+
+
+@_stream_op("doremi_stats", {"stratify_key": "domain_col", "excess_key": "excess_col"})
+def _doremi_stats_stream(spark, spec, kwargs, summary):
+    # per-domain (count, clipped-excess-sum) partials; the live mixture
+    # weights are doremi_store_weights over the store at any time
+    from etl_poc_spark.operators.curation import doremi_handle_batch
+
+    return doremi_handle_batch
+
+
+@_stream_op(
+    "badwords_stats",
+    {"badwords": "badwords", "stratify_key": "domain_col", "text_key": "text_col"},
+)
+def _badwords_stats_stream(spark, spec, kwargs, summary):
+    # per-domain (n_docs, n_flagged, n_hits) partials of a live crawl
+    # ingest; read the dashboard any time with read_badwords_store
+    from etl_poc_spark.operators.curation import badwords_handle_batch
+
+    return badwords_handle_batch
+
+
+@_stream_op(
+    "dsir_monitor",
+    {"monitor_dir": "monitor_dir", "id": "id_col", "text_key": "text_col",
+     "n_buckets": ("n_buckets", int)},
+    required=("monitor_dir", "target"),
+)
+def _dsir_monitor_stream(spark, spec, kwargs, summary):
+    # target-affinity drift monitor: `target:` seeds the reference model
+    # once (tag=reference — an idempotent overwrite slot), then each
+    # batch scores against it relative to the accumulated raw model and
+    # folds into raw
+    from etl_poc_spark.operators.dsir import (
+        dsir_monitor_handle_batch,
+        incremental_dsir_ingest,
+    )
+
+    tgt = spec["target"]
+    tgtdf = _load_dataset(spark, tgt)
+    incremental_dsir_ingest(
+        spark, tgtdf, spec["store_dir"], role="target", batch_tag="reference",
+        **_reference_kwargs(tgt, kwargs, "n_buckets"),
+    )
+    summary["target_rows"] = tgtdf.count()
+    summary["monitor_dir"] = spec["monitor_dir"]
+    return dsir_monitor_handle_batch
+
+
+@_stream_op(
+    "lm_perplexity_monitor",
+    {"monitor_dir": "monitor_dir", "id": "id_col", "text_key": "text_col",
+     "k": ("k", float)},
+    required=("monitor_dir",),
+    extra=("reference",),
+)
+def _lm_perplexity_monitor_stream(spark, spec, kwargs, summary):
+    # held-out mode: `reference:` seeds the store ONCE (tag=reference, so
+    # a re-run re-seeds identically) and batches score against it WITHOUT
+    # folding in (CCNet's fixed-reference quality gate); without it,
+    # drift mode scores against everything so far, then folds
+    from etl_poc_spark.operators.ngram_lm import (
+        incremental_bigram_lm_ingest,
+        perplexity_monitor_handle_batch,
+    )
+
+    ref = spec.get("reference")
+    if ref is not None:
+        refdf = _load_dataset(spark, ref)
+        incremental_bigram_lm_ingest(
+            spark, refdf, spec["store_dir"], batch_tag="reference",
+            **_reference_kwargs(ref, kwargs),
+        )
+        summary["reference_rows"] = refdf.count()
+    kwargs["fold"] = ref is None
+    summary["mode"] = "held_out" if ref is not None else "drift"
+    summary["monitor_dir"] = spec["monitor_dir"]
+    return perplexity_monitor_handle_batch
+
+
 def run_streaming_pipeline(
     spark: SparkSession, config: dict[str, Any], timeout_seconds: float = 600.0
 ) -> dict[str, Any]:
@@ -1167,171 +1335,41 @@ def run_streaming_pipeline(
     data (availableNow trigger — the batch-boundary-exact mode every
     continuous op here is replay-tested under) and return a summary.
 
-    Block shape:
-        streaming:
-          source: {path, format: parquet|jsonl_tail, ddl?, max_files_per_trigger?}
-          op: exact_dedup | lm_counts | lm_perplexity_monitor | dsir_counts | dsir_monitor | doremi_stats | badwords_stats
-          store_dir: ...          # op state store
-          checkpoint_dir: ...
-          # exact_dedup: keys: [col,...], id: doc_id, kept_dir: ...
-          # lm_counts / lm_perplexity_monitor: text_key: text
-          # dsir_counts: role: raw|target, text_key, n_buckets
-          # doremi_stats: stratify_key: source, excess_key: excess
-          # badwords_stats: stratify_key: source, text_key: text, badwords?: [..]
-          # dsir_monitor: monitor_dir, target: {path, format?, text_key?},
-          #   id, text_key, n_buckets -> score-then-fold drift series
-          # lm_perplexity_monitor: monitor_dir, id: doc_id, k: 1.0,
-          #   reference: {path, format?, text_key?}  -> held-out mode:
-          #   the reference corpus seeds the store ONCE (tag=reference)
-          #   and batches score against it WITHOUT folding in (CCNet's
-          #   fixed-reference quality gate); omit `reference` for drift
-          #   mode (score against everything so far, then fold).
+    The block holds `source` ({path, format: parquet|jsonl_tail, ddl?,
+    max_files_per_trigger?}), `op`, `store_dir`, `checkpoint_dir`, and
+    the op's keys from the `_STREAM_OPS` table above. An unknown op or
+    key is rejected before the source is opened or anything is written.
     """
     spec = config.get("streaming")
     if not isinstance(spec, dict):
         raise PipelineConfigError("streaming config requires a 'streaming' mapping")
-    for key in ("source", "op", "store_dir", "checkpoint_dir"):
+    for key in _STREAM_KEYS:
         if key not in spec:
             raise PipelineConfigError(f"streaming block missing required key {key!r}")
-    stream = _open_stream(spark, spec["source"])
     op = spec["op"]
+    entry = _STREAM_OPS.get(op)
+    if entry is None:
+        raise PipelineConfigError(
+            f"unknown streaming op {op!r} (known: {', '.join(sorted(_STREAM_OPS))})"
+        )
+    known = {*_STREAM_KEYS, *entry.params, *entry.required, *entry.extra}
+    unknown = sorted(set(spec) - known)
+    if unknown:
+        raise PipelineConfigError(
+            f"streaming {op}: unknown key(s) {unknown} (known: {', '.join(sorted(known))})"
+        )
+    for key in entry.required:
+        if key not in spec:
+            raise PipelineConfigError(f"streaming {op} requires {key!r}")
+    kwargs = {
+        kwarg: coerce(spec[key])
+        for key, (kwarg, coerce) in entry.params.items()
+        if key in spec
+    }
+    stream = _open_stream(spark, spec["source"])
     store_dir = spec["store_dir"]
     summary: dict[str, Any] = {"op": op, "store_dir": store_dir}
-
-    # every op is one foreachBatch handler over its store; the handler and
-    # its keyword arguments besides store_dir are all that differ
-    if op == "exact_dedup":
-        from etl_poc_spark.operators.incremental import exact_dedup_handle_batch
-
-        if "kept_dir" not in spec or "keys" not in spec:
-            raise PipelineConfigError("streaming exact_dedup requires 'keys' and 'kept_dir'")
-        handle = exact_dedup_handle_batch
-        kwargs = dict(
-            kept_dir=spec["kept_dir"],
-            key_cols=list(spec["keys"]),
-            id_col=spec.get("id", "doc_id"),
-        )
-    elif op == "lm_counts":
-        from etl_poc_spark.operators.ngram_lm import bigram_lm_handle_batch
-
-        handle = bigram_lm_handle_batch
-        kwargs = dict(text_col=spec.get("text_key", "text"))
-    elif op == "dsir_counts":
-        # continuous DSIR model maintenance (operators/dsir.py): fold each
-        # micro-batch's bucket histogram into the store under `role`
-        # (raw|target); batch scoring reads it via score_dsir_store
-        from etl_poc_spark.operators.dsir import DEFAULT_BUCKETS, dsir_handle_batch
-
-        role = spec.get("role", "raw")
-        if role not in ("raw", "target"):
-            raise PipelineConfigError("dsir_counts: role must be raw|target")
-        handle = dsir_handle_batch
-        kwargs = dict(
-            role=role,
-            text_col=spec.get("text_key", "text"),
-            n_buckets=int(spec.get("n_buckets", DEFAULT_BUCKETS)),
-        )
-        summary["role"] = role
-    elif op == "doremi_stats":
-        # continuous DoReMi stats maintenance (operators/curation.py):
-        # fold each micro-batch's per-domain (count, clipped-excess-sum)
-        # partials into the store; the live mixture weights are
-        # doremi_store_weights over it at any time
-        from etl_poc_spark.operators.curation import doremi_handle_batch
-
-        handle = doremi_handle_batch
-        kwargs = dict(
-            domain_col=spec.get("stratify_key", "source"),
-            excess_col=spec.get("excess_key", "excess"),
-        )
-    elif op == "badwords_stats":
-        # continuous per-domain badwords monitoring (the content-safety
-        # dashboard of a live crawl ingest): fold each micro-batch's
-        # (n_docs, n_flagged, n_hits) partials into the store; read the
-        # live view any time with read_badwords_store
-        from etl_poc_spark.operators.curation import (
-            C4_BADWORDS_PLACEHOLDER,
-            badwords_handle_batch,
-        )
-
-        handle = badwords_handle_batch
-        kwargs = dict(
-            badwords=spec.get("badwords", list(C4_BADWORDS_PLACEHOLDER)),
-            domain_col=spec.get("stratify_key", "source"),
-            text_col=spec.get("text_key", "text"),
-        )
-    elif op == "dsir_monitor":
-        # target-affinity drift monitor: `target:` seeds the reference
-        # model once (tag=reference — idempotent overwrite slot, the
-        # lm_perplexity_monitor held-out discipline), then each batch
-        # scores against it relative to the accumulated raw model and
-        # folds into raw
-        from etl_poc_spark.operators.dsir import (
-            DEFAULT_BUCKETS,
-            dsir_monitor_handle_batch,
-            incremental_dsir_ingest,
-        )
-
-        if "monitor_dir" not in spec:
-            raise PipelineConfigError("dsir_monitor requires 'monitor_dir'")
-        if "target" not in spec:
-            raise PipelineConfigError(
-                "dsir_monitor requires 'target' (the reference corpus dataset)"
-            )
-        nb = int(spec.get("n_buckets", DEFAULT_BUCKETS))
-        tgt_spec = spec["target"]
-        tgtdf = _load_dataset(spark, tgt_spec)
-        incremental_dsir_ingest(
-            spark,
-            tgtdf,
-            store_dir,
-            role="target",
-            text_col=tgt_spec.get("text_key", spec.get("text_key", "text")),
-            n_buckets=nb,
-            batch_tag="reference",
-        )
-        summary["target_rows"] = tgtdf.count()
-        handle = dsir_monitor_handle_batch
-        kwargs = dict(
-            monitor_dir=spec["monitor_dir"],
-            id_col=spec.get("id", "doc_id"),
-            text_col=spec.get("text_key", "text"),
-            n_buckets=nb,
-        )
-        summary["monitor_dir"] = spec["monitor_dir"]
-    elif op == "lm_perplexity_monitor":
-        from etl_poc_spark.operators.ngram_lm import (
-            incremental_bigram_lm_ingest,
-            perplexity_monitor_handle_batch,
-        )
-
-        if "monitor_dir" not in spec:
-            raise PipelineConfigError("lm_perplexity_monitor requires 'monitor_dir'")
-        ref = spec.get("reference")
-        if ref is not None:
-            # held-out seeding: idempotent by construction — the tag slot
-            # overwrites, so re-running the pipeline re-seeds identically
-            refdf = _load_dataset(spark, ref)
-            incremental_bigram_lm_ingest(
-                spark,
-                refdf,
-                store_dir,
-                text_col=ref.get("text_key", spec.get("text_key", "text")),
-                batch_tag="reference",
-            )
-            summary["reference_rows"] = refdf.count()
-        handle = perplexity_monitor_handle_batch
-        kwargs = dict(
-            monitor_dir=spec["monitor_dir"],
-            id_col=spec.get("id", "doc_id"),
-            text_col=spec.get("text_key", "text"),
-            k=float(spec.get("k", 1.0)),
-            fold=ref is None,
-        )
-        summary["mode"] = "held_out" if ref is not None else "drift"
-        summary["monitor_dir"] = spec["monitor_dir"]
-    else:
-        raise PipelineConfigError(f"unknown streaming op {op!r}")
+    handle = entry.build(spark, spec, kwargs, summary)
 
     from etl_poc_spark.operators.deltastore import foreach_batch_writer
 

@@ -16,7 +16,8 @@ Field semantics:
 - distinct: a per-column KMV bottom-k (k hashes, portable md5). The
   min-k-of-union merge is idempotent, so replayed batches are no-ops
   for the sketch; counters use the same batch-id idempotency discipline
-  as callers choose (checkpointed foreachBatch here).
+  as callers choose (a checkpointed deltastore.foreach_batch_writer
+  over incremental_profile_ingest).
 """
 
 from __future__ import annotations
@@ -148,24 +149,3 @@ def read_profile(spark: SparkSession, store_dir: str, k: int = 64) -> DataFrame:
         .alias("est_distinct"),
     )
     return stats.join(d, "column", "left").orderBy("column")
-
-
-def streaming_profile_ingest(
-    stream: DataFrame,
-    cols: list[str],
-    store_dir: str,
-    checkpoint_dir: str,
-    k: int = 64,
-):
-    """Structured Streaming front-end: each micro-batch folds via
-    incremental_profile_ingest. Returns a configured DataStreamWriter —
-    call .trigger(...).start() (same convention as streaming/rollup.py)."""
-
-    def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        incremental_profile_ingest(
-            batch_df.sparkSession, batch_df, cols, store_dir, k=k
-        )
-
-    return stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )

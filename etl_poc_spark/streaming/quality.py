@@ -10,10 +10,9 @@ versioned-upsert/key-store problem, not a screen). Row-local violation
 counts are additive across batches, so the log's per-rule sums equal the
 batch-operator counts over the union — the equivalence the test pins.
 
-Idempotency: the log is partitioned by batch_id and written with dynamic
-partition overwrite, so a replayed micro-batch (foreachBatch's
-at-least-once contract) rewrites its own partition instead of appending
-duplicates — the operators/linededup.py batch_id pattern.
+Idempotency: the log is written with deltastore.write_batch_slot, so a
+replayed micro-batch (foreachBatch is at-least-once) rewrites its own
+batch_id partition instead of appending duplicates.
 """
 
 from __future__ import annotations
@@ -21,8 +20,8 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import write_batch_slot
 from etl_poc_spark.operators.expectations import expectation_report
 
 
@@ -33,36 +32,12 @@ def expectation_log_batch(
     log_dir: str,
     refs: dict[str, DataFrame] | None = None,
 ) -> None:
-    """foreachBatch body: evaluate `rules` on the micro-batch and upsert
-    the report rows into the quality log under this batch_id."""
-    rep = expectation_report(batch_df, rules, refs).withColumn(
-        "batch_id", F.lit(int(batch_id))
-    )
-    (
-        rep.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(log_dir)
-    )
-
-
-def streaming_expectation_log(
-    stream_df: DataFrame,
-    rules: list[dict[str, Any]],
-    log_dir: str,
-    checkpoint_dir: str,
-    refs: dict[str, DataFrame] | None = None,
-):
-    """Attach the per-batch expectation log to a stream; returns the
-    started StreamingQuery. Read the log with spark.read.parquet(log_dir)
-    — one report row per (rule, batch)."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: expectation_log_batch(df, bid, rules, log_dir, refs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    """foreachBatch body (run it with deltastore.foreach_batch_writer,
+    passing rules/log_dir/refs as keywords): evaluate `rules` on the
+    micro-batch and upsert the report rows into the quality log under
+    this batch_id. Read the log with spark.read.parquet(log_dir) — one
+    report row per (rule, batch)."""
+    write_batch_slot(expectation_report(batch_df, rules, refs), log_dir, batch_id)
 
 
 from etl_poc_spark._serde import register_by_value as _rbv  # noqa: E402

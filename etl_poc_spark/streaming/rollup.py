@@ -36,7 +36,9 @@ def _partial_rollup(df: DataFrame) -> DataFrame:
 
 def upsert_rollup_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> None:
     """Merge one micro-batch's partial rollup into the store, touching only
-    the day partitions the batch covers."""
+    the day partitions the batch covers. Streaming: deltastore.
+    foreach_batch_writer(stream, ckpt, lambda b, _: upsert_rollup_batch(
+    b.sparkSession, store_dir, b))."""
     import os
 
     # persist: the batch aggregate feeds the affected-day probe AND the
@@ -66,26 +68,11 @@ def upsert_rollup_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame
             F.col("n_events").cast("long").alias("n_events"),
             F.col("total_value").cast("decimal(38,2)").alias("total_value"),
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy("day").parquet(store_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("day")
+            .parquet(store_dir)
+        )
     finally:
         inc.unpersist()
-
-
-def incremental_hourly_rollup(stream: DataFrame, store_dir: str, checkpoint_dir: str):
-    """Attach the upsert as a foreachBatch sink; returns a configured
-    DataStreamWriter — the caller picks the trigger and launches it via
-    .trigger(...).start(), which yields the StreamingQuery."""
-    spark = stream.sparkSession
-
-    def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        upsert_rollup_batch(spark, store_dir, batch_df)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-    )

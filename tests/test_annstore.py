@@ -203,7 +203,8 @@ def test_streaming_ann_ingest_and_replay(spark, tmp_path):
     equals the one-shot IVF over everything streamed; a direct
     handle_batch replay (foreachBatch is at-least-once) leaves the store
     byte-identical."""
-    from etl_poc_spark.operators.annstore import ann_handle_batch, streaming_ann_ingest
+    from etl_poc_spark.operators.annstore import ann_handle_batch
+    from etl_poc_spark.operators.deltastore import foreach_batch_writer
     from etl_poc_spark.operators.similarity import kmeans_ivf_topk
 
     idx = str(tmp_path / "idx")
@@ -220,7 +221,9 @@ def test_streaming_ann_ingest_and_replay(spark, tmp_path):
         .parquet(in_dir)
     )
     q = (
-        streaming_ann_ingest(stream, idx, store, ck)
+        foreach_batch_writer(
+            stream, ck, ann_handle_batch, index_dir=idx, store_dir=store
+        )
         .trigger(availableNow=True)
         .start()
     )

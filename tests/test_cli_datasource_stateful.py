@@ -382,6 +382,25 @@ def test_cli_streaming_exact_dedup(spark, tmp_path):
     assert sorted(r["text"] for r in kept.collect()) == ["aaa", "bbb", "ccc"]
 
 
+def test_streaming_block_rejects_unknown_op_and_keys(spark, tmp_path):
+    """A typo in the streaming block (`n_bucket` for `n_buckets`) must not
+    silently run with the default bucket count: it is rejected before
+    the source is opened, so neither store nor checkpoint is created."""
+    from etl_poc_spark.plans.yaml_pipeline import PipelineConfigError, run_streaming_pipeline
+
+    land = str(tmp_path / "in")
+    spark.createDataFrame([(1, "a b c")], "doc_id long, text string").write.parquet(land)
+    block = {"source": {"path": land, "format": "parquet"}, "op": "dsir_counts",
+             "n_bucket": 64, "store_dir": str(tmp_path / "store"),
+             "checkpoint_dir": str(tmp_path / "ck")}
+    with pytest.raises(PipelineConfigError, match="n_bucket"):
+        run_streaming_pipeline(spark, {"streaming": block})
+    with pytest.raises(PipelineConfigError, match="unknown streaming op"):
+        run_streaming_pipeline(spark, {"streaming": {**block, "op": "dsir_count"}})
+    assert not (tmp_path / "store").exists()
+    assert not (tmp_path / "ck").exists()
+
+
 def test_cli_streaming_timeout_exits_nonzero(spark, tmp_path, capsys):
     """A timed-out availableNow run is stopped MID-INGEST: the CLI must
     exit nonzero (2) and warn on stderr, not silently report success
@@ -425,7 +444,9 @@ def test_cli_streaming_timeout_exits_nonzero(spark, tmp_path, capsys):
 def test_cli_streaming_dsir_counts(spark, tmp_path):
     """Config-declared continuous DSIR model maintenance: the streaming
     block folds a landing dir into the raw model store; the folded
-    histogram equals a one-shot batch ingest of the same rows."""
+    histogram equals a one-shot batch ingest of the same rows. The
+    `lm_counts` op over the same two files likewise folds to one batch
+    incremental_bigram_lm_ingest."""
     import yaml as _yaml
 
     from etl_poc_spark.cli import main
@@ -433,6 +454,11 @@ def test_cli_streaming_dsir_counts(spark, tmp_path):
         incremental_dsir_ingest,
         read_dsir_store,
     )
+    from etl_poc_spark.operators.ngram_lm import (
+        incremental_bigram_lm_ingest,
+        read_bigram_lm_store,
+    )
+    from etl_poc_spark.plans.yaml_pipeline import run_streaming_pipeline
 
     land = tmp_path / "in"
     docs = spark.createDataFrame(
@@ -462,6 +488,15 @@ def test_cli_streaming_dsir_counts(spark, tmp_path):
     got = sorted(map(tuple, read_dsir_store(spark, str(tmp_path / "store"), "raw").collect()))
     want = sorted(map(tuple, read_dsir_store(spark, seq, "raw").collect()))
     assert got == want
+
+    lm = {"source": cfg["streaming"]["source"], "op": "lm_counts",
+          "store_dir": str(tmp_path / "lm"), "checkpoint_dir": str(tmp_path / "lm_ck")}
+    assert run_streaming_pipeline(spark, {"streaming": lm})["stream_stopped"]
+    assert len(list((tmp_path / "lm" / "bigrams").glob("tag=*"))) == 2  # two batches
+    incremental_bigram_lm_ingest(spark, spark.read.parquet(str(land)), str(tmp_path / "lm_seq"))
+    lm_seq = read_bigram_lm_store(spark, str(tmp_path / "lm_seq"))
+    for g, w in zip(read_bigram_lm_store(spark, str(tmp_path / "lm")), lm_seq):
+        assert sorted(map(tuple, g.collect())) == sorted(map(tuple, w.collect()))
 
 
 @pytest.mark.slow

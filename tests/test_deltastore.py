@@ -480,3 +480,18 @@ def test_fully_compacted_store_reads_consolidated_only(spark, tmp_path):
     # and new ingests keep working on top of the consolidated state
     kept = _ingest_exact(spark, a, _docs(spark, [(9, "t0"), (10, "new")]), "b3")
     assert _rows(kept, "doc_id") == [(10,)]
+
+
+def test_foreach_batch_writer_is_the_only_foreachbatch_seam():
+    """Every streaming writer in the package goes through
+    deltastore.foreach_batch_writer; no module builds its own."""
+    pkg = os.path.dirname(os.path.dirname(deltastore.__file__))
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path, encoding="utf-8") as f:
+                    if ".foreachBatch(" in f.read():
+                        hits.append(os.path.relpath(path, pkg))
+    assert hits == [os.path.join("operators", "deltastore.py")]

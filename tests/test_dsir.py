@@ -200,14 +200,28 @@ def test_dsir_store_exclude_tag_restores_pre_batch_view(spark, tmp_path):
     assert full != after_b1
 
 
+def test_dsir_ingest_rejects_unknown_role(spark, tmp_path):
+    """A role outside the store's logs would write a log read_dsir_store
+    never folds: the ingest raises before writing anything."""
+    from etl_poc_spark.operators.dsir import dsir_handle_batch
+
+    store = tmp_path / "store"
+    with pytest.raises(ValueError, match="trget"):
+        dsir_handle_batch(
+            _docs(spark, [(1, "the cat sat")]), 0, store_dir=str(store), role="trget"
+        )
+    assert not store.exists()
+
+
 def test_streaming_dsir_ingest_matches_sequential(spark, tmp_path):
     """Structured-Streaming twin: availableNow micro-batches over a
     landing dir fold to the SAME model as sequential incremental
     ingests of the same rows."""
+    from etl_poc_spark.operators.deltastore import foreach_batch_writer
     from etl_poc_spark.operators.dsir import (
+        dsir_handle_batch,
         incremental_dsir_ingest,
         read_dsir_store,
-        streaming_dsir_ingest,
     )
 
     land = tmp_path / "land"
@@ -224,9 +238,9 @@ def test_streaming_dsir_ingest_matches_sequential(spark, tmp_path):
         .parquet(str(land))
     )
     q = (
-        streaming_dsir_ingest(
-            stream, str(tmp_path / "stream_store"), str(tmp_path / "ck"),
-            role="raw", n_buckets=B,
+        foreach_batch_writer(
+            stream, str(tmp_path / "ck"), dsir_handle_batch,
+            store_dir=str(tmp_path / "stream_store"), role="raw", n_buckets=B,
         )
         .trigger(availableNow=True)
         .start()

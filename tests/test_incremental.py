@@ -72,12 +72,12 @@ def test_incremental_ingest_short_docs_pass_through(spark, tmp_path):
 
 @pytest.mark.slow
 def test_streaming_ingest_matches_sequential_batches(spark, tmp_path):
-    """A 2-file stream through streaming_near_dup_ingest keeps the same ids
+    """A 2-file stream through ingest_to_sink keeps the same ids
     as two sequential batch ingests (maxFilesPerTrigger=1 -> one micro-batch
     per file; file order by modification time)."""
     import time as _time
 
-    from etl_poc_spark.operators.incremental import streaming_near_dup_ingest
+    from etl_poc_spark.operators.deltastore import foreach_batch_writer, ingest_to_sink
 
     near_of_0 = list(_BASE[0])
     near_of_0[-1] = "changed"
@@ -100,11 +100,13 @@ def test_streaming_ingest_matches_sequential_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir / "*"))
     )
-    writer = streaming_near_dup_ingest(
+    writer = foreach_batch_writer(
         stream,
+        str(tmp_path / "ckpt"),
+        ingest_to_sink,
+        ingest=incremental_near_dup_ingest,
         store_dir=str(tmp_path / "store"),
         kept_dir=str(tmp_path / "kept"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q = writer.trigger(availableNow=True).start()
     q.awaitTermination(180)
@@ -151,10 +153,8 @@ def test_incremental_kmv_matches_batch_and_replay_is_noop(spark, tmp_path):
 def test_streaming_kmv_matches_sequential_batches(spark, tmp_path):
     import time as _time
 
-    from etl_poc_spark.operators.sketches import (
-        incremental_kmv_ingest,
-        streaming_kmv_ingest,
-    )
+    from etl_poc_spark.operators.deltastore import foreach_batch_writer
+    from etl_poc_spark.operators.sketches import incremental_kmv_ingest
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
@@ -170,8 +170,10 @@ def test_streaming_kmv_matches_sequential_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir / "*"))
     )
-    writer = streaming_kmv_ingest(
-        stream, "k", str(tmp_path / "store"), str(tmp_path / "ckpt"), k=32
+    store = str(tmp_path / "store")
+    writer = foreach_batch_writer(
+        stream, str(tmp_path / "ckpt"),
+        lambda b, _: incremental_kmv_ingest(b.sparkSession, b, "k", store, k=32),
     )
     q = writer.trigger(availableNow=True).start()
     q.awaitTermination(180)
@@ -179,7 +181,7 @@ def test_streaming_kmv_matches_sequential_batches(spark, tmp_path):
     ref_store = str(tmp_path / "ref_store")
     incremental_kmv_ingest(spark, b1, "k", ref_store, k=32)
     incremental_kmv_ingest(spark, b2, "k", ref_store, k=32)
-    got = sorted(r["h"] for r in spark.read.parquet(str(tmp_path / "store")).collect())
+    got = sorted(r["h"] for r in spark.read.parquet(store).collect())
     ref = sorted(r["h"] for r in spark.read.parquet(ref_store).collect())
     assert got == ref and len(got) == 32
 

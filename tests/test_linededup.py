@@ -120,14 +120,12 @@ def test_incremental_forward_only_threshold(spark, tmp_path):
 
 
 def test_streaming_line_dedup_matches_sequential_batches(spark, tmp_path):
-    """A 2-file stream through streaming_line_dedup_ingest produces the
+    """A 2-file stream through ingest_to_sink produces the
     same rewritten documents as two sequential incremental ingests."""
     import time as _time
 
-    from etl_poc_spark.operators.linededup import (
-        incremental_line_dedup_ingest,
-        streaming_line_dedup_ingest,
-    )
+    from etl_poc_spark.operators.deltastore import foreach_batch_writer, ingest_to_sink
+    from etl_poc_spark.operators.linededup import incremental_line_dedup_ingest
 
     schema = "doc_id long, text string"
     b1 = [(1, f"{BP} a b c"), (2, "d e f g h i")]
@@ -148,11 +146,13 @@ def test_streaming_line_dedup_matches_sequential_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir / "*"))
     )
-    writer = streaming_line_dedup_ingest(
+    writer = foreach_batch_writer(
         stream,
+        str(tmp_path / "ckpt"),
+        ingest_to_sink,
+        ingest=incremental_line_dedup_ingest,
         store_dir=str(tmp_path / "store"),
         kept_dir=str(tmp_path / "kept"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
         words_per_segment=3,
     )
     q = writer.trigger(availableNow=True).start()

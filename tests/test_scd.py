@@ -163,15 +163,13 @@ def test_pit_join_same_instant_double_change(spark):
 
 def test_incremental_and_streaming_scd2_ingest_match_batch(spark, tmp_path):
     """Parquet-backed SCD2 store: sequential incremental folds == one
-    batch rebuild; the checkpointed streaming front-end == sequential."""
+    batch rebuild; a checkpointed stream over the same folds == sequential."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from etl_poc_spark.operators.scd import (
-        incremental_scd2_ingest,
-        streaming_scd2_ingest,
-    )
+    from etl_poc_spark.operators.deltastore import foreach_batch_writer
+    from etl_poc_spark.operators.scd import incremental_scd2_ingest
 
     full = [
         (1, "bronze", _t(1)), (2, "bronze", _t(1)),
@@ -206,8 +204,11 @@ def test_incremental_and_streaming_scd2_ingest_match_batch(spark, tmp_path):
         .load(str(in_dir))
     )
     s_store = str(tmp_path / "s_store")
-    q = streaming_scd2_ingest(
-        stream, s_store, str(tmp_path / "ck"), ["k"], ["attr"], "ts"
+    q = foreach_batch_writer(
+        stream, str(tmp_path / "ck"),
+        lambda b, _: incremental_scd2_ingest(
+            b.sparkSession, b, s_store, ["k"], ["attr"], "ts"
+        ),
     ).trigger(availableNow=True).start()
     q.awaitTermination(180)
     assert _hist_dict(spark.read.parquet(s_store)) == want

@@ -261,10 +261,8 @@ def test_incremental_span_batch_id_replay_is_idempotent(spark, tmp_path):
 def test_streaming_span_removal_matches_sequential_batches(spark, tmp_path):
     import time as _time
 
-    from etl_poc_spark.operators.spandedup import (
-        incremental_span_removal_ingest,
-        streaming_span_removal_ingest,
-    )
+    from etl_poc_spark.operators.deltastore import foreach_batch_writer, ingest_to_sink
+    from etl_poc_spark.operators.spandedup import incremental_span_removal_ingest
 
     schema = "doc_id long, text string"
     b1 = [(1, W10 + " first tail"), (2, " ".join(f"x{j}" for j in range(12)))]
@@ -284,11 +282,13 @@ def test_streaming_span_removal_matches_sequential_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir / "*"))
     )
-    q = streaming_span_removal_ingest(
+    q = foreach_batch_writer(
         stream,
+        str(tmp_path / "ckpt"),
+        ingest_to_sink,
+        ingest=incremental_span_removal_ingest,
         store_dir=str(tmp_path / "store"),
         kept_dir=str(tmp_path / "kept"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
     ).trigger(availableNow=True).start()
     q.awaitTermination(180)
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import foreach_batch_writer
 from etl_poc_spark.streaming.windows import (
     EVENTS_STREAM_SCHEMA,
     hourly_event_counts_stream,
@@ -272,13 +273,15 @@ def test_incremental_rollup_equals_batch(spark, stream_dir, tmp_path):
     """Continuous-aggregate refresh: multi-batch incremental upserts into a
     day-partitioned store equal the one-shot batch rollup, and each refresh
     rewrites only the day partitions its batch touched."""
-    from etl_poc_spark.streaming.rollup import ROLLUP_KEYS, _partial_rollup, incremental_hourly_rollup
+    from etl_poc_spark.streaming.rollup import ROLLUP_KEYS, _partial_rollup, upsert_rollup_batch
 
     store = str(tmp_path / "rollup_store")
     stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).format("parquet") \
         .option("maxFilesPerTrigger", 1).load(stream_dir)
-    q = incremental_hourly_rollup(stream, store, str(tmp_path / "ckpt")) \
-        .trigger(availableNow=True).start()
+    q = foreach_batch_writer(
+        stream, str(tmp_path / "ckpt"),
+        lambda b, _: upsert_rollup_batch(b.sparkSession, store, b),
+    ).trigger(availableNow=True).start()
     q.awaitTermination(180)
 
     def keyed(rows):
@@ -472,10 +475,7 @@ def test_streaming_expectation_log_sums_to_batch(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from etl_poc_spark.operators.expectations import expectation_report
-    from etl_poc_spark.streaming.quality import (
-        expectation_log_batch,
-        streaming_expectation_log,
-    )
+    from etl_poc_spark.streaming.quality import expectation_log_batch
 
     in_dir = tmp_path / "q_in"
     in_dir.mkdir()
@@ -515,7 +515,10 @@ def test_streaming_expectation_log_sums_to_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .load(str(in_dir))
     )
-    q = streaming_expectation_log(stream, rules, log_dir, str(tmp_path / "qck"))
+    q = foreach_batch_writer(
+        stream, str(tmp_path / "qck"), expectation_log_batch,
+        rules=rules, log_dir=log_dir,
+    ).start()
     try:
         q.processAllAvailable()
         write_file("b2.parquet", b2)
@@ -909,10 +912,10 @@ def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
     from etl_poc_spark.io import load_table
     from etl_poc_spark.operators.dedup import exact_dedup
     from etl_poc_spark.operators.incremental import (
+        exact_dedup_handle_batch,
         exact_fingerprints,
         incremental_exact_dedup_ingest,
         read_exact_dedup_store,
-        streaming_exact_dedup_ingest,
     )
 
     from tests.conftest import SF_DIR
@@ -938,8 +941,9 @@ def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
         .parquet(in_dir)
     )
     q = (
-        streaming_exact_dedup_ingest(
-            stream, store, kept_dir, ck, key_cols=["text"], id_col="doc_id"
+        foreach_batch_writer(
+            stream, ck, exact_dedup_handle_batch, store_dir=store,
+            kept_dir=kept_dir, key_cols=["text"], id_col="doc_id",
         )
         .trigger(availableNow=True)
         .start()

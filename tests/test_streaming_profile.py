@@ -72,11 +72,8 @@ def test_streaming_profile_equals_sequential(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from etl_poc_spark.streaming.profile import (
-        incremental_profile_ingest,
-        read_profile,
-        streaming_profile_ingest,
-    )
+    from etl_poc_spark.operators.deltastore import foreach_batch_writer
+    from etl_poc_spark.streaming.profile import incremental_profile_ingest, read_profile
 
     in_dir = tmp_path / "pin"
     in_dir.mkdir()
@@ -98,7 +95,10 @@ def test_streaming_profile_equals_sequential(spark, tmp_path):
     )
     s_store = str(tmp_path / "s_store")
     q = (
-        streaming_profile_ingest(stream, cols, s_store, str(tmp_path / "ck"))
+        foreach_batch_writer(
+            stream, str(tmp_path / "ck"),
+            lambda b, _: incremental_profile_ingest(b.sparkSession, b, cols, s_store),
+        )
         .trigger(availableNow=True).start()
     )
     q.awaitTermination(180)

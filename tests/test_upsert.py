@@ -9,6 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from etl_poc_spark.operators.deltastore import foreach_batch_writer
+
 
 def _rows(spark, data):
     return spark.createDataFrame(data, "k long, day string, v string, seq long")
@@ -458,8 +460,9 @@ def test_streaming_versioned_ingest_matches_sequential(spark, tmp_path):
         .load(str(in_dir))
     )
     s_target = str(tmp_path / "s_vt")
-    q = U.streaming_versioned_ingest(
-        stream, s_target, str(tmp_path / "ck"), ["k"], "seq", "day"
+    q = foreach_batch_writer(
+        stream, str(tmp_path / "ck"), U.versioned_handle_batch,
+        target_dir=s_target, key_cols=["k"], seq_col="seq", partition_col="day",
     ).trigger(availableNow=True).start()
     q.awaitTermination(180)
 
@@ -959,8 +962,9 @@ def test_streaming_versioned_ingest_auto_log_checkpoint(spark, tmp_path):
         .load(str(in_dir))
     )
     target = str(tmp_path / "vt")
-    q = U.streaming_versioned_ingest(
-        stream, target, str(tmp_path / "ck"), ["k"], "seq", "day",
+    q = foreach_batch_writer(
+        stream, str(tmp_path / "ck"), U.versioned_handle_batch,
+        target_dir=target, key_cols=["k"], seq_col="seq", partition_col="day",
         log_checkpoint_every=2,
     ).trigger(availableNow=True).start()
     q.awaitTermination(180)
