@@ -3,8 +3,7 @@
 The reference declares datasets as named entries pointing at files
 (`docetl/config/article_pipeline.yaml.j2:14-20`); here a dataset is a named
 parquet table under a scale-factor directory, loaded lazily as a DataFrame
-and optionally registered as a temp view so queries can use either the
-DataFrame or SQL API.
+(register it with `createOrReplaceTempView` to use the SQL API).
 
 At 100 TB these would be catalog tables over partitioned parquet/Delta; the
 API shape (name -> DataFrame) is the same, so nothing downstream changes.
@@ -28,9 +27,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -85,12 +81,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("CAST(ts DIV 1000 AS LONG)")))
     return _normalize_ntz(df)
 
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    """Register each table as a temp view named after itself; returns the DataFrames."""
-    out = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

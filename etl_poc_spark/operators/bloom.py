@@ -68,23 +68,3 @@ def bloom_contains(col: Column, words: list[int], m: int = 4096, k: int = 3) -> 
         out = out & pr
     return out
 
-
-def bloom_prefilter_join(
-    large: DataFrame,
-    small: DataFrame,
-    on: str,
-    small_key: str | None = None,
-    m: int = 4096,
-    k: int = 3,
-    how: str = "left_semi",
-) -> DataFrame:
-    """Exact join result with the probe side bloom-pre-filtered: survivors
-    of the bit-set test (evaluated at the `large` scan) continue into the
-    real `how` join against `small`, which removes false positives. The
-    join's correctness is untouched — the filter only subtracts certain
-    non-matches before the shuffle."""
-    words = bloom_build(small, small_key or on, m, k)
-    pre = large.filter(bloom_contains(F.col(on), words, m, k))
-    return pre.join(
-        small.select(F.col(small_key or on).alias(on)).distinct(), on, how
-    )

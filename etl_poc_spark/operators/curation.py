@@ -652,11 +652,11 @@ def doremi_weights_from_stats(
 ) -> DataFrame:
     """DoReMi solver over PRE-AGGREGATED per-domain stats (Σ clipped
     excess, example count) — the entry point for incrementally-maintained
-    inputs: (sum, count) are additive, so a delta-log store or
-    `maintain_agg_view_versioned` view folds new batches exactly and the
-    solve over the maintained frame is bit-equal to a one-shot solve over
-    the union (equivalence pytest). Same recurrence and output columns
-    as `doremi_domain_weights`, minus the corpus aggregation."""
+    inputs: (sum, count) are additive, so a delta-log store folds new
+    batches exactly and the solve over the maintained frame is bit-equal
+    to a one-shot solve over the union (equivalence pytest). Same
+    recurrence and output columns as `doremi_domain_weights`, minus the
+    corpus aggregation."""
     if n_steps < 1:
         raise ValueError("n_steps must be >= 1")
     base = 1 << int(eta_shift)

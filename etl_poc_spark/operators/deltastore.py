@@ -2,7 +2,7 @@
 contract behind every continuous-ingest store family: exact dedup and
 near-dup bands (operators/incremental.py), line dedup (linededup.py),
 span dedup (spandedup.py), bigram LM (ngram_lm.py), DSIR (dsir.py),
-DoReMi and badwords (curation.py) and the ANN postings (annstore.py).
+and DoReMi and badwords (curation.py).
 Each family keeps only its delta computation and a `DeltaStoreSpec`
 constant — key columns plus an associative `agg` map — and goes through
 the spec for everything below.
@@ -50,11 +50,13 @@ one batch per minute. `compact_delta_store` (`DeltaStoreSpec.compact`)
 folds old slots into ONE consolidated slot holding the same aggregate
 the readers compute, so reads are bit-equal before and after. The rows
 land in a HIDDEN directory first (underscore-prefixed: invisible to
-Spark's file index), then one atomic rename publishes a manifest naming
-the folded slots (the `checkpoint_versioned` discipline of
-operators/upsert.py). A crash before the publish leaves an orphan the
-next compaction overwrites; a crash after it leaves folded slots that
-readers already exclude by name. Layout after n compactions::
+Spark's file index), then a manifest naming the folded slots is written
+to a dot-prefixed temp file and published by ONE atomic rename to its
+generation name; readers take only the newest published manifest, so
+they see the old fold or the new one, never a half-written one. A crash
+before the publish leaves an orphan the next compaction overwrites; a
+crash after it leaves folded slots that readers already exclude by
+name. Layout after n compactions::
 
     store_dir/
       _compactions/0000000n.json   <- newest manifest wins
@@ -86,14 +88,33 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_poc_spark.operators.upsert import _hfs, _join, _read_commit
-
 _COMPACTIONS = "_compactions"
 _COMPACTED = "_compacted"
 
 _AGG_FNS = {"sum": F.sum, "min": F.min, "max": F.max}
 
 _TAG_RE = re.compile(r"[A-Za-z0-9._-]+")
+
+
+def _join(*parts: str) -> str:
+    return "/".join(p.rstrip("/") for p in parts)
+
+
+def _hfs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem for `path`, jvm Path constructor)."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, jvm.org.apache.hadoop.fs.Path
+
+
+def _read_manifest(fs, P, jvm, path: str) -> dict:
+    stream = fs.open(P(path))
+    try:
+        body = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return json.loads(body)
 
 
 class CompactedSlotReplayError(RuntimeError):
@@ -175,7 +196,7 @@ def load_compaction_manifest(spark: SparkSession, store_dir: str) -> dict | None
     )
     if not names:
         return None
-    return _read_commit(fs, P, spark._jvm, _join(cdir, names[-1]))
+    return _read_manifest(fs, P, spark._jvm, _join(cdir, names[-1]))
 
 
 def _exclusion_filter(df: DataFrame, drop: list[dict]) -> DataFrame:
@@ -342,7 +363,7 @@ def compact_delta_store(
          `_compacted/<gen>` dir — invisible to readers; a crash here
          leaves an orphan the next attempt overwrites;
       2. publish `_compactions/<gen>.json` via tmp + atomic rename — the
-         single visibility switch (the checkpoint_versioned discipline);
+         single visibility switch;
       3. vacuum the folded slot files (readers already exclude them by
          name, so a partial vacuum is harmless).
 

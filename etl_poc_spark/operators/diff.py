@@ -1,8 +1,8 @@
-"""Keyed snapshot diff (CDC between two table versions) — the companion
-read-side to operators/upsert.py: given two snapshots of a keyed table,
-classify every key as inserted / deleted / changed / unchanged and show
-the before/after values. The audit primitive for "what did this batch
-actually change" on a 100-TB dimension or feature table.
+"""Keyed snapshot diff (CDC between two table versions): given two
+snapshots of a keyed table, classify every key as inserted / deleted /
+changed / unchanged and show the before/after values. The audit
+primitive for "what did this batch actually change" on a 100-TB
+dimension or feature table.
 
 Scale shape: ONE full-outer hash join on the key columns (the only wide
 operation; co-partitioned aggregates upstream reuse the same exchange

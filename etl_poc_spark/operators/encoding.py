@@ -75,33 +75,3 @@ def target_encode_cells(
         )
     return cells.select("category", "fold", "n", enc.alias("encoded"))
 
-
-def target_encode(
-    df: DataFrame,
-    cat_col: str,
-    target_col: str,
-    fold_key: Column,
-    n_folds: int = 4,
-    prior_weight: int = 0,
-    out_col: str = "encoded",
-    target_decimal: str = "decimal(18,2)",
-) -> DataFrame:
-    """Attach the out-of-fold encoding to every row of `df` (broadcast
-    join against the category x fold cell table)."""
-    cells = target_encode_cells(
-        df, cat_col, target_col, fold_key, n_folds, prior_weight, target_decimal
-    ).select(
-        F.col("category"),
-        F.col("fold"),
-        F.col("encoded").alias(out_col),
-    )
-    with_fold = df.withColumn("__fold", hash_bucket(fold_key, n_folds))
-    return (
-        with_fold.join(
-            F.broadcast(cells),
-            (with_fold["__fold"] == cells["fold"])
-            & with_fold[cat_col].eqNullSafe(cells["category"]),
-            "left",
-        )
-        .drop("category", "fold", "__fold")
-    )

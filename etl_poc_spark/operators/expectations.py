@@ -39,11 +39,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-class ExpectationsFailed(RuntimeError):
-    """Raised by gated writers (e.g. upsert.guarded_upsert_versioned)
-    when a rule fails — validation made atomic with publication."""
-
-
 def _row_local_violation(rule: dict[str, Any]) -> F.Column:
     """Boolean violation expression for a row-local rule."""
     t = rule["type"]

@@ -204,10 +204,10 @@ def fragmentation_report(
     target_rows_per_file: int,
     partition_col: str | None = None,
 ) -> DataFrame:
-    """The detector that decides WHEN compact_files / compact_versioned
-    should run: per partition (or one row for the whole table), file
-    count, row count, rows in undersized files, and the file count a
-    compaction would leave — all from ONE metadata-weight aggregate over
+    """The detector that decides WHEN compact_files should run: per
+    partition (or one row for the whole table), file count, row count,
+    rows in undersized files, and the file count a compaction would
+    leave — all from ONE metadata-weight aggregate over
     (input_file_name, partition). A maintenance scheduler filters this
     frame (e.g. n_files > 4 * ideal_files) instead of re-listing
     directories imperatively."""
@@ -252,7 +252,7 @@ def compact_files(
 ) -> dict:
     """Small-file compaction: rewrite the parquet dataset at `path` into
     ceil(n_rows / target_rows_per_file) files. The lakehouse maintenance
-    op — streaming ingests and dynamic-partition upserts accumulate
+    op — streaming ingests and dynamic-partition overwrites accumulate
     kilobyte files whose per-file open/footer cost eventually dominates
     scans (a 100k-file day partition reads slower than one 10-file one).
 
@@ -261,21 +261,20 @@ def compact_files(
     AND restore the write_range_sorted layout in one pass) -> write to a
     staging dir -> SWAP the staging dir into place (delete target +
     filesystem rename, metadata-only). The staging hop exists because
-    Spark cannot overwrite a path it is lazily reading from (same
-    pattern as operators/upsert.py); the swap-by-rename (r16) replaces
-    the pre-r16 re-read-and-rewrite finish, which both paid a second
-    full table write AND re-coalesced the staged files by the session's
-    maxPartitionBytes — under a default-config session the final file
-    count silently diverged from the promised ceil(n_rows/target)
-    (caught by the adversarial-session gate on
-    compact_files_roundtrip_stats).
+    Spark cannot overwrite a path it is lazily reading from; the
+    swap-by-rename (r16) replaces the pre-r16 re-read-and-rewrite
+    finish, which both paid a second full table write AND re-coalesced
+    the staged files by the session's maxPartitionBytes — under a
+    default-config session the final file count silently diverged from
+    the promised ceil(n_rows/target) (caught by the adversarial-session
+    gate on compact_files_roundtrip_stats).
 
     NON-ATOMIC WINDOW (documented): between the target delete and the
     rename, `path` does not exist — a crash there requires manual
     restore by renaming `{path}__compact_staging` into place (the
     staging dir holds the only complete copy, and the rename is the
     very next call). True atomicity needs a table format
-    (Delta/Iceberg) or versioned commits (operators/upsert.py).
+    (Delta/Iceberg).
 
     Returns {"files_before", "files_after", "n_rows"} so callers/tests
     can assert the compaction did what it claims."""

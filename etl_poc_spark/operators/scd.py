@@ -1,11 +1,11 @@
 """Slowly-changing-dimension (SCD Type 2) history and point-in-time joins.
 
-The warehouse problem the versioned-upsert protocol does NOT solve:
-`upsert_versioned` keeps the latest row per key (Type 1 — history
-destroyed); an ML feature store or audit-grade dimension needs every
-historical value with its validity interval, and facts must join to the
-attribute value IN EFFECT at the fact's own timestamp (a point-in-time
-join — the leakage-free feature lookup).
+The warehouse problem a latest-row-per-key MERGE does NOT solve: it
+keeps only the latest row per key (Type 1 — history destroyed); an ML
+feature store or audit-grade dimension needs every historical value
+with its validity interval, and facts must join to the attribute value
+IN EFFECT at the fact's own timestamp (a point-in-time join — the
+leakage-free feature lookup).
 
 Representation: one row per (key, value) episode —
     (key, attrs..., valid_from, valid_to)   valid_to NULL = current row,
@@ -25,7 +25,7 @@ All three operators are single-shuffle window/join shapes:
 
 Reference parity: the reference has no dimension management; this
 extends the engine's table-maintenance tier (SURVEY §2 north-star,
-beside upsert/layout/diff).
+beside layout/diff).
 """
 
 from __future__ import annotations
@@ -139,7 +139,7 @@ def incremental_scd2_ingest(
     first batch bootstraps via scd2_from_changes, later batches fold via
     scd2_merge (affected-key state only crosses the shuffle). The store
     rewrite goes through a staging hop (Spark cannot overwrite a path it
-    is lazily reading from — same pattern as operators/upsert.py).
+    is lazily reading from).
     At-least-once caveat: a replayed batch whose values already extend
     the open episode is a no-op (scd2_merge collapses repeats), but a
     replayed batch with intermediate values would re-derive the same

@@ -53,8 +53,8 @@ def supplier_revenue_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level CDC between two snapshots: each supplier's 1996 vs 1997
     revenue classified inserted/deleted/changed/unchanged — ONE full-outer
     hash join on the key over two co-keyed aggregates, null-safe decimal
-    comparison in codegen. The audit a versioned-upsert pipeline
-    (operators/upsert.py) runs between commits."""
+    comparison in codegen. The audit a keyed-MERGE pipeline runs between
+    commits."""
     from etl_poc_spark.operators.diff import table_diff
 
     d = table_diff(

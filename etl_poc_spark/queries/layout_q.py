@@ -73,9 +73,8 @@ def fragmentation_report_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a streaming-ingest tail), the rest as 4000-row files (healthy batch
     layout). Per partition: file count, rows sitting in files under the
     2000-row target, and the file count a compaction would leave — the
-    frame a maintenance scheduler filters to decide WHEN compact_files /
-    compact_versioned runs, instead of re-listing directories
-    imperatively.
+    frame a maintenance scheduler filters to decide WHEN compact_files
+    runs, instead of re-listing directories imperatively.
 
     Oracle-checkable because the layout is a pure function of row
     counts: one writer task per group + maxRecordsPerFile=R gives each

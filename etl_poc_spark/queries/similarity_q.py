@@ -35,12 +35,6 @@ def _model_key(sf_dir: str) -> tuple:
     except OSError:
         return (sf_dir,)
 
-# DuckDB fragment: exact decimal dot product between two list<float> columns
-# expanded positionally. {a}/{b} are column refs.
-_DOT_SQL = (
-    "CAST(SUM(CAST(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) AS DECIMAL(25,15))) AS DOUBLE)"
-)
-
 
 @query(
     "embedding_topk",

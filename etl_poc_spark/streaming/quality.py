@@ -6,8 +6,8 @@ publish time.
 
 Semantics: each rule is evaluated over THAT BATCH's rows (row-local
 rules and uniqueness are per-batch scope; cross-batch uniqueness is the
-versioned-upsert/key-store problem, not a screen). Row-local violation
-counts are additive across batches, so the log's per-rule sums equal the
+key-store problem, not a screen). Row-local violation counts are
+additive across batches, so the log's per-rule sums equal the
 batch-operator counts over the union — the equivalence the test pins.
 
 Idempotency: the log is written with deltastore.write_batch_slot, so a

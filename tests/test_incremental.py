@@ -186,86 +186,6 @@ def test_streaming_kmv_matches_sequential_batches(spark, tmp_path):
     assert got == ref and len(got) == 32
 
 
-def test_incremental_join_view_equals_full_rebuild(spark, tmp_path):
-    """Delta-rule join-view maintenance: after interleaved left/right
-    insert batches, the maintained view equals a from-scratch join of the
-    accumulated bases — every dL x R_old, L_old x dR, and dL x dR term
-    counted exactly once."""
-    from etl_poc_spark.operators.ivm import (
-        incremental_join_view_ingest,
-        read_join_view,
-    )
-
-    store = str(tmp_path / "jv")
-    mk_l = lambda rows: spark.createDataFrame(rows, "k long, l string")  # noqa: E731
-    mk_r = lambda rows: spark.createDataFrame(rows, "k long, r string")  # noqa: E731
-
-    # batch 1: left only (view stays empty — no right side yet)
-    incremental_join_view_ingest(spark, store, ["k"], left_delta=mk_l([(1, "l1"), (2, "l2")]))
-    # batch 2: right only -> L_old x dR
-    incremental_join_view_ingest(spark, store, ["k"], right_delta=mk_r([(1, "r1"), (3, "r3")]))
-    # batch 3: both sides at once -> all three delta terms live
-    incremental_join_view_ingest(
-        spark, store, ["k"],
-        left_delta=mk_l([(3, "l3"), (1, "l1b")]),
-        right_delta=mk_r([(2, "r2"), (1, "r1b")]),
-    )
-    got = sorted(
-        (r["k"], r["l"], r["r"]) for r in read_join_view(spark, store).collect()
-    )
-    left_all = mk_l([(1, "l1"), (2, "l2"), (3, "l3"), (1, "l1b")])
-    right_all = mk_r([(1, "r1"), (3, "r3"), (2, "r2"), (1, "r1b")])
-    want = sorted(
-        (r["k"], r["l"], r["r"]) for r in left_all.join(right_all, ["k"]).collect()
-    )
-    assert got == want and len(got) == 6
-
-
-def test_incremental_join_view_random_interleavings(spark, tmp_path):
-    """Seeded-random ingest schedules (left-only, right-only, both, empty
-    sides) fold to exactly the full-rebuild join — the delta rule holds
-    under any interleaving, not just the scripted three-batch case."""
-    import random
-
-    from etl_poc_spark.operators.ivm import (
-        incremental_join_view_ingest,
-        read_join_view,
-    )
-
-    rng = random.Random(42)
-    for trial in range(3):
-        store = str(tmp_path / f"jv{trial}")
-        all_l, all_r = [], []
-        next_id = 0
-        for _ in range(rng.randint(2, 5)):
-            nl, nr = rng.randint(0, 3), rng.randint(0, 3)
-            lb = [(rng.randint(1, 4), f"l{next_id + i}") for i in range(nl)]
-            rb = [(rng.randint(1, 4), f"r{next_id + i}") for i in range(nr)]
-            next_id += nl + nr
-            all_l += lb
-            all_r += rb
-            incremental_join_view_ingest(
-                spark, store, ["k"],
-                left_delta=(
-                    spark.createDataFrame(lb, "k long, l string") if lb else None
-                ),
-                right_delta=(
-                    spark.createDataFrame(rb, "k long, r string") if rb else None
-                ),
-            )
-        if not all_l or not all_r:
-            continue  # no view rows possible; nothing to compare
-        got = sorted(
-            (r["k"], r["l"], r["r"]) for r in read_join_view(spark, store).collect()
-        )
-        la = spark.createDataFrame(all_l, "k long, l string")
-        ra = spark.createDataFrame(all_r, "k long, r string")
-        want = sorted(
-            (r["k"], r["l"], r["r"]) for r in la.join(ra, ["k"]).collect()
-        )
-        assert got == want, f"trial {trial}: {len(got)} vs {len(want)} rows"
-
-
 @pytest.mark.slow
 def test_near_dup_ingest_batch_id_replay_is_idempotent(spark, tmp_path):
     """A replayed batch_id-keyed near-dup ingest (the streaming seam) must
@@ -319,193 +239,6 @@ def test_float_cosine_zero_norm_guard(spark):
     assert all(not math.isnan(v) and not math.isinf(v) for v in got.values())
 
 
-@pytest.mark.slow
-def test_versioned_ivm_equals_rebuild_with_deletes_and_updates(spark, tmp_path):
-    """IVM over VERSIONED bases: after every maintenance run — covering
-    inserts, updates, base-key deletion (right-to-be-forgotten), and a
-    run where BOTH sides changed — the maintained view equals a
-    from-scratch join of the bases' current states. Deletes on a base
-    physically retract every denormalized copy from the view."""
-    from etl_poc_spark.operators import upsert as U
-    from etl_poc_spark.operators.ivm import (
-        maintain_join_view_versioned,
-        read_join_view_versioned,
-    )
-
-    ldir = str(tmp_path / "orders")
-    rdir = str(tmp_path / "dim")
-    vdir = str(tmp_path / "view")
-
-    def upsert_l(rows, seq):
-        U.upsert_versioned(
-            spark,
-            spark.createDataFrame(rows, "oid long, k long, day string, lv string")
-            .withColumn("seq", F.lit(seq)),
-            ldir, ["oid"], "seq", "day",
-        )
-
-    def upsert_r(rows, seq):
-        U.upsert_versioned(
-            spark,
-            spark.createDataFrame(rows, "k long, rday string, rv string")
-            .withColumn("rseq", F.lit(seq)),
-            rdir, ["k"], "rseq", "rday",
-        )
-
-    def maintain():
-        return maintain_join_view_versioned(
-            spark, ldir, rdir, vdir,
-            on=["k"], left_key=["oid"], right_key=["k"], partition_col="day",
-        )
-
-    def check():
-        cols = ["oid", "k", "day", "lv", "rday", "rv"]
-        want = sorted(
-            map(
-                tuple,
-                U.read_versioned(spark, ldir)
-                .join(U.read_versioned(spark, rdir), "k")
-                .select(*cols)
-                .collect(),
-            )
-        )
-        got = sorted(
-            map(tuple, read_join_view_versioned(spark, vdir).select(*cols).collect())
-        )
-        assert got == want
-
-    upsert_l([(1, 10, "d1", "a"), (2, 10, "d1", "b"), (3, 20, "d2", "c")], 1)
-    upsert_r([(10, "r1", "x"), (20, "r1", "y")], 1)
-    maintain()
-    check()
-
-    # left-only batch: one update, one insert
-    upsert_l([(1, 10, "d1", "a2"), (4, 20, "d2", "d")], 2)
-    maintain()
-    check()
-
-    # right-to-be-forgotten on the LEFT base: key 2 erased; the view copy
-    # must go too
-    U.delete_versioned(
-        spark, spark.createDataFrame([(2,)], "oid long"), ldir, ["oid"], "day"
-    )
-    maintain()
-    check()
-    assert not [
-        r for r in read_join_view_versioned(spark, vdir).collect() if r["oid"] == 2
-    ]
-
-    # BOTH sides in one run: right value update + right key deletion +
-    # left insert referencing the surviving right key
-    upsert_r([(10, "r1", "x2")], 2)
-    U.delete_versioned(
-        spark, spark.createDataFrame([(20,)], "k long"), rdir, ["k"], "rday"
-    )
-    upsert_l([(5, 10, "d3", "e")], 3)
-    maintain()
-    check()
-    view = read_join_view_versioned(spark, vdir).collect()
-    assert {r["rv"] for r in view} == {"x2"}  # dim update propagated
-    assert not [r for r in view if r["k"] == 20]  # dim deletion propagated
-
-    # idempotent: maintaining with no base changes is a no-op
-    st = maintain()
-    check()
-    assert st["left_seq"] == len(U._list_commits(spark, ldir))
-
-
-@pytest.mark.slow
-def test_versioned_agg_ivm_equals_rebuild_with_deletes_and_updates(spark, tmp_path):
-    """Aggregate IVM: after every maintenance run — inserts, measure
-    updates, a GROUP-changing update (retract under the old group,
-    re-enter under the new), and deletions that empty a group — the
-    maintained SUM/COUNT view equals a from-scratch groupBy of the
-    base's current state, and emptied groups are physically absent."""
-    from etl_poc_spark.operators import upsert as U
-    from etl_poc_spark.operators.ivm import (
-        maintain_agg_view_versioned,
-        read_agg_view_versioned,
-    )
-
-    bdir = str(tmp_path / "base")
-    vdir = str(tmp_path / "aggview")
-
-    def upsert(rows, seq):
-        U.upsert_versioned(
-            spark,
-            spark.createDataFrame(rows, "oid long, day string, k long, qty long")
-            .withColumn("seq", F.lit(seq)),
-            bdir, ["oid"], "seq", "day",
-        )
-
-    def maintain():
-        return maintain_agg_view_versioned(
-            spark, bdir, vdir,
-            base_key=["oid"], group_key=["day", "k"],
-            sums=["qty"], partition_col="day",
-        )
-
-    def check():
-        want = sorted(
-            map(
-                tuple,
-                U.read_versioned(spark, bdir)
-                .groupBy("day", "k")
-                .agg(
-                    F.sum(F.coalesce("qty", F.lit(0))).alias("sum_qty"),
-                    F.count(F.lit(1)).alias("n_rows"),
-                )
-                .collect(),
-            )
-        )
-        got = sorted(
-            map(
-                tuple,
-                read_agg_view_versioned(spark, vdir)
-                .select("day", "k", "sum_qty", "n_rows")
-                .collect(),
-            )
-        )
-        assert got == want
-
-    upsert([(1, "d1", 10, 5), (2, "d1", 10, 7), (3, "d1", 20, 1), (4, "d2", 10, 2)], 1)
-    maintain()
-    check()
-
-    # insert + measure update in one batch
-    upsert([(1, "d1", 10, 6), (5, "d2", 20, 9)], 2)
-    maintain()
-    check()
-
-    # GROUP-changing update: row 2 moves from (d1,10) to (d1,20) — it
-    # retracts under the old group and re-enters under the new one.
-    # (The move stays inside partition d1: the versioned base's
-    # partition-scoped MERGE requires the partition column to be
-    # immutable per key — a partition-crossing move is delete+insert
-    # at the base level, covered by the deletion step below.)
-    upsert([(2, "d1", 20, 7)], 3)
-    maintain()
-    check()
-
-    # deletions emptying a group: (d1,20) loses both its rows
-    U.delete_versioned(
-        spark, spark.createDataFrame([(2,), (3,)], "oid long"), bdir, ["oid"], "day"
-    )
-    maintain()
-    check()
-    assert not [
-        r
-        for r in read_agg_view_versioned(spark, vdir).collect()
-        if (r["day"], r["k"]) == ("d1", 20)
-    ]
-
-    # idempotent: no base changes -> no-op, state unchanged
-    st1 = maintain()
-    st2 = maintain()
-    check()
-    assert st1["base_seq"] == st2["base_seq"] == len(U._list_commits(spark, bdir))
-
-
 def test_incremental_bigram_lm_store_folds_bit_equal(spark, tmp_path):
     """LM count store: after ingesting batches (one tagged, replayed
     twice), the folded store equals train_bigram_lm over the union of
@@ -547,75 +280,6 @@ def test_incremental_bigram_lm_store_folds_bit_equal(spark, tmp_path):
     want = sorted(map(tuple, score_bigram_logprob(probe, bi_w, uni_w, v_w).collect()))
     got = sorted(map(tuple, score_bigram_logprob(probe, bi_g, uni_g, v_g).collect()))
     assert got == want
-
-
-@pytest.mark.slow
-def test_versioned_agg_ivm_random_interleavings(spark, tmp_path):
-    """Seeded-random batch schedules against the versioned base —
-    inserts, measure updates, within-partition group moves, and key
-    deletions in random mixes — keep the maintained aggregate view
-    equal to a from-scratch groupBy after EVERY maintenance run, not
-    just the scripted four-step case."""
-    import random
-
-    from etl_poc_spark.operators import upsert as U
-    from etl_poc_spark.operators.ivm import (
-        maintain_agg_view_versioned,
-        read_agg_view_versioned,
-    )
-
-    rng = random.Random(7)
-    for trial in range(2):
-        bdir = str(tmp_path / f"b{trial}")
-        vdir = str(tmp_path / f"v{trial}")
-        live: dict[int, tuple[str, int, int]] = {}  # oid -> (day, k, qty)
-        next_oid = 0
-        seq = 0
-        for _ in range(rng.randint(3, 5)):
-            seq += 1
-            batch = []
-            for _ in range(rng.randint(1, 4)):  # inserts
-                oid = next_oid
-                next_oid += 1
-                row = (f"d{rng.randint(1, 2)}", rng.randint(10, 12), rng.randint(1, 9))
-                live[oid] = row
-                batch.append((oid, *row))
-            for oid in list(live):  # updates: new qty and/or group k
-                if rng.random() < 0.3 and not any(b[0] == oid for b in batch):
-                    day = live[oid][0]  # partition col stays immutable
-                    row = (day, rng.randint(10, 12), rng.randint(1, 9))
-                    live[oid] = row
-                    batch.append((oid, *row))
-            U.upsert_versioned(
-                spark,
-                spark.createDataFrame(
-                    batch, "oid long, day string, k long, qty long"
-                ).withColumn("seq", F.lit(seq)),
-                bdir, ["oid"], "seq", "day",
-            )
-            doomed = [oid for oid in live if rng.random() < 0.15]
-            if doomed:
-                U.delete_versioned(
-                    spark,
-                    spark.createDataFrame([(o,) for o in doomed], "oid long"),
-                    bdir, ["oid"], "day",
-                )
-                for oid in doomed:
-                    del live[oid]
-            maintain_agg_view_versioned(
-                spark, bdir, vdir,
-                base_key=["oid"], group_key=["day", "k"],
-                sums=["qty"], partition_col="day",
-            )
-            want: dict[tuple[str, int], tuple[int, int]] = {}
-            for day, k, qty in live.values():
-                s, n = want.get((day, k), (0, 0))
-                want[(day, k)] = (s + qty, n + 1)
-            got = {
-                (r["day"], r["k"]): (r["sum_qty"], r["n_rows"])
-                for r in read_agg_view_versioned(spark, vdir).collect()
-            }
-            assert got == want, f"trial {trial} seq {seq}"
 
 
 @pytest.mark.slow
@@ -761,83 +425,3 @@ def test_perplexity_monitor_crash_recovery_converges(spark, tmp_path):
     handle(b, batches[2], 2)  # replay
     assert monitor_state(b) == want_mon
     assert store_state(b) == want_store
-
-
-def test_agg_ivm_group_key_overlapping_base_key(spark, tmp_path):
-    """A group_key column that is ALSO a base_key column (here `day`,
-    composite upsert key (oid, day)) comes through the change feed
-    unprefixed — maintenance must select it as-is instead of failing on
-    a nonexistent old_day/new_day; and a measure column that is a
-    base-key column is rejected up front with a clear error."""
-    import pytest
-
-    from etl_poc_spark.operators import upsert as U
-    from etl_poc_spark.operators.ivm import (
-        maintain_agg_view_versioned,
-        read_agg_view_versioned,
-    )
-
-    bdir = str(tmp_path / "base")
-    vdir = str(tmp_path / "aggview")
-
-    def upsert(rows, seq):
-        U.upsert_versioned(
-            spark,
-            spark.createDataFrame(rows, "oid long, day string, k long, qty long")
-            .withColumn("seq", F.lit(seq)),
-            bdir, ["oid", "day"], "seq", "day",
-        )
-
-    def maintain():
-        return maintain_agg_view_versioned(
-            spark, bdir, vdir,
-            base_key=["oid", "day"], group_key=["day", "k"],
-            sums=["qty"], partition_col="day",
-        )
-
-    def check():
-        want = sorted(
-            map(
-                tuple,
-                U.read_versioned(spark, bdir)
-                .groupBy("day", "k")
-                .agg(
-                    F.sum(F.coalesce("qty", F.lit(0))).alias("sum_qty"),
-                    F.count(F.lit(1)).alias("n_rows"),
-                )
-                .collect(),
-            )
-        )
-        got = sorted(
-            map(
-                tuple,
-                read_agg_view_versioned(spark, vdir)
-                .select("day", "k", "sum_qty", "n_rows")
-                .collect(),
-            )
-        )
-        assert got == want
-
-    upsert([(1, "d1", 10, 5), (2, "d1", 10, 7), (3, "d2", 20, 1)], 1)
-    maintain()
-    check()
-
-    # incremental run over the overlapping key: insert, measure update,
-    # group-changing update (k moves), and a deletion emptying a group
-    upsert([(1, "d1", 20, 6), (4, "d2", 20, 9)], 2)
-    maintain()
-    check()
-    U.delete_versioned(
-        spark,
-        spark.createDataFrame([(3, "d2")], "oid long, day string"),
-        bdir, ["oid", "day"], "day",
-    )
-    maintain()
-    check()
-
-    with pytest.raises(ValueError, match="base-key columns"):
-        maintain_agg_view_versioned(
-            spark, bdir, str(tmp_path / "v2"),
-            base_key=["oid", "day"], group_key=["day"],
-            sums=["oid"], partition_col="day",
-        )

@@ -49,10 +49,10 @@ def test_llm_map_cost_accumulators(spark):
 
 
 def test_sql_registered_udfs_match_column_exprs(spark, sf_dir):
-    from etl_poc_spark.io import register_views
+    from etl_poc_spark.io import load_table
 
     register_sql_functions(spark)
-    register_views(spark, sf_dir, ("documents",))
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     sql_rows = spark.sql(
         "SELECT doc_id, engine_slugify(substr(text, 1, 30)) AS slug, engine_word_count(text) AS wc "
         "FROM documents ORDER BY doc_id LIMIT 50"

@@ -869,15 +869,11 @@ def test_triangle_count_closed_forms(spark):
 
 
 def test_bloom_prefilter_join_exactness(spark, sf_dir):
-    """The safety contract: zero false negatives (every build key passes
-    its own filter), and the pre-filtered join returns EXACTLY the plain
-    semi-join result — the bloom only subtracts certain non-matches."""
+    """The safety contract a bloom pre-filtered join rests on: zero false
+    negatives (every build key passes its own filter), so the filter
+    only subtracts certain non-matches before the real join."""
     from etl_poc_spark.io import load_table
-    from etl_poc_spark.operators.bloom import (
-        bloom_build,
-        bloom_contains,
-        bloom_prefilter_join,
-    )
+    from etl_poc_spark.operators.bloom import bloom_build, bloom_contains
 
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
@@ -885,15 +881,6 @@ def test_bloom_prefilter_join_exactness(spark, sf_dir):
     words = bloom_build(build, "c_custkey", m=1024, k=3)
     # no false negatives
     assert build.filter(~bloom_contains(F.col("c_custkey"), words, 1024, 3)).count() == 0
-    # exact equivalence with the plain semi join
-    got = bloom_prefilter_join(o, build, on="o_custkey", small_key="c_custkey", m=1024, k=3)
-    want = o.join(
-        build.withColumnRenamed("c_custkey", "o_custkey").distinct(),
-        "o_custkey",
-        "left_semi",
-    )
-    assert got.count() == want.count()
-    assert got.select("o_orderkey").exceptAll(want.select("o_orderkey")).count() == 0
     # the filter actually filters: survivors are far fewer than the scan
     n_pass = o.filter(bloom_contains(F.col("o_custkey"), words, 1024, 3)).count()
     assert n_pass < o.count()
@@ -1178,13 +1165,12 @@ def test_blocked_fuzzy_pairs_semantics_and_block_cap(spark):
 
 def test_target_encode_is_leakage_free(spark):
     """Out-of-fold encoding: each cell's value equals the brute-force
-    mean over the category's OTHER folds; rows attached via
-    target_encode never see their own fold's contribution; smoothing
-    shrinks toward the global mean; a single-fold category encodes NULL
+    mean over the category's OTHER folds; smoothing shrinks toward the
+    global mean; a single-fold category encodes NULL
     unsmoothed."""
     from collections import defaultdict
 
-    from etl_poc_spark.operators.encoding import target_encode, target_encode_cells
+    from etl_poc_spark.operators.encoding import target_encode_cells
     from etl_poc_spark.operators.curation import hash_bucket
 
     rows = [(i, ["a", "b", "c"][i % 3], float(i)) for i in range(60)]
@@ -1211,13 +1197,6 @@ def test_target_encode_is_leakage_free(spark):
             assert r["encoded"] is None  # own-fold-only category: honest NULL
         else:
             assert abs(r["encoded"] - comp_s / comp_n) < 1e-9, r
-
-    # row attach: every row gets the encoding of (its category, its fold)
-    attached = target_encode(df, "cat", "y", F.col("id"), n_folds=4).collect()
-    assert len(attached) == len(rows)
-    cell_map = {(r["category"], r["fold"]): r["encoded"] for r in cells}
-    for r in attached:
-        assert r["encoded"] == cell_map[(r["cat"], folds[r["id"]])]
 
     # smoothing: the lonely category pulls to the global mean
     sm = {

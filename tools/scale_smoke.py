@@ -529,86 +529,6 @@ def span_hot_hash_measure(
     return out
 
 
-def commit_contention_measure(
-    spark, n_writers: int = 32, histories: tuple[int, ...] = (100, 300, 1000)
-) -> dict:
-    """Multi-writer commit throughput for the versioned-table protocol
-    (VERDICT r12 ask #7): `n_writers` disjoint barrier-started writers
-    race _finalize_commit against tables pre-seeded with C finalized
-    commits, C = 100/300/1000 (the history axis — the claim loop's
-    listStatus cost is what grows with table age; the parquet data write
-    scales with batch size, not contention, so it is excluded). Records
-    per-writer claim latency p50/p99/max, attempts used (run with 64
-    headroom so the observed max is a MEASUREMENT against the default
-    max_attempts=16 bound), and aggregate commits/sec. Every trial also
-    asserts no manifest was lost — the r12 double-win regression check
-    at throughput scale."""
-    import json as _j
-    import tempfile
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    import etl_poc_spark.operators.upsert as U
-
-    import inspect
-
-    import etl_poc_spark.operators.upsert as _u
-
-    default_bound = inspect.signature(_u._finalize_commit).parameters[
-        "max_attempts"
-    ].default
-    out: dict = {
-        "n_writers": n_writers,
-        "default_max_attempts": default_bound,
-        "histories": {},
-    }
-    for C in histories:
-        target = tempfile.mkdtemp(prefix=f"commit-contention-{C}-")
-        cdir = os.path.join(target, "_commits")
-        os.makedirs(cdir, exist_ok=True)
-        for s in range(1, C + 1):
-            with open(os.path.join(cdir, f"{s:08d}.json"), "w") as fh:
-                fh.write(_j.dumps(
-                    {"commit_id": f"seed{s}", "partitions": [f"seed{s}"]}
-                ))
-        barrier = threading.Barrier(n_writers)
-
-        def writer(i, target=target, barrier=barrier, C=C):
-            barrier.wait()
-            t0 = time.perf_counter()
-            attempts = U._finalize_commit(
-                spark, target, f"w{i}", [f"w{i}"],
-                base_count=C, max_attempts=64,
-            )
-            return time.perf_counter() - t0, attempts
-
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=n_writers) as ex:
-            res = list(ex.map(writer, range(n_writers)))
-        wall = time.perf_counter() - t0
-        names = [
-            f for f in os.listdir(cdir)
-            if f.endswith(".json") and not f.startswith(".")
-        ]
-        assert len(names) == C + n_writers, (
-            f"manifest lost at C={C}: {len(names)} != {C + n_writers}"
-        )
-        lats = sorted(r[0] for r in res)
-        atts = [r[1] for r in res]
-        out["histories"][str(C)] = {
-            "pre_commits": C,
-            "wall_s": round(wall, 2),
-            "commits_per_sec": round(n_writers / wall, 1),
-            "claim_p50_s": round(lats[len(lats) // 2], 3),
-            "claim_p99_s": round(lats[min(len(lats) - 1, int(len(lats) * 0.99))], 3),
-            "claim_max_s": round(lats[-1], 3),
-            "attempts_mean": round(sum(atts) / len(atts), 2),
-            "attempts_max": max(atts),
-        }
-        print(_j.dumps({f"C={C}": out["histories"][str(C)]}), flush=True)
-    return out
-
-
 def _jvm_peak_rss_mb() -> int | None:
     """Peak RSS (VmHWM) of the local-mode JVM — the number that actually
     bounds whether a stage fits, since executors live inside it. Scans
@@ -662,13 +582,6 @@ def main() -> int:
         "wall + max-task + spill for span_coverage vs baseline",
     )
     ap.add_argument(
-        "--commit-contention",
-        action="store_true",
-        help="multi-writer versioned-commit throughput: 32 disjoint "
-        "barrier-started writers vs 100/300/1000-commit histories; "
-        "p50/p99 claim latency + attempts vs the max_attempts bound",
-    )
-    ap.add_argument(
         "--tables",
         default=None,
         help="comma-separated subset of tables to build (default: all); "
@@ -682,11 +595,6 @@ def main() -> int:
     from etl_poc_spark.session import get_spark
 
     registry.load_all()
-    if args.commit_contention:
-        spark = get_spark("scale_smoke")
-        report = commit_contention_measure(spark)
-        print(json.dumps({"commit_contention": report}))
-        return 0
     if args.asof_whale:
         spark = get_spark(
             "scale_smoke", extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4049"}
