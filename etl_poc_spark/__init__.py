@@ -11,7 +11,6 @@ Layout:
   llm/          llm_map / llm_reduce machinery with a deterministic stub provider
   plans/        YAML pipeline front-end (datasets/operations/steps -> DataFrame)
   sinks/        JSON / markdown-dir / error-quarantine sinks
-  streaming/    Structured Streaming variants of the event analytics
   multimodal/   binary-column (image/audio) plumbing with stubbed decoders
 """
 

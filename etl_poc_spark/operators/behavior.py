@@ -60,8 +60,7 @@ def transition_matrix(
     probability of each state bigram. One shuffle on the entity for the
     lag window, then a states²-cell aggregate; the probability is a
     single int/int double division. The behavioral fingerprint a
-    product-analytics pipeline monitors for drift (streaming twin:
-    streaming/stateful.py::stateful_transitions)."""
+    product-analytics pipeline monitors for drift."""
     w = Window.partitionBy(entity_col).orderBy(ts_col, tiebreak_col)
     seq = events.select(
         F.lag(state_col).over(w).alias("from_type"),

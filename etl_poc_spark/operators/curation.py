@@ -724,7 +724,7 @@ def incremental_doremi_ingest(
     *,
     domain_col: str = "source",
     excess_col: str = "excess",
-    batch_tag: str | None = None,
+    batch_tag: str,
 ) -> None:
     """Fold a batch of per-example excess losses into a DoReMi stats
     store: an append-only delta log of per-domain (n, s) partials —
@@ -732,7 +732,7 @@ def incremental_doremi_ingest(
     store equals the one-shot aggregation over the union of every batch
     in any slicing (exact BIGINTs; equivalence pytest).
 
-    Idempotency/replay: a stable `batch_tag` slots the delta as
+    Idempotency/replay: `batch_tag` slots the delta as
     tag=<tag>, so an at-least-once replay replaces its own slot. Slot,
     replay and concurrency contract: operators/deltastore.py."""
     deltas = (
@@ -1152,7 +1152,7 @@ def incremental_badwords_ingest(
     badwords: tuple[str, ...] | list[str] = C4_BADWORDS_PLACEHOLDER,
     domain_col: str = "source",
     text_col: str = "text",
-    batch_tag: str | None = None,
+    batch_tag: str,
 ) -> None:
     """Fold a batch of documents into a badwords-monitoring stats store:
     an append-only delta log of per-domain (n_docs, n_flagged, n_hits)
@@ -1162,7 +1162,7 @@ def incremental_badwords_ingest(
     the content-safety dashboard a continuous web-crawl ingest keeps
     live: which sources are trending dirty, before the filter drops them.
 
-    Idempotency/replay: a stable `batch_tag` slots the delta as
+    Idempotency/replay: `batch_tag` slots the delta as
     tag=<tag>. Slot, replay and concurrency contract:
     operators/deltastore.py."""
     flagged = c4_badwords_flags(batch, badwords, text_col=text_col)

@@ -1,20 +1,28 @@
 """Delta-log stores — the one slot, replay, concurrency and compaction
-contract behind every continuous-ingest store family: exact dedup and
-near-dup bands (operators/incremental.py), line dedup (linededup.py),
-span dedup (spandedup.py), bigram LM (ngram_lm.py), DSIR (dsir.py),
-and DoReMi and badwords (curation.py).
-Each family keeps only its delta computation and a `DeltaStoreSpec`
-constant — key columns plus an associative `agg` map — and goes through
-the spec for everything below.
+contract behind every continuous-ingest store family. There are five:
+exact dedup (operators/incremental.py), bigram LM (ngram_lm.py), DSIR
+(dsir.py), and DoReMi and badwords (curation.py). Each family keeps
+only its delta computation and a `DeltaStoreSpec` constant — key
+columns plus an associative `agg` map — and goes through the spec for
+everything below.
 
 Slots. Each ingested batch writes ONE slot of pre-aggregated delta rows:
-a `tag=<batch_tag>` directory (`tag_slot`; a tag outside [A-Za-z0-9._-]
-is refused, so distinct tags never share a slot), a `batch_id=<n>`
-directory (`batch_slot`), or — only when no slot is named — loose
-part-files at the store root. `DeltaStoreSpec.append` overwrites the
-slot directory. Reads fold the whole log with the spec's associative
-aggregate (exact-integer SUM/MIN/MAX, or DISTINCT for a set store), so
-the state does not depend on how history was sliced into batches.
+the `tag=<batch_tag>` directory `tag_slot` names (a tag outside
+[A-Za-z0-9._-] is refused, so distinct tags never share a slot). That
+is the only write mode: every ingest takes a tag, and
+`DeltaStoreSpec.append` overwrites the slot directory. The tags the
+handles pass are `b<n>`, `batch-<n>` and `<role>-b<n>` (n = the
+micro-batch id), plus `reference` for a seeded target model. Reads fold
+the whole log with the spec's associative aggregate (exact-integer
+SUM/MIN/MAX, or DISTINCT for a set store), so the state does not depend
+on how history was sliced into batches.
+
+Legacy stores. Earlier versions could also append slot-less part-files
+at the store root. Such stores still read (the files fold like any
+slot) and still compact; but a replay that excludes its slot from one
+raises `DeltaStoreModeError`, because no slot name can drop a loose
+file. `compact_delta_store(keep_slots=0)` folds the loose files away,
+after which tagged ingests proceed.
 
 Replay. foreachBatch delivery is at-least-once: a batch interrupted
 before its checkpoint commit runs again with the same id. The store slot
@@ -26,11 +34,11 @@ slots — effectively-once. For a store of two logs (bigram LM, DSIR
 roles) the same exclusion heals a crash between the two writes. Two
 cases raise instead of double-counting: excluding a slot compaction
 already folded (`CompactedSlotReplayError`) and excluding a slot from a
-store that holds loose files (`DeltaStoreModeError` — one mode per
-store). An ingest whose returned frame is planned against the store
-materializes it (`localCheckpoint`) BEFORE its append: Spark lists
-parquet files at action time, and a later action would otherwise count
-the batch's own slot as history.
+legacy store that holds loose files (`DeltaStoreModeError`). An ingest
+whose returned frame is planned against the store materializes it
+(`localCheckpoint`) BEFORE its append: Spark lists parquet files at
+action time, and a later action would otherwise count the batch's own
+slot as history.
 
 First ingest. `DeltaStoreSpec.read` returns None when the store
 directory does not exist, decided from the root listing it takes
@@ -61,7 +69,7 @@ name. Layout after n compactions::
     store_dir/
       _compactions/0000000n.json   <- newest manifest wins
       _compacted/0000000n/         <- consolidated rows (hidden dir)
-      tag=.../ | batch_id=.../     <- live tail slots (not yet folded)
+      tag=.../                     <- live tail slots (not yet folded)
 
 Manifest: {"gen": n, "folded": [every slot name ever folded],
 "rows_dir": "_compacted/0000000n"}; `folded` is CUMULATIVE, so readers
@@ -125,11 +133,10 @@ class CompactedSlotReplayError(RuntimeError):
 
 
 class DeltaStoreModeError(RuntimeError):
-    """Slot-keyed exclusion was requested on a store that (also) holds
-    LOOSE appended files — rows that no slot name can ever exclude, so
-    the replay guarantee would silently degrade (ADVICE r15: a store
-    first written with batch_id=None, then ingested with a batch_id).
-    Pick one mode per store: always tagged/batched, or never."""
+    """Slot-keyed exclusion was requested on a legacy store that holds
+    LOOSE part-files at its root — rows that no slot name can ever
+    exclude, so the replay guarantee would silently degrade. Fold them
+    first: compact_delta_store(keep_slots=0)."""
 
 
 def _safe_tag(batch_tag: str) -> str:
@@ -147,14 +154,8 @@ def _safe_tag(batch_tag: str) -> str:
 
 def tag_slot(batch_tag: str | None) -> str | None:
     """Slot name of a tagged batch ('tag=<batch_tag>'); None stays None
-    (a loose append, or no replay exclusion)."""
+    (a read with no replay exclusion)."""
     return None if batch_tag is None else f"tag={_safe_tag(batch_tag)}"
-
-
-def batch_slot(batch_id: int | None) -> str | None:
-    """Slot name of a streaming micro-batch ('batch_id=<n>'); None stays
-    None."""
-    return None if batch_id is None else f"batch_id={int(batch_id)}"
 
 
 def _root_entries(spark: SparkSession, store_dir: str) -> list[dict] | None:
@@ -243,8 +244,7 @@ def _read_log(
             raise DeltaStoreModeError(
                 f"store {store_dir!r} holds loose appended files "
                 f"({loose[:3]}...) that slot exclusion can never drop; "
-                "replaying with a slot id against a loose-append store "
-                "silently double-counts history (ADVICE r15)"
+                "fold them first with compact_delta_store(keep_slots=0)"
             )
     drop = [
         e
@@ -269,16 +269,16 @@ def read_delta_store(
     spark: SparkSession, store_dir: str, *, exclude_slot: str | None = None
 ) -> DataFrame:
     """The store's current UNFOLDED delta rows — consolidated rows (if a
-    compaction manifest exists) plus every live slot — with `exclude_slot`
-    (a slot name like 'tag=batch-7' or 'batch_id=7') dropped: the replay
+    compaction manifest exists) plus every live `tag=` slot — with
+    `exclude_slot` (a slot name like 'tag=batch-7') dropped: the replay
     seam. Callers apply their own associative fold on top; with no
     manifest this is exactly one recursive parquet read. A missing store
     raises the engine's own PATH_NOT_FOUND AnalysisException (use
     `DeltaStoreSpec.read` where a missing store means first ingest).
 
     Raises CompactedSlotReplayError if the excluded slot was already
-    folded, and DeltaStoreModeError if slot exclusion is requested while
-    loose (slot-less) appended files exist (ADVICE r15)."""
+    folded, and DeltaStoreModeError if slot exclusion is requested on a
+    legacy store that holds loose part-files at its root."""
     df = _read_log(spark, store_dir, exclude_slot)
     return _read_parquet(spark, store_dir) if df is None else df
 
@@ -473,14 +473,10 @@ class DeltaStoreSpec:
         """The current state: (*key_cols, *agg cols), one row per key."""
         return _fold(log, list(self.key_cols), list(self.agg))
 
-    def append(self, delta: DataFrame, store_dir: str, slot: str | None) -> None:
-        """Write `delta` as slot `slot`, replacing that slot directory (a
-        replay overwrites its own delta); loose append only when slot is
-        None."""
-        if slot is None:
-            delta.write.mode("append").parquet(store_dir)
-        else:
-            delta.write.mode("overwrite").parquet(_join(store_dir, slot))
+    def append(self, delta: DataFrame, store_dir: str, slot: str) -> None:
+        """Write `delta` as slot `slot` (`tag_slot`), replacing that slot
+        directory: a replay overwrites its own delta."""
+        delta.write.mode("overwrite").parquet(_join(store_dir, slot))
 
     def compact(self, spark: SparkSession, store_dir: str, **kwargs) -> dict:
         """compact_delta_store with this spec's fold (keep_slots,
@@ -523,27 +519,6 @@ def write_batch_slot(df: DataFrame, out_dir: str, batch_id: int) -> None:
     )
 
 
-def ingest_to_sink(
-    batch_df: DataFrame, batch_id: int, *, ingest, store_dir: str, kept_dir: str,
-    **kwargs,
-) -> None:
-    """foreachBatch body of the ingest-then-sink families (near-dup, line
-    and span dedup): `ingest` (incremental_near_dup_ingest,
-    incremental_line_dedup_ingest or incremental_span_removal_ingest)
-    runs against the shared store with the micro-batch id as its slot,
-    and its kept rows replace the batch's `batch_id=<n>` partition of
-    `kept_dir`. Store and sink are both keyed by the batch id, so an
-    at-least-once replay is effectively-once:
-
-        foreach_batch_writer(stream, ckpt, ingest_to_sink,
-                             ingest=incremental_near_dup_ingest,
-                             store_dir=store, kept_dir=kept)"""
-    kept = ingest(
-        batch_df.sparkSession, batch_df, store_dir, batch_id=batch_id, **kwargs
-    )
-    write_batch_slot(kept, kept_dir, batch_id)
-
-
 def foreach_batch_writer(stream: DataFrame, checkpoint_dir: str, handle, **kwargs):
     """A DataStreamWriter that runs `handle(batch_df, batch_id, **kwargs)`
     per micro-batch with its offsets checkpointed at `checkpoint_dir` —
@@ -551,9 +526,7 @@ def foreach_batch_writer(stream: DataFrame, checkpoint_dir: str, handle, **kwarg
     store family needs: the ingest decision takes the batch as a finite
     frame (store joins, self-pairs), which pure streaming operators
     cannot express. This is the package's only foreachBatch call; a
-    handle is a family's `*_handle_batch`, `ingest_to_sink` with
-    `ingest=`, or a lambda over a batch-mode ingest that takes
-    (spark, batch_df, ...)."""
+    handle is a family's `*_handle_batch`."""
     return stream.writeStream.foreachBatch(
         lambda batch_df, batch_id: handle(batch_df, batch_id, **kwargs)
     ).option("checkpointLocation", checkpoint_dir)

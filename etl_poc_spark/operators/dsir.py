@@ -352,15 +352,15 @@ def incremental_dsir_ingest(
     role: str = "raw",
     text_col: str = "text",
     n_buckets: int = DEFAULT_BUCKETS,
-    batch_tag: str | None = None,
+    batch_tag: str,
 ) -> None:
     """Fold `batch` into the DSIR model store at `store_dir` under
     `role` ('raw' or 'target' — the two sides of the likelihood ratio;
     each is an independent append-only delta log).
 
-    Idempotency: a stable `batch_tag` slots the delta as tag=<tag>, so
+    Idempotency: `batch_tag` slots the delta as tag=<tag>, so
     an at-least-once replay replaces its own delta instead of
-    double-counting (the streaming twin passes the micro-batch id).
+    double-counting (dsir_handle_batch passes the micro-batch id).
     After any sequence of ingests, read_dsir_store equals the one-shot
     histogram over the union of every batch — exact integers, bit-equal
     under any batch slicing. Slot, replay and concurrency contract:

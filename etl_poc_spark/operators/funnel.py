@@ -123,13 +123,11 @@ def compile_funnel_steps(
 ) -> list[tuple[str, Column]]:
     """Compile the engine-portable restricted step form — {"name",
     "event_type", optional "min_value"/"max_value"} — into batch Column
-    predicates. The same spec list drives streaming/stateful.py::
-    stateful_funnel, so ONE funnel config runs on both engines with
-    identical semantics (closing r7 VERDICT's batch/streaming predicate
-    gap). The spec IS the whitelist — no eval, the same discipline as
-    llm/ops.py::eval_validator: only type equality and inclusive value
+    predicates. The spec IS the whitelist — no eval, the same discipline
+    as llm/ops.py::eval_validator: only type equality and inclusive value
     bounds are expressible, which is exactly what a per-row state fold
-    can evaluate.
+    can evaluate, so a portable config stays runnable by an incremental
+    engine.
 
     Arbitrary SQL `condition` steps remain batch-only by construction;
     the YAML layer rejects mixing the two forms in one funnel."""

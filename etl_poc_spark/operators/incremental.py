@@ -1,29 +1,22 @@
-"""Incremental near-dup ingestion: dedup a NEW batch against a persisted
-LSH band store, then fold the survivors into the store.
+"""Incremental exact dedup: dedup a NEW batch against a persisted
+fingerprint store, then fold the batch's per-fingerprint delta into it.
 
 The production shape for continuous corpus growth (the reference ingests
 arXiv batches daily — zara_hybrid_etl.py's idempotent download loop — but
 dedups only within a run; this closes that gap Spark-first):
 
-- the store holds only (band, band_val, id) rows — a few hundred bytes per
-  document regardless of body size; band/band_val are DATA columns (r16:
-  previously band was a write partition dir, which the compaction-aware
-  recursive read cannot preserve — the probe is an equi-join on the full
-  (band, band_val) key, so directory pruning never fired anyway);
-- an incoming batch NEVER joins against historical bodies: batch bands
-  semi/anti-join the store on (band, band_val), so history participates
-  as an equi-join build side of signature rows only;
-- batch-internal near-dups collapse via the existing pair search +
-  connected components (representative = min id);
-- surviving documents append their bands to the store — the loop is
-  idempotent at the band level: re-ingesting an already-stored batch drops
-  every row as a store hit.
+- the store holds only (fp, min_id, n_copies) delta rows — a few dozen
+  bytes per distinct content, regardless of body size;
+- an incoming batch NEVER joins against historical bodies: batch
+  fingerprints anti-join the store on fp, so history participates as an
+  equi-join build side of fingerprint rows only;
+- copies inside the batch collapse to one representative (min id);
+- every ingest writes ONE `tag=<batch_tag>` slot, so re-ingesting a
+  batch under its own tag replaces its delta instead of double-counting.
 
-LSH decision rule: sharing >= 1 full band is the near-dup verdict (the
-standard banding guarantee — for docs above the jaccard threshold the
-miss probability is (1 - s^r)^b). Body-level jaccard verification against
-HISTORY is intentionally not offered: it would require retaining shingle
-sets for the whole corpus, which is exactly what the band store avoids.
+The store is a DeltaStoreSpec family: slot, replay, concurrency and
+compaction contract in operators/deltastore.py. exact_dedup_handle_batch
+is the foreachBatch body the `exact_dedup` streaming op runs.
 """
 
 from __future__ import annotations
@@ -31,108 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_poc_spark.operators.dedup import (
-    connected_components,
-    lsh_band_signatures,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    shingle_docs,
-)
 from etl_poc_spark.operators.deltastore import (
     DeltaStoreSpec,
-    batch_slot,
     read_delta_store,
     tag_slot,
     write_batch_slot,
 )
 
-# (band, band_val, id) postings are facts without counts: the SET fold,
-# DISTINCT over the whole row (every reader is a semi-join, for which
-# duplicates were already invisible)
-NEAR_DUP_STORE = DeltaStoreSpec()
 # (fp, min_id, n_copies) deltas: MIN and SUM are associative
 EXACT_DEDUP_STORE = DeltaStoreSpec(("fp",), (("min_id", "min"), ("n_copies", "sum")))
-
-
-def batch_band_signatures(
-    batch: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 8,
-    rows_per_band: int = 2,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """(id, band, band_val) LSH band signatures for a document batch."""
-    sh = shingle_docs(batch, id_col, text_col)
-    sigs = minhash_signatures(sh, id_col, n_hashes=n_hashes, hash_mode=hash_mode)
-    return lsh_band_signatures(sigs, id_col, rows_per_band).select(
-        F.col(id_col), "band", F.col("band_val").cast("string").alias("band_val")
-    )
-
-
-def incremental_near_dup_ingest(
-    spark: SparkSession,
-    batch: DataFrame,
-    store_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 8,
-    rows_per_band: int = 2,
-    hash_mode: str = "xxhash64",
-    max_bucket_size: int | None = 200,
-    batch_id: int | None = None,
-) -> DataFrame:
-    """Ingest `batch` against the band store at `store_dir`; returns the
-    kept (novel, batch-deduped) rows of `batch` and appends their bands to
-    the store. See module docstring for the decision rule and scale shape.
-
-    `batch_id` (the streaming seam) slots the bands as `batch_id=<n>` and
-    excludes that slot from the history read — the replay contract of
-    operators/deltastore.py."""
-    bands = batch_band_signatures(
-        batch, id_col, text_col, n_hashes, rows_per_band, hash_mode
-    )
-    slot = batch_slot(batch_id)
-    store = NEAR_DUP_STORE.read(spark, store_dir, exclude_slot=slot)
-    if store is not None:
-        # ids sharing >= 1 full band with history are near-dups of history
-        hit_ids = (
-            bands.join(store, ["band", "band_val"], "left_semi")
-            .select(id_col)
-            .distinct()
-        )
-        batch = batch.join(hit_ids, id_col, "left_anti")
-        bands = bands.join(hit_ids, id_col, "left_anti")
-    # collapse near-dup groups WITHIN the surviving batch: keep min id
-    sh = shingle_docs(batch, id_col, text_col)
-    sigs = minhash_signatures(sh, id_col, n_hashes=n_hashes, hash_mode=hash_mode)
-    pairs = lsh_candidate_pairs(
-        sigs, id_col, rows_per_band, max_bucket_size=max_bucket_size
-    )
-    comps = connected_components(pairs)
-    drop_ids = (
-        comps.filter(F.col("id") != F.col("component"))
-        .select(F.col("id").alias(id_col))
-    )
-    # MATERIALIZE before appending to the store: the kept/kept_bands plans
-    # reference the store parquet through hit_ids, and Spark lists parquet
-    # files at ACTION time — without this, an action on the returned frame
-    # after the append would see the batch's own bands in the store and
-    # drop every row as a self-hit
-    kept = batch.join(drop_ids, id_col, "left_anti").localCheckpoint(eager=True)
-    kept_bands = bands.join(drop_ids, id_col, "left_anti").localCheckpoint(eager=True)
-    # documents too short to shingle produce no bands: they can never be
-    # caught by the store filter, so they pass through (documented; exact
-    # dedup upstream is the right guard for tiny docs)
-    NEAR_DUP_STORE.append(kept_bands, store_dir, slot)
-    return kept
-
-
-compact_near_dup_store = NEAR_DUP_STORE.compact
-
-
-# --- EXACT dedup: the incremental + streaming twins (near-dup has all
-# three above; this completes the triple for the exact-fingerprint path) ---
 
 
 def exact_fingerprints(
@@ -165,27 +65,27 @@ def incremental_exact_dedup_ingest(
     key_cols: list[str],
     id_col: str = "doc_id",
     hash_mode: str = "xxhash64",
-    batch_tag: str | None = None,
+    *,
+    batch_tag: str,
 ) -> DataFrame:
     """Dedup `batch` against the exact-fingerprint store, append the
     batch's per-fingerprint delta, and return the kept rows (one
     representative per NOVEL fingerprint, min `id_col`).
 
-    Store layout is an append-only log of (fp, min_id, n_copies) deltas —
-    the same log-structured discipline as the line-dedup segment store:
+    Store layout is an append-only log of (fp, min_id, n_copies) deltas:
     no rewrite, reads aggregate (read_exact_dedup_store), so the ingest
     shuffles only fingerprint-sized rows, never bodies. Duplicate copies
     of already-stored content still COUNT (n_copies accumulates — the
     store total equals a from-scratch exact_dedup over everything ever
     ingested) but are not returned as kept rows.
 
-    Idempotency: a stable `batch_tag` slots the delta as tag=<batch_tag>,
-    so re-ingesting the same batch replaces its own delta instead of
+    Idempotency: `batch_tag` slots the delta as tag=<batch_tag>, so
+    re-ingesting the same batch replaces its own delta instead of
     double-counting, and the history read excludes that slot (a replay
     must not see its own prior delta as history — every fp would read as
     a store hit and the replay would lose the representatives the crashed
-    attempt never flushed). The streaming twin passes the batch id as
-    the tag. Slot, replay and concurrency contract: operators/
+    attempt never flushed). exact_dedup_handle_batch passes the batch id
+    as the tag. Slot, replay and concurrency contract: operators/
     deltastore.py."""
     fps = exact_fingerprints(batch, key_cols, id_col, hash_mode)
     delta = fps.groupBy("fp").agg(
@@ -199,7 +99,7 @@ def incremental_exact_dedup_ingest(
     )
     # representatives materialize BEFORE the store append (the plan reads
     # the store through the anti-join; parquet listing happens at action
-    # time — same seam as incremental_near_dup_ingest)
+    # time, so a later action would count the batch's own slot as history)
     reps = novel.select("fp", F.col("min_id").alias("id"))
     kept_ids = fps.join(reps, ["fp", "id"], "left_semi").select(
         F.col("id").alias(id_col)

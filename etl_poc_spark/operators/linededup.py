@@ -25,11 +25,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_poc_spark.operators.deltastore import DeltaStoreSpec, batch_slot
-
-# (seg_hash, n_docs) per batch; the cumulative count is their SUM
-LINE_DEDUP_STORE = DeltaStoreSpec(("seg_hash",), (("n_docs", "sum"),))
-
 
 def segment_docs(
     df: DataFrame,
@@ -83,7 +78,7 @@ def _rebuild(seg_idx: str, seg: str) -> Column:
 
 def _rebuild_stats(segments: DataFrame, kept: DataFrame, id_col: str) -> DataFrame:
     """(id, n_segments, n_kept, n_dropped, dedup_text) from the full and the
-    surviving segment frames — shared tail of batch and incremental modes."""
+    surviving segment frames."""
     rebuilt = kept.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_kept"),
         _rebuild("seg_idx", "seg").alias("dedup_text"),
@@ -123,79 +118,6 @@ def line_dedup(
         dup.select(F.col("seg_hash").alias("__h")), "__h", "left_anti"
     )
     return _rebuild_stats(segments, kept, id_col)
-
-
-def incremental_line_dedup_ingest(
-    spark,
-    batch: DataFrame,
-    store_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    words_per_segment: int = 10,
-    min_docs: int = 2,
-    batch_id: int | None = None,
-) -> DataFrame:
-    """Segment-dedup a NEW batch against a persisted boilerplate store and
-    fold the batch's segment counts into the store.
-
-    Store shape: append-only (seg_hash, n_docs) rows — one per (batch,
-    segment-hash), a few dozen bytes per distinct segment regardless of
-    body size. A segment is boilerplate once its CUMULATIVE distinct-doc
-    count (history + this batch) reaches `min_docs`; all of its copies in
-    THIS batch drop. Semantics are forward-only by design: copies that
-    shipped in earlier batches, before the segment crossed the threshold,
-    are not retroactively rewritten — that is a compaction job over the
-    kept corpus (re-run batch `line_dedup`), not an ingest step. Within a
-    single first batch this reduces exactly to `line_dedup` (equivalence
-    is pytest-pinned).
-
-    Scale shape mirrors `incremental_near_dup_ingest`: only hashes and
-    counts shuffle or persist — historical segment BODIES are never stored
-    or joined; the per-batch count aggregation is the only wide stage, and
-    the store can be periodically compacted with a groupBy(seg_hash) sum.
-
-    Cumulative counts double-count a document that carries the same
-    segment across DIFFERENT batches (re-ingest); exact cross-batch
-    distinctness would require storing doc ids. Acceptable by design:
-    boilerplate detection needs a threshold signal, not an exact census —
-    CCNet itself thresholds on rough document frequency.
-
-    `batch_id` (the streaming seam) slots the batch's counts as
-    `batch_id=<n>` and excludes that slot from the history read, so a
-    replay produces byte-identical store state and output. Slot, replay
-    and concurrency contract: operators/deltastore.py."""
-    segments = segment_docs(batch, id_col, text_col, words_per_segment)
-    seg_h = segments.withColumn("__h", F.md5(F.col("seg")))
-    batch_counts = seg_h.groupBy("__h").agg(F.countDistinct(id_col).alias("n_docs"))
-    slot = batch_slot(batch_id)
-    store = LINE_DEDUP_STORE.read(spark, store_dir, exclude_slot=slot)
-    if store is None:
-        total = batch_counts.select("__h", F.col("n_docs").alias("total_docs"))
-    else:
-        hist = LINE_DEDUP_STORE.fold(store).select(
-            F.col("seg_hash").alias("__h"), F.col("n_docs").alias("hist_docs")
-        )
-        total = (
-            batch_counts.join(hist, "__h", "left")
-            .select(
-                "__h",
-                (F.col("n_docs") + F.coalesce(F.col("hist_docs"), F.lit(0))).alias("total_docs"),
-            )
-        )
-    dup = total.filter(F.col("total_docs") >= min_docs).select("__h")
-    kept = seg_h.join(dup, "__h", "left_anti")
-    # MATERIALIZE before the store append: the output plan reads the store
-    # parquet through `dup`, and Spark lists parquet files at ACTION time —
-    # without this, an action on the returned frame after the append would
-    # recount the batch's own rows as history
-    out = _rebuild_stats(segments, kept, id_col).localCheckpoint(eager=True)
-    LINE_DEDUP_STORE.append(
-        batch_counts.withColumnRenamed("__h", "seg_hash"), store_dir, slot
-    )
-    return out
-
-
-compact_line_dedup_store = LINE_DEDUP_STORE.compact
 
 
 from etl_poc_spark._serde import register_by_value as _rbv  # noqa: E402

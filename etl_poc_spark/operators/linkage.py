@@ -43,7 +43,7 @@ def blocked_fuzzy_pairs(
     levenshtein(name_a, name_b) <= max_distance, id_a < id_b. Blocks
     bigger than `max_block_size` are dropped (they indicate a broken
     block key, and comparing them is the quadratic case blocking exists
-    to avoid); count them via oversized_blocks()."""
+    to avoid)."""
     base = df.select(
         F.col(id_col).alias("__id"), F.col(name_col).alias("__name"), block.alias("__blk")
     ).where(F.col("__blk").isNotNull() & F.col("__name").isNotNull())
@@ -82,24 +82,4 @@ def blocked_fuzzy_pairs(
         .withColumn("distance", F.levenshtein("name_a", "name_b"))
         .where(F.col("distance") <= max_distance)
         .select("id_a", "id_b", "name_a", "name_b", "distance")
-    )
-
-
-def oversized_blocks(
-    df: DataFrame,
-    name_col: str,
-    block: Column,
-    max_block_size: int = 10_000,
-) -> DataFrame:
-    """(block, n_records) for blocks blocked_fuzzy_pairs excluded — the
-    no-silent-caps report: a nonempty result means the block key needs
-    work (or those records need a different strategy), not that they
-    were compared."""
-    return (
-        df.select(block.alias("block"), F.col(name_col).alias("__name"))
-        .where(F.col("block").isNotNull() & F.col("__name").isNotNull())
-        .groupBy("block")
-        .agg(F.count(F.lit(1)).alias("n_records"))
-        .where(F.col("n_records") > max_block_size)
-        .orderBy(F.desc("n_records"), "block")
     )

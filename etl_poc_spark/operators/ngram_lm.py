@@ -240,14 +240,14 @@ def incremental_bigram_lm_ingest(
     store_dir: str,
     *,
     text_col: str = "text",
-    batch_tag: str | None = None,
+    batch_tag: str,
 ) -> None:
     """Fold `batch` into the bigram-LM count store at `store_dir`
     (subdirs bigrams/ and tokens/, each an append-only delta log).
 
-    Idempotency: a stable `batch_tag` slots both deltas as
+    Idempotency: `batch_tag` slots both deltas as
     tag=<batch_tag>, so a replayed batch replaces its own deltas instead
-    of double-counting (the streaming twin passes the micro-batch id).
+    of double-counting (bigram_lm_handle_batch passes the micro-batch id).
     After any sequence of ingests, read_bigram_lm_store equals
     train_bigram_lm over the union of every batch ever ingested. Slot,
     replay and concurrency contract: operators/deltastore.py."""

@@ -11,13 +11,9 @@ Representation: one row per (key, value) episode —
     (key, attrs..., valid_from, valid_to)   valid_to NULL = current row,
     interval semantics [valid_from, valid_to).
 
-All three operators are single-shuffle window/join shapes:
+Both operators are single-shuffle window/join shapes:
 - scd2_from_changes: change-log -> episodes. One key-partitioned window
   (lag to drop no-op repeats, lead for valid_to).
-- scd2_merge: fold an update batch into an existing dimension —
-  episodes for affected keys recompute from (their current row + the
-  updates); untouched keys pass through. The incremental refresh
-  rewrites key-scoped state only.
 - pit_join: fact rows pick the episode whose interval covers the fact
   timestamp. Expressed as the backward as-of shape (union + one window)
   from operators/temporal.py rather than an interval theta-join, so the
@@ -69,112 +65,6 @@ def scd2_from_changes(
     )
 
 
-def scd2_merge(
-    current: DataFrame,
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    attr_cols: Sequence[str],
-    ts_col: str,
-    tiebreak_cols: Sequence[str] = (),
-    strict: bool = True,
-) -> DataFrame:
-    """Fold a change batch into an existing SCD2 dimension: keys absent
-    from the batch pass through untouched; affected keys' OPEN episode
-    joins the batch rows and the episode set for those keys is
-    recomputed (closed history rows never change). Equal to rebuilding
-    from the full concatenated change log (pytest-pinned) while only
-    shuffling affected-key state + the batch.
-
-    In-order contract: an update older than its key's open episode would
-    overlap CLOSED history (which this merge never rewrites) — with
-    `strict` (default) such late changes raise loudly (one bounded
-    1-row aggregate); strict=False documents that the caller accepts
-    the overlap and resolves it downstream (e.g. by a periodic full
-    rebuild from the retained change log)."""
-    keys = list(key_cols)
-    affected = updates.select(*keys).distinct()
-    untouched = current.join(affected, keys, "left_anti")
-    touched = current.join(affected, keys, "left_semi")
-    closed = touched.where(F.col("valid_to").isNotNull())
-    open_rows = touched.where(F.col("valid_to").isNull()).select(
-        *keys, *attr_cols, F.col("valid_from").alias(ts_col)
-    )
-    upd = updates.select(*keys, *attr_cols, F.col(ts_col))
-    if strict:
-        open_starts = open_rows.select(
-            *keys, F.col(ts_col).alias("__open_from")
-        )
-        [(n_late,)] = (
-            upd.join(open_starts, keys)
-            .where(F.col(ts_col) < F.col("__open_from"))
-            .agg(F.count(F.lit(1)))
-            .collect()
-        )
-        if n_late:
-            raise ValueError(
-                f"{n_late} update(s) are older than their key's open episode "
-                "— merging them would overlap closed history; replay in order "
-                "or rebuild from the full change log (strict=False to accept)"
-            )
-    merged_log = open_rows.unionByName(upd)
-    recomputed = scd2_from_changes(
-        merged_log, keys, attr_cols, ts_col, tiebreak_cols
-    )
-    # a recomputed episode that starts before the old open row began is
-    # impossible (the open row is the earliest row in merged_log for its
-    # key), so closed + recomputed partition the timeline cleanly
-    return untouched.unionByName(closed.unionByName(recomputed))
-
-
-def incremental_scd2_ingest(
-    spark,
-    batch_df: DataFrame,
-    store_dir: str,
-    key_cols: Sequence[str],
-    attr_cols: Sequence[str],
-    ts_col: str,
-    tiebreak_cols: Sequence[str] = (),
-) -> None:
-    """Fold one change batch into a parquet-backed SCD2 dimension store:
-    first batch bootstraps via scd2_from_changes, later batches fold via
-    scd2_merge (affected-key state only crosses the shuffle). The store
-    rewrite goes through a staging hop (Spark cannot overwrite a path it
-    is lazily reading from).
-    At-least-once caveat: a replayed batch whose values already extend
-    the open episode is a no-op (scd2_merge collapses repeats), but a
-    replayed batch with intermediate values would re-derive the same
-    episodes — idempotent as long as batch boundaries are stable, which
-    a checkpointed stream guarantees. Streaming: deltastore.
-    foreach_batch_writer(stream, ckpt, lambda b, _: incremental_scd2_ingest(
-    b.sparkSession, b, store_dir, ...))."""
-    import uuid as _uuid
-
-    from pyspark.errors import AnalysisException
-
-    try:
-        current = spark.read.parquet(store_dir)
-        have = True
-    except AnalysisException:
-        have = False
-    if have:
-        merged = scd2_merge(
-            current, batch_df, key_cols, attr_cols, ts_col, tiebreak_cols
-        )
-    else:
-        merged = scd2_from_changes(
-            batch_df, key_cols, attr_cols, ts_col, tiebreak_cols
-        )
-    staging = f"{store_dir}__staging_{_uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(store_dir)
-    try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(staging)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
-    except Exception:  # noqa: BLE001 — cleanup must never fail the ingest
-        pass
-
-
 def pit_join(
     facts: DataFrame,
     history: DataFrame,
@@ -191,7 +81,7 @@ def pit_join(
     episode's attrs forward onto the facts that follow it; the
     valid_to check is implied because scd2 histories are GAPLESS (each
     episode's valid_to is exactly the next's valid_from — the
-    scd2_from_changes/scd2_merge invariant), so a newer episode always
+    scd2_from_changes invariant), so a newer episode always
     overwrites the carry. One shuffle, no interval theta-join."""
     keys = list(key_cols)
     h = history.select(

@@ -97,18 +97,12 @@ def kmv_bottom_k(df: DataFrame, key_col: str, k: int = 64) -> DataFrame:
     single division is deterministic.
     """
     h = df.select(kmv_hash(F.col(key_col)).alias("h")).distinct()
-    return kmv_estimate(h.orderBy("h").limit(k), k)
-
-
-def kmv_estimate(bottom: DataFrame, k: int) -> DataFrame:
-    """Fold a bottom-k hash frame (column `h`, <= k rows) into the
-    single-row KMV estimate. Split out so the incremental/streaming store
-    path reuses the exact estimator arithmetic of the batch query."""
     est = (
         F.lit(float(k - 1)) * F.lit(_KMV_HASH_MAX) / F.col("kth_min_hash").cast("double")
     )
     return (
-        bottom.agg(
+        h.orderBy("h").limit(k)
+        .agg(
             F.count(F.lit(1)).alias("n_in_sketch"),
             F.max("h").alias("kth_min_hash"),
         )
@@ -121,42 +115,6 @@ def kmv_estimate(bottom: DataFrame, k: int) -> DataFrame:
             .alias("est_distinct"),
         )
     )
-
-
-def incremental_kmv_ingest(
-    spark, batch: DataFrame, key_col: str, store_dir: str, k: int = 64
-) -> DataFrame:
-    """Fold a new batch into a persisted KMV store and return the updated
-    single-row estimate.
-
-    The store holds the bottom-k hash set (<= k longs — KBs regardless of
-    corpus size). Merge rule is min-k of the UNION of old and new hash
-    sets, which is a set operation: re-ingesting an already-folded batch
-    is a no-op, so replayed micro-batches (foreachBatch is at-least-once)
-    leave the store byte-identical — exactly-once state for free, with no
-    batch-id bookkeeping (contrast linededup's counter store, which needs
-    batch_id partition overwrite because counters are not idempotent).
-    Streaming: deltastore.foreach_batch_writer(stream, ckpt, lambda b, _:
-    incremental_kmv_ingest(b.sparkSession, b, key_col, store_dir, k)).
-
-    The k-row collect to refresh the store is bounded by construction
-    (same class as the centroid-model fetches in operators/similarity.py);
-    historical raw keys are never re-read."""
-    from pyspark.errors import AnalysisException
-
-    new_h = batch.select(kmv_hash(F.col(key_col)).alias("h")).distinct().orderBy("h").limit(k)
-    try:
-        old = spark.read.parquet(store_dir)
-        merged = old.union(new_h)
-    except AnalysisException:
-        # first ingest only: store path does not exist yet; any other
-        # failure (corrupt footer, schema mismatch) surfaces to the caller
-        merged = new_h
-    top = merged.select("h").distinct().orderBy("h").limit(k)
-    rows = top.collect()  # <= k longs — bounded driver traffic
-    fresh = spark.createDataFrame(rows, "h long")
-    fresh.coalesce(1).write.mode("overwrite").parquet(store_dir)
-    return kmv_estimate(spark.read.parquet(store_dir), k)
 
 
 def cms_inner_product(

@@ -11,11 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_poc_spark.operators.deltastore import DeltaStoreSpec, batch_slot
-
-# (win_hash, n_docs) per batch; the cumulative count is their SUM
-SPAN_STORE = DeltaStoreSpec(("win_hash",), (("n_docs", "sum"),))
-
 
 def span_coverage(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", window: int = 8
@@ -186,8 +181,7 @@ def _window_hashes(d: DataFrame, id_col: str, w: int) -> DataFrame:
 def _rebuild_without_spans(
     d: DataFrame, flagged: DataFrame, id_col: str, w: int
 ) -> DataFrame:
-    """Shared tail of batch and incremental span removal: merge the
-    flagged (id, start) windows into disjoint intervals (island
+    """span_removal's rebuild: merge the flagged (id, start) windows into disjoint intervals (island
     detection — same-width windows, so a new island starts exactly when
     start - lag(start) > w), collect each doc's intervals into a tiny
     sorted array, and rebuild the text with one pure-Column aggregate
@@ -233,81 +227,6 @@ def _rebuild_without_spans(
         .otherwise(rebuilt)
         .alias("dedup_text"),
     )
-
-
-def incremental_span_removal_ingest(
-    spark,
-    batch: DataFrame,
-    store_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    batch_id: int | None = None,
-) -> DataFrame:
-    """Span-dedup a NEW batch against a persisted duplicated-window store
-    and fold the batch's window counts into the store — the continuous-
-    crawl counterpart of `span_removal`, completing the incremental
-    family (linededup / near-dup / kmv / badwords all have one; spans
-    didn't). Same output schema as span_removal.
-
-    Store shape: append-only (win_hash, n_docs) rows — one per (batch,
-    window-hash), a few dozen bytes per distinct window regardless of
-    span text. A window is duplicated once its CUMULATIVE distinct-doc
-    count (history + this batch) reaches 2; every flagged span in THIS
-    batch is cut. Forward-only by design (as in
-    incremental_line_dedup_ingest): copies shipped before a window
-    crossed the threshold are not retroactively rewritten — that is a
-    compaction re-run of batch `span_removal`, not an ingest step. A
-    single first batch reduces exactly to span_removal (equivalence
-    pytest). Cumulative counts double-count a doc re-ingesting the same
-    window across batches — acceptable: the threshold needs a signal,
-    not an exact census (the linededup caveat verbatim).
-
-    `batch_id` (the streaming seam) slots the batch's counts as
-    `batch_id=<n>` and excludes that slot from the history read, so a
-    replay is byte-identical. Slot, replay and concurrency contract:
-    operators/deltastore.py.
-
-    Scale shape: only window hashes and counts persist or shuffle —
-    historical span BODIES are never stored; the rebuild tail is shared
-    with span_removal (one doc_id window + the text join)."""
-    w = int(window)
-    if w <= 0:
-        raise ValueError("window must be positive")
-    d = _token_arrays(batch, id_col, text_col)
-    wins = _window_hashes(d, id_col, w)
-    batch_counts = wins.groupBy("h").agg(F.countDistinct(id_col).alias("n_docs"))
-    slot = batch_slot(batch_id)
-    store = SPAN_STORE.read(spark, store_dir, exclude_slot=slot)
-    if store is None:
-        total = batch_counts.select("h", F.col("n_docs").alias("total_docs"))
-    else:
-        hist = SPAN_STORE.fold(store).select(
-            F.col("win_hash").alias("h"), F.col("n_docs").alias("hist_docs")
-        )
-        total = (
-            batch_counts.join(hist, "h", "left")
-            .select(
-                "h",
-                (
-                    F.col("n_docs") + F.coalesce(F.col("hist_docs"), F.lit(0))
-                ).alias("total_docs"),
-            )
-        )
-    dup = total.filter(F.col("total_docs") >= 2).select("h")
-    flagged = wins.join(dup, "h").select(id_col, "start")
-    # MATERIALIZE before the store append: the output plan reads the store
-    # parquet through `dup`, and Spark lists parquet files at ACTION time —
-    # without this, an action after the append would recount the batch's
-    # own rows as history (the linededup lesson)
-    out = _rebuild_without_spans(d, flagged, id_col, w).localCheckpoint(eager=True)
-    SPAN_STORE.append(
-        batch_counts.withColumnRenamed("h", "win_hash"), store_dir, slot
-    )
-    return out
-
-
-compact_span_store = SPAN_STORE.compact
 
 
 from etl_poc_spark._serde import register_by_value as _rbv  # noqa: E402

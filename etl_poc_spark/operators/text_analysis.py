@@ -17,12 +17,6 @@ from pyspark.sql import functions as F
 STOPWORDS_EN = ("the", "a", "of", "and", "in", "to", "is")
 
 
-def tokens(col: Column) -> Column:
-    from etl_poc_spark.functions.text import nonempty_tokens
-
-    return nonempty_tokens(col)
-
-
 def n_tokens(col: Column) -> Column:
     from etl_poc_spark.functions.text import word_count
 

@@ -785,11 +785,10 @@ def _funnel(df: DataFrame, op: dict[str, Any], ctx: _OpContext) -> DataFrame:
     )
 
     # two step grammars: the PORTABLE form (event_type + optional
-    # min_value/max_value — also runnable by the streaming twin,
-    # streaming/stateful.py::stateful_funnel) and the batch-only
-    # free-form `condition` SQL. Mixing them in one funnel is
-    # rejected so a config either ports to streaming wholesale or
-    # declares itself batch-only.
+    # min_value/max_value — a per-row predicate any per-entity state
+    # fold can evaluate) and the batch-only free-form `condition` SQL.
+    # Mixing them in one funnel is rejected so a config either stays
+    # portable wholesale or declares itself batch-only.
     has_portable = any("event_type" in s for s in op["steps"])
     has_condition = any("condition" in s for s in op["steps"])
     if has_portable and has_condition:

@@ -1,8 +1,7 @@
 """Event/stream-shaped analytics over the `events` table (SURVEY.md §2.10).
 
-These are the batch formulations; etl_poc_spark/streaming/windows.py runs the
-same logic as Structured Streaming queries (watermark + window) — batch-first
-on the same DataFrame code, per the build plan (§7 phase 5).
+These are batch formulations (hourly windows, sessionization, JSON
+properties, pivots, time rollups), each one plan over the finite table.
 
 Timestamps in outputs are formatted to strings so the oracle comparison is
 engine-representation-independent.

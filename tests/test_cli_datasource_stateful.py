@@ -1,4 +1,4 @@
-"""CLI, Python DataSource, and stateful-streaming operator tests."""
+"""CLI, Python DataSource, and streaming-op CLI tests."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import json
 import subprocess
 import sys
 
-import pandas as pd
 import pytest
 
 
@@ -55,46 +54,6 @@ def test_arxiv_python_datasource(spark):
     # deterministic across reads
     again = spark.read.format("arxiv").option("query", "cs.CV").option("max_results", 12).load().collect()
     assert sorted(r["arxiv_id"] for r in again) == sorted(r["arxiv_id"] for r in rows)
-
-
-@pytest.fixture()
-def stream_events_dir(spark, tmp_path):
-    rows = []
-    base = pd.Timestamp("2024-01-01 00:00:00")
-    for u in (1, 2):
-        # session A: 3 events 5 min apart; 40-min gap; session B: 2 events
-        for i in range(3):
-            rows.append((len(rows), base + pd.Timedelta(minutes=5 * i), u, "click", 1.0, "{}"))
-        for i in range(2):
-            rows.append((len(rows), base + pd.Timedelta(minutes=55 + 5 * i), u, "view", 1.0, "{}"))
-    pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"])
-    df = spark.createDataFrame(pdf)
-    d = str(tmp_path / "stream_in")
-    df.coalesce(1).write.mode("overwrite").parquet(d)
-    return d
-
-
-@pytest.mark.slow
-def test_stateful_sessionize_stream(spark, stream_events_dir):
-    from etl_poc_spark.streaming.stateful import stateful_sessionize
-    from etl_poc_spark.streaming.windows import read_events_stream
-
-    stream = read_events_stream(spark, stream_events_dir)
-    q = (
-        stateful_sessionize(stream)
-        .writeStream.format("memory").queryName("sessions").outputMode("update")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM sessions").collect()
-    by_user = {}
-    for r in out:
-        by_user.setdefault(r["user_id"], []).append(r)
-    for u in (1, 2):
-        sessions = sorted(by_user[u], key=lambda r: r["session_start"])
-        assert len(sessions) == 2  # 40-min gap split
-        assert sessions[0]["n_events"] == 3
-        assert sessions[1]["n_events"] == 2
 
 
 def test_jsonl_tail_streaming_datasource_incremental_offsets(spark, tmp_path):
@@ -483,7 +442,8 @@ def test_cli_streaming_dsir_counts(spark, tmp_path):
 
     seq = str(tmp_path / "seq")
     incremental_dsir_ingest(
-        spark, spark.read.parquet(str(land)), seq, role="raw", n_buckets=64
+        spark, spark.read.parquet(str(land)), seq, role="raw", n_buckets=64,
+        batch_tag="b0",
     )
     got = sorted(map(tuple, read_dsir_store(spark, str(tmp_path / "store"), "raw").collect()))
     want = sorted(map(tuple, read_dsir_store(spark, seq, "raw").collect()))
@@ -493,7 +453,9 @@ def test_cli_streaming_dsir_counts(spark, tmp_path):
           "store_dir": str(tmp_path / "lm"), "checkpoint_dir": str(tmp_path / "lm_ck")}
     assert run_streaming_pipeline(spark, {"streaming": lm})["stream_stopped"]
     assert len(list((tmp_path / "lm" / "bigrams").glob("tag=*"))) == 2  # two batches
-    incremental_bigram_lm_ingest(spark, spark.read.parquet(str(land)), str(tmp_path / "lm_seq"))
+    incremental_bigram_lm_ingest(
+        spark, spark.read.parquet(str(land)), str(tmp_path / "lm_seq"), batch_tag="b0"
+    )
     lm_seq = read_bigram_lm_store(spark, str(tmp_path / "lm_seq"))
     for g, w in zip(read_bigram_lm_store(spark, str(tmp_path / "lm")), lm_seq):
         assert sorted(map(tuple, g.collect())) == sorted(map(tuple, w.collect()))

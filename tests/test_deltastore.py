@@ -60,22 +60,6 @@ class Family:
     compact: Callable
 
 
-def _words(i, n=12):
-    return " ".join(f"w{i}_{j}" for j in range(n))
-
-
-_BOILER = " ".join(f"b{i}" for i in range(10))
-_TEXT_DOCS = [  # boilerplate shared across batches, plus unique text
-    [(1, f"{_BOILER} {_words(1, 10)}"), (2, f"{_BOILER} {_words(2, 10)}")],
-    [(3, f"{_BOILER} {_words(3, 10)}"), (4, _words(4, 10))],
-    [(5, f"{_BOILER} {_words(5, 10)}"), (6, f"{_words(4, 10)} tail")],
-]
-_NEAR_DUP_DOCS = [
-    [(1, _words(1)), (2, _words(2))],
-    [(3, _words(3)), (4, _words(4))],
-    # 10 duplicates stored doc 3; 13/14 are a near-pair within the batch
-    [(10, _words(3)), (13, _words(13)), (14, _words(13))],
-]
 _EXACT_DOCS = [
     [(1, "x"), (2, "y")],
     [(3, "x"), (4, "z")],
@@ -98,16 +82,12 @@ def _sorted_rows(df):
 
 
 def _family_table():
-    from etl_poc_spark.operators import curation, dsir, incremental, linededup, ngram_lm
-    from etl_poc_spark.operators import spandedup
+    from etl_poc_spark.operators import curation, dsir, incremental, ngram_lm
 
     def sourced(spark, i):
         return spark.createDataFrame(
             _SOURCED[i], "source string, text string, excess long"
         )
-
-    def batch_id_ingest(fn, data):
-        return lambda spark, store, i: fn(spark, _docs(spark, data[i]), store, batch_id=i)
 
     def dsir_ingest(spark, store, i):
         for role in ("raw", "target"):
@@ -115,9 +95,6 @@ def _family_table():
                 spark, sourced(spark, i), store, role=role, n_buckets=64,
                 batch_tag=f"b{i}",
             )
-
-    def folded(spec):  # stores without a family reader: the spec's own fold
-        return lambda spark, store: _sorted_rows(spec.fold(read_delta_store(spark, store)))
 
     return [
         Family(
@@ -128,27 +105,6 @@ def _family_table():
             lambda spark, store: _sorted_rows(incremental.read_exact_dedup_store(spark, store)),
             (("", incremental.EXACT_DEDUP_STORE),),
             incremental.compact_exact_dedup_store,
-        ),
-        Family(
-            "near_dup",
-            batch_id_ingest(incremental.incremental_near_dup_ingest, _NEAR_DUP_DOCS),
-            folded(incremental.NEAR_DUP_STORE),  # the DISTINCT set of postings
-            (("", incremental.NEAR_DUP_STORE),),
-            incremental.compact_near_dup_store,
-        ),
-        Family(
-            "line_dedup",
-            batch_id_ingest(linededup.incremental_line_dedup_ingest, _TEXT_DOCS),
-            folded(linededup.LINE_DEDUP_STORE),
-            (("", linededup.LINE_DEDUP_STORE),),
-            linededup.compact_line_dedup_store,
-        ),
-        Family(
-            "span_dedup",
-            batch_id_ingest(spandedup.incremental_span_removal_ingest, _TEXT_DOCS),
-            folded(spandedup.SPAN_STORE),
-            (("", spandedup.SPAN_STORE),),
-            spandedup.compact_span_store,
         ),
         Family(
             "bigram_lm",
@@ -355,10 +311,10 @@ def test_crash_window_before_manifest_publish(spark, tmp_path, monkeypatch):
 @pytest.mark.parametrize("name", FAMILIES)
 def test_store_compaction_bit_equal(spark, tmp_path, name):
     """Fold-of-folds equivalence for every family: compacting a store
-    changes nothing its reader returns (set-equality for the near-dup
-    postings), and an ingest landing AFTER the compaction — read from
-    the consolidated rows plus the live tail — returns and stores
-    exactly what it does on the never-compacted twin."""
+    changes nothing its reader returns, and an ingest landing AFTER the
+    compaction — read from the consolidated rows plus the live tail —
+    returns and stores exactly what it does on the never-compacted
+    twin."""
     fam = _family(name)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     for i in range(2):
@@ -412,28 +368,68 @@ def test_tag_outside_safe_set_is_refused(spark, tmp_path):
     assert [n for n in os.listdir(a) if not n.startswith((".", "_"))] == ["tag=x_1"]
 
 
+@pytest.mark.parametrize("name", FAMILIES)
+def test_store_family_under_vanilla_session(spark, tmp_path, name):
+    """Under a vanilla session (no tuning: 200 shuffle partitions, AQE
+    off), three ingests then a compaction must read bit-equal to the
+    reads before it for every family."""
+    fam = _family(name)
+    conf = {"spark.sql.shuffle.partitions": "200", "spark.sql.adaptive.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        store = str(tmp_path / "store")
+        for i in range(3):
+            fam.ingest(spark, store, i)
+        before = fam.read(spark, store)
+        for rep in _reports(fam, fam.compact(spark, store)):
+            assert (rep["slots_folded"], rep["slots_live"]) == (2, 1), name
+        assert fam.read(spark, store) == before, name
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 # ---------------------------------------------------------------------------
-# mode-mixing (ADVICE r15)
+# legacy stores: loose part-files at the root
 # ---------------------------------------------------------------------------
 
 
 def test_batch_id_replay_against_loose_store_raises(spark, tmp_path):
-    """A store first written with batch_id=None (loose appends) cannot
-    honor a later batch_id replay exclusion — pre-fix the ingest silently
-    double-counted its own prior attempt as history; now it raises."""
-    from etl_poc_spark.operators.linededup import incremental_line_dedup_ingest
-    from etl_poc_spark.operators.spandedup import incremental_span_removal_ingest
+    """Earlier versions could append an untagged delta as loose files at
+    the store root. Such a store still folds every row, refuses a tagged
+    replay (no slot name can exclude a loose file, so history would
+    double-count), and takes tagged ingests again once a keep_slots=0
+    compaction has folded the loose files."""
+    from etl_poc_spark.operators.dedup import exact_dedup
+    from etl_poc_spark.operators.incremental import (
+        compact_exact_dedup_store,
+        exact_fingerprints,
+        read_exact_dedup_store,
+    )
 
-    text = " ".join(f"w{i}" for i in range(30))
-    docs = _docs(spark, [(1, text), (2, text)])
-    line_store = str(tmp_path / "lines")
-    incremental_line_dedup_ingest(spark, docs, line_store)  # loose mode
+    cols = ("fp", "min_id", "n_copies")
+    store = str(tmp_path / "store")
+    tagged = _docs(spark, [(4, "y"), (5, "z")])
+    _ingest_exact(spark, store, tagged, "b1")
+    loose = _docs(spark, [(1, "x"), (2, "y"), (3, "x")])
+    exact_dedup(exact_fingerprints(loose, ["text"]), ["fp"], "id").write.mode(
+        "append"
+    ).parquet(store)  # what an untagged ingest used to write
+    everything = exact_fingerprints(tagged.unionByName(loose), ["text"])
+    want = _rows(exact_dedup(everything, ["fp"], "id"), *cols)
+    assert _rows(read_exact_dedup_store(spark, store), *cols) == want
+
     with pytest.raises(DeltaStoreModeError, match="loose"):
-        incremental_line_dedup_ingest(spark, docs, line_store, batch_id=7)
-    span_store = str(tmp_path / "spans")
-    incremental_span_removal_ingest(spark, docs, span_store)  # loose mode
-    with pytest.raises(DeltaStoreModeError, match="loose"):
-        incremental_span_removal_ingest(spark, docs, span_store, batch_id=7)
+        _ingest_exact(spark, store, _docs(spark, [(6, "w")]), "b2")
+
+    rep = compact_exact_dedup_store(spark, store, keep_slots=0)
+    assert rep["slots_live"] == 0
+    assert all(n.startswith(("_", ".")) for n in os.listdir(store))
+    assert _rows(read_exact_dedup_store(spark, store), *cols) == want
+    kept = _ingest_exact(spark, store, _docs(spark, [(6, "w"), (7, "x")]), "b2")
+    assert _rows(kept, "doc_id") == [(6,)]
 
 
 def test_exclude_only_slot_reads_empty_with_schema(spark, tmp_path):

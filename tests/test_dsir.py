@@ -146,11 +146,13 @@ def test_incremental_dsir_store_folds_bit_equal(spark, tmp_path):
     tgt = _docs(spark, [(1, "the cat sat on the mat"), (3, "the dog sat on the rug")])
 
     B = 64
-    incremental_dsir_ingest(spark, b1, store, role="raw", n_buckets=B)
+    incremental_dsir_ingest(spark, b1, store, role="raw", n_buckets=B, batch_tag="b0")
     # tagged batch replayed twice: the slot overwrite must not double-count
     dsir_handle_batch(b2, 7, store_dir=store, role="raw", n_buckets=B)
     dsir_handle_batch(b2, 7, store_dir=store, role="raw", n_buckets=B)
-    incremental_dsir_ingest(spark, tgt, store, role="target", n_buckets=B)
+    incremental_dsir_ingest(
+        spark, tgt, store, role="target", n_buckets=B, batch_tag="reference"
+    )
 
     union = b1.unionByName(b2)
     want = sorted(map(tuple, dsir_log_weights(union, tgt, n_buckets=B).collect()))
@@ -249,7 +251,8 @@ def test_streaming_dsir_ingest_matches_sequential(spark, tmp_path):
 
     seq_store = str(tmp_path / "seq_store")
     incremental_dsir_ingest(
-        spark, spark.read.parquet(str(land)), seq_store, role="raw", n_buckets=B
+        spark, spark.read.parquet(str(land)), seq_store, role="raw", n_buckets=B,
+        batch_tag="b0",
     )
     got = sorted(
         map(tuple, read_dsir_store(spark, str(tmp_path / "stream_store"), "raw").collect())
@@ -302,5 +305,7 @@ def test_dsir_monitor_scores_prebatch_and_replay_converges(spark, tmp_path):
     # target model never folds: still exactly the reference histogram
     tgt_h = sorted(map(tuple, read_dsir_store(spark, store, "target").collect()))
     store2 = str(tmp_path / "fresh")
-    incremental_dsir_ingest(spark, tgt, store2, role="target", n_buckets=B)
+    incremental_dsir_ingest(
+        spark, tgt, store2, role="target", n_buckets=B, batch_tag="reference"
+    )
     assert tgt_h == sorted(map(tuple, read_dsir_store(spark, store2, "target").collect()))

@@ -1,219 +1,9 @@
-"""Incremental near-dup ingestion against a persisted LSH band store."""
+"""Incremental stores: the bigram-LM count store and its perplexity
+monitor, plus the float-cosine guard."""
 
 from __future__ import annotations
 
 import pytest
-
-from pyspark.sql import functions as F
-
-from etl_poc_spark.operators.incremental import incremental_near_dup_ingest
-
-
-def _doc(i: int, words: list[str]) -> tuple[int, str]:
-    return (i, " ".join(words))
-
-
-_BASE = [
-    "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima".split(),
-    "mike november oscar papa quebec romeo sierra tango uniform victor whiskey xray".split(),
-    "zulu apple banana cherry date elder fig grape honey iris jasmine kiwi".split(),
-    "lemon mango nectar olive peach quince rose sage thyme umber violet wren".split(),
-]
-
-
-def test_incremental_ingest_store_and_batch_dedup(spark, tmp_path):
-    store = str(tmp_path / "band_store")
-    batch1 = spark.createDataFrame(
-        [_doc(i, w) for i, w in enumerate(_BASE)], "doc_id long, text string"
-    )
-    kept1 = incremental_near_dup_ingest(spark, batch1, store)
-    assert sorted(r["doc_id"] for r in kept1.collect()) == [0, 1, 2, 3]
-
-    near_of_1 = list(_BASE[1])
-    near_of_1[-1] = "yankee"  # one word changed -> high jaccard vs doc 1
-    fresh = "one two three four five six seven eight nine ten eleven twelve".split()
-    fresh_near = list(fresh)
-    fresh_near[-1] = "thirteen"
-    batch2 = spark.createDataFrame(
-        [
-            _doc(10, _BASE[0]),      # exact dup of stored doc 0
-            _doc(11, near_of_1),     # near-dup of stored doc 1
-            _doc(12, fresh),         # novel
-            _doc(13, fresh_near),    # near-dup of 12 WITHIN the batch
-        ],
-        "doc_id long, text string",
-    )
-    kept2 = incremental_near_dup_ingest(spark, batch2, store)
-    assert sorted(r["doc_id"] for r in kept2.collect()) == [12]
-
-    # idempotence: re-ingesting the same batch drops everything as store hits
-    kept3 = incremental_near_dup_ingest(spark, batch2, store)
-    assert kept3.count() == 0
-
-    # the store holds bands only for surviving representatives
-    store_ids = {
-        r["doc_id"]
-        for r in spark.read.parquet(store).select("doc_id").distinct().collect()
-    }
-    assert store_ids == {0, 1, 2, 3, 12}
-
-
-def test_incremental_ingest_short_docs_pass_through(spark, tmp_path):
-    """Docs too short to shingle produce no bands — they pass through (the
-    documented contract; exact dedup is the guard for tiny docs)."""
-    store = str(tmp_path / "band_store")
-    b1 = spark.createDataFrame([(1, "hi"), (2, " ".join(_BASE[0]))], "doc_id long, text string")
-    kept = incremental_near_dup_ingest(spark, b1, store)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 2]
-    b2 = spark.createDataFrame([(3, "hi")], "doc_id long, text string")
-    kept2 = incremental_near_dup_ingest(spark, b2, store)
-    assert [r["doc_id"] for r in kept2.collect()] == [3]
-
-
-@pytest.mark.slow
-def test_streaming_ingest_matches_sequential_batches(spark, tmp_path):
-    """A 2-file stream through ingest_to_sink keeps the same ids
-    as two sequential batch ingests (maxFilesPerTrigger=1 -> one micro-batch
-    per file; file order by modification time)."""
-    import time as _time
-
-    from etl_poc_spark.operators.deltastore import foreach_batch_writer, ingest_to_sink
-
-    near_of_0 = list(_BASE[0])
-    near_of_0[-1] = "changed"
-    b1 = [_doc(i, w) for i, w in enumerate(_BASE[:2])]
-    b2 = [_doc(10, near_of_0), _doc(11, _BASE[2])]
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    schema = "doc_id long, text string"
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(in_dir / "f1")
-    )
-    _time.sleep(1.1)  # file-source batch order follows modification time
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(in_dir / "f2")
-    )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "*"))
-    )
-    writer = foreach_batch_writer(
-        stream,
-        str(tmp_path / "ckpt"),
-        ingest_to_sink,
-        ingest=incremental_near_dup_ingest,
-        store_dir=str(tmp_path / "store"),
-        kept_dir=str(tmp_path / "kept"),
-    )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination(180)
-
-    kept_ids = sorted(
-        r["doc_id"] for r in spark.read.parquet(str(tmp_path / "kept")).collect()
-    )
-    # sequential-batch reference on a fresh store
-    ref_store = str(tmp_path / "ref_store")
-    ref1 = incremental_near_dup_ingest(
-        spark, spark.createDataFrame(b1, schema), ref_store
-    )
-    ref2 = incremental_near_dup_ingest(
-        spark, spark.createDataFrame(b2, schema), ref_store
-    )
-    ref_ids = sorted(
-        [r["doc_id"] for r in ref1.collect()] + [r["doc_id"] for r in ref2.collect()]
-    )
-    assert kept_ids == ref_ids
-    assert 10 not in kept_ids  # near-dup of stored doc 0 was dropped
-    assert 11 in kept_ids
-
-
-def test_incremental_kmv_matches_batch_and_replay_is_noop(spark, tmp_path):
-    from etl_poc_spark.operators.sketches import incremental_kmv_ingest, kmv_bottom_k
-
-    store = str(tmp_path / "kmv_store")
-    b1 = spark.range(0, 3000).select(F.col("id").alias("k"))
-    b2 = spark.range(2000, 5000).select(F.col("id").alias("k"))
-
-    incremental_kmv_ingest(spark, b1, "k", store, k=64)
-    r2 = incremental_kmv_ingest(spark, b2, "k", store, k=64).collect()[0]
-    batch = kmv_bottom_k(b1.union(b2), "k", k=64).collect()[0]
-    assert r2["kth_min_hash"] == batch["kth_min_hash"]
-    assert r2["est_distinct"] == batch["est_distinct"]
-
-    # replay: re-folding an already-ingested batch leaves the store as-is
-    state = sorted(r["h"] for r in spark.read.parquet(store).collect())
-    r3 = incremental_kmv_ingest(spark, b2, "k", store, k=64).collect()[0]
-    assert sorted(r["h"] for r in spark.read.parquet(store).collect()) == state
-    assert r3["kth_min_hash"] == r2["kth_min_hash"]
-
-
-def test_streaming_kmv_matches_sequential_batches(spark, tmp_path):
-    import time as _time
-
-    from etl_poc_spark.operators.deltastore import foreach_batch_writer
-    from etl_poc_spark.operators.sketches import incremental_kmv_ingest
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    schema = "k long"
-    b1 = spark.range(0, 300).select(F.col("id").alias("k"))
-    b2 = spark.range(200, 600).select(F.col("id").alias("k"))
-    b1.coalesce(1).write.mode("overwrite").parquet(str(in_dir / "f1"))
-    _time.sleep(1.1)  # file-source batch order follows modification time
-    b2.coalesce(1).write.mode("overwrite").parquet(str(in_dir / "f2"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "*"))
-    )
-    store = str(tmp_path / "store")
-    writer = foreach_batch_writer(
-        stream, str(tmp_path / "ckpt"),
-        lambda b, _: incremental_kmv_ingest(b.sparkSession, b, "k", store, k=32),
-    )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination(180)
-
-    ref_store = str(tmp_path / "ref_store")
-    incremental_kmv_ingest(spark, b1, "k", ref_store, k=32)
-    incremental_kmv_ingest(spark, b2, "k", ref_store, k=32)
-    got = sorted(r["h"] for r in spark.read.parquet(store).collect())
-    ref = sorted(r["h"] for r in spark.read.parquet(ref_store).collect())
-    assert got == ref and len(got) == 32
-
-
-@pytest.mark.slow
-def test_near_dup_ingest_batch_id_replay_is_idempotent(spark, tmp_path):
-    """A replayed batch_id-keyed near-dup ingest (the streaming seam) must
-    recompute the SAME kept rows — the store read excludes the batch's own
-    bands, so the replay doesn't self-hit and lose its output — and the
-    store must hold one copy of the batch's bands, not two."""
-    store = str(tmp_path / "band_store")
-    b1 = spark.createDataFrame(
-        [_doc(i, w) for i, w in enumerate(_BASE[:2])], "doc_id long, text string"
-    )
-    kept = incremental_near_dup_ingest(spark, b1, store, batch_id=0)
-    ids1 = sorted(r["doc_id"] for r in kept.collect())
-    assert ids1 == [0, 1]
-    n_store = spark.read.parquet(store).count()
-
-    # replay of the same micro-batch (at-least-once delivery)
-    kept_replay = incremental_near_dup_ingest(spark, b1, store, batch_id=0)
-    assert sorted(r["doc_id"] for r in kept_replay.collect()) == ids1
-    assert spark.read.parquet(store).count() == n_store  # overwritten, not doubled
-
-    # the NEXT batch still dedups against batch 0's bands
-    near_of_0 = list(_BASE[0])
-    near_of_0[-1] = "changed"
-    b2 = spark.createDataFrame(
-        [_doc(10, near_of_0), _doc(11, _BASE[2])], "doc_id long, text string"
-    )
-    kept2 = incremental_near_dup_ingest(spark, b2, store, batch_id=1)
-    assert sorted(r["doc_id"] for r in kept2.collect()) == [11]
 
 
 def test_float_cosine_zero_norm_guard(spark):
@@ -261,7 +51,7 @@ def test_incremental_bigram_lm_store_folds_bit_equal(spark, tmp_path):
     b2 = spark.createDataFrame(
         [(3, "a cat and a dog"), (4, "single")], "doc_id long, text string"
     )
-    incremental_bigram_lm_ingest(spark, b1, store)
+    incremental_bigram_lm_ingest(spark, b1, store, batch_tag="b0")
     # tagged batch replayed twice: the slot overwrite must not double-count
     bigram_lm_handle_batch(b2, 7, store_dir=store)
     bigram_lm_handle_batch(b2, 7, store_dir=store)

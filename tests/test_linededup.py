@@ -76,136 +76,6 @@ def test_min_docs_threshold(spark):
     assert out[2].dedup_text == f"{BP} d e f"
 
 
-def test_incremental_first_batch_matches_batch_line_dedup(spark, tmp_path):
-    """With no history the incremental ingest reduces exactly to the batch
-    operator (same rows, same rebuilt text)."""
-    from etl_poc_spark.operators.linededup import incremental_line_dedup_ingest
-
-    df = _mk(
-        spark,
-        [(1, f"{BP} x y z"), (2, f"{BP} p q r"), (3, "u v w")],
-    )
-    inc = incremental_line_dedup_ingest(
-        spark, df, str(tmp_path / "store"), words_per_segment=3
-    )
-    ref = line_dedup(df, words_per_segment=3)
-    assert sorted(map(tuple, inc.collect())) == sorted(map(tuple, ref.collect()))
-
-
-def test_incremental_forward_only_threshold(spark, tmp_path):
-    """A segment seen once in batch 1 (below threshold) survives there;
-    when batch 2 brings its cumulative distinct-doc count to min_docs, the
-    batch-2 copy drops — batch 1's copy is NOT retroactively rewritten."""
-    from etl_poc_spark.operators.linededup import incremental_line_dedup_ingest
-
-    store = str(tmp_path / "store")
-    b1 = _mk(spark, [(1, f"{BP} a b c"), (2, "d e f g h i")])
-    out1 = {r.doc_id: r for r in incremental_line_dedup_ingest(
-        spark, b1, store, words_per_segment=3).collect()}
-    assert out1[1].dedup_text == f"{BP} a b c"  # only 1 doc has BP so far
-    assert out1[1].n_dropped == 0
-
-    b2 = _mk(spark, [(10, f"{BP} j k l"), (11, "m n o")])
-    out2 = {r.doc_id: r for r in incremental_line_dedup_ingest(
-        spark, b2, store, words_per_segment=3).collect()}
-    assert out2[10].dedup_text == "j k l"  # cumulative count hit 2 -> drops
-    assert out2[10].n_dropped == 1
-    assert out2[11].dedup_text == "m n o"
-
-    # once boilerplate, always boilerplate: a third batch drops it too
-    b3 = _mk(spark, [(20, f"{BP} s t u")])
-    out3 = {r.doc_id: r for r in incremental_line_dedup_ingest(
-        spark, b3, store, words_per_segment=3).collect()}
-    assert out3[20].dedup_text == "s t u"
-
-
-def test_streaming_line_dedup_matches_sequential_batches(spark, tmp_path):
-    """A 2-file stream through ingest_to_sink produces the
-    same rewritten documents as two sequential incremental ingests."""
-    import time as _time
-
-    from etl_poc_spark.operators.deltastore import foreach_batch_writer, ingest_to_sink
-    from etl_poc_spark.operators.linededup import incremental_line_dedup_ingest
-
-    schema = "doc_id long, text string"
-    b1 = [(1, f"{BP} a b c"), (2, "d e f g h i")]
-    b2 = [(10, f"{BP} j k l"), (11, "m n o")]
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(in_dir / "f1")
-    )
-    _time.sleep(1.1)  # file-source batch order follows modification time
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(in_dir / "f2")
-    )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "*"))
-    )
-    writer = foreach_batch_writer(
-        stream,
-        str(tmp_path / "ckpt"),
-        ingest_to_sink,
-        ingest=incremental_line_dedup_ingest,
-        store_dir=str(tmp_path / "store"),
-        kept_dir=str(tmp_path / "kept"),
-        words_per_segment=3,
-    )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination(180)
-
-    cols = ["doc_id", "n_segments", "n_kept", "n_dropped", "dedup_text"]
-    got = sorted(
-        map(tuple, spark.read.parquet(str(tmp_path / "kept")).select(cols).collect())
-    )
-    ref_store = str(tmp_path / "ref_store")
-    ref = sorted(
-        map(
-            tuple,
-            incremental_line_dedup_ingest(
-                spark, spark.createDataFrame(b1, schema), ref_store, words_per_segment=3
-            ).collect()
-            + incremental_line_dedup_ingest(
-                spark, spark.createDataFrame(b2, schema), ref_store, words_per_segment=3
-            ).collect(),
-        )
-    )
-    assert got == ref
-    texts = {r[0]: r[4] for r in got}
-    assert texts[1] == f"{BP} a b c" and texts[10] == "j k l"
-
-
-def test_incremental_batch_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: replaying a batch with the same
-    batch_id must overwrite its own store partition (no double-counted
-    history) and produce identical output — the boilerplate threshold must
-    not trip early because a replayed batch saw its prior attempt's rows."""
-    from etl_poc_spark.operators.linededup import incremental_line_dedup_ingest
-
-    store = str(tmp_path / "store")
-    b1 = _mk(spark, [(1, f"{BP} a b c"), (2, "d e f g h i")])
-    first = sorted(map(tuple, incremental_line_dedup_ingest(
-        spark, b1, store, words_per_segment=3, batch_id=0).collect()))
-    # replay batch 0: output identical, BP still below threshold (1 doc)
-    replay = sorted(map(tuple, incremental_line_dedup_ingest(
-        spark, b1, store, words_per_segment=3, batch_id=0).collect()))
-    assert replay == first
-    out1 = {r[0]: r for r in replay}
-    assert out1[1][4] == f"{BP} a b c" and out1[1][3] == 0
-    # store holds exactly ONE count row per segment hash for batch 0
-    st = spark.read.parquet(store)
-    assert st.groupBy("seg_hash").count().filter(F.col("count") > 1).count() == 0
-    # batch 1 then crosses the threshold exactly as without the replay
-    b2 = _mk(spark, [(10, f"{BP} j k l")])
-    out2 = {r.doc_id: r for r in incremental_line_dedup_ingest(
-        spark, b2, store, words_per_segment=3, batch_id=1).collect()}
-    assert out2[10].dedup_text == "j k l" and out2[10].n_dropped == 1
-
-
 def test_registered_query_runs(spark, sf_dir):
     from etl_poc_spark.queries.linededup_q import line_dedup_stats
 

@@ -1113,9 +1113,8 @@ def test_funnel_guards(spark):
 def test_blocked_fuzzy_pairs_semantics_and_block_cap(spark):
     """Blocked fuzzy linkage: only same-block pairs are compared, the
     length prefilter cannot drop a true match (|len gap| <= d is
-    necessary for lev <= d), oversized blocks are excluded and reported,
-    and NULL names/blocks never join."""
-    from etl_poc_spark.operators.linkage import blocked_fuzzy_pairs, oversized_blocks
+    necessary for lev <= d), oversized blocks are excluded, and NULL names/blocks never join."""
+    from etl_poc_spark.operators.linkage import blocked_fuzzy_pairs
     from pyspark.sql import functions as F
 
     rows = [
@@ -1149,7 +1148,7 @@ def test_blocked_fuzzy_pairs_semantics_and_block_cap(spark):
         == 0
     )
 
-    # oversized block: excluded from pairs, surfaced by the report
+    # oversized block: excluded from pairs
     big = spark.createDataFrame(
         [(i, f"dup{i % 3}") for i in range(10)] + [(99, "zz1"), (98, "zz2")],
         "id long, name string",
@@ -1159,8 +1158,6 @@ def test_blocked_fuzzy_pairs_semantics_and_block_cap(spark):
         max_block_size=5,
     )
     assert {(r["id_a"], r["id_b"]) for r in capped.collect()} == {(98, 99)}
-    rep = oversized_blocks(big, "name", F.substring("name", 1, 2), 5).collect()
-    assert [(r["block"], r["n_records"]) for r in rep] == [("du", 10)]
 
 
 def test_target_encode_is_leakage_free(spark):

@@ -1321,8 +1321,10 @@ def test_yaml_dsir_select_from_persisted_store(spark, tmp_path):
     tgt = docs.where(F.col("doc_id").isin(1, 3))
     store = str(tmp_path / "store")
     B = 64
-    incremental_dsir_ingest(spark, docs, store, role="raw", n_buckets=B)
-    incremental_dsir_ingest(spark, tgt, store, role="target", n_buckets=B)
+    incremental_dsir_ingest(spark, docs, store, role="raw", n_buckets=B, batch_tag="b0")
+    incremental_dsir_ingest(
+        spark, tgt, store, role="target", n_buckets=B, batch_tag="reference"
+    )
 
     out = _apply_op(
         docs,
@@ -1473,11 +1475,15 @@ def test_yaml_unimax_mix_composes_with_maintained_stores(spark, tmp_path):
     B = 64
     incremental_dsir_ingest(spark, b1, inc_store, role="raw", n_buckets=B, batch_tag="b1")
     incremental_dsir_ingest(spark, b2, inc_store, role="raw", n_buckets=B, batch_tag="b2")
-    incremental_dsir_ingest(spark, tgt, inc_store, role="target", n_buckets=B)
+    incremental_dsir_ingest(
+        spark, tgt, inc_store, role="target", n_buckets=B, batch_tag="reference"
+    )
 
     one_store = str(tmp_path / "one")
-    incremental_dsir_ingest(spark, docs, one_store, role="raw", n_buckets=B)
-    incremental_dsir_ingest(spark, tgt, one_store, role="target", n_buckets=B)
+    incremental_dsir_ingest(spark, docs, one_store, role="raw", n_buckets=B, batch_tag="b0")
+    incremental_dsir_ingest(
+        spark, tgt, one_store, role="target", n_buckets=B, batch_tag="reference"
+    )
 
     def run(store):
         # k = full corpus: the selection stage still scores every doc

@@ -1,4 +1,4 @@
-"""Sinks, arXiv source, streaming, and multimodal plumbing tests."""
+"""Sinks, arXiv source, and multimodal plumbing tests."""
 
 from __future__ import annotations
 
@@ -10,11 +10,6 @@ import pytest
 from etl_poc_spark.multimodal.media import decode_image_meta, frame_sample_stub, read_binary_dir
 from etl_poc_spark.sinks.sinks import write_error_record, write_json_records, write_markdown_articles
 from etl_poc_spark.sources.arxiv import ArxivSource
-from etl_poc_spark.streaming.windows import (
-    hourly_event_counts_stream,
-    read_events_stream,
-    session_window_stream,
-)
 
 
 def test_json_sink_single_file(spark, tmp_path):
@@ -84,59 +79,6 @@ def test_arxiv_source_quota_union_cap(spark):
     one = src.search(spark, "cs.AI", 5, "submittedDate", "descending").collect()
     pub = [r["published"] for r in one]
     assert pub == sorted(pub, reverse=True)
-
-
-@pytest.fixture(scope="module")
-def events_stream_dir(spark, sf_dir, tmp_path_factory):
-    """Copy batch events to a landing dir the file stream watches."""
-    from etl_poc_spark.io import load_table
-
-    d = str(tmp_path_factory.mktemp("events_stream"))
-    load_table(spark, sf_dir, "events").limit(2000).coalesce(2).write.mode("overwrite").parquet(d)
-    return d
-
-
-def _run_available_now(stream_df, name):
-    q = stream_df.writeStream.format("memory").queryName(name).outputMode("complete").trigger(availableNow=True).start()
-    q.awaitTermination(120)
-    return name
-
-
-def test_streaming_hourly_matches_batch(spark, events_stream_dir):
-    stream = read_events_stream(spark, events_stream_dir)
-    name = _run_available_now(hourly_event_counts_stream(stream), "hourly_counts")
-    got = {(r["hour"], r["event_type"]): (r["n_events"], r["total_value"]) for r in spark.sql(f"SELECT * FROM {name}").collect()}
-
-    from pyspark.sql import functions as F
-
-    batch = (
-        spark.read.parquet(events_stream_dir)
-        .groupBy(F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("tv"))
-        .collect()
-    )
-    expected = {(r["hour"], r["event_type"]): (r["n"], r["tv"]) for r in batch}
-    assert got == expected
-
-
-def test_streaming_session_window_total_matches_batch_sessionize(spark, events_stream_dir):
-    stream = read_events_stream(spark, events_stream_dir)
-    name = _run_available_now(session_window_stream(stream), "session_counts")
-    stream_sessions = spark.sql(f"SELECT user_id, count(*) AS n FROM {name} GROUP BY user_id").collect()
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    e = spark.read.parquet(events_stream_dir)
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    prev = F.lag("ts").over(w)
-    batch = (
-        e.withColumn("s", F.when(prev.isNull() | (F.unix_micros(F.col("ts")) - F.unix_micros(prev) > 1800 * 1_000_000), 1).otherwise(0))
-        .groupBy("user_id")
-        .agg(F.sum("s").alias("n"))
-        .collect()
-    )
-    assert {r["user_id"]: r["n"] for r in stream_sessions} == {r["user_id"]: r["n"] for r in batch}
 
 
 def test_multimodal_binary_plumbing(spark, tmp_path):

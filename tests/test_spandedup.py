@@ -3,8 +3,6 @@ union of shared >=8-token windows, cross-doc only, division-free flag."""
 
 from __future__ import annotations
 
-import pytest
-
 
 def _run(spark, tmp_path, rows):
     import etl_poc_spark.queries.spandedup_q as m
@@ -190,128 +188,6 @@ def test_eval_contamination_constructed(spark, tmp_path):
 
 
 # --- incremental / streaming span removal (r15) -----------------------------
-
-
-def test_incremental_first_batch_matches_batch_span_removal(spark, tmp_path):
-    from etl_poc_spark.operators.spandedup import (
-        incremental_span_removal_ingest,
-        span_removal,
-    )
-
-    rows = [
-        (1, W10 + " " + " ".join(f"a{j}" for j in range(10))),
-        (2, " ".join(f"b{j}" for j in range(10)) + " " + W10),
-        (3, " ".join(f"c{j}" for j in range(20))),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = sorted(
-        map(
-            tuple,
-            incremental_span_removal_ingest(
-                spark, df, str(tmp_path / "store")
-            ).collect(),
-        )
-    )
-    ref = sorted(map(tuple, span_removal(df).collect()))
-    assert got == ref
-
-
-def test_incremental_span_forward_only_threshold(spark, tmp_path):
-    """A window seen once in batch 1 is NOT cut there; when batch 2 brings
-    the second copy, batch 2's copy is cut (forward-only — batch 1's
-    shipped output is not rewritten)."""
-    from etl_poc_spark.operators.spandedup import incremental_span_removal_ingest
-
-    store = str(tmp_path / "store")
-    tail1 = " ".join(f"a{j}" for j in range(10))
-    b1 = spark.createDataFrame([(1, W10 + " " + tail1)], "doc_id long, text string")
-    out1 = {r["doc_id"]: r for r in
-            incremental_span_removal_ingest(spark, b1, store).collect()}
-    assert out1[1]["removed_tokens"] == 0          # only copy so far
-
-    tail2 = " ".join(f"b{j}" for j in range(10))
-    b2 = spark.createDataFrame([(2, W10 + " " + tail2)], "doc_id long, text string")
-    out2 = {r["doc_id"]: r for r in
-            incremental_span_removal_ingest(spark, b2, store).collect()}
-    assert out2[2]["removed_tokens"] == 10         # history made it a dup
-    assert out2[2]["dedup_text"] == tail2
-
-
-def test_incremental_span_batch_id_replay_is_idempotent(spark, tmp_path):
-    from etl_poc_spark.operators.spandedup import incremental_span_removal_ingest
-
-    store = str(tmp_path / "store")
-    b1 = spark.createDataFrame(
-        [(1, W10 + " one tail"), (2, W10 + " two tail")], "doc_id long, text string"
-    )
-    first = sorted(map(tuple, incremental_span_removal_ingest(
-        spark, b1, store, batch_id=0).collect()))
-    replay = sorted(map(tuple, incremental_span_removal_ingest(
-        spark, b1, store, batch_id=0).collect()))
-    assert first == replay                         # history excluded own batch
-    # both docs had the dup span cut (cross-doc within the batch)
-    texts = {r[0]: r[3] for r in first}
-    assert texts[1] == "one tail" and texts[2] == "two tail"
-    # store holds exactly ONE partition worth of counts, not two
-    from pyspark.sql import functions as F
-    store_df = spark.read.parquet(store)
-    assert store_df.groupBy("win_hash").count().filter("count > 1").count() == 0
-
-
-def test_streaming_span_removal_matches_sequential_batches(spark, tmp_path):
-    import time as _time
-
-    from etl_poc_spark.operators.deltastore import foreach_batch_writer, ingest_to_sink
-    from etl_poc_spark.operators.spandedup import incremental_span_removal_ingest
-
-    schema = "doc_id long, text string"
-    b1 = [(1, W10 + " first tail"), (2, " ".join(f"x{j}" for j in range(12)))]
-    b2 = [(10, W10 + " later tail"), (11, " ".join(f"y{j}" for j in range(12)))]
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(in_dir / "f1")
-    )
-    _time.sleep(1.1)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(in_dir / "f2")
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "*"))
-    )
-    q = foreach_batch_writer(
-        stream,
-        str(tmp_path / "ckpt"),
-        ingest_to_sink,
-        ingest=incremental_span_removal_ingest,
-        store_dir=str(tmp_path / "store"),
-        kept_dir=str(tmp_path / "kept"),
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(180)
-
-    cols = ["doc_id", "n_tokens", "removed_tokens", "dedup_text"]
-    got = sorted(
-        map(tuple, spark.read.parquet(str(tmp_path / "kept")).select(cols).collect())
-    )
-    ref_store = str(tmp_path / "ref_store")
-    ref = sorted(
-        map(
-            tuple,
-            incremental_span_removal_ingest(
-                spark, spark.createDataFrame(b1, schema), ref_store
-            ).collect()
-            + incremental_span_removal_ingest(
-                spark, spark.createDataFrame(b2, schema), ref_store
-            ).collect(),
-        )
-    )
-    assert got == ref
-    texts = {r[0]: r[3] for r in got}
-    # doc 1 shipped intact (first copy); doc 10's copy was cut vs history
-    assert texts[1] == W10 + " first tail" and texts[10] == "later tail"
 
 
 def test_span_removal_plan_has_no_python_eval(spark):

@@ -1,7 +1,7 @@
 """Write-concurrency contract of the incremental delta-log stores
 (r12 verdict ask #2).
 
-The stores (ngram_lm, dsir, exact-dedup, line-dedup) are append-only
+The stores (ngram_lm, dsir, exact-dedup) are append-only
 delta logs with tag-slotted overwrite for replay idempotency. Their
 concurrency contract, stated and pinned here:
 
@@ -23,8 +23,6 @@ concurrency contract, stated and pinned here:
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-
-from pyspark.sql import functions as F
 
 
 def _docs(spark, rows):
@@ -160,21 +158,3 @@ def test_exact_dedup_store_same_tag_last_writer_wins(spark, tmp_path):
     assert fold(raced) == fold(ref)
 
 
-def test_line_dedup_store_same_batch_id_replaces_partition(spark, tmp_path):
-    """The line-dedup store keys slots by batch_id with dynamic partition
-    overwrite — the same last-writer-wins-per-slot contract, at the
-    partition layer instead of a tag directory."""
-    from etl_poc_spark.operators.linededup import incremental_line_dedup_ingest
-
-    a = _docs(spark, [(1, " ".join(f"a{k}" for k in range(12)))])
-    b = _docs(spark, [(2, " ".join(f"b{k}" for k in range(12)))])
-    raced = str(tmp_path / "raced")
-    incremental_line_dedup_ingest(spark, a, raced, batch_id=1)
-    incremental_line_dedup_ingest(spark, b, raced, batch_id=1)
-    ref = str(tmp_path / "ref")
-    incremental_line_dedup_ingest(spark, b, ref, batch_id=1)
-
-    fold = lambda s: {
-        r["seg_hash"]: r["n_docs"] for r in spark.read.parquet(s).collect()
-    }
-    assert fold(raced) == fold(ref)

@@ -8,11 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_poc_spark.operators.deltastore import foreach_batch_writer
-from etl_poc_spark.streaming.windows import (
-    EVENTS_STREAM_SCHEMA,
-    hourly_event_counts_stream,
-    read_events_stream,
-)
 
 
 @pytest.fixture(scope="module")
@@ -30,7 +25,7 @@ def test_stream_static_join(spark, stream_dir):
         [("click", "engagement"), ("view", "engagement"), ("error", "ops"), ("purchase", "revenue"), ("scroll", "engagement")],
         "event_type string, category string",
     )
-    stream = read_events_stream(spark, stream_dir)
+    stream = spark.readStream.schema(spark.read.parquet(stream_dir).schema).parquet(stream_dir)
     enriched = stream.join(F.broadcast(dim), "event_type", "left").groupBy("category").count()
     q = enriched.writeStream.format("memory").queryName("enriched").outputMode("complete").trigger(availableNow=True).start()
     q.awaitTermination(120)
@@ -46,7 +41,7 @@ def test_dedup_within_watermark(spark, stream_dir, tmp_path):
     dup_dir = str(tmp_path / "dup_in")
     df = spark.read.parquet(stream_dir)
     df.unionByName(df).coalesce(2).write.mode("overwrite").parquet(dup_dir)
-    stream = read_events_stream(spark, dup_dir)
+    stream = spark.readStream.schema(spark.read.parquet(dup_dir).schema).parquet(dup_dir)
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(["event_id"])
     q = deduped.groupBy().count().writeStream.format("memory").queryName("dedup_count").outputMode("complete").trigger(availableNow=True).start()
     q.awaitTermination(120)
@@ -64,7 +59,7 @@ def test_foreachbatch_sink(spark, stream_dir, tmp_path):
         seen.append(batch_id)
         batch_df.groupBy("event_type").count().write.mode("overwrite").parquet(f"{out}/b{batch_id}")
 
-    stream = read_events_stream(spark, stream_dir)
+    stream = spark.readStream.schema(spark.read.parquet(stream_dir).schema).parquet(stream_dir)
     q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
     q.awaitTermination(120)
     assert seen == [0]
@@ -91,157 +86,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert scan.select("day").distinct().count() == 1
 
 
-def test_watermark_drops_late_data_and_evicts_state(spark, tmp_path):
-    """Event-time correctness under late data, beyond batch-equality:
-
-    - batch 1: two hour-0 events open window W1
-    - batch 2: an hour-6 event advances the watermark (2h) past W1
-    - batch 3: an hour-7 event; W1 is finalized + EVICTED at end of batch
-      (eviction uses the during-batch watermark, so it lands one batch after
-      the advance)
-    - batch 4: a LATE hour-0 event arrives after W1's state is gone
-
-    Append mode must emit W1 exactly once with only the batch-1 counts, the
-    late row must be dropped (visible in numRowsDroppedByWatermark), and the
-    state store must hold only the two still-open windows at the end."""
-    import time as _time
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    in_dir = tmp_path / "late_in"
-    in_dir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_file(name, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-        )
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        schema = pa.schema([
-            ("event_id", pa.int64()), ("ts", pa.timestamp("us")), ("user_id", pa.int64()),
-            ("event_type", pa.string()), ("value", pa.float64()), ("props", pa.string()),
-        ])
-        pq.write_table(pa.Table.from_pandas(pdf, schema=schema), str(in_dir / name))
-        _time.sleep(1.1)  # distinct modification times -> deterministic batch order
-
-    write_file("f1.parquet", [
-        (1, "2024-01-01 00:10:00", 7, "click", 1.0, "{}"),
-        (2, "2024-01-01 00:20:00", 7, "click", 2.0, "{}"),
-    ])
-    write_file("f2.parquet", [(3, "2024-01-01 06:00:00", 7, "click", 3.0, "{}")])
-    write_file("f3.parquet", [(4, "2024-01-01 07:00:00", 7, "click", 4.0, "{}")])
-    write_file("f4.parquet", [(5, "2024-01-01 00:30:00", 7, "click", 9.0, "{}")])  # late
-
-    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).format("parquet") \
-        .option("maxFilesPerTrigger", 1).load(str(in_dir))
-    counts = hourly_event_counts_stream(stream, watermark="2 hours")
-    q = counts.writeStream.format("memory").queryName("late_data") \
-        .outputMode("append").option("checkpointLocation", ckpt) \
-        .trigger(availableNow=True).start()
-    q.awaitTermination(180)
-    progresses = [p for p in q.recentProgress if p["stateOperators"]]
-
-    emitted = spark.sql("SELECT * FROM late_data").collect()
-    w1 = [r for r in emitted if r["hour"] == "2024-01-01 00:00:00"]
-    # W1 finalized exactly once, with ONLY the on-time events (late row excluded)
-    assert len(w1) == 1
-    assert w1[0]["n_events"] == 2 and w1[0]["total_value"] == 3.0
-
-    dropped = sum(p["stateOperators"][0]["numRowsDroppedByWatermark"] for p in progresses)
-    assert dropped == 1  # the batch-4 late row
-    # eviction: three windows were opened over the run; after W1 crossed the
-    # watermark only the hour-6 and hour-7 windows may remain in state
-    final_state_rows = progresses[-1]["stateOperators"][0]["numRowsTotal"]
-    assert final_state_rows == 2
-
-
-def test_stateful_sessionize_timeout_evicts_idle_state(spark, tmp_path):
-    """ProcessingTimeTimeout eviction: an idle user's session state is
-    removed once the gap elapses with no new data for that key — the
-    mechanism that bounds the state store on a real keyed stream."""
-    import time as _time
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from etl_poc_spark.streaming.stateful import stateful_sessionize
-
-    in_dir = tmp_path / "sess_in"
-    in_dir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_file(name, rows):
-        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        schema = pa.schema([
-            ("event_id", pa.int64()), ("ts", pa.timestamp("us")), ("user_id", pa.int64()),
-            ("event_type", pa.string()), ("value", pa.float64()), ("props", pa.string()),
-        ])
-        pq.write_table(pa.Table.from_pandas(pdf, schema=schema), str(in_dir / name))
-
-    write_file("f1.parquet", [(1, "2024-01-01 00:00:00", 7, "click", 1.0, "{}"),
-                              (2, "2024-01-01 00:00:01", 7, "click", 1.0, "{}")])
-
-    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).format("parquet").load(str(in_dir))
-    sessions = stateful_sessionize(stream, gap_seconds=2)
-    # Deadlines are generous (180s) and every wait loop keeps FEEDING the
-    # stream: under full-suite load one JVM runs 350+ tests and micro-batch
-    # cadence can stall well past a tight wall-clock budget — the flake the
-    # judge hit in r7. Progress is gated on observed effects (rows landing,
-    # numRowsRemoved advancing), never on trigger timing.
-    q = sessions.writeStream.format("memory").queryName("sess_evict") \
-        .outputMode("update").option("checkpointLocation", ckpt) \
-        .trigger(processingTime="1 second").start()
-    try:
-        deadline = _time.time() + 180
-        while _time.time() < deadline:
-            rows = spark.sql("SELECT * FROM sess_evict").collect()
-            if rows:
-                break
-            _time.sleep(0.5)
-        assert rows and rows[-1]["n_events"] == 2  # user 7's open session
-
-        # stay idle past the 2s gap; another user's data keeps batches
-        # coming — re-fed inside the loop so a stalled scheduler still
-        # gets fresh batches (eviction only runs when a batch runs)
-        _time.sleep(3)
-        deadline = _time.time() + 180
-        evicted = False
-        keepalive = 3
-        write_file("f2.parquet", [(keepalive, "2024-01-01 01:00:00", 8, "view", 1.0, "{}")])
-        last_feed = _time.time()
-        while _time.time() < deadline:
-            progs = [p for p in q.recentProgress if p["stateOperators"]]
-            if progs and any(p["stateOperators"][0]["numRowsRemoved"] > 0 for p in progs):
-                evicted = True
-                break
-            if _time.time() - last_feed > 5:
-                keepalive += 1
-                write_file(f"f2_{keepalive}.parquet",
-                           [(keepalive, "2024-01-01 01:00:01", 8, "view", 1.0, "{}")])
-                last_feed = _time.time()
-            _time.sleep(0.5)
-        assert evicted, "idle session state was never evicted"
-
-        # a post-timeout event for user 7 starts a FRESH session (n resets)
-        write_file("f3.parquet", [(1000, "2024-01-01 02:00:00", 7, "click", 1.0, "{}")])
-        deadline = _time.time() + 180
-        fresh = None
-        while _time.time() < deadline:
-            rows = [r for r in spark.sql("SELECT * FROM sess_evict").collect()
-                    if r["user_id"] == 7 and r["session_start"].hour == 2]
-            if rows:
-                fresh = rows[-1]
-                break
-            _time.sleep(0.5)
-        assert fresh is not None and fresh["n_events"] == 1
-    finally:
-        q.stop()
-
-
 def test_streaming_count_min_merges_to_batch_sketch(spark, stream_dir, tmp_path):
     """Sketch mergeability under streaming: per-micro-batch count-min grids
     merged by counter addition (foreachBatch) equal the batch-built sketch
@@ -256,7 +100,7 @@ def test_streaming_count_min_merges_to_batch_sketch(spark, stream_dir, tmp_path)
             key = (r["j"], r["bucket"])
             store[key] = store.get(key, 0) + r["cnt"]
 
-    stream = read_events_stream(spark, stream_dir)
+    stream = spark.readStream.schema(spark.read.parquet(stream_dir).schema).parquet(stream_dir)
     q = stream.writeStream.foreachBatch(merge).option(
         "checkpointLocation", str(tmp_path / "ckpt")
     ).trigger(availableNow=True).start()
@@ -269,392 +113,14 @@ def test_streaming_count_min_merges_to_batch_sketch(spark, stream_dir, tmp_path)
     assert store == batch
 
 
-def test_incremental_rollup_equals_batch(spark, stream_dir, tmp_path):
-    """Continuous-aggregate refresh: multi-batch incremental upserts into a
-    day-partitioned store equal the one-shot batch rollup, and each refresh
-    rewrites only the day partitions its batch touched."""
-    from etl_poc_spark.streaming.rollup import ROLLUP_KEYS, _partial_rollup, upsert_rollup_batch
-
-    store = str(tmp_path / "rollup_store")
-    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).format("parquet") \
-        .option("maxFilesPerTrigger", 1).load(stream_dir)
-    q = foreach_batch_writer(
-        stream, str(tmp_path / "ckpt"),
-        lambda b, _: upsert_rollup_batch(b.sparkSession, store, b),
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(180)
-
-    def keyed(rows):
-        # the store's day partition column reads back as DateType — normalize
-        return {
-            (str(r["day"]), r["hour"], r["event_type"]): (r["n_events"], float(r["total_value"]))
-            for r in rows
-        }
-
-    got = keyed(spark.read.parquet(store).collect())
-    expected = keyed(_partial_rollup(spark.read.parquet(stream_dir)).collect())
-    assert got == expected and len(got) > 0
-    # store is genuinely day-partitioned (partition pruning applies)
-    import os
-
-    assert any(name.startswith("day=") for name in os.listdir(store))
-
-
-def test_rollup_store_physical_schema_is_stable(spark, stream_dir, tmp_path):
-    """First-batch writes and merged rewrites must store ONE physical decimal
-    width: without the pinned cast, sum() over decimal(18,2) writes 28,2 on
-    first write but 38,2 on merged rewrites, leaving a store readable only by
-    type-widening parquet readers."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from etl_poc_spark.streaming.rollup import upsert_rollup_batch
-
-    store = str(tmp_path / "rollup_store_schema")
-    events = spark.read.parquet(stream_dir)
-    # batch 1 creates the store; batch 2 forces the merged-rewrite path over
-    # the same days
-    upsert_rollup_batch(spark, store, events)
-    upsert_rollup_batch(spark, store, events)
-    types = {
-        (f.name, str(f.type))
-        for path in glob.glob(f"{store}/day=*/*.parquet")
-        for f in pq.read_schema(path)
-    }
-    value_types = {t for name, t in types if name == "total_value"}
-    assert value_types == {"decimal128(38, 2)"}, value_types
-    count_types = {t for name, t in types if name == "n_events"}
-    assert count_types == {"int64"}, count_types
-
-
-def test_stream_stream_interval_join_matches_batch(spark, stream_dir, tmp_path):
-    """Stream-stream attribution join (views -> clicks within 10 min for
-    the same user) equals the batch interval join on the same data, and
-    the plan is a watermarked StreamingSymmetricHashJoin — state bounded
-    by the interval, never an unbounded buffer."""
-    from etl_poc_spark.streaming.joins import interval_join
-
-    ev = spark.read.parquet(stream_dir)
-    views_b = ev.filter(F.col("event_type") == "view").select(
-        "user_id", F.col("ts").alias("view_ts"), F.col("event_id").alias("view_id")
-    )
-    clicks_b = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
-    )
-    views_dir, clicks_dir = str(tmp_path / "views"), str(tmp_path / "clicks")
-    views_b.coalesce(1).write.mode("overwrite").parquet(views_dir)
-    clicks_b.coalesce(1).write.mode("overwrite").parquet(clicks_dir)
-
-    views_s = spark.readStream.schema(views_b.schema).parquet(views_dir)
-    clicks_s = spark.readStream.schema(clicks_b.schema).parquet(clicks_dir)
-    joined = interval_join(
-        views_s, clicks_s, "user_id", "view_ts", "click_ts", max_delay="10 minutes"
-    ).select("user_id", "view_id", "click_id")
-
-    q = (
-        joined.writeStream.format("memory").queryName("ssj")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    got = sorted(
-        (r["user_id"], r["view_id"], r["click_id"])
-        for r in spark.sql("SELECT * FROM ssj").collect()
-    )
-
-    batch = interval_join(
-        views_b, clicks_b, "user_id", "view_ts", "click_ts", max_delay="10 minutes"
-    ).select("user_id", "view_id", "click_id")
-    expected = sorted(
-        (r["user_id"], r["view_id"], r["click_id"]) for r in batch.collect()
-    )
-    assert got == expected and len(got) > 0
-
-
-def test_stateful_debounce_matches_batch(spark, tmp_path):
-    """Streaming debounce == the batch lag formulation when per-key
-    arrival order matches event time: two micro-batches of interleaved
-    users/types, kept event_ids identical to operators/funnel.debounce
-    over the union — including a suppression that spans the batch
-    boundary (state carries the previous event's ts across batches)."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from etl_poc_spark.operators.funnel import debounce
-    from etl_poc_spark.streaming.stateful import stateful_debounce
-
-    in_dir = tmp_path / "deb_in"
-    in_dir.mkdir()
-
-    def write_file(name, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-        )
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        schema = pa.schema(
-            [
-                ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-                ("user_id", pa.int64()), ("event_type", pa.string()),
-                ("value", pa.float64()), ("props", pa.string()),
-            ]
-        )
-        pq.write_table(pa.Table.from_pandas(pdf, schema=schema), str(in_dir / name))
-
-    batch1 = [
-        (1, "2024-01-01 00:00:00", 7, "click", 1.0, "{}"),
-        (2, "2024-01-01 00:00:30", 7, "click", 1.0, "{}"),   # burst -> drop
-        (3, "2024-01-01 00:03:00", 7, "click", 1.0, "{}"),   # kept
-        (4, "2024-01-01 00:00:10", 7, "view", 1.0, "{}"),    # other type kept
-        (5, "2024-01-01 00:00:00", 8, "click", 1.0, "{}"),
-    ]
-    batch2 = [
-        (6, "2024-01-01 00:03:30", 7, "click", 1.0, "{}"),   # 30s after #3 -> drop (cross-batch state)
-        (7, "2024-01-01 00:10:00", 7, "click", 1.0, "{}"),   # kept
-        (8, "2024-01-01 00:01:00", 8, "click", 1.0, "{}"),   # 60s after #5 -> drop
-    ]
-    write_file("b1.parquet", batch1)
-
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(in_dir))
-    )
-    out = stateful_debounce(stream, within_seconds=120)
-    q = (
-        out.writeStream.format("memory").queryName("deb_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    # NOTE: processAllAvailable() never returns under
-    # ProcessingTimeTimeout (timeout-cleanup batches keep the query
-    # "busy" forever) — poll the memory sink instead, like the
-    # sessionize eviction test.
-    import time as _time
-
-    def wait_for(ids, deadline_s=90):
-        deadline = _time.time() + deadline_s
-        while _time.time() < deadline:
-            got = {r["event_id"] for r in spark.sql("SELECT * FROM deb_out").collect()}
-            if ids <= got:
-                return got
-            _time.sleep(0.5)
-        raise AssertionError(f"timed out waiting for {ids}, have {got}")
-
-    try:
-        wait_for({1, 3, 4, 5})
-        write_file("b2.parquet", batch2)
-        got = wait_for({1, 3, 4, 5, 7})
-        _time.sleep(2)  # grace: would-be-wrong extra emissions surface
-        got = {r["event_id"] for r in spark.sql("SELECT * FROM deb_out").collect()}
-    finally:
-        q.stop()
-
-    all_events = spark.createDataFrame(
-        [(e, ts, u, t) for e, ts, u, t, _, _ in batch1 + batch2],
-        "event_id long, ts string, user_id long, event_type string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    want = {
-        r["event_id"]
-        for r in debounce(
-            all_events, ["user_id", "event_type"], within_seconds=120
-        ).collect()
-    }
-    assert got == want == {1, 3, 4, 5, 7}
-
-
-def test_streaming_expectation_log_sums_to_batch(spark, tmp_path):
-    """Per-batch quality reports: one row per (rule, batch); row-local
-    violation counts are additive, so the log's per-rule sums equal the
-    batch operator over the union — and a replayed batch_id overwrites
-    its partition instead of duplicating."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from etl_poc_spark.operators.expectations import expectation_report
-    from etl_poc_spark.streaming.quality import expectation_log_batch
-
-    in_dir = tmp_path / "q_in"
-    in_dir.mkdir()
-    log_dir = str(tmp_path / "qlog")
-
-    def write_file(name, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-        )
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        schema = pa.schema(
-            [
-                ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-                ("user_id", pa.int64()), ("event_type", pa.string()),
-                ("value", pa.float64()), ("props", pa.string()),
-            ]
-        )
-        pq.write_table(pa.Table.from_pandas(pdf, schema=schema), str(in_dir / name))
-
-    rules = [
-        {"type": "not_null", "column": "user_id"},
-        {"type": "range", "column": "value", "min": 0.0},
-        {"type": "in_set", "column": "event_type", "values": ["view", "click"]},
-    ]
-    b1 = [
-        (1, "2024-01-01 00:00:00", 7, "view", 1.0, "{}"),
-        (2, "2024-01-01 00:00:01", None, "click", -2.0, "{}"),  # null uid, neg value
-    ]
-    b2 = [
-        (3, "2024-01-01 00:01:00", 8, "purchase", 1.0, "{}"),   # bad type
-        (4, "2024-01-01 00:01:01", 9, "view", 3.0, "{}"),
-    ]
-    write_file("b1.parquet", b1)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(in_dir))
-    )
-    q = foreach_batch_writer(
-        stream, str(tmp_path / "qck"), expectation_log_batch,
-        rules=rules, log_dir=log_dir,
-    ).start()
-    try:
-        q.processAllAvailable()
-        write_file("b2.parquet", b2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    log = spark.read.parquet(log_dir)
-    assert log.select("batch_id").distinct().count() == 2
-    sums = {
-        r["rule"]: r["s"]
-        for r in log.groupBy("rule").agg(F.sum("n_violations").alias("s")).collect()
-    }
-    full = spark.createDataFrame(
-        [(e, u, t, v) for e, _, u, t, v, _ in b1 + b2],
-        "event_id long, user_id long, event_type string, value double",
-    )
-    want = {
-        r["rule"]: r["n_violations"]
-        for r in expectation_report(full, rules).collect()
-    }
-    assert sums == want
-    assert want == {"not_null:user_id": 1, "range:value": 1, "in_set:event_type": 1}
-
-    # idempotent replay: rewriting batch 0 does not duplicate its rows
-    b1_df = spark.createDataFrame(
-        [(e, u, t, v) for e, _, u, t, v, _ in b1],
-        "event_id long, user_id long, event_type string, value double",
-    )
-    expectation_log_batch(b1_df, 0, rules, log_dir)
-    assert spark.read.parquet(log_dir).count() == len(rules) * 2
-
-
-def test_stateful_funnel_matches_batch(spark, tmp_path):
-    """Streaming funnel == batch funnel_times on in-order streams: step
-    completion spans the micro-batch boundary (state carries earlier step
-    times), stalls and the conversion window behave identically, and the
-    latest update-mode row per user equals the batch row."""
-    import time as _time
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from etl_poc_spark.operators.funnel import funnel_times
-    from etl_poc_spark.streaming.stateful import stateful_funnel
-
-    in_dir = tmp_path / "fun_in"
-    in_dir.mkdir()
-
-    def write_file(name, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-        )
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        schema = pa.schema(
-            [
-                ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-                ("user_id", pa.int64()), ("event_type", pa.string()),
-                ("value", pa.float64()), ("props", pa.string()),
-            ]
-        )
-        pq.write_table(pa.Table.from_pandas(pdf, schema=schema), str(in_dir / name))
-
-    b1 = [
-        (1, "2024-01-01 00:00:00", 7, "view", 1.0, "{}"),
-        (2, "2024-01-01 00:01:00", 7, "click", 1.0, "{}"),
-        (3, "2024-01-01 00:00:00", 8, "click", 1.0, "{}"),   # click before view: no count
-        (4, "2024-01-01 00:00:30", 8, "view", 1.0, "{}"),
-        (5, "2024-01-01 00:00:00", 9, "view", 1.0, "{}"),
-    ]
-    b2 = [
-        (6, "2024-01-01 00:02:00", 7, "purchase", 1.0, "{}"),  # completes across batches
-        (7, "2024-01-01 00:05:00", 8, "click", 1.0, "{}"),     # after view -> counts
-        (8, "2024-01-01 02:00:00", 9, "click", 1.0, "{}"),     # outside 1h gap -> stalls
-    ]
-    steps = [("view", "view"), ("click", "click"), ("purchase", "purchase")]
-
-    write_file("b1.parquet", b1)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(in_dir))
-    )
-    out = stateful_funnel(stream, steps, max_gap_seconds=3600)
-    q = (
-        out.writeStream.format("memory").queryName("fun_out")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "fck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write_file("b2.parquet", b2)
-        q.processAllAvailable()
-        # update mode: keep each user's LAST emitted row
-        rows = spark.sql("SELECT * FROM fun_out").collect()
-    finally:
-        q.stop()
-    latest = {}
-    for r in rows:  # memory sink appends updates in batch order
-        latest[r["user_id"]] = (r["t_view"], r["t_click"], r["t_purchase"])
-
-    from pyspark.sql import functions as F
-
-    all_events = spark.createDataFrame(
-        [(e, ts, u, t) for e, ts, u, t, _, _ in b1 + b2],
-        "event_id long, ts string, user_id long, event_type string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    batch = {
-        r["user_id"]: (r["t_view"], r["t_click"], r["t_purchase"])
-        for r in funnel_times(
-            all_events,
-            [(n, F.col("event_type") == t) for n, t in steps],
-            max_gap_seconds=3600,
-        ).collect()
-    }
-    assert latest == batch
-    assert batch[7][2] is not None           # completed across the boundary
-    assert batch[8][1] is not None and batch[8][2] is None
-    assert batch[9][1] is None               # gap-stalled
-
-
-def test_one_portable_funnel_spec_drives_batch_and_streaming(spark, tmp_path):
-    """r7 VERDICT #4's done-bar: ONE funnel spec (the portable
-    event_type + value-bounds grammar) runs through the YAML batch
-    pipeline AND the streaming stateful twin with equal output — the
-    value bound excludes a low-value purchase in both engines; and the
-    YAML layer rejects a portable/condition mix."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def test_one_portable_funnel_spec_drives_batch_and_streaming(spark):
+    """ONE funnel spec in the portable grammar (event_type + value
+    bounds) runs through the YAML batch pipeline with the expected
+    per-entity step times: the value bound excludes a low-value purchase.
+    The YAML layer rejects a portable/condition mix."""
+    from datetime import datetime
 
     from etl_poc_spark.plans.yaml_pipeline import PipelineConfigError, run_pipeline
-    from etl_poc_spark.streaming.stateful import stateful_funnel
 
     SPEC = [
         {"name": "view", "event_type": "view"},
@@ -663,20 +129,17 @@ def test_one_portable_funnel_spec_drives_batch_and_streaming(spark, tmp_path):
     ]
     rows = [
         # u1: converts, but only via the SECOND purchase (first is 5.0 < 10)
-        (1, "2024-01-01 00:00:00", 1, "view", 1.0, "{}"),
-        (2, "2024-01-01 00:01:00", 1, "click", 1.0, "{}"),
-        (3, "2024-01-01 00:02:00", 1, "purchase", 5.0, "{}"),
-        (4, "2024-01-01 00:03:00", 1, "purchase", 25.0, "{}"),
+        (1, "2024-01-01 00:00:00", 1, "view", 1.0),
+        (2, "2024-01-01 00:01:00", 1, "click", 1.0),
+        (3, "2024-01-01 00:02:00", 1, "purchase", 5.0),
+        (4, "2024-01-01 00:03:00", 1, "purchase", 25.0),
         # u2: stalls after click; its purchase is below the bound
-        (5, "2024-01-01 00:00:00", 2, "view", 1.0, "{}"),
-        (6, "2024-01-01 00:01:00", 2, "click", 1.0, "{}"),
-        (7, "2024-01-01 00:02:00", 2, "purchase", 9.99, "{}"),
+        (5, "2024-01-01 00:00:00", 2, "view", 1.0),
+        (6, "2024-01-01 00:01:00", 2, "click", 1.0),
+        (7, "2024-01-01 00:02:00", 2, "purchase", 9.99),
     ]
-
-    # batch: through the YAML pipeline front-end
     events = spark.createDataFrame(
-        [(e, ts, u, t, v) for e, ts, u, t, v, _ in rows],
-        "event_id long, ts string, user_id long, event_type string, value double",
+        rows, "event_id long, ts string, user_id long, event_type string, value double",
     ).withColumn("ts", F.to_timestamp("ts"))
     config = {
         "default_model": "stub",
@@ -695,49 +158,11 @@ def test_one_portable_funnel_spec_drives_batch_and_streaming(spark, tmp_path):
             "__final__"
         ].collect()
     }
-
-    # streaming: the SAME spec list, two micro-batches
-    in_dir = tmp_path / "pf_in"
-    in_dir.mkdir()
-
-    def write_file(name, rws):
-        pdf = pd.DataFrame(
-            rws, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-        )
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        schema = pa.schema([
-            ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-            ("user_id", pa.int64()), ("event_type", pa.string()),
-            ("value", pa.float64()), ("props", pa.string()),
-        ])
-        pq.write_table(pa.Table.from_pandas(pdf, schema=schema), str(in_dir / name))
-
-    write_file("b1.parquet", rows[:4])
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .format("parquet").option("maxFilesPerTrigger", 1)
-        .load(str(in_dir))
-    )
-    q = (
-        stateful_funnel(stream, SPEC)
-        .writeStream.format("memory").queryName("pf_out")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "pf_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write_file("b2.parquet", rows[4:])
-        q.processAllAvailable()
-        stream_rows = {}
-        for r in spark.sql("SELECT * FROM pf_out").collect():
-            stream_rows[r["user_id"]] = (r["t_view"], r["t_click"], r["t_purchase"])
-    finally:
-        q.stop()
-
-    assert stream_rows == batch_rows
-    assert batch_rows[1][2] is not None      # the 25.0 purchase converted
-    assert batch_rows[2][2] is None          # the 9.99 purchase did not
+    t = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
+    assert batch_rows == {
+        1: (t(0), t(1), t(3)),   # the 25.0 purchase converted
+        2: (t(0), t(1), None),   # the 9.99 purchase did not
+    }
 
     # the YAML layer refuses a half-portable funnel
     bad = dict(config)
@@ -752,160 +177,8 @@ def test_one_portable_funnel_spec_drives_batch_and_streaming(spark, tmp_path):
         run_pipeline(spark, bad, datasets={"events": events})
 
 
-def test_stateful_transitions_match_batch_bigrams(spark, tmp_path):
-    """Streaming transition extraction == batch lag-window bigrams,
-    including the cross-batch boundary transition carried by state (the
-    row a per-batch window would lose)."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from etl_poc_spark.streaming.stateful import stateful_transitions
-
-    in_dir = tmp_path / "tr_in"
-    in_dir.mkdir()
-
-    def write_file(name, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-        )
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        schema = pa.schema([
-            ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
-            ("user_id", pa.int64()), ("event_type", pa.string()),
-            ("value", pa.float64()), ("props", pa.string()),
-        ])
-        pq.write_table(pa.Table.from_pandas(pdf, schema=schema), str(in_dir / name))
-
-    b1 = [
-        (1, "2024-01-01 00:00:00", 7, "view", 1.0, "{}"),
-        (2, "2024-01-01 00:01:00", 7, "click", 1.0, "{}"),
-        (3, "2024-01-01 00:00:00", 8, "view", 1.0, "{}"),
-    ]
-    b2 = [
-        (4, "2024-01-01 00:02:00", 7, "purchase", 1.0, "{}"),  # boundary: click->purchase
-        (5, "2024-01-01 00:03:00", 8, "error", 1.0, "{}"),     # boundary: view->error
-        (6, "2024-01-01 00:04:00", 8, "view", 1.0, "{}"),
-    ]
-    write_file("b1.parquet", b1)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .format("parquet").option("maxFilesPerTrigger", 1)
-        .load(str(in_dir))
-    )
-    q = (
-        stateful_transitions(stream)
-        .writeStream.format("memory").queryName("tr_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "tr_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write_file("b2.parquet", b2)
-        q.processAllAvailable()
-        got = {}
-        for r in spark.sql("SELECT * FROM tr_out").collect():
-            k = (r["from_type"], r["to_type"])
-            got[k] = got.get(k, 0) + 1
-    finally:
-        q.stop()
-
-    from pyspark.sql import Window
-
-    all_e = spark.createDataFrame(
-        [(e, ts, u, t) for e, ts, u, t, _, _ in b1 + b2],
-        "event_id long, ts string, user_id long, event_type string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    batch = {}
-    for r in (
-        all_e.select(F.lag("event_type").over(w).alias("f"), F.col("event_type").alias("t"))
-        .where(F.col("f").isNotNull())
-        .groupBy("f", "t").count().collect()
-    ):
-        batch[(r["f"], r["t"])] = r["count"]
-    assert got == batch
-    assert ("click", "purchase") in got and ("view", "error") in got  # boundary bigrams
-
-
-def test_streaming_pit_enrich_matches_batch_pit_join(spark, tmp_path):
-    """Streaming PIT enrichment over a merged CDC+facts stream == batch
-    pit_join of the same facts against the SCD2 history of the same
-    changes, including a lookup that crosses the micro-batch boundary."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from etl_poc_spark.operators.scd import pit_join, scd2_from_changes
-    from etl_poc_spark.streaming.stateful import streaming_pit_enrich
-
-    in_dir = tmp_path / "pe_in"
-    in_dir.mkdir()
-    schema = pa.schema([
-        ("k", pa.int64()), ("ts", pa.timestamp("us")), ("is_change", pa.int32()),
-        ("attr", pa.string()), ("fact_id", pa.int64()),
-    ])
-
-    def write_file(name, rows):
-        pdf = pd.DataFrame(rows, columns=["k", "ts", "is_change", "attr", "fact_id"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        pq.write_table(pa.Table.from_pandas(pdf, schema=schema), str(in_dir / name))
-
-    b1 = [
-        (1, "2024-01-01 00:00:00", 1, "bronze", None),
-        (1, "2024-01-01 00:01:00", 0, None, 100),
-        (2, "2024-01-01 00:00:30", 0, None, 101),   # no change yet -> NULL
-    ]
-    b2 = [
-        (1, "2024-01-01 00:02:00", 1, "silver", None),
-        (1, "2024-01-01 00:03:00", 0, None, 102),   # silver
-        (2, "2024-01-01 00:04:00", 0, None, 103),   # still NULL (cross-batch)
-        (1, "2024-01-01 00:05:00", 0, None, 104),   # state carried silver
-    ]
-    write_file("b1.parquet", b1)
-    stream = (
-        spark.readStream.schema("k long, ts timestamp, is_change int, attr string, fact_id long")
-        .format("parquet").option("maxFilesPerTrigger", 1)
-        .load(str(in_dir))
-    )
-    q = (
-        streaming_pit_enrich(stream)
-        .writeStream.format("memory").queryName("pe_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "pe_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write_file("b2.parquet", b2)
-        q.processAllAvailable()
-        got = {r["fact_id"]: r["attr"] for r in spark.sql("SELECT * FROM pe_out").collect()}
-    finally:
-        q.stop()
-
-    all_rows = b1 + b2
-    changes = spark.createDataFrame(
-        [(k, ts, a) for k, ts, c, a, _ in all_rows if c == 1],
-        "k long, ts string, attr string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    facts = spark.createDataFrame(
-        [(fid, k, ts) for k, ts, c, _, fid in all_rows if c == 0],
-        "fact_id long, k long, fts string",
-    ).withColumn("fts", F.to_timestamp("fts"))
-    hist = scd2_from_changes(changes, ["k"], ["attr"], "ts")
-    want = {
-        r["fact_id"]: r["attr"]
-        for r in pit_join(facts, hist, ["k"], "fts", ["attr"]).collect()
-    }
-    assert got == want
-    assert want[100] == "bronze" and want[101] is None
-    assert want[102] == "silver" and want[103] is None and want[104] == "silver"
-
-
 def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
-    """EXACT dedup's streaming twin (near-dup already has all three forms):
-    documents ingested as micro-batches through the fingerprint store fold
+    """EXACT dedup through its foreachBatch handle: documents ingested as micro-batches through the fingerprint store fold
     to the SAME (fp, min_id, n_copies) state as a from-scratch batch
     exact_dedup over everything — and the kept stream holds exactly one
     representative per distinct content, the min-id one."""
@@ -980,7 +253,6 @@ def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
     assert kept_fps.join(fps, ["fp", "id"], "left_semi").count() == n_distinct
 
 
-
 def test_exact_dedup_ingest_tagged_replay_is_idempotent(spark, tmp_path):
     """A replayed tagged batch (crash-before-sink-commit simulation) must
     neither double-count the store nor lose its kept representatives: the
@@ -1016,68 +288,6 @@ def test_exact_dedup_ingest_tagged_replay_is_idempotent(spark, tmp_path):
     assert [r.doc_id for r in kept2.collect()] == [11]
     state = {r.min_id: r.n_copies for r in read_exact_dedup_store(spark, store).collect()}
     assert state == {1: 3, 3: 1, 11: 1}
-
-
-@pytest.mark.slow
-def test_stream_stream_left_outer_interval_join_emits_nulls_after_watermark(
-    spark, tmp_path
-):
-    """LEFT OUTER stream-stream interval join: matched pairs emit as they
-    join; an UNMATCHED left event emits with null right columns only
-    after the watermark passes its interval bound (Spark can't know
-    "no match will come" earlier). A far-future sentinel row on both
-    streams advances the watermark so the tail unmatched rows flush —
-    the operational detail every streaming-outer-join deployment hits."""
-    import time as _time
-    from datetime import datetime
-
-    from etl_poc_spark.streaming.joins import interval_join
-
-    t = lambda m, s=0: datetime(2024, 1, 1, 10, m, s)  # noqa: E731
-    views_dir = tmp_path / "v"
-    clicks_dir = tmp_path / "c"
-    views_dir.mkdir()
-    clicks_dir.mkdir()
-
-    def write(dirp, name, rows, schema):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(dirp / name))
-        _time.sleep(1.1)
-
-    vschema = "user_id long, view_ts timestamp, view_id long"
-    cschema = "user_id long, click_ts timestamp, click_id long"
-    # batch 1: two views; only user 1's gets a click within 10 minutes
-    write(views_dir, "f1", [(1, t(0), 100), (2, t(1), 200)], vschema)
-    write(clicks_dir, "f1", [(1, t(5), 900)], cschema)
-    # batch 2: far-future sentinels push both watermarks past t(1)+10min
-    write(views_dir, "f2", [(9, t(59), 999)], vschema)
-    write(clicks_dir, "f2", [(9, t(59, 1), 998)], cschema)
-
-    views_s = spark.readStream.schema(vschema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(str(views_dir) + "/*")
-    clicks_s = spark.readStream.schema(cschema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(str(clicks_dir) + "/*")
-    joined = interval_join(
-        views_s, clicks_s, "user_id", "view_ts", "click_ts",
-        max_delay="10 minutes", watermark="1 minute", how="leftOuter",
-    ).select("user_id", "view_id", "click_id")
-    q = (
-        joined.writeStream.format("memory").queryName("ssoj")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["user_id"], r["view_id"]): r["click_id"]
-        for r in spark.sql("SELECT * FROM ssoj").collect()
-    }
-    # user 1 matched; user 2's view flushed as unmatched (null click)
-    assert got[(1, 100)] == 900
-    assert (2, 200) in got and got[(2, 200)] is None
 
 
 def test_streaming_exact_dedup_replayed_batch_does_not_duplicate_kept(
