@@ -1,7 +1,7 @@
 """Benchmark runner: executes the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 final JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"q": {headline_query: sec, ...}, "sf": ...} — the compact 22-entry
+"queries": {headline_query: sec, ...}, "sf": ...} — the compact 22-entry
 headline map keeps the line inside the driver's ~2000-char tail capture
 (the full 221-query map lives in the BENCH_GATE artifact and in an
 earlier stdout line).
@@ -347,7 +347,7 @@ def main() -> None:
                 "headline_incomplete": bool(headline_errs),
                 "sf": float(sf) if sf else sf_dir,
                 "cal": [cal_start, cal_end],
-                "q": headline_q,
+                "queries": headline_q,
                 "full_report": os.path.basename(out_path),
             },
             separators=(",", ":"),

@@ -4,6 +4,7 @@ from etl_poc_spark.operators.dedup import (  # noqa: F401
     lsh_candidate_pairs,
     minhash_signatures,
     shingle_docs,
+    shingle_sets,
     verify_jaccard,
 )
 from etl_poc_spark.operators.similarity import cosine_topk, ivf_cosine_topk  # noqa: F401

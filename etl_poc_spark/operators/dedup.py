@@ -4,11 +4,11 @@ Three tiers, all DataFrame-native:
 
 - exact_dedup: hash-groupBy on a content fingerprint. One shuffle on the
   fingerprint; map-side partial aggregation makes it cheap even at 100 TB.
-- MinHash + LSH near-dedup: shingle -> k minhashes -> band -> bucket
-  self-join -> jaccard verification. The bucket join is an equi-join on
-  (band, band_value), so Catalyst shuffles only candidate buckets — never
-  the O(n^2) pair space. Skewed buckets (degenerate band values) are
-  handled by AQE skew-join splitting.
+- MinHash + LSH near-dedup on one row per document holding its distinct
+  shingle array (`shingle_sets`): minhashes and bands are row-local, so
+  the first shuffle is the bucket self-join, an equi-join on (band,
+  band_value) — never the O(n^2) pair space. Skewed buckets (degenerate
+  band values) are handled by AQE skew-join splitting.
 - verify_jaccard: exact set-jaccard on candidate pairs only.
 
 Hash choice: the default `hash_mode="md5"` produces signatures as hex
@@ -64,50 +64,63 @@ def keep_best_per_group(
     )
 
 
+def shingle_sets(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shingle_words: int = 3,
+) -> DataFrame:
+    """(id, shingles): one row per document (`id_col` is a key) holding its
+    distinct word-`shingle_words`-gram array; no shuffle. Documents with
+    fewer than `shingle_words` tokens produce no row (too short to
+    near-dedup on)."""
+    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    shingles = F.expr(
+        f"array_distinct(transform(sequence(0, size(__words) - {shingle_words}), "
+        f"i -> concat_ws(' ', slice(__words, i + 1, {shingle_words}))))"
+    )
+    return (
+        df.select(F.col(id_col), words.alias("__words"))
+        .filter(F.size("__words") >= shingle_words)
+        .select(F.col(id_col), shingles.alias("shingles"))
+    )
+
+
 def shingle_docs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_words: int = 3,
 ) -> DataFrame:
-    """Distinct word-`shingle_words`-gram shingles per document.
-
-    Documents with fewer than `shingle_words` tokens produce no shingles
-    (they are too short to near-dedup on).
-    """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    shingles = F.expr(
-        f"transform(sequence(0, size(__words) - {shingle_words}), "
-        f"i -> concat_ws(' ', slice(__words, i + 1, {shingle_words})))"
-    )
+    """(id, shingle) rows, distinct: the inverted-index shape."""
     return (
-        df.select(F.col(id_col), words.alias("__words"))
-        .filter(F.size("__words") >= shingle_words)
-        .select(F.col(id_col), F.explode(shingles).alias("shingle"))
+        shingle_sets(df, id_col, text_col, shingle_words)
+        .select(F.col(id_col), F.explode("shingles").alias("shingle"))
         .distinct()
     )
 
 
 def minhash_signatures(
-    shingles: DataFrame,
+    sets: DataFrame,
     id_col: str = "doc_id",
     n_hashes: int = 8,
     hash_mode: str = "md5",
 ) -> DataFrame:
-    """k minhash values per document: for each seed, MIN over the document's
-    shingles of hash(seed || '|' || shingle). Output: (id, seed, minhash)."""
-    seeds = F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("seed")
-    seeded = shingles.select(F.col(id_col), F.col("shingle"), seeds)
-    salted = F.concat(F.col("seed").cast("string"), F.lit("|"), F.col("shingle"))
+    """(id, shingles) -> (id, minhashes): element `seed` is the MIN over the
+    document's shingles of hash(seed || '|' || shingle); no shuffle."""
     if hash_mode == "md5":
-        h = F.md5(salted)
+        h = F.md5
     elif hash_mode == "xxhash64":
-        h = F.xxhash64(salted)
+        h = F.xxhash64
     else:
         raise ValueError(f"unknown hash_mode {hash_mode!r}")
-    return seeded.select(F.col(id_col), F.col("seed"), h.alias("__h")).groupBy(id_col, "seed").agg(
-        F.min("__h").alias("minhash")
+    minhashes = F.transform(
+        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
+        lambda seed: F.array_min(
+            F.transform("shingles", lambda sh: h(F.concat(seed.cast("string"), F.lit("|"), sh)))
+        ),
     )
+    return sets.select(F.col(id_col), minhashes.alias("minhashes"))
 
 
 def cap_buckets(
@@ -143,31 +156,29 @@ def cap_buckets(
     return banded.join(ok, bucket_cols, "left_semi")
 
 
-def lsh_band_signatures(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """(id, seed, minhash) -> (id, band, band_val): concatenate each band's
-    `rows_per_band` minhashes into one joinable band value. The shared first
-    stage of the self-join pair search AND the incremental store filter."""
-    return signatures.groupBy(
-        F.col(id_col), (F.col("seed") / rows_per_band).cast("int").alias("band")
-    ).agg(F.concat_ws("", F.sort_array(F.collect_list(F.concat_ws(":", F.col("seed"), F.col("minhash"))))).alias("band_val"))
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
     rows_per_band: int = 2,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Band the signature (seed DIV rows_per_band) and self-join on equal
-    band values -> distinct candidate pairs (id_a < id_b).
+    """Band the (id, minhashes) signatures (one posexplode per document) and
+    self-join on equal band values -> distinct candidate pairs (id_a < id_b). Band b
+    holds seeds b*rows_per_band .. (b+1)*rows_per_band - 1 (the last may be
+    partial); its band_val concatenates the sorted "seed:minhash" strings.
 
     `max_bucket_size` (recommended at scale) drops oversized (band, band_val)
     buckets before the self-join — see cap_buckets."""
-    banded = lsh_band_signatures(signatures, id_col, rows_per_band)
+    r = rows_per_band
+    band_vals = F.expr(
+        f"transform(sequence(0, (size(minhashes) - 1) div {r}), b -> "
+        f"concat_ws('', array_sort(transform("
+        f"sequence(b * {r}, least(b * {r} + {r}, size(minhashes)) - 1), "
+        f"s -> concat_ws(':', cast(s AS STRING), cast(minhashes[s] AS STRING))))))"
+    )
+    banded = signatures.select(
+        F.col(id_col), F.posexplode(band_vals).alias("band", "band_val")
+    )
     # tracked pin: feeds the bucket-size probe and both self-join sides;
     # callers drop it with operators.pins.release_pins() after their action
     banded = pin(banded)
@@ -336,29 +347,29 @@ def simhash64_near_dup_pairs(
 
 
 def verify_jaccard(
-    shingles: DataFrame,
+    sets: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Exact jaccard over shingle sets for candidate pairs only; keeps pairs
-    with 10*intersection >= threshold*10*union (integer comparison — no
-    float boundary ambiguity) and emits the exact jaccard as a double."""
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sh_a = shingles.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = shingles.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    """Exact jaccard of each candidate pair's two shingle sets; keeps pairs
+    sharing a shingle with 1000*intersection >= round(1000*threshold)*union
+    (integer comparison — no float boundary ambiguity) and emits the exact
+    jaccard as a double."""
+    a = sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
+    b = sets.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    n_union = F.size("sh_a") + F.size("sh_b") - F.col("n_inter")
     thr_num = int(round(threshold * 1000))
     return (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        .filter(F.col("n_inter") * 1000 >= F.lit(thr_num) * F.col("n_union"))
+        pairs.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("n_inter", n_inter)
+        .withColumn("n_union", n_union)
+        .filter(
+            (F.col("n_inter") > 0)
+            & (F.col("n_inter") * 1000 >= F.lit(thr_num) * F.col("n_union"))
+        )
         .select(
             "id_a",
             "id_b",

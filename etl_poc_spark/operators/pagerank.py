@@ -1,25 +1,31 @@
 """Distributed PageRank by power iteration (the iterative-algorithm tier
 next to operators/dedup.py::connected_components).
 
-Spark-first shape per iteration: one join (ranks -> edges on src) and one
-groupBy(dst) — both shuffles on the edge keys, with map-side combine on
-the contribution sum. Rank state is one (vertex, rank) frame; the deduped edge
-frame is pinned inside the operator — verts, out-degrees, and every
-iteration read it, and unpinned each reader would re-execute the
-caller's edge-building lineage. Lineage is cut with an eager checkpoint
-of the per-iteration rank state, which is the ONLY per-iteration action:
-the dangling-vertex mass is folded in-plan as a 1-row aggregate broadcast
-into the rank update (no driver-side collect per iteration).
+Rank state is one row per vertex, (vertex, nbrs, rank), where `nbrs` is the
+distinct out-neighbour array (empty for a dangling vertex). The adjacency
+travels inside the state, so an iteration joins nothing: it is ONE groupBy
+over exploded rows — a self row carrying `nbrs` (so every vertex survives,
+in-edges or not), one (dst, rank/size(nbrs)) row per out-neighbour, and for
+a dangling vertex one row carrying its rank under the dangling key. The
+key is (vertex, dangling flag); dangling rows group under (null, true),
+which no vertex row (flag false) can share whatever the id type. That
+group's sum is the dangling mass D, read by one driver collect of the
+single row, so D is neither joined nor broadcast back. The rank addends
+are (1-d)/n + d·D/n + d·s(v), s(v) being the contributions summed into v.
+
+Jobs: setup is the adjacency groupBy plus a count for n; each iteration is
+the aggregate's shuffle-map stage plus the D collect (two jobs). The
+aggregate is checkpointed lazily, so that collect also materializes the
+checkpoint and the next iteration's plan starts from it.
 
 Checkpoint modes (the local-vs-cluster durability trade-off):
 
-* default (`checkpoint_dir=None`): `localCheckpoint(eager=True)` — blocks
-  live in executor storage. Fastest on local[*]; on a real cluster an
-  executor loss mid-iteration loses blocks that, with lineage cut, cannot
-  be recomputed, failing the job.
-* reliable (`checkpoint_dir="hdfs://..."`): `df.checkpoint(eager=True)`
-  to a fault-tolerant filesystem. Survives executor loss — the mode to use
-  for long iterative jobs on a 1000-executor cluster, at the cost of one
+* default (`checkpoint_dir=None`): `localCheckpoint` — blocks live in
+  executor storage. Fastest on local[*]; on a real cluster an executor
+  loss mid-iteration loses blocks that, with lineage cut, cannot be
+  recomputed, failing the job.
+* reliable (`checkpoint_dir="hdfs://..."`): `df.checkpoint` to a
+  fault-tolerant filesystem. Survives executor loss, at the cost of one
   distributed write per iteration.
 
 Dangling vertices (no out-edges) donate their mass uniformly to every
@@ -27,19 +33,14 @@ vertex each iteration — the standard stochastic-matrix fix; without it
 rank mass leaks and the vector no longer sums to 1.
 
 Numeric note: rank values are doubles whose partial-sum order varies by
-partitioning, so PageRank is registered rows-only (no DuckDB oracle) —
-the iterative/float class the correctness gate documents as weaker;
-behavior is pinned by closed-form pytest cases instead.
+partitioning; the registered supplier_pagerank query rounds them to 9
+digits, which absorbs that (the adversarial-session gate pins it).
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from etl_poc_spark.operators.pins import pin
 
 
 def pagerank(
@@ -49,106 +50,60 @@ def pagerank(
     n_iter: int = 10,
     damping: float = 0.85,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int | None = None,
-    cut_every: int = 1,
 ) -> DataFrame:
     """Ranks for every vertex appearing in `edges` (directed, unweighted;
-    parallel edges count once). Returns (vertex, rank) with sum(rank)=1
-    up to float error.
+    parallel edges count once; rows with a null endpoint are not edges).
+    Returns (vertex, rank) with sum(rank)=1 up to float error.
 
     checkpoint_dir: when set, per-iteration state is checkpointed reliably
     to this fault-tolerant directory (survives executor loss); when None,
     executor-local checkpoint (fast, not fault-tolerant).
-    checkpoint_every: deprecated and ignored; accepted for one release
-    for caller compatibility.
-    cut_every: checkpoint (materialize) the rank state every this many
-    iterations; in between, the state is lazily PINNED instead. r17
-    measured the guide-§5 lineage-cap-vs-job-overhead trade at k=1/2/5
-    on supplier_pagerank (5 iterations, pin-cold 3-run medians, one
-    session): k=1 → 7.4s, k=2 → 9.4s, k=5 → 11.6s — the per-iteration
-    eager cut WINS here, because every un-cut iteration's subplan is
-    referenced by two consumers (the contribs join and the dangling
-    broadcast build) and the nested re-evaluation costs more than the
-    checkpoint job it saves. Default stays 1 (the r16 shape); the knob
-    remains for cluster deployments where a checkpoint is a distributed
-    write and the trade can flip. The rank ADDENDS are unchanged under
-    any k — chaining changes when materialization happens, not what is
-    summed (round(rank, 9) + the adversarial gate pin that invariance).
     """
-    if checkpoint_every is not None:
-        warnings.warn(
-            "pagerank(checkpoint_every=...) is deprecated and ignored; "
-            "see cut_every",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-    if cut_every < 1:
-        raise ValueError("cut_every must be >= 1")
-    # pin the deduped edge list: verts, out_deg, and EVERY iteration's
-    # contribs join read it — unpinned, each of those re-executes the
-    # caller's edge-building lineage (a fact-table join for the registered
-    # supplier_pagerank query). At cluster scale this is the materialized
-    # edge table every graph engine starts from.
-    e = pin(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct())
-    verts = pin(
-        e.select(F.col("src").alias("vertex"))
-        .union(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
-    n = verts.count()  # bounded: one long per vertex partition-count, a count()
-    out_deg = pin(
-        e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).select(
-            F.col("src").alias("od_src"), "deg"
-        )
-    )
     if checkpoint_dir is not None:
         edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
     def _cut(df: DataFrame) -> DataFrame:
-        # the single per-iteration materialization: caps plan depth at one
-        # iteration and stops each iteration re-executing the whole chain
-        # (both the contribs join and the dangling aggregate read it)
+        # lazy: the next action on the frame (the count / D collect below)
+        # materializes it, so the checkpoint costs no job of its own
         if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+            return df.checkpoint(eager=False)
+        return df.localCheckpoint(eager=False)
 
-    # r16 optimization (guide §2.4): the (vertex -> deg) lookup is LOOP-
-    # INVARIANT, so join it once and carry `deg` inside the iterated state
-    # instead of re-joining ranks against out_deg every iteration — one
-    # join (and its shuffle at cluster scale) per iteration removed. The
-    # rank update reads the same addends as before; double partial-sum
-    # order may differ by partitioning exactly as it already did between
-    # sessions, which the registered query's round(rank, 9) absorbs (the
-    # adversarial-session gate pins that invariance).
-    vd = pin(
-        verts.join(out_deg, verts.vertex == out_deg.od_src, "left").drop("od_src")
+    e = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+    ends = e.select(F.col(src).alias("vertex"), F.col(dst).alias("nb")).union(
+        e.select(F.col(dst).alias("vertex"), F.lit(None).alias("nb"))
     )
-    state = vd.select("vertex", "deg", F.lit(1.0 / n).alias("rank"))
-    for it in range(n_iter):
-        state = _cut(state) if it % cut_every == 0 else pin(state)
-        contribs = (
-            state.where(F.col("deg").isNotNull())
-            .join(e, F.col("vertex") == e.src)
-            .select(F.col("dst").alias("vertex"), (F.col("rank") / F.col("deg")).alias("c"))
+    vtype = ends.schema["vertex"].dataType
+    adj = _cut(ends.groupBy("vertex").agg(F.collect_set(F.col("nb").cast(vtype)).alias("nbrs")))
+    n = adj.count()
+    state = adj.select("vertex", "nbrs", F.lit(1.0 / n).alias("rank"))
+
+    def _row(k, dangling: bool, nbrs, c):
+        return F.struct(k.alias("k"), F.lit(dangling).alias("dangling"), nbrs.alias("nbrs"), c.alias("c"))
+
+    no_nbrs = F.lit(None).cast(state.schema["nbrs"].dataType)
+    deg, rank = F.size("nbrs"), F.col("rank")
+    rows = F.concat(
+        F.array(_row(F.col("vertex"), False, F.col("nbrs"), F.lit(None).cast("double"))),
+        F.when(deg == 0, F.array(_row(F.lit(None).cast(vtype), True, no_nbrs, rank))).otherwise(
+            F.transform("nbrs", lambda x: _row(x, False, no_nbrs, rank / deg))
+        ),
+    )
+    for _ in range(n_iter):
+        agg = _cut(
+            state.select(F.explode(rows).alias("r")).select("r.*").groupBy("k", "dangling")
+            .agg(F.first("nbrs", ignorenulls=True).alias("nbrs"), F.sum("c").alias("s"))
         )
-        # dangling mass: ONE double, folded in-plan as a 1-row aggregate
-        # broadcast into the rank update — no extra driver action per
-        # iteration (the misc_q.py scalar-crossJoin pattern)
-        dangling = state.where(F.col("deg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling_m")
+        # the one driver action per iteration: D, read from the (null,
+        # true) row; it also materializes the checkpoint of `agg`
+        d_rows = agg.where(F.col("dangling")).select("s").collect()
+        dangling_m = d_rows[0]["s"] if d_rows else 0.0
+        state = agg.where(~F.col("dangling")).select(
+            F.col("k").alias("vertex"), "nbrs",
+            (
+                F.lit((1.0 - damping) / n)
+                + F.lit(damping) * F.lit(dangling_m) / F.lit(float(n))
+                + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+            ).alias("rank"),
         )
-        summed = contribs.groupBy("vertex").agg(F.sum("c").alias("s"))
-        state = (
-            vd.join(summed, "vertex", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "vertex",
-                "deg",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("_dangling_m") / F.lit(float(n))
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-    return state.select("vertex", "rank")  # pins release via release_pins()
+    return state.select("vertex", "rank")

@@ -331,14 +331,14 @@ def _near_dedup(df: DataFrame, op: dict[str, Any], ctx: _OpContext) -> DataFrame
         lsh_candidate_pairs,
         minhash_signatures,
         near_dup_keep_best,
-        shingle_docs,
+        shingle_sets,
     )
 
     id_col = op.get("id", "doc_id")
     text_col = op.get("text_key", "text")
-    sh = shingle_docs(df, id_col, text_col, int(op.get("shingle_words", 3)))
+    sets = shingle_sets(df, id_col, text_col, int(op.get("shingle_words", 3)))
     sigs = minhash_signatures(
-        sh, id_col, n_hashes=int(op.get("n_hashes", 8)), hash_mode="xxhash64"
+        sets, id_col, n_hashes=int(op.get("n_hashes", 8)), hash_mode="xxhash64"
     )
     pairs = lsh_candidate_pairs(
         sigs, id_col, int(op.get("rows_per_band", 2)),

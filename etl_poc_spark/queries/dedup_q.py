@@ -18,6 +18,7 @@ from etl_poc_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     shingle_docs,
+    shingle_sets,
     verify_jaccard,
 )
 from etl_poc_spark.operators.pins import pin
@@ -161,13 +162,13 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the oracle), so a degenerate band value cannot turn it quadratic.
     (Production hash_mode='xxhash64' variant benched separately.)"""
     corpus = _near_dup_corpus(spark, sf_dir)
-    # the shingle and band frames each feed two plan branches (self-join /
-    # verify); persist so the expensive md5+explode pipeline runs once —
-    # at cluster scale these would be checkpointed parquet stage tables
-    sh = pin(shingle_docs(corpus, "doc_id", "text", shingle_words=3))
-    sig = minhash_signatures(sh, "doc_id", n_hashes=8, hash_mode="md5")
+    # the per-document shingle sets feed two plan branches (signatures /
+    # verify); persist so the shingling runs once — at cluster scale this
+    # would be a checkpointed parquet stage table
+    sets = pin(shingle_sets(corpus, "doc_id", "text", shingle_words=3))
+    sig = minhash_signatures(sets, "doc_id", n_hashes=8, hash_mode="md5")
     pairs = lsh_candidate_pairs(sig, "doc_id", rows_per_band=2, max_bucket_size=50)
-    return verify_jaccard(sh, pairs, "doc_id", threshold=0.8)
+    return verify_jaccard(sets, pairs, "doc_id", threshold=0.8)
 
 
 @query(
@@ -443,10 +444,10 @@ def near_dup_keep_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _quality_near_dup_corpus(spark, sf_dir).withColumn(
         "n_tokens", F.size(F.split(F.trim(F.col("text")), r"\s+"))
     )
-    sh = pin(shingle_docs(corpus, "doc_id", "text", shingle_words=3))
-    sig = minhash_signatures(sh, "doc_id", n_hashes=8, hash_mode="md5")
+    sets = pin(shingle_sets(corpus, "doc_id", "text", shingle_words=3))
+    sig = minhash_signatures(sets, "doc_id", n_hashes=8, hash_mode="md5")
     cand = lsh_candidate_pairs(sig, "doc_id", rows_per_band=2, max_bucket_size=50)
-    pairs = verify_jaccard(sh, cand, "doc_id", threshold=0.8).select("id_a", "id_b")
+    pairs = verify_jaccard(sets, cand, "doc_id", threshold=0.8).select("id_a", "id_b")
     kept = near_dup_keep_best(corpus, pairs, "n_tokens", "doc_id")
     removed = corpus.join(kept.select("doc_id"), "doc_id", "left_anti")
     return removed.select(

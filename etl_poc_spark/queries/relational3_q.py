@@ -417,13 +417,10 @@ def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
-        )
-        .distinct()
+    # parallel edges count once inside pagerank (its adjacency is a set)
+    edges = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
+        F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
     )
     ranks = pagerank(edges, n_iter=5).withColumn("rank", F.round("rank", 9))
     return (

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from etl_poc_spark.functions.text import slugify, word_count
 from etl_poc_spark.operators.chunker import chunk_by_tokens
-from etl_poc_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures, shingle_docs, verify_jaccard
+from etl_poc_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures, shingle_sets, verify_jaccard
 from etl_poc_spark.operators.pins import _PINNED, release_pins
 from etl_poc_spark.operators.similarity import cosine_topk
 
@@ -36,10 +36,10 @@ def test_minhash_finds_near_dup_and_skips_distinct(spark):
     near = " ".join(f"tok{i}" for i in range(1, 50))  # first token dropped
     other = " ".join(f"zzz{i}" for i in range(50))
     df = spark.createDataFrame([(1, base), (2, near), (3, other)], "doc_id int, text string")
-    sh = shingle_docs(df)
-    sig = minhash_signatures(sh)
+    sets = shingle_sets(df)
+    sig = minhash_signatures(sets)
     pairs = lsh_candidate_pairs(sig)
-    verified = verify_jaccard(sh, pairs, threshold=0.8).collect()
+    verified = verify_jaccard(sets, pairs, threshold=0.8).collect()
     assert [(r["id_a"], r["id_b"]) for r in verified] == [(1, 2)]
     assert verified[0]["jaccard"] > 0.9
 
@@ -133,8 +133,7 @@ def test_lsh_bucket_cap_drops_oversized_buckets(spark):
         [(i, " ".join(f"tok{j}" for j in range(20))) for i in range(60)],
         "doc_id int, text string",
     )
-    sh = shingle_docs(df)
-    sig = minhash_signatures(sh)
+    sig = minhash_signatures(shingle_sets(df))
     uncapped = lsh_candidate_pairs(sig)
     assert uncapped.count() == 60 * 59 // 2
     capped = lsh_candidate_pairs(sig, max_bucket_size=10)
@@ -462,8 +461,8 @@ def test_pin_tracking_releases_persisted_frames(spark):
         "doc_id int, text string",
     )
     release_pins()  # clean slate
-    sh = shingle_docs(docs, "doc_id", "text", shingle_words=3)
-    sig = minhash_signatures(sh, "doc_id", n_hashes=4)
+    sets = shingle_sets(docs, "doc_id", "text", shingle_words=3)
+    sig = minhash_signatures(sets, "doc_id", n_hashes=4)
     pairs = lsh_candidate_pairs(sig, "doc_id", rows_per_band=2)
     pairs.count()  # the action that populates the pinned banded frame
     assert len(_PINNED) >= 1
@@ -546,10 +545,7 @@ def test_pagerank_closed_forms_and_mass(spark):
 
 def test_pagerank_reliable_checkpoint_mode(spark, tmp_path):
     """The cluster-durable mode (checkpoint_dir -> df.checkpoint) computes
-    the same ranks as the default localCheckpoint mode, and the deprecated
-    checkpoint_every kwarg is accepted-but-ignored with a warning."""
-    import warnings
-
+    the same ranks as the default localCheckpoint mode."""
     from etl_poc_spark.operators.pagerank import pagerank
     from etl_poc_spark.operators.pins import release_pins
 
@@ -570,16 +566,6 @@ def test_pagerank_reliable_checkpoint_mode(spark, tmp_path):
         assert abs(local[v] - reliable[v]) < 1e-12
     # reliable mode actually wrote checkpoint data
     assert any((tmp_path / "ckpt").rglob("*"))
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        r = {
-            x["vertex"]: x["rank"]
-            for x in pagerank(e, n_iter=2, checkpoint_every=3).collect()
-        }
-        release_pins()
-    assert any(issubclass(x.category, DeprecationWarning) for x in w)
-    assert abs(sum(r.values()) - 1.0) < 1e-6
 
 
 def test_funnel_strict_ordering(spark):

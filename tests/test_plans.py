@@ -248,7 +248,6 @@ def test_no_unplanned_cartesian_or_nested_loop_joins(spark, sf_dir):
         "kmv_distinct_users",   # 1-row sketch x 1-row exact-count scalar join
         "price_quantiles_histogram",  # 5-literal-row quantile probe x <=1000-bin frame
         "dormant_rich_customers",  # 1-row decorrelated scalar-average threshold join
-        "supplier_pagerank",    # 1-row dangling-mass scalar join per power iteration
         "vocab_stats",          # 1-row corpus-size scalar join for df_ratio
         "orders_expectations",  # 1-row FK-orphan count x 1-row total scalar join
         "part_copurchase_triangles",  # two 1-row count scalar joins
