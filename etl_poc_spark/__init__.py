@@ -11,7 +11,9 @@ Layout:
   llm/          llm_map / llm_reduce machinery with a deterministic stub provider
   plans/        YAML pipeline front-end (datasets/operations/steps -> DataFrame)
   sinks/        JSON / markdown-dir / error-quarantine sinks
-  multimodal/   binary-column (image/audio) plumbing with stubbed decoders
+  sources/      jsonl_tail streaming DataSource over a landing directory
+  multimodal/   binary-column (image/audio) plumbing: real PPM/BMP/PNG and
+                WAV PCM decoders, deterministic fallback for the rest
 """
 
 __version__ = "0.1.0"

@@ -4,16 +4,11 @@ Same posture as `imagecodec`: formats the Python stdlib can genuinely
 PARSE are decoded for REAL (RIFF/WAVE PCM via the `wave` module);
 everything else (mp3, ogg, flac — all need entropy coders the stdlib
 lacks) is the caller's honest-fallback problem. The per-sample math is
-numpy-vectorized (r17, guide §4.2 — numpy is already a hard dependency
-of the Arrow/pandas path these kernels run inside). For 1-, 2- and
-4-channel PCM it is EXACT, not just close: every mono sample is then a
-dyadic rational v / 2^k with |Σ v²| < 2^53 under the MAX_SAMPLES cap,
-so every partial sum — in any association order, numpy pairwise or
-Python sequential — is exactly representable and the results are
-bit-identical to the scalar loops they replaced (the pinned
-audio_feature_stats values are unchanged). Other channel counts divide
-by a non-power of two, so the mono samples are rounded and the sum of
-squares can differ from a sequential sum in the last ulp.
+numpy-vectorized (numpy is already a hard dependency of the
+Arrow/pandas path these kernels run inside) and EXACT for every channel
+count: the decoder keeps each frame's channel sum as an integer, the
+statistics sum squares in exact integers, and the one division by
+n_channels * full_scale happens last, correctly rounded.
 
 Reference tie-in: the reference pipeline is text-only
 (`airflow/dags/zara_hybrid_etl.py`); audio columns are part of the
@@ -46,16 +41,14 @@ def sniff_audio_format(data: bytes) -> str:
     return "unknown"
 
 
-def decode_wav(data: bytes) -> tuple[int, int, int, "np.ndarray"]:
-    """RIFF/WAVE PCM -> (sample_rate, n_channels, n_frames, mono float64
-    samples in [-1, 1], first MAX_SAMPLES frames, channels averaged).
-    Raises wave.Error (non-WAV or compressed input), EOFError (truncated
-    header) or ValueError (unsupported sample width, odd-length PCM) —
-    callers map those to their fallback, mirroring imagecodec.
-
-    Vectorized (r17), value-identical to the scalar loop it replaced:
-    int16/uint8 decode is a reinterpret, the per-frame channel average is
-    an exact small-integer sum followed by the same single division."""
+def decode_wav(data: bytes) -> tuple[int, int, int, "np.ndarray", int]:
+    """RIFF/WAVE PCM -> (sample_rate, n_channels, n_frames, frame_sums,
+    divisor): frame_sums holds each of the first MAX_SAMPLES frames'
+    channel sum as int64, and frame_sums / divisor is the mono signal in
+    [-1, 1] (divisor = n_channels * full scale). Raises wave.Error
+    (non-WAV or compressed input), EOFError (truncated header) or
+    ValueError (unsupported sample width, odd-length PCM) — callers map
+    those to their fallback, mirroring imagecodec."""
     with wave.open(io.BytesIO(data), "rb") as w:
         sr, nch, width, nframes = (
             w.getframerate(), w.getnchannels(), w.getsampwidth(), w.getnframes(),
@@ -66,33 +59,34 @@ def decode_wav(data: bytes) -> tuple[int, int, int, "np.ndarray"]:
         raw = w.readframes(take)
     if width == 2:
         vals = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-        scale = 32768.0
+        scale = 32768
     else:  # 8-bit WAV PCM is unsigned
         vals = np.frombuffer(raw, dtype=np.uint8).astype(np.int64) - 128
-        scale = 128.0
-    if nch > 1:
-        frames = vals[: (len(vals) // nch) * nch].reshape(-1, nch)
-        mono = frames.sum(axis=1) / (nch * scale)
-    else:
-        mono = vals / scale
-    return sr, nch, nframes, mono
+        scale = 128
+    sums = vals[: (len(vals) // nch) * nch].reshape(-1, nch).sum(axis=1)
+    return sr, nch, nframes, sums, nch * scale
 
 
-def audio_stats(samples) -> tuple[float, float, float]:
-    """(rms, peak, zero_crossing_rate) of a mono sample array; zeros for
-    an empty one. Vectorized over the capped prefix — bounded CPU per
-    file, and EXACT for 1-, 2- and 4-channel PCM input (see module
-    docstring: dyadic samples keep every partial sum of squares under
-    2^53, so numpy's pairwise summation computes the same exact value
-    the sequential Python sum did, and sqrt/abs/max are correctly-
-    rounded per IEEE either way)."""
-    s = np.asarray(samples, dtype=np.float64)
-    n = s.size
+def audio_stats(frame_sums, divisor: int) -> tuple[float, float, float]:
+    """(rms, peak, zero_crossing_rate) of the mono signal
+    frame_sums / divisor; zeros for an empty one. Vectorized over the
+    capped prefix, so CPU per file is bounded.
+
+    Exact for every channel count: the sum of squares is an exact
+    integer (int64 dot products over chunks too short to overflow,
+    added as Python ints), the mean square is one correctly rounded
+    int/int division, and peak is one correctly rounded division of the
+    largest |frame sum|."""
+    f = np.asarray(frame_sums, dtype=np.int64)
+    n = f.size
     if n == 0:
         return 0.0, 0.0, 0.0
-    rms = float((np.dot(s, s) / n) ** 0.5)
-    peak = float(np.max(np.abs(s)))
-    neg = s < 0
+    # |f| <= divisor, so `per` squares cannot overflow an int64 sum
+    per = max(1, (2**63 - 1) // (divisor * divisor))
+    ssq = sum(int(np.dot(c, c)) for c in (f[i : i + per] for i in range(0, n, per)))
+    rms = float(np.float64(ssq / (n * divisor * divisor)) ** 0.5)
+    peak = int(np.max(np.abs(f))) / divisor
+    neg = f < 0
     crossings = int(np.count_nonzero(neg[:-1] != neg[1:]))
     zcr = crossings / (n - 1) if n > 1 else 0.0
     return rms, peak, zcr

@@ -14,9 +14,9 @@ evaluation order.
 Formats a standard library can fully handle:
 
 - PPM (P6, 8-bit): decode + encode
-- BMP (24-bit uncompressed BI_RGB): decode + encode
-- PNG (8-bit truecolor RGB/RGBA, non-interlaced): decode + encode via zlib
-  (all five scanline filters on decode)
+- BMP (24-bit uncompressed BI_RGB): decode
+- PNG (8-bit truecolor RGB/RGBA, non-interlaced): decode via zlib, all
+  five scanline filters
 
 plus the two real kernels the media operators need:
 
@@ -122,21 +122,6 @@ def decode_bmp(data: bytes) -> tuple[int, int, bytes]:
     return w, h, rows[:, :, ::-1].tobytes()
 
 
-def encode_bmp(w: int, h: int, rgb: bytes) -> bytes:
-    if len(rgb) != w * h * RGB_BPP:
-        raise ValueError("rgb length does not match dimensions")
-    stride = (w * RGB_BPP + 3) & ~3
-    pixel_bytes = stride * h
-    header = b"BM" + struct.pack("<IHHI", 54 + pixel_bytes, 0, 0, 54)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, pixel_bytes, 2835, 2835, 0, 0)
-    # vectorized (r17): RGB->BGR swap, bottom-up row order, right-pad each
-    # row to the 4-byte stride — byte-identical to the scalar loop
-    px = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, RGB_BPP)
-    body = np.zeros((h, stride), dtype=np.uint8)
-    body[:, : w * RGB_BPP] = px[::-1, :, ::-1].reshape(h, w * RGB_BPP)
-    return header + dib + body.tobytes()
-
-
 # --- PNG (8-bit truecolor, non-interlaced) ----------------------------------
 
 
@@ -211,25 +196,6 @@ def decode_png(data: bytes) -> tuple[int, int, bytes]:
         return w, h, px
     # vectorized RGBA->RGB strip (r17): same bytes, no per-pixel loop
     return w, h, np.frombuffer(px, dtype=np.uint8).reshape(-1, 4)[:, :3].tobytes()
-
-
-def encode_png(w: int, h: int, rgb: bytes) -> bytes:
-    if len(rgb) != w * h * RGB_BPP:
-        raise ValueError("rgb length does not match dimensions")
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
-        return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    stride = w * RGB_BPP
-    raw = b"".join(b"\x00" + rgb[r * stride : (r + 1) * stride] for r in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
 
 
 # --- dispatch + kernels -----------------------------------------------------

@@ -5,9 +5,9 @@ Design: image/audio/video are opaque `binary` columns (from
 metadata structs produced by Arrow-batched pandas UDFs over mapInPandas.
 
 The image kernels are REAL for the stdlib-decodable formats (PPM/BMP/PNG —
-see imagecodec.py): actual pixel decode, nearest-neighbor resize, and
-luminance-histogram features. Formats needing an external library (JPEG
-entropy coding, video) fall back to a deterministic content-hash fake so
+see imagecodec.py): actual pixel decode, luminance-histogram features and
+perceptual hashes. Formats needing an external library (JPEG entropy
+coding, video) fall back to a deterministic content-hash fake so
 pipelines still run end to end; `strict=True` raises at the decode seam
 instead. Every output row carries a `decoded` flag telling the two apart.
 
@@ -24,33 +24,10 @@ from struct import error as struct_error
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from etl_poc_spark.multimodal import imagecodec
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("content_hash", T.StringType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
-def _sniff_format(data: bytes) -> str:
-    return imagecodec.sniff_format(data)
 
 
 def _try_decode(data: bytes, strict: bool) -> tuple[int, int, bytes] | None:
@@ -72,85 +49,6 @@ def _try_decode(data: bytes, strict: bool) -> tuple[int, int, bytes] | None:
                 "install an image library (e.g. PIL) and extend imagecodec"
             ) from e
         return None
-
-
-def decode_image_meta(df: DataFrame, content_col: str = "content", path_col: str = "path",
-                      strict: bool = False) -> DataFrame:
-    """binary column -> typed metadata struct columns via mapInPandas.
-
-    Width/height are REAL pixel dimensions for PPM/BMP/PNG inputs
-    (decoded=True); undecodable formats get deterministic content-hash fake
-    dims (decoded=False), or NotImplementedError under strict=True."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # zip over the two columns (r17): pandas iterrows() builds a
-            # Series per row — pure per-row overhead next to the codec work
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                data = bytes(content)
-                decoded = _try_decode(data, strict)
-                if decoded is not None:
-                    w, h = decoded[0], decoded[1]
-                else:
-                    dig = hashlib.md5(data).digest()
-                    w, h = 64 + dig[0] % 192, 64 + dig[1] % 192
-                rows.append(
-                    {
-                        "path": str(path),
-                        "n_bytes": len(data),
-                        "content_hash": hashlib.md5(data).hexdigest(),
-                        "format": _sniff_format(data),
-                        "width": w,
-                        "height": h,
-                        "decoded": decoded is not None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_META_SCHEMA.fields])
-
-    return df.select(path_col, content_col).mapInPandas(fn, schema=MEDIA_META_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("resized", T.BinaryType()),
-        T.StructField("decoded", T.BooleanType()),
-    ]
-)
-
-
-def resize_image(df: DataFrame, target_w: int = 64, target_h: int = 64,
-                 content_col: str = "content", path_col: str = "path",
-                 strict: bool = False) -> DataFrame:
-    """Resize: binary in -> target_w*target_h*3 raw RGB bytes out.
-
-    PPM/BMP/PNG inputs go through a real decode + nearest-neighbor resample
-    (decoded=True). Undecodable formats emit a deterministic content-hash
-    payload of the same shape (decoded=False) so downstream shape invariants
-    hold, or raise under strict=True."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = target_w * target_h * imagecodec.RGB_BPP
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf[path_col], pdf[content_col]):
-                data = bytes(content)
-                decoded = _try_decode(data, strict)
-                if decoded is not None:
-                    w, h, rgb = decoded
-                    payload = imagecodec.resize_nearest(w, h, rgb, target_w, target_h)
-                else:
-                    seed = hashlib.md5(data).digest()
-                    payload = (seed * (n // len(seed) + 1))[:n]
-                rows.append({"path": str(path), "width": target_w,
-                             "height": target_h, "resized": payload,
-                             "decoded": decoded is not None})
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
-
-    return df.select(path_col, content_col).mapInPandas(fn, schema=RESIZE_SCHEMA)
 
 
 def feature_extract(df: DataFrame, dim: int = 64,
@@ -260,27 +158,6 @@ def image_near_dup_pairs(df: DataFrame, content_col: str = "content",
     )
 
 
-# Backwards-compatible names from when these kernels were stubs; the
-# fallback path (undecodable formats) still behaves exactly like the stubs.
-resize_image_stub = resize_image
-feature_extract_stub = feature_extract
-
-
-def frame_sample_stub(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling contract: one row per sampled frame index.
-    Frame count is stubbed as n_bytes // 1024 (a real decoder reports it);
-    the fan-out shape (posexplode over a sequence) is the real plumbing."""
-    from pyspark.sql import functions as F
-
-    n_frames = (F.length(F.col("content")) / F.lit(1024)).cast("int")
-    idx = F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))
-    return (
-        df.withColumn("__n_frames", n_frames)
-        .filter(F.col("__n_frames") > 0)
-        .select("path", F.posexplode(idx).alias("sample_idx", "frame_idx"))
-    )
-
-
 from etl_poc_spark._serde import register_by_value as _rbv  # noqa: E402
 
 _rbv(__name__)
@@ -309,7 +186,7 @@ AUDIO_META_SCHEMA = T.StructType(
 def decode_audio_features(df: DataFrame, content_col: str = "content",
                           path_col: str = "path", strict: bool = False) -> DataFrame:
     """binary audio column -> typed metadata + signal features via
-    mapInPandas (same contract as decode_image_meta).
+    mapInPandas (same fallback contract as the image kernels).
 
     RIFF/WAVE PCM is decoded for REAL with the stdlib `wave` module
     (audiocodec.py): true sample rate / channels / duration plus rms, peak,
@@ -329,8 +206,8 @@ def decode_audio_features(df: DataFrame, content_col: str = "content",
                 data = bytes(content)
                 fmt = audiocodec.sniff_audio_format(data)
                 try:
-                    sr, nch, nframes, mono = audiocodec.decode_wav(data)
-                    rms, peak, zcr = audiocodec.audio_stats(mono)
+                    sr, nch, nframes, sums, divisor = audiocodec.decode_wav(data)
+                    rms, peak, zcr = audiocodec.audio_stats(sums, divisor)
                     decoded = True
                 except (_wave.Error, ValueError, struct_error, EOFError) as e:
                     if strict:

@@ -1,16 +1,15 @@
-"""Training-data curation operators: deterministic splits, stratified
-sampling, PII redaction, benchmark-contamination checks, and sequence
-packing.
+"""Training-data curation operators: deterministic splits, PII
+redaction, benchmark-contamination checks, and sequence packing.
 
 These are the operations a large-scale LLM training-data pipeline needs
 between "raw corpus" and "tokenizer-ready batches". All are DataFrame-native
 and shuffle-light:
 
-- hash_bucket / train_val_test_split / stratified_sample: NARROW (no
-  shuffle at all) — the split/sample decision is a deterministic md5 over
-  the row's own id, so it is reproducible across runs, engines, and
-  repartitionings, and never needs a global sort or sampling pass. md5 (not
-  xxhash64) keeps the bucket oracle-portable to DuckDB.
+- hash_bucket / train_val_test_split: NARROW (no shuffle at all) — the
+  split/sample decision is a deterministic md5 over the row's own id, so
+  it is reproducible across runs, engines, and repartitionings, and never
+  needs a global sort or sampling pass. md5 (not xxhash64) keeps the
+  bucket oracle-portable to DuckDB.
 - redact_pii: narrow regexp_replace chain, JVM-side.
 - contamination_check: inverted shingle-index semi-join (the candidate
   space is docs sharing an n-gram with the benchmark — never a cross join).
@@ -90,18 +89,6 @@ def train_val_test_split(
         .when(b < train_pct + val_pct, F.lit("val"))
         .otherwise(F.lit("test")),
     )
-
-
-def stratified_sample(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    pct: int = 20,
-    salt: str = "sample",
-) -> DataFrame:
-    """Deterministic ~pct% sample, uniform within every stratum because the
-    hash ignores all columns except the id. Unlike df.sample(), the result
-    is identical across runs/partitionings and is oracle-checkable."""
-    return df.filter(hash_bucket(F.col(id_col), 100, salt) < pct)
 
 
 # PII patterns shared by the Spark expression and the DuckDB oracle — keep

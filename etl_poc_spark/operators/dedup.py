@@ -92,11 +92,12 @@ def shingle_docs(
     text_col: str = "text",
     shingle_words: int = 3,
 ) -> DataFrame:
-    """(id, shingle) rows, distinct: the inverted-index shape."""
-    return (
-        shingle_sets(df, id_col, text_col, shingle_words)
-        .select(F.col(id_col), F.explode("shingles").alias("shingle"))
-        .distinct()
+    """(id, shingle) rows, distinct: the inverted-index shape. `id_col`
+    must be a key, as for shingle_sets: each document's shingle array is
+    already distinct, so the explode emits no duplicate pair and needs no
+    shuffle to dedupe."""
+    return shingle_sets(df, id_col, text_col, shingle_words).select(
+        F.col(id_col), F.explode("shingles").alias("shingle")
     )
 
 

@@ -5,10 +5,7 @@
   `n_salts` replicas, salt the large/left side's key with a deterministic
   hash-derived salt, join on (key, salt). Result is identical to the plain
   join; the hot key's rows spread over n_salts reducers.
-- write_bucketed / bucketed-table joins: persisting both sides bucketed by
-  the join key lets Spark plan a sort-merge join with NO exchange on
-  either side — the co-location trick for repeatedly-joined 100 TB tables.
-  (Requires saveAsTable — bucket metadata lives in the catalog.)
+- key_skew_report: the pre-join diagnosis that says whether to salt.
 """
 
 from __future__ import annotations
@@ -46,19 +43,6 @@ def salted_join(
     )
     out = salted_large.join(replicas, [on, "__salt"], how)
     return out.drop("__salt")
-
-
-def write_bucketed(df: DataFrame, table_name: str, bucket_col: str, n_buckets: int = 8) -> None:
-    """Persist as a bucketed+sorted managed table; subsequent equi-joins on
-    `bucket_col` between tables bucketed the same way plan with zero
-    exchanges."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
 
 
 def key_skew_report(df: DataFrame, key_col: str) -> DataFrame:

@@ -686,9 +686,8 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One window shuffle partitioned by source; the prefix sum is the same
     pattern as pack_stream_cut_stats. A mega-source that dwarfs its
-    budget still orders only ITS partition — with the usual caveat that a
-    single giant source should be sub-sharded first (see
-    curation.py::stratified_sample's mega-stratum note)."""
+    budget still orders only ITS partition, so a single giant source
+    should be sub-sharded first: one window partition is one task."""
     from etl_poc_spark.functions.text import word_count
     from pyspark.sql import Window
 

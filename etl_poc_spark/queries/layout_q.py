@@ -1,11 +1,10 @@
 """File-layout tier queries — the maintenance-scheduler views over
 physical parquet layout (operators/layout.py).
 
-The layout operators (compaction, range-sorted writes, Z-order,
-fragmentation detection, manifest-pruned reads) were previously verified
-only by pytest; `fragmentation_report_orders` puts the tier under the
-driver's DuckDB-oracle discipline. The trick that makes a FILE-layout
-query oracle-checkable at all: the fragmented table is built with a
+The layout operators (fragmentation detection and compaction) are
+verified by pytest; `fragmentation_report_orders` also puts the tier
+under the DuckDB-oracle gate. The trick that makes a FILE-layout query
+oracle-checkable at all: the fragmented table is built with a
 DETERMINISTIC files-per-partition construction (one writer task +
 maxRecordsPerFile=R rolls a partition of n rows into exactly ⌈n/R⌉
 files of R rows plus one n mod R remainder), so every output column —

@@ -265,11 +265,29 @@ def gini_chars_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     across partitionings and to the SQL window formulation in the oracle.
     A real curation metric: high Gini = a few documents dominate the
     stratum's token budget."""
-    from etl_poc_spark.functions.sql_registry import count_udaf, gini_udaf
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def _gini(values):
+        # the values arrive in partition order; the sort makes that irrelevant
+        xs = sorted(int(v) for v in values.dropna())
+        n = len(xs)
+        total = sum(xs)
+        if n == 0 or total == 0:
+            return 0.0
+        num = sum((2 * i - n - 1) * x for i, x in enumerate(xs, start=1))
+        return num / (n * total)
 
     # Spark disallows mixing GROUPED_AGG pandas UDFs with built-in
     # aggregates in one agg, so the row count is a pandas UDAF too
-    gini, n_rows = gini_udaf(), count_udaf()
+    def _n(values):
+        return len(values.dropna())
+
+    # `from __future__ import annotations` stringifies hints, which breaks
+    # pandas_udf's GROUPED_AGG signature inference — set real objects
+    _gini.__annotations__ = {"values": pd.Series, "return": float}
+    _n.__annotations__ = {"values": pd.Series, "return": int}
+    gini, n_rows = pandas_udf(_gini, "double"), pandas_udf(_n, "long")
     d = load_table(spark, sf_dir, "documents")
     return d.groupBy("lang").agg(
         n_rows(F.col("n_chars")).alias("n_docs"),

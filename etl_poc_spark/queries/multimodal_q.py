@@ -61,7 +61,7 @@ _RENDER_SCHEMA = T.StructType(
 # mapping (pin-stable — per-row outputs are independent of batching; the
 # aggregates were already verified adversarial-stable), and the decode path
 # demonstrably parallelizes. At cluster scale real media arrives
-# pre-partitioned per file via read_binary_dir — this width only governs
+# pre-partitioned per file via a binaryFile scan — this width only governs
 # the synthetic render leg.
 _RENDER_PARTITIONS = 32
 

@@ -1,6 +1,6 @@
 """Spark 4 Python STREAMING DataSource: tail a landing directory of
 immutable JSONL files (SURVEY.md §2.1 S4/S5's scan surface, streaming
-form — the batch arXiv DataSource's sibling in sources/arxiv_datasource.py).
+form).
 
 After `register_jsonl_tail_datasource(spark)`:
 

@@ -9,7 +9,6 @@ import sys
 import pytest
 
 
-@pytest.mark.slow
 def test_cli_end_to_end(tmp_path):
     config = {
         "default_model": "stub",
@@ -40,20 +39,6 @@ def test_cli_end_to_end(tmp_path):
     records = json.loads(out_path.read_text())
     assert len(records) == summary["output_rows"] == summary["steps"]["s1"]["rows"]
     assert {"doc_id", "chunk_id", "chunk_text", "title", "_valid"} <= set(records[0])
-
-
-def test_arxiv_python_datasource(spark):
-    from etl_poc_spark.sources.arxiv_datasource import register_arxiv_datasource
-
-    register_arxiv_datasource(spark)
-    df = spark.read.format("arxiv").option("query", "cs.CV").option("max_results", 12).option("slice_size", 5).load()
-    assert df.rdd.getNumPartitions() == 3  # 12 results / slice 5 -> 3 partitions
-    rows = df.collect()
-    assert len(rows) == 12
-    assert all(r["primary_category"] == "cs.CV" for r in rows)
-    # deterministic across reads
-    again = spark.read.format("arxiv").option("query", "cs.CV").option("max_results", 12).load().collect()
-    assert sorted(r["arxiv_id"] for r in again) == sorted(r["arxiv_id"] for r in rows)
 
 
 def test_jsonl_tail_streaming_datasource_incremental_offsets(spark, tmp_path):
@@ -108,7 +93,6 @@ def test_jsonl_tail_streaming_datasource_incremental_offsets(spark, tmp_path):
     assert got == {1: "one", 2: "two", 3: "three", 4: "four", 5: "five"}
 
 
-@pytest.mark.slow
 def test_cli_templated_config_render(tmp_path):
     """The reference renders its .yaml.j2 config with [[ var ]]
     placeholders before running (zara_hybrid_etl.py:176-192: jinja with
@@ -213,7 +197,6 @@ def test_cli_var_without_equals_is_usage_error(tmp_path, capsys):
     assert "novalue" in capsys.readouterr().err
 
 
-@pytest.mark.slow
 def test_cli_streaming_lm_monitor_drift_and_heldout(spark, tmp_path):
     """Config-declared STREAMING pipelines through the CLI (round 11):
     the `streaming:` block tails a landing dir and runs a continuous op.
@@ -461,7 +444,6 @@ def test_cli_streaming_dsir_counts(spark, tmp_path):
         assert sorted(map(tuple, g.collect())) == sorted(map(tuple, w.collect()))
 
 
-@pytest.mark.slow
 def test_cli_streaming_dsir_monitor(spark, tmp_path):
     """Config-declared DSIR drift monitor: the target dataset seeds the
     reference model once, each micro-batch scores against it relative to

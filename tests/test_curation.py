@@ -10,7 +10,6 @@ from etl_poc_spark.operators.curation import (
     pack_sequences_greedy,
     pack_stream_cut,
     redact_pii,
-    stratified_sample,
     train_val_test_split,
 )
 
@@ -26,23 +25,6 @@ def test_split_is_deterministic_and_stable_under_growth(spark):
     n_train = sum(1 for v in s2.values() if v == "train")
     assert 0.7 < n_train / 1000 < 0.9
     assert set(s2.values()) == {"train", "val", "test"}
-
-
-def test_stratified_sample_uniform_across_strata(spark):
-    df = spark.range(2000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 4).alias("stratum")
-    )
-    sampled = stratified_sample(df, "doc_id", pct=25)
-    by_stratum = {
-        r["stratum"]: r["n"]
-        for r in sampled.groupBy("stratum").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    for s in range(4):
-        assert 0.15 < by_stratum[s] / 500 < 0.35  # ~25% within every stratum
-    # deterministic: same call, same rows
-    ids = sorted(r["doc_id"] for r in sampled.collect())
-    again = sorted(r["doc_id"] for r in stratified_sample(df, "doc_id", pct=25).collect())
-    assert ids == again
 
 
 def test_redact_pii_replaces_and_counts(spark):

@@ -160,7 +160,6 @@ def _reports(fam, rep):
     return [rep[sub] for sub, _spec in fam.logs] if len(fam.logs) > 1 else [rep]
 
 
-@pytest.mark.slow
 def test_multi_generation_compaction_and_vacuum(spark, tmp_path):
     from etl_poc_spark.operators.incremental import (
         compact_exact_dedup_store,

@@ -126,7 +126,6 @@ def test_resample_is_topk_not_global_sort(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-@pytest.mark.slow
 def test_incremental_dsir_store_folds_bit_equal(spark, tmp_path):
     """DSIR model store (the ngram_lm delta-log discipline): after
     ingesting the raw corpus in batches (one tagged, replayed twice) and
@@ -261,7 +260,6 @@ def test_streaming_dsir_ingest_matches_sequential(spark, tmp_path):
     assert got == want
 
 
-@pytest.mark.slow
 def test_dsir_monitor_scores_prebatch_and_replay_converges(spark, tmp_path):
     """The drift monitor scores each batch against the PRE-batch raw
     model then folds it in; replaying a batch (at-least-once delivery)

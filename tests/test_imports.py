@@ -68,9 +68,6 @@ def test_every_package_import_resolves():
     assert not dangling, "\n".join(dangling)
 
 
-_PENDING = "ROADMAP item 1: pending"
-
-
 def _store_reader(op: str) -> str:
     return f"public reader of the `{op}` streaming store"
 
@@ -84,56 +81,6 @@ UNREACHED_ALLOWLIST = {
     "etl_poc_spark/operators/curation.py::compact_badwords_store": _store_reader("badwords_stats"),
     "etl_poc_spark/operators/dsir.py::read_dsir_store": _store_reader("dsir_counts"),
     "etl_poc_spark/operators/dsir.py::compact_dsir_store": _store_reader("dsir_counts"),
-    **{
-        key: _PENDING
-        for key in (
-            "etl_poc_spark/functions/sql_registry.py::register_sql_functions",
-            "etl_poc_spark/functions/sql_registry.py::chunk_udtf",
-            "etl_poc_spark/functions/sql_registry.py::_py_slugify",
-            "etl_poc_spark/functions/sql_registry.py::_py_fingerprint",
-            "etl_poc_spark/llm/cache.py::cache_key_col",
-            "etl_poc_spark/llm/cache.py::cached_llm_map",
-            "etl_poc_spark/metrics.py::with_observation",
-            "etl_poc_spark/metrics.py::analyze_output",
-            "etl_poc_spark/metrics.py::assemble_run_summary",
-            "etl_poc_spark/metrics.py::execution_health",
-            "etl_poc_spark/multimodal/imagecodec.py::encode_bmp",
-            "etl_poc_spark/multimodal/imagecodec.py::encode_png",
-            "etl_poc_spark/multimodal/media.py::MEDIA_META_SCHEMA",
-            "etl_poc_spark/multimodal/media.py::read_binary_dir",
-            "etl_poc_spark/multimodal/media.py::_sniff_format",
-            "etl_poc_spark/multimodal/media.py::decode_image_meta",
-            "etl_poc_spark/multimodal/media.py::RESIZE_SCHEMA",
-            "etl_poc_spark/multimodal/media.py::resize_image",
-            "etl_poc_spark/multimodal/media.py::resize_image_stub",
-            "etl_poc_spark/multimodal/media.py::feature_extract_stub",
-            "etl_poc_spark/multimodal/media.py::frame_sample_stub",
-            "etl_poc_spark/operators/curation.py::stratified_sample",
-            "etl_poc_spark/operators/layout.py::write_range_sorted",
-            "etl_poc_spark/operators/layout.py::range_manifest",
-            "etl_poc_spark/operators/layout.py::read_range_pruned",
-            "etl_poc_spark/operators/layout.py::z_value_n",
-            "etl_poc_spark/operators/layout.py::z_value",
-            "etl_poc_spark/operators/layout.py::write_zorder_n",
-            "etl_poc_spark/operators/layout.py::write_zorder",
-            "etl_poc_spark/operators/skew.py::write_bucketed",
-            "etl_poc_spark/sources/arxiv.py::ARXIV_SCHEMA",
-            "etl_poc_spark/sources/arxiv.py::ArxivFetcher",
-            "etl_poc_spark/sources/arxiv.py::StubArxivFetcher",
-            "etl_poc_spark/sources/arxiv.py::ArxivSource",
-            "etl_poc_spark/sources/arxiv_datasource.py::ARXIV_DS_SCHEMA",
-            "etl_poc_spark/sources/arxiv_datasource.py::_Range",
-            "etl_poc_spark/sources/arxiv_datasource.py::ArxivReader",
-            "etl_poc_spark/sources/arxiv_datasource.py::ArxivDataSource",
-            "etl_poc_spark/sources/arxiv_datasource.py::register_arxiv_datasource",
-            "etl_poc_spark/sources/pdf.py::MIN_TEXT_LEN",
-            "etl_poc_spark/sources/pdf.py::stub_pdf_bytes",
-            "etl_poc_spark/sources/pdf.py::StubPdfFetcher",
-            "etl_poc_spark/sources/pdf.py::download_pdfs",
-            "etl_poc_spark/sources/pdf.py::extract_pdf_text",
-            "etl_poc_spark/sources/pdf.py::apply_parsing_tool",
-        )
-    },
 }
 
 

@@ -3,8 +3,6 @@ monitor, plus the float-cosine guard."""
 
 from __future__ import annotations
 
-import pytest
-
 
 def test_float_cosine_zero_norm_guard(spark):
     """cosine_for_pairs(mode='float') on a zero vector: cos_sim is 0.0 by
@@ -72,7 +70,6 @@ def test_incremental_bigram_lm_store_folds_bit_equal(spark, tmp_path):
     assert got == want
 
 
-@pytest.mark.slow
 def test_streaming_perplexity_monitor_drift_and_replay(spark, tmp_path):
     """Drift monitor: batch 0 has no prior LM (n_scored=0); an
     in-distribution batch scores LOW mean_nll against the accumulated
@@ -138,7 +135,6 @@ def test_streaming_perplexity_monitor_drift_and_replay(spark, tmp_path):
     assert got == want
 
 
-@pytest.mark.slow
 def test_perplexity_monitor_crash_recovery_converges(spark, tmp_path):
     """Crash-sim for the streaming LM store + drift monitor (the
     recovery contract in perplexity_monitor_handle_batch's docstring):

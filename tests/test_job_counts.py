@@ -1,7 +1,7 @@
 """Job-count guards for the driver-bound paths. At benchmark sizes wall
 time follows the number of Spark jobs, and a job count does not move with
 host load, so these bounds hold on any machine: a PageRank iteration, the
-MinHash-LSH pair query, and a repeated table load."""
+MinHash-LSH and n-gram Jaccard pair queries, and a repeated table load."""
 
 from __future__ import annotations
 
@@ -31,7 +31,8 @@ def test_pagerank_adds_at_most_three_jobs_per_iteration(spark):
     assert n4 - n2 <= 2 * 3, (n2, n4)
 
 
-def test_minhash_lsh_pairs_job_budget(spark, sf_dir):
+def _query_jobs(spark, sf_dir, name: str) -> int:
+    """Jobs one run of query `name` starts, with `documents` already loaded."""
     from etl_poc_spark import registry
     from etl_poc_spark.io import load_table
     from etl_poc_spark.operators.pins import release_pins
@@ -39,12 +40,21 @@ def test_minhash_lsh_pairs_job_budget(spark, sf_dir):
     registry.load_all()
     load_table(spark, sf_dir, "documents")
     try:
-        n = _jobs(
-            spark, lambda: registry.QUERIES["minhash_lsh_pairs"](spark, sf_dir).collect()
-        )
+        return _jobs(spark, lambda: registry.QUERIES[name](spark, sf_dir).collect())
     finally:
         release_pins()
+
+
+def test_minhash_lsh_pairs_job_budget(spark, sf_dir):
+    n = _query_jobs(spark, sf_dir, "minhash_lsh_pairs")
     assert n <= 16, n
+
+
+def test_ngram_jaccard_pairs_job_budget(spark, sf_dir):
+    # the inverted index is an explode of per-document distinct shingle
+    # arrays: no dedupe shuffle before the document-frequency window
+    n = _query_jobs(spark, sf_dir, "ngram_jaccard_pairs")
+    assert n <= 12, n
 
 
 def test_second_load_of_unchanged_table_starts_no_job(spark, sf_dir):

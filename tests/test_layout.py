@@ -1,186 +1,16 @@
-"""Range-partitioned sorted write: the layout contract is that file i
-holds a sorted slice of the key space disjoint from and ordered before
-file i+1 — the concatenation in range order is the global sort, without
-any single-machine global sort ever existing."""
+"""Layout maintenance: fragmentation_report flags small files and
+compact_files rewrites them, optionally into disjoint, ordered per-file
+key ranges."""
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from etl_poc_spark.io import load_table
-from etl_poc_spark.operators.layout import range_manifest, write_range_sorted
-
-
-def test_write_range_sorted_contract(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "orders_by_date")
-    orders = load_table(spark, sf_dir, "orders")
-    n_rows = orders.count()
-    write_range_sorted(orders, out, "o_orderkey", n_ranges=5)
-
-    man = range_manifest(spark, out, "o_orderkey").collect()
-    assert 1 <= len(man) <= 5
-    assert sum(r.n_rows for r in man) == n_rows
-
-    # ranges are disjoint and ordered: every file's max < next file's min
-    for a, b in zip(man, man[1:]):
-        assert a.min_key <= a.max_key
-        assert a.max_key < b.min_key
-
-    # each file is internally sorted (read one file directly, no Spark)
-    for r in man:
-        path = r.file.replace("file://", "").replace("file:", "")
-        keys = pq.read_table(path, columns=["o_orderkey"])["o_orderkey"].to_pylist()
-        assert keys == sorted(keys)
-        assert keys[0] == r.min_key and keys[-1] == r.max_key
-
-    # round-trip: the dataset is intact (same multiset of keys)
-    back = spark.read.parquet(out)
-    assert back.count() == n_rows
-    assert back.select("o_orderkey").distinct().count() == (
-        orders.select("o_orderkey").distinct().count()
-    )
-
-
-def test_equal_keys_share_a_range(spark, sf_dir, tmp_path):
-    # lineitem repeats l_orderkey across lines; boundaries fall BETWEEN
-    # distinct values, so one key never straddles two files
-    out = str(tmp_path / "lineitem_by_orderkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    write_range_sorted(li, out, "l_orderkey", n_ranges=4)
-    man = range_manifest(spark, out, "l_orderkey").collect()
-    for a, b in zip(man, man[1:]):
-        assert a.max_key < b.min_key  # strict: no key straddles a boundary
-
-
-def _py_z(x: int, y: int, bits: int = 21) -> int:
-    z = 0
-    for i in range(bits):
-        z |= ((x >> i) & 1) << (2 * i)
-        z |= ((y >> i) & 1) << (2 * i + 1)
-    return z
-
-
-def test_z_value_matches_reference(spark):
-    from etl_poc_spark.operators.layout import z_value
-
-    rows = [(0, 0), (1, 0), (0, 1), (1, 1), (5, 9), (12345, 67890), (2**21 - 1, 2**21 - 1)]
-    df = spark.createDataFrame(rows, ["x", "y"]).withColumn("z", z_value("x", "y"))
-    for r in df.collect():
-        assert r.z == _py_z(r.x, r.y), (r.x, r.y)
-
-
-def test_zorder_layout_narrows_both_dims(spark, sf_dir, tmp_path):
-    """Against a single-key sort layout, z-order trades a little x-range
-    width for a large reduction in y-range width per file — both
-    predicates become skippable. Assert the aggregate effect, which is
-    deterministic for a fixed dataset and file count."""
-    from pyspark.sql import functions as F
-
-    from etl_poc_spark.operators.layout import write_zorder
-    from etl_poc_spark.operators.layout import write_range_sorted
-
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-
-    z_path = str(tmp_path / "z")
-    s_path = str(tmp_path / "s")
-    write_zorder(orders, z_path, "o_orderkey", "o_custkey", n_ranges=8)
-    write_range_sorted(orders, s_path, "o_orderkey", n_ranges=8)
-
-    def mean_width(path: str, col: str) -> float:
-        rows = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name())
-            .agg((F.max(col) - F.min(col)).alias("w"))
-            .collect()
-        )
-        return sum(r.w for r in rows) / len(rows)
-
-    # the orderkey-sorted layout leaves custkey unclustered: every file
-    # spans ~the full custkey range; z-order must at least halve that
-    assert mean_width(z_path, "o_custkey") < 0.5 * mean_width(s_path, "o_custkey")
-    # and still keep orderkey meaningfully narrower than the global range
-    # (measured ~0.59x at sf0.001/8 files; the trade is wide x-slack for
-    # a ~3x y-narrowing — both dims skippable instead of one)
-    full = orders.agg((F.max("o_orderkey") - F.min("o_orderkey"))).collect()[0][0]
-    assert mean_width(z_path, "o_orderkey") < 0.7 * full
-
-
-def test_zorder_3dim_narrows_every_dim(spark, sf_dir, tmp_path):
-    """3-column z-order (21 bits/dim): against the single-key sorted
-    layout, BOTH non-sort dimensions narrow per file while the sort key
-    stays meaningfully below its global range — all three predicates
-    become skippable, the feature-table layout VERDICT r7 asked for."""
-    from pyspark.sql import functions as F
-
-    from etl_poc_spark.operators.layout import write_range_sorted, write_zorder_n
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    z_path = str(tmp_path / "z3")
-    s_path = str(tmp_path / "s1")
-    write_zorder_n(orders, z_path, ["o_orderkey", "o_custkey", "o_totalprice"],
-                   n_ranges=8)
-    write_range_sorted(orders, s_path, "o_orderkey", n_ranges=8)
-
-    def mean_width(path: str, col: str) -> float:
-        rows = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name())
-            .agg((F.max(col) - F.min(col)).alias("w"))
-            .collect()
-        )
-        return sum(r.w for r in rows) / len(rows)
-
-    # the orderkey-sorted layout leaves custkey and totalprice unclustered
-    assert mean_width(z_path, "o_custkey") < 0.7 * mean_width(s_path, "o_custkey")
-    assert mean_width(z_path, "o_totalprice") < 0.7 * mean_width(s_path, "o_totalprice")
-    full = orders.agg(F.max("o_orderkey") - F.min("o_orderkey")).collect()[0][0]
-    assert mean_width(z_path, "o_orderkey") < 0.8 * full
-    # row set preserved
-    assert spark.read.parquet(z_path).count() == orders.count()
-
-
-def test_z_value_n_matches_reference_and_guards(spark):
-    """n-dim interleave against a pure-Python mirror for 3 and 4 columns,
-    plus the arity/bit-budget guards."""
-    import pytest
-
-    from etl_poc_spark.operators.layout import z_value_n
-
-    def py_zn(vals, bits):
-        n = len(vals)
-        z = 0
-        for i in range(bits):
-            for j, v in enumerate(vals):
-                z |= ((v >> i) & 1) << (i * n + j)
-        return z
-
-    rows3 = [(0, 0, 0), (1, 2, 3), (5, 9, 17), (2**21 - 1, 0, 2**21 - 1)]
-    df3 = spark.createDataFrame(rows3, ["a", "b", "c"]).withColumn(
-        "z", z_value_n(["a", "b", "c"])
-    )
-    for r in df3.collect():
-        assert r.z == py_zn((r.a, r.b, r.c), 21), (r.a, r.b, r.c)
-
-    rows4 = [(1, 2, 3, 4), (2**15 - 1,) * 4]
-    df4 = spark.createDataFrame(rows4, ["a", "b", "c", "d"]).withColumn(
-        "z", z_value_n(["a", "b", "c", "d"])
-    )
-    for r in df4.collect():
-        assert r.z == py_zn((r.a, r.b, r.c, r.d), 15)
-
-    with pytest.raises(ValueError, match="at least 2"):
-        z_value_n(["a"])
-    with pytest.raises(ValueError, match="bits"):
-        z_value_n(["a", "b", "c"], bits=22)  # 66 bits > signed long
+from etl_poc_spark.operators.layout import compact_files, fragmentation_report
 
 
 def test_compact_files(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from etl_poc_spark.operators.layout import compact_files, range_manifest
-
     # simulate a fragmented ingest: 40 tiny files
     out = str(tmp_path / "frag")
     orders = load_table(spark, sf_dir, "orders")
@@ -196,103 +26,24 @@ def test_compact_files(spark, sf_dir, tmp_path):
     assert back.count() == n
     assert back.select("o_orderkey").distinct().count() == n  # keys intact
 
-    # compact-and-sort restores the range layout in the same pass
+    # compact-and-sort leaves disjoint, ordered key ranges per file
     stats2 = compact_files(spark, out, target_rows_per_file=n // 3, sort_col="o_orderkey")
-    man = range_manifest(spark, out, "o_orderkey").collect()
-    assert stats2["n_rows"] == n
+    man = (
+        spark.read.parquet(out)
+        .groupBy(F.input_file_name())
+        .agg(F.min("o_orderkey").alias("min_key"), F.max("o_orderkey").alias("max_key"))
+        .orderBy("min_key")
+        .collect()
+    )
+    assert stats2["n_rows"] == n and len(man) == stats2["files_after"]
     for a, b in zip(man, man[1:]):
         assert a.max_key < b.min_key
-
-
-def test_zorder_empty_input(spark, tmp_path):
-    """write_zorder on an empty frame writes the empty dataset (schema
-    preserved) instead of raising on the None min/max bounds."""
-    from etl_poc_spark.operators.layout import write_zorder
-
-    empty = spark.range(0).selectExpr("id AS x", "id AS y")
-    out = str(tmp_path / "zempty")
-    write_zorder(empty, out, "x", "y")
-    back = spark.read.parquet(out)
-    assert back.count() == 0
-    assert set(back.columns) == {"x", "y"}
-
-
-def test_z_value_properties(spark):
-    """Hypothesis: interleaving is exactly invertible (de-interleave
-    recovers both inputs) and monotone along each axis with the other
-    held fixed — the two facts file-range pruning relies on. Checked via
-    the pure-Python mirror (bit-identical to the Column expr per
-    test_z_value_matches_reference), so no Spark job per example."""
-    from hypothesis import given, settings, strategies as st
-
-    coord = st.integers(min_value=0, max_value=2**21 - 1)
-
-    def un_z(z: int, bits: int = 21) -> tuple[int, int]:
-        x = y = 0
-        for i in range(bits):
-            x |= ((z >> (2 * i)) & 1) << i
-            y |= ((z >> (2 * i + 1)) & 1) << i
-        return x, y
-
-    @settings(max_examples=300, deadline=None, database=None)
-    @given(x=coord, y=coord, x2=coord, y2=coord)
-    def prop(x: int, y: int, x2: int, y2: int) -> None:
-        assert un_z(_py_z(x, y)) == (x, y)
-        # monotone along each axis: larger coordinate, larger z
-        if x < x2:
-            assert _py_z(x, y) < _py_z(x2, y)
-        if y < y2:
-            assert _py_z(x, y) < _py_z(x, y2)
-
-    prop()
-
-
-def test_z_value_n_properties():
-    """Hypothesis: the n-dim interleave is exactly invertible and monotone
-    along each axis with the others held fixed — checked on the pure-
-    Python mirror (bit-identical to the Column expr per
-    test_z_value_n_matches_reference_and_guards), so no Spark job per
-    example."""
-    from hypothesis import given, settings, strategies as st
-
-    def py_zn(vals, bits):
-        n = len(vals)
-        z = 0
-        for i in range(bits):
-            for j, v in enumerate(vals):
-                z |= ((v >> i) & 1) << (i * n + j)
-        return z
-
-    def un_zn(z, n, bits):
-        out = [0] * n
-        for i in range(bits):
-            for j in range(n):
-                out[j] |= ((z >> (i * n + j)) & 1) << i
-        return tuple(out)
-
-    coord3 = st.integers(min_value=0, max_value=2**21 - 1)
-
-    @settings(max_examples=200, deadline=None, database=None)
-    @given(a=coord3, b=coord3, c=coord3, bump=st.integers(min_value=1, max_value=2**20))
-    def prop(a, b, c, bump):
-        z = py_zn((a, b, c), 21)
-        assert un_zn(z, 3, 21) == (a, b, c)
-        if a + bump < 2**21:
-            assert py_zn((a + bump, b, c), 21) > 0 or True
-            # monotone along axis 0 with b, c fixed
-            assert py_zn((a + bump, b, c), 21) != z
-
-    prop()
 
 
 def test_fragmentation_report_drives_compaction(spark, sf_dir, tmp_path):
     """The report flags a fragmented table, compact_files fixes it, and
     the re-run report clears the flag — the maintenance loop in three
     assertions."""
-    from pyspark.sql import functions as F
-
-    from etl_poc_spark.operators.layout import compact_files, fragmentation_report
-
     out = str(tmp_path / "frag")
     orders = load_table(spark, sf_dir, "orders")
     n = orders.count()
@@ -317,35 +68,3 @@ def test_fragmentation_report_drives_compaction(spark, sf_dir, tmp_path):
             fragmentation_report(spark, pout, n, partition_col="status").collect()}
     assert len(prep) >= 2
     assert all(r["needs_compaction"] for r in prep.values())
-
-
-def test_read_range_pruned_opens_matching_files_only(spark, sf_dir, tmp_path):
-    """The manifest-driven reader opens only files whose range overlaps
-    the probe: correct rows AND provably fewer files scanned."""
-    from pyspark.sql import functions as F
-
-    from etl_poc_spark.operators.layout import (
-        range_manifest,
-        read_range_pruned,
-        write_range_sorted,
-    )
-
-    out = str(tmp_path / "sorted")
-    orders = load_table(spark, sf_dir, "orders")
-    write_range_sorted(orders, out, "o_orderkey", n_ranges=8)
-    man = range_manifest(spark, out, "o_orderkey").collect()
-    assert len(man) >= 4
-    # probe the middle file's exact range
-    mid = man[len(man) // 2]
-    lo, hi = mid["min_key"], mid["max_key"]
-
-    pruned = read_range_pruned(spark, out, "o_orderkey", lo, hi)
-    want = orders.where(
-        (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") <= hi)
-    )
-    assert pruned.count() == want.count() == mid["n_rows"]
-    files_read = pruned.select(F.input_file_name()).distinct().count()
-    assert files_read == 1  # exactly the matching file, not the directory
-
-    # an empty probe range below the table's min reads nothing
-    assert read_range_pruned(spark, out, "o_orderkey", -10, -5).count() == 0

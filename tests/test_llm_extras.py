@@ -1,11 +1,10 @@
-"""Hierarchical llm_reduce fold, LLM cost accumulators, SQL-registered UDFs."""
+"""Hierarchical llm_reduce fold, LLM cost accumulators, text Column helpers."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from etl_poc_spark.functions.text import slugify, word_count
-from etl_poc_spark.functions.sql_registry import register_sql_functions
 from etl_poc_spark.llm.ops import llm_map, llm_reduce
 from etl_poc_spark.plans.schema_grammar import to_struct_type
 
@@ -48,20 +47,21 @@ def test_llm_map_cost_accumulators(spark):
     assert metrics["prompt_chars"].value > 7 * len("Extract ")
 
 
-def test_sql_registered_udfs_match_column_exprs(spark, sf_dir):
+def test_text_column_exprs_match_python_reference(spark, sf_dir):
+    import re
+
     from etl_poc_spark.io import load_table
 
-    register_sql_functions(spark)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    sql_rows = spark.sql(
-        "SELECT doc_id, engine_slugify(substr(text, 1, 30)) AS slug, engine_word_count(text) AS wc "
-        "FROM documents ORDER BY doc_id LIMIT 50"
-    ).collect()
-    col_rows = (
-        spark.table("documents")
-        .select("doc_id", slugify(F.substring("text", 1, 30)).alias("slug"), word_count(F.col("text")).alias("wc"))
+    def py_slugify(s):
+        out = re.sub(r"[^a-z0-9]+", "-", (s or "").lower())
+        return re.sub(r"-{2,}", "-", out).strip("-") or "untitled"
+
+    rows = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text", slugify(F.substring("text", 1, 30)).alias("slug"), word_count(F.col("text")).alias("wc"))
         .orderBy("doc_id")
         .limit(50)
         .collect()
     )
-    assert [r.asDict() for r in sql_rows] == [r.asDict() for r in col_rows]
+    assert len(rows) == 50
+    assert [(r.slug, r.wc) for r in rows] == [(py_slugify(r.text[:30]), len(r.text.split())) for r in rows]

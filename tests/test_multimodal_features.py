@@ -13,8 +13,6 @@ from etl_poc_spark.multimodal.imagecodec import (
     decode_png,
     decode_ppm,
     dhash64,
-    encode_bmp,
-    encode_png,
     encode_ppm,
     luminance_histogram,
     resize_nearest,
@@ -23,10 +21,13 @@ from etl_poc_spark.multimodal.media import (
     feature_extract,
     image_near_dup_pairs,
     perceptual_hashes,
-    read_binary_dir,
-    resize_image,
 )
 from etl_poc_spark.operators.similarity import cosine_topk
+from image_encoders import encode_bmp, encode_png
+
+
+def read_binary_dir(spark, path: str):
+    return spark.read.format("binaryFile").load(path)
 
 
 def _gradient_rgb(w: int, h: int) -> bytes:
@@ -109,20 +110,6 @@ def _write_real_media(tmp_path):
     return str(tmp_path)
 
 
-def test_resize_contract_real_decode(spark, tmp_path):
-    d = _write_real_media(tmp_path)
-    df = read_binary_dir(spark, d)
-    out = resize_image(df, target_w=8, target_h=4).collect()
-    assert len(out) == 7
-    for r in out:
-        assert (r["width"], r["height"]) == (8, 4)
-        assert len(r["resized"]) == 8 * 4 * 3  # RGB shape invariant
-        assert r["decoded"]  # every input was a real PPM/BMP/PNG
-    # same pixels in different containers -> identical resized bytes
-    by_name = {r["path"].rsplit("/", 1)[-1]: bytes(r["resized"]) for r in out}
-    assert by_name["img0.png"] == by_name["img0_copy.bmp"]
-
-
 def test_feature_extract_to_similarity_real_decode(spark, tmp_path):
     d = _write_real_media(tmp_path)
     df = read_binary_dir(spark, d)
@@ -141,13 +128,13 @@ def test_undecodable_fallback_is_deterministic(spark, tmp_path):
     (tmp_path / "x.jpg").write_bytes(b"\xff\xd8\xff\xe0" + b"\x07" * 500)
     (tmp_path / "y.jpg").write_bytes(b"\xff\xd8\xff\xe0" + b"\x07" * 500)
     df = read_binary_dir(spark, str(tmp_path))
-    out = resize_image(df, target_w=4, target_h=4).collect()
+    out = feature_extract(df, dim=16).collect()
     assert all(not r["decoded"] for r in out)
-    payloads = {bytes(r["resized"]) for r in out}
-    assert len(payloads) == 1  # same bytes -> same fallback payload
-    assert len(payloads.pop()) == 4 * 4 * 3
+    vectors = {tuple(r["embedding"]) for r in out}
+    assert len(vectors) == 1  # same bytes -> same fallback vector
+    assert len(vectors.pop()) == 16
     with pytest.raises(Exception, match="NotImplementedError|image library"):
-        resize_image(df, strict=True).collect()
+        feature_extract(df, strict=True).collect()
 
 
 def _hamming(a: int, b: int) -> int:
@@ -261,12 +248,12 @@ def test_corrupt_images_fall_back_not_crash(spark, tmp_path):
     (tmp_path / "bad.bmp").write_bytes(b"BM" + b"\x00" * 80)           # nonsense BMP header
     (tmp_path / "ok.png").write_bytes(good)
     df = read_binary_dir(spark, str(tmp_path))
-    out = {r["path"].rsplit("/", 1)[-1]: r for r in resize_image(df, 4, 4).collect()}
+    out = {r["path"].rsplit("/", 1)[-1]: r for r in feature_extract(df, dim=8).collect()}
     assert len(out) == 4  # no task failure
     assert out["ok.png"]["decoded"]
     for name in ("trunc_idat.png", "cut_ihdr.png", "bad.bmp"):
         assert not out[name]["decoded"]
-        assert len(out[name]["resized"]) == 4 * 4 * 3  # fallback keeps the shape
+        assert len(out[name]["embedding"]) == 8  # fallback keeps the shape
 
 
 def test_media_feature_neardup_sim_query(spark):
@@ -324,6 +311,43 @@ def _sine_wav_bytes(freq=440, sr=8000, seconds=1.0, amp=0.5, nch=1):
             frames += struct.pack("<h", v) * nch
         w.writeframes(bytes(frames))
     return buf.getvalue()
+
+
+def test_audio_stats_exact_for_three_channels():
+    """Three distinct channels divide by a non-power of two (3 * 32768):
+    rms, peak and zero-crossing rate still equal a Fraction reference
+    computed from the raw integer samples. (On these samples, dividing
+    each frame before squaring misses the reference rms by 1 ulp.)"""
+    import io
+    import math
+    import struct
+    import wave
+    from fractions import Fraction
+
+    from etl_poc_spark.multimodal.audiocodec import audio_stats, decode_wav
+
+    nch, n = 3, 2000
+    samples = [
+        [int(0.5 * 32767 * math.sin(2 * math.pi * 440 * i / 8000 + c)) for c in range(nch)]
+        for i in range(n)
+    ]
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(nch)
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(b"".join(struct.pack("<3h", *frame) for frame in samples))
+
+    sr, got_nch, nframes, sums, divisor = decode_wav(buf.getvalue())
+    assert (sr, got_nch, nframes, divisor) == (8000, nch, n, nch * 32768)
+    rms, peak, zcr = audio_stats(sums, divisor)
+
+    f = [sum(frame) for frame in samples]
+    mean_square = Fraction(sum(v * v for v in f), n * divisor * divisor)
+    assert rms == float(mean_square) ** 0.5
+    assert peak == float(Fraction(max(abs(v) for v in f), divisor))
+    crossings = sum((a < 0) != (b < 0) for a, b in zip(f, f[1:]))
+    assert zcr == float(Fraction(crossings, n - 1))
 
 
 def test_wav_decode_real_features(spark, tmp_path):

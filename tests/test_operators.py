@@ -388,24 +388,6 @@ def test_cms_inner_product_disjoint_sketches_estimate_zero(spark):
     assert est3 == min(5 * 7, 2 * 10)
 
 
-def test_chunk_udtf_matches_column_chunker(spark):
-    from etl_poc_spark.functions.sql_registry import register_sql_functions
-    from etl_poc_spark.operators.chunker import chunk_by_tokens
-
-    register_sql_functions(spark)
-    words = " ".join(f"w{i}" for i in range(100))
-    df = spark.createDataFrame([(1, words), (2, "only three words"), (3, "")], "doc_id int, text string")
-    df.createOrReplaceTempView("udtf_docs")
-    via_sql = spark.sql(
-        "SELECT doc_id, c.chunk_id, c.chunk_text, c.chunk_n_tokens "
-        "FROM udtf_docs, LATERAL engine_chunks(text, 40, 10) c"
-    ).collect()
-    via_col = chunk_by_tokens(df, chunk_size=40, chunk_overlap=10).collect()
-    key = lambda r: (r["doc_id"], r["chunk_id"])
-    assert sorted([(r["doc_id"], r["chunk_id"], r["chunk_text"], r["chunk_n_tokens"]) for r in via_sql]) == \
-           sorted([(r["doc_id"], r["chunk_id"], r["chunk_text"], r["chunk_n_tokens"]) for r in via_col])
-
-
 def test_count_min_unknown_key_estimates_zero(spark):
     from etl_poc_spark.operators.sketches import count_min_build, count_min_estimate
 

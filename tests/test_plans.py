@@ -1561,7 +1561,6 @@ def test_c4_line_filter_rules_and_yaml_op(spark):
     assert set(mixed.columns) == {"doc_id", "text"}
 
 
-@pytest.mark.slow
 def test_yaml_full_curation_pipeline_e2e(spark):
     """The complete modern curation vocabulary composes declaratively:
     c4_filter (line rules) -> quality_filter (gopher doc rules) ->

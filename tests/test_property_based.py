@@ -5,8 +5,6 @@ first, then runs ONE Spark job over all of them."""
 
 from __future__ import annotations
 
-import pytest
-
 import re
 
 from hypothesis import given, settings, strategies as st
@@ -327,7 +325,6 @@ def test_bigram_lm_closed_form_property(spark):
     assert cnt.where("c = 1").count() == 0
 
 
-@pytest.mark.slow
 def test_dsir_weights_property_random_corpora(spark):
     """DSIR invariants on hypothesis-generated corpora:
     (1) target == raw  =>  every log weight is EXACTLY 0.0 (identical
@@ -364,7 +361,6 @@ def test_dsir_weights_property_random_corpora(spark):
             assert fc[i] == 2 * len(ws) - 1, (ci, i, ws, fc[i])
 
 
-@pytest.mark.slow
 def test_keep_best_per_group_matches_python_reference(spark):
     """keep_best_per_group == per-group max by (quality DESC, id ASC) in
     plain Python, for arbitrary (group, quality, id) multisets."""

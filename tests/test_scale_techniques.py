@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_poc_spark.operators.skew import salted_join, write_bucketed
+from etl_poc_spark.operators.skew import salted_join
 
 
 def test_salted_join_matches_plain_join(spark, sf_dir):
@@ -105,30 +105,6 @@ def test_approx_percentile_within_rank_error_of_exact(spark, sf_dir):
         assert r["p90_bound_ok"] is True, flag
 
 
-@pytest.mark.usefixtures("spark")
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    from etl_poc_spark.io import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice").limit(5000)
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice").limit(5000)
-    write_bucketed(li, "li_bucketed", "l_orderkey", n_buckets=4)
-    write_bucketed(o.withColumnRenamed("o_orderkey", "l_orderkey"), "o_bucketed", "l_orderkey", n_buckets=4)
-
-    # force the sort-merge path (tiny test tables would otherwise broadcast)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("li_bucketed").join(spark.table("o_bucketed"), "l_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffleExchange" not in plan and "Exchange hashpartitioning" not in plan, plan[:2000]
-        assert "SortMergeJoin" in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS li_bucketed")
-        spark.sql("DROP TABLE IF EXISTS o_bucketed")
-
-
 def test_semdedup_drops_exactly_the_scaled_copies(spark, sf_dir):
     """SemDeDup over the duplicated corpus: every vec_id+100000 scaled copy
     (cosine 1.0 with its original) is dropped; originals survive (smaller
@@ -223,47 +199,6 @@ def test_histogram_quantile_within_one_bin_of_exact(spark, sf_dir):
             .agg({"o_totalprice": "max"}).collect()[0][0]
         )
         assert est[q100] <= v_r < est[q100] + 500.0
-
-
-def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
-    """Persisted bucketing beyond the existing zero-exchange join pin:
-    bucketed AGGREGATION on the bucket key also skips its exchange, and a
-    plain-parquet round-trip of the SAME data does shuffle — proving the
-    layout (not data size) removes the exchanges."""
-    from etl_poc_spark.io import load_table
-    from etl_poc_spark.operators.skew import write_bucketed
-
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    c = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    spark.sql("DROP TABLE IF EXISTS bt_orders")
-    spark.sql("DROP TABLE IF EXISTS bt_customer")
-    write_bucketed(o, "bt_orders", "o_custkey", n_buckets=8)
-    write_bucketed(c, "bt_customer", "o_custkey", n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("bt_orders").join(spark.table("bt_customer"), ["o_custkey"])
-        p = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p  # bucket layout = join distribution
-        # bucketed aggregation on the key skips its exchange too
-        agg = spark.table("bt_orders").groupBy("o_custkey").count()
-        pa_ = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in pa_
-        # control: identical data as plain parquet DOES shuffle
-        o.write.mode("overwrite").parquet(str(tmp_path / "po"))
-        c.write.mode("overwrite").parquet(str(tmp_path / "pc"))
-        pj = spark.read.parquet(str(tmp_path / "po")).join(
-            spark.read.parquet(str(tmp_path / "pc")), ["o_custkey"]
-        )
-        pp = pj._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in pp
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bt_orders")
-        spark.sql("DROP TABLE IF EXISTS bt_customer")
 
 
 def test_minibatch_kmeans_deterministic_and_partitioning_independent(spark, sf_dir):

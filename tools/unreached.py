@@ -12,7 +12,11 @@ Roots (code that runs without a test asking for it):
   - module-level statements of the package other than definitions
     (they run at import), and every decorator expression;
   - definitions whose decorator is itself a package function — builders
-    registered by `@query`, `@_op`, `@_stream_op` and `@parsing_tool`.
+    registered by `@query`, `@_op` and `@_stream_op`. Such a def counts
+    as reached because reached code reads its registry: the query
+    registry, `_OPS` and `_STREAM_OPS`. A decorator whose registry only
+    unreached code reads would make this rule report live code that is
+    dead, so a new registering decorator needs a reached reader.
 
 Reachability is transitive: a definition named only by unreached
 definitions is unreached too. Class bodies (methods included) count as
