@@ -75,6 +75,37 @@ RETIME_RATIO = 1.5
 RETIME_FLOOR_SEC = 0.5
 
 
+def _noop(df) -> None:
+    """Force full computation through the noop sink (no driver collect)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warm(spark, sf_dir: str) -> None:
+    """Warm the JVM and parquet footers so per-query numbers measure the plan."""
+    from etl_poc_spark import registry
+
+    _noop(registry.QUERIES["pricing_summary"](spark, sf_dir))
+
+
+def time_query(spark, fn, sf_dir: str, runs: int = RUNS_PER_QUERY) -> tuple[float, list[float]]:
+    """(median, per-run seconds) of `runs` noop-sink runs of the query
+    `fn`. Pins, process-level model memos and the cache are dropped after
+    EVERY run, so runs 2..N pay the full pipeline, training included, as
+    run 1 does; otherwise a pinned or trained query's median would
+    understate its cold-run cost."""
+    from etl_poc_spark.operators.pins import clear_memos, release_pins
+
+    secs: list[float] = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        _noop(fn(spark, sf_dir))
+        secs.append(time.perf_counter() - t0)
+        release_pins()
+        clear_memos()
+        spark.catalog.clearCache()
+    return sorted(secs)[len(secs) // 2], secs
+
+
 def _canary_once(spark) -> float:
     """One run of the fixed data-independent workload (8M-row range
     scan-agg, pure JVM codegen)."""
@@ -83,7 +114,7 @@ def _canary_once(spark) -> float:
     from pyspark.sql import functions as F
 
     t0 = _time.perf_counter()
-    (
+    _noop(
         spark.range(0, 8_000_000)
         .select(
             (F.col("id") % 1000).alias("k"),
@@ -91,9 +122,6 @@ def _canary_once(spark) -> float:
         )
         .groupBy("k")
         .agg(F.sum("v").alias("s"), F.avg("v").alias("a"), F.count("*").alias("c"))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
     )
     return _time.perf_counter() - t0
 
@@ -128,13 +156,12 @@ def _sorted_gate_artifacts(paths: list[str]) -> list[str]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from etl_poc_spark import registry
-    from etl_poc_spark.operators.pins import clear_memos, release_pins
+    from etl_poc_spark.operators.pins import release_pins
     from etl_poc_spark.session import get_spark
 
     registry.load_all()
     spark = get_spark("bench")
-    # warm the JVM + parquet footers so per-query numbers measure the plan
-    registry.QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    warm(spark, sf_dir)
     cal_start = _calibration(spark)
 
     # previous ROUND's committed artifact — the baseline for the outlier
@@ -169,24 +196,6 @@ def main() -> None:
     if BENCH_ALL_REGISTERED:
         names += sorted(set(registry.QUERIES) - set(BENCH_QUERIES))
 
-    def time_query(fn) -> float:
-        # r17 methodology fix (r16 verdict item 3): pins AND process-level
-        # model memos are dropped INSIDE the run loop — runs 2..3 of a
-        # pinned/trained query previously read frames and models populated
-        # by run 1, so published medians understated steady-state cold-run
-        # cost for exactly the queries r16 pinned. Every run now pays the
-        # full pipeline including training (same discipline as
-        # tools/time_query.py, which the r16 A/B evidence already used).
-        runs: list[float] = []
-        for _ in range(RUNS_PER_QUERY):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            release_pins()
-            clear_memos()
-            spark.catalog.clearCache()
-        return round(sorted(runs)[len(runs) // 2], 3)
-
     # fault-isolated per query: one broken query records an {"err": ...}
     # entry and the sweep continues — a single analysis error must never
     # erase the whole round's perf signal (round 4 lost its bench this way)
@@ -200,7 +209,7 @@ def main() -> None:
             )
         fn = registry.QUERIES[name]
         try:
-            timings[name] = time_query(fn)
+            timings[name] = round(time_query(spark, fn, sf_dir)[0], 3)
         except Exception as exc:  # noqa: BLE001 — record and keep sweeping
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
         # pins/memos/cache are dropped inside time_query's run loop; this
@@ -222,7 +231,7 @@ def main() -> None:
             and sec - prev > RETIME_FLOOR_SEC
         ):
             try:
-                again = time_query(registry.QUERIES[name])
+                again = round(time_query(spark, registry.QUERIES[name], sf_dir)[0], 3)
             except Exception:  # noqa: BLE001 — keep the first reading
                 continue
             retimed[name] = {"first": sec, "retimed": again, "prev_round": prev}
@@ -259,35 +268,8 @@ def main() -> None:
                 value_load_normalized = round(headline_total / host_load_ratio, 3)
     except (KeyError, TypeError, ValueError):
         pass
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": headline_total,
-                "unit": "sec",
-                "full_surface_total": full_total,
-                "n_queries": len(timings),
-                "runs_per_query": RUNS_PER_QUERY,
-                "timing": "median",
-                "headline_set_size": len(BENCH_QUERIES),
-                "headline_incomplete": bool(headline_errs),
-                "value_load_normalized": value_load_normalized,
-                "host_load_ratio": host_load_ratio,
-                "calibration": {"start_sec": cal_start, "end_sec": cal_end},
-                "queries": {**timings, **{n: {"err": e} for n, e in errors.items()}},
-                "n_errors": len(errors),
-                "sf": float(sf) if sf else sf_dir,
-            }
-        )
-    )
-    # The driver's tail capture keeps only ~2000 chars, so the FINAL line —
-    # the one the driver parses — must stay SMALL: totals only, no per-query
-    # map (the r8 compact map was ~4KB and still truncated to parsed:null).
-    # The complete per-query timings are persisted to a repo artifact
-    # instead ($SPARK_GRAFT_BENCH_OUT, default BENCH_GATE.json — committed
-    # per round as BENCH_GATE_r{N}.json, same ritual as ORACLE_GATE logs)
-    # so every round's full surface is diffable from git history.
-    full_report = {
+    # the keys the stdout report and the BENCH_GATE artifact share
+    report = {
         "metric": "headline_queries_total_wall",
         "value": headline_total,
         "unit": "sec",
@@ -304,6 +286,25 @@ def main() -> None:
         "host_load_ratio": host_load_ratio,
         "n_errors": len(errors),
         "sf": float(sf) if sf else sf_dir,
+    }
+    print(
+        json.dumps(
+            {
+                **report,
+                "calibration": {"start_sec": cal_start, "end_sec": cal_end},
+                "queries": {**timings, **{n: {"err": e} for n, e in errors.items()}},
+            }
+        )
+    )
+    # The driver's tail capture keeps only ~2000 chars, so the FINAL line —
+    # the one the driver parses — must stay SMALL: totals only, no per-query
+    # map (the r8 compact map was ~4KB and still truncated to parsed:null).
+    # The complete per-query timings are persisted to a repo artifact
+    # instead ($SPARK_GRAFT_BENCH_OUT, default BENCH_GATE.json — committed
+    # per round as BENCH_GATE_r{N}.json, same ritual as ORACLE_GATE logs)
+    # so every round's full surface is diffable from git history.
+    full_report = {
+        **report,
         "calibration": {
             "start_sec": cal_start,
             "end_sec": cal_end,
@@ -335,17 +336,12 @@ def main() -> None:
     headline_q = {
         n: timings[n] for n in BENCH_QUERIES if n in timings
     }
+    final = ("metric", "value", "unit", "full_surface_total", "n_queries",
+             "n_errors", "headline_incomplete", "sf")
     print(
         json.dumps(
             {
-                "metric": "headline_queries_total_wall",
-                "value": headline_total,
-                "unit": "sec",
-                "full_surface_total": full_total,
-                "n_queries": len(timings),
-                "n_errors": len(errors),
-                "headline_incomplete": bool(headline_errs),
-                "sf": float(sf) if sf else sf_dir,
+                **{k: report[k] for k in final},
                 "cal": [cal_start, cal_end],
                 "queries": headline_q,
                 "full_report": os.path.basename(out_path),

