@@ -159,20 +159,18 @@ def pack_stream_cut(
     id_col: str = "doc_id",
     token_col: str = "n_tokens",
     cap: int = 2048,
-    group_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Stream-cut sequence packing: concatenate docs in id order (per
-    group), cut every `cap` tokens; a doc belongs to the sequence where it
-    STARTS (straddling docs are split at training time). One window cumsum
-    — exactly expressible in SQL, so oracle-checkable.
+    """Stream-cut sequence packing: concatenate all docs in id order, cut
+    every `cap` tokens; a doc belongs to the sequence where it STARTS
+    (straddling docs are split at training time). One window cumsum —
+    exactly expressible in SQL, so oracle-checkable.
 
-    Adds seq_id and start_offset (token offset of the doc inside its
-    group's stream)."""
-    # ungrouped streams use a NON-FOLDABLE single-group key (a plain
-    # lit() is constant-folded out of the spec and Spark then logs the
+    Adds seq_id and start_offset (token offset of the doc inside the
+    stream)."""
+    # the one stream uses a NON-FOLDABLE single-group key (a plain lit()
+    # is constant-folded out of the spec and Spark then logs the
     # no-partition WindowExec warning per task — see dates_q histogram)
-    part = group_cols or [F.col(id_col).isNull()]
-    w = Window.partitionBy(*part).orderBy(F.col(id_col)).rowsBetween(Window.unboundedPreceding, -1)
+    w = Window.partitionBy(F.col(id_col).isNull()).orderBy(F.col(id_col)).rowsBetween(Window.unboundedPreceding, -1)
     start = F.coalesce(F.sum(F.col(token_col)).over(w), F.lit(0))
     # integer division (`div`), not float `/`: double division loses exact
     # integers past 2^53, so at extreme stream lengths the float path would
@@ -182,18 +180,12 @@ def pack_stream_cut(
     )
 
 
-# shard stride for globally-unique bin ids in sub-sharded packing: local bin
-# ids are < shard row count < 2^32, so `shard << 32 | local` never collides
-_SHARD_BIN_STRIDE = 1 << 32
-
-
 def pack_sequences_greedy(
     df: DataFrame,
     id_col: str = "doc_id",
     token_col: str = "n_tokens",
     cap: int = 2048,
     group_cols: list[str] | None = None,
-    max_group_rows: int | None = None,
 ) -> DataFrame:
     """Next-fit greedy packing per group: walk docs in id order; a doc that
     would push the open bin past `cap` closes it and opens the next. No doc
@@ -202,68 +194,31 @@ def pack_sequences_greedy(
     Sequential by construction, so it runs as applyInPandas per group —
     use strata (language/shard) as group_cols so each group fits in one
     task. Not plain-SQL-expressible per se (the bin boundary is a
-    recursive restart-cumsum), but the unsharded mode is hash-checked by a
-    DuckDB recursive-CTE oracle (queries/curation_q.py).
-
-    `max_group_rows` is the MEGA-STRATUM guard: a corpus that is 90% one
-    language would otherwise ship that whole stratum to a single task.
-    When set, each stratum is split into ceil(rows / max_group_rows)
-    deterministic hash shards (secondary group col), packing runs per
-    (stratum, shard), and bin ids are made unique by `shard << 32 | local`
-    — so per-task rows stay ~max_group_rows at any skew, at the accepted
-    cost of per-shard bin boundaries (bins never span shards)."""
+    recursive restart-cumsum), but it is hash-checked by a DuckDB
+    recursive-CTE oracle (queries/curation_q.py)."""
     group_cols = group_cols or ["lang"]
-    out_fields = [T.StructField("bin_id", T.LongType()), T.StructField("bin_fill", T.LongType())]
 
-    def make_pack(real_groups: list[str]):
-        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-            bin_id, fill = 0, 0
-            bins, fills = [], []
-            for tok in pdf[token_col]:
-                tok = int(tok)
-                if fill > 0 and fill + tok > cap:
-                    bin_id, fill = bin_id + 1, 0
-                fill += tok
-                bins.append(bin_id)
-                fills.append(fill)
-            pdf["bin_id"] = pd.Series(bins, dtype="int64")
-            pdf["bin_fill"] = pd.Series(fills, dtype="int64")
-            return pdf
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
+        bin_id, fill = 0, 0
+        bins, fills = [], []
+        for tok in pdf[token_col]:
+            tok = int(tok)
+            if fill > 0 and fill + tok > cap:
+                bin_id, fill = bin_id + 1, 0
+            fill += tok
+            bins.append(bin_id)
+            fills.append(fill)
+        pdf["bin_id"] = pd.Series(bins, dtype="int64")
+        pdf["bin_fill"] = pd.Series(fills, dtype="int64")
+        return pdf
 
-        return pack
-
-    if max_group_rows is None:
-        in_schema = df.select(*group_cols, id_col, token_col).schema
-        out_schema = T.StructType(list(in_schema.fields) + out_fields)
-        return (
-            df.select(*group_cols, id_col, token_col)
-            .groupBy(*group_cols)
-            .applyInPandas(make_pack(group_cols), schema=out_schema)
-        )
-
-    # per-stratum shard counts: one tiny aggregate (n_strata rows) broadcast
-    # back, then a deterministic id-hash shard — fully parallel, no window
-    # that would itself funnel the stratum through one task
-    sizes = df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("__n"))
-    shards = sizes.select(
-        *group_cols,
-        F.greatest(F.lit(1), F.ceil(F.col("__n") / max_group_rows)).cast("int").alias("__n_shards"),
+    cols = df.select(*group_cols, id_col, token_col)
+    out_schema = T.StructType(
+        list(cols.schema.fields)
+        + [T.StructField("bin_id", T.LongType()), T.StructField("bin_fill", T.LongType())]
     )
-    work = df.join(F.broadcast(shards), group_cols).withColumn(
-        "__shard", F.pmod(F.xxhash64(F.col(id_col)), F.col("__n_shards")).cast("int")
-    )
-    real_groups = [*group_cols, "__shard"]
-    in_schema = work.select(*real_groups, id_col, token_col).schema
-    out_schema = T.StructType(list(in_schema.fields) + out_fields)
-    packed = (
-        work.select(*real_groups, id_col, token_col)
-        .groupBy(*real_groups)
-        .applyInPandas(make_pack(real_groups), schema=out_schema)
-    )
-    return packed.withColumn(
-        "bin_id", F.col("__shard").cast("long") * F.lit(_SHARD_BIN_STRIDE) + F.col("bin_id")
-    ).drop("__shard")
+    return cols.groupBy(*group_cols).applyInPandas(pack, schema=out_schema)
 
 
 def mixture_resample(

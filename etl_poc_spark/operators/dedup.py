@@ -414,110 +414,35 @@ def _driver_union_find(edge_rows, spark, id_field) -> DataFrame:
     return spark.createDataFrame([(n, find(n)) for n in sorted(nodes)], schema)
 
 
-def _star_components(edges: DataFrame, max_rounds: int = 25) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") -> ((id, component),
-    rounds_used). Converges in O(log n) rounds regardless of graph DIAMETER
-    — the scale path for chain-heavy graphs where min-label propagation's
-    O(diameter) shuffles would need one pass per hop.
-
-    Edges are kept canonical as (lo, hi) with lo < hi. Each round:
-
-    - large-star: every node u connects its strictly-larger neighbors to
-      m = min(N(u) ∪ {u});
-    - small-star: every node u connects its smaller-or-self closure to the
-      minimum of its smaller neighbors.
-
-    At the fixed point every component is a star rooted at its minimum id,
-    so labels fall straight out of the edge list. Per round: two shuffles
-    (the groupBy-min per phase) + a set-equality convergence probe;
-    localCheckpoint keeps lineage constant-size."""
-    cur = (
-        edges.select(
-            F.least(F.col("src"), F.col("dst")).alias("lo"),
-            F.greatest(F.col("src"), F.col("dst")).alias("hi"),
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    for rounds in range(1, max_rounds + 1):
-        # large-star over the symmetric closure
-        sym = cur.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
-            cur.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        nbr_min = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        large = (
-            sym.join(nbr_min, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.least(F.col("u"), F.col("mn")).alias("lo"), F.col("v").alias("hi"))
-            .distinct()
-        )
-        # small-star: per hi-node, link its smaller neighbors (and itself)
-        # to the minimum smaller neighbor
-        g = large.groupBy("hi").agg(F.min("lo").alias("m"))
-        small = (
-            g.select(F.col("m").alias("lo"), F.col("hi"))
-            .union(
-                large.join(g, "hi")
-                .filter(F.col("lo") != F.col("m"))
-                .select(F.col("m").alias("lo"), F.col("lo").alias("hi"))
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        same_size = small.count() == cur.count()
-        if same_size and small.exceptAll(cur).limit(1).count() == 0:
-            cur = small
-            break
-        cur = small
-    else:
-        raise RuntimeError(
-            f"star connected components did not converge in {max_rounds} rounds"
-        )
-    labels = (
-        cur.select(F.col("hi").alias("id"), F.col("lo").alias("component"))
-        .union(cur.select(F.col("lo").alias("id"), F.col("lo").alias("component")))
-        .distinct()
-    )
-    return labels, rounds
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 20,
     driver_edge_cap: int | None = None,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Connected components over near-dup pairs -> (id, component) with
     component = min id reachable. This is what turns PAIR output into dedup
     GROUPS (keep one representative per component).
 
-    Three paths behind one contract (`algorithm`):
+    Two paths behind one contract, chosen by edge count:
 
-    - "auto"/"label": edge list provably under _DRIVER_UNION_FIND_EDGE_CAP
-      (limit-probed) -> exact driver-side union-find. The post-LSH graph
-      holds only near-dup members, so this is the common case, and it
-      avoids paying several Spark jobs of fixed overhead for a few
-      thousand edges.
-    - over the cap with "auto"/"label": iterative min-label propagation:
-      each node adopts the smallest label among itself and its neighbors
-      until a fixed point. Convergence needs at most the graph DIAMETER
-      iterations; near-dup graphs are overwhelmingly tiny cliques/chains,
-      so a handful of passes suffice, and `max_iters` bounds the
-      pathological chain. Each pass is one shuffle (groupBy node); frames
-      are localCheckpoint()ed per iteration so the lineage stays
-      constant-size (on a cluster these would be parquet stage tables),
-      and the loop early-exits when no label changes.
-    - "star": alternating large-star/small-star contraction — O(log n)
-      rounds independent of diameter (see _star_components). Pick this for
-      high-diameter graphs where min-label would need one shuffle per hop;
-      the driver fast path still applies under the cap."""
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    - edge list under _DRIVER_UNION_FIND_EDGE_CAP -> exact driver-side
+      union-find. The post-LSH graph holds only near-dup members, so this
+      is the common case, and it avoids paying several Spark jobs of
+      fixed overhead for a few thousand edges.
+    - over the cap: iterative min-label propagation: each node adopts the
+      smallest label among itself and its neighbors until a fixed point.
+      Convergence needs at most the graph DIAMETER iterations; near-dup
+      graphs are overwhelmingly tiny cliques/chains, so a handful of
+      passes suffice, and `max_iters` bounds the pathological chain (a
+      non-converged run raises rather than ship split components). Each
+      pass is one shuffle (groupBy node); frames are localCheckpoint()ed
+      per iteration so the lineage stays constant-size (on a cluster
+      these would be parquet stage tables), and the loop early-exits when
+      no label changes.
+
+    `driver_edge_cap` overrides the cap (0 forces the distributed path)."""
     cap = _DRIVER_UNION_FIND_EDGE_CAP if driver_edge_cap is None else driver_edge_cap
     # persist FIRST, then probe with count(): a bare limit(cap+1).collect()
     # on an uncached frame runs Spark's incremental take — several scale-up
@@ -547,8 +472,6 @@ def connected_components(
         )
     finally:
         pairs_p.unpersist()
-    if algorithm == "star":
-        return _star_components(edges, max_rounds=max_iters)[0]
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()

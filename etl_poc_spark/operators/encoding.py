@@ -13,12 +13,8 @@ then (total_sum - own_fold_sum) / (total_n - own_fold_n) — the
 complement mean, derived from the SAME single scan. Folds come from the
 portable md5 bucket (operators/curation.py::hash_bucket), so the
 assignment — and therefore the whole encoding — is engine-exact and
-reproducible across runs and engines.
-
-Smoothing (`prior_weight` m): encoded = (comp_sum + m * global_mean) /
-(comp_n + m), the standard m-estimate that shrinks rare categories
-toward the global mean; m = 0 is the raw complement mean (NULL when a
-category exists in only one fold and that is the row's own fold).
+reproducible across runs and engines. A category that exists in only
+one fold (the row's own) encodes NULL.
 """
 
 from __future__ import annotations
@@ -35,19 +31,18 @@ def target_encode_cells(
     target_col: str,
     fold_key: Column,
     n_folds: int = 4,
-    prior_weight: int = 0,
     target_decimal: str = "decimal(18,2)",
 ) -> DataFrame:
     """(category, fold, n, encoded) — the out-of-fold encoding per
     (category, fold) cell: the mean of `target_col` over the category's
-    OTHER folds, optionally m-estimate-smoothed toward the global mean.
+    OTHER folds (NULL when the category has no other fold).
     Rows join this cell table on (category, fold) to pick up their
     feature; the cell frame is category-cardinality-sized, so that join
     broadcasts in any realistic feature pipeline.
 
     Exactness: target values accumulate as DECIMAL (order-independent);
-    the encoding is ONE double division per cell (two with smoothing,
-    rounded at the boundary)."""
+    the encoding is ONE double division per cell, rounded at the
+    boundary."""
     t = F.col(target_col).cast(target_decimal)
     fold = hash_bucket(fold_key, n_folds).alias("fold")
     cells = (
@@ -59,19 +54,10 @@ def target_encode_cells(
         )
     )
     wc = Window.partitionBy("category")
-    wg = Window.partitionBy(F.col("category").isNull())  # non-foldable all-rows
     comp_n = F.sum("n").over(wc) - F.col("n")
     comp_s = F.sum("__s").over(wc) - F.col("__s")
-    g_mean = F.sum("__s").over(wg).cast("double") / F.sum("n").over(wg)
-    if prior_weight > 0:
-        enc = F.round(
-            (comp_s.cast("double") + F.lit(float(prior_weight)) * g_mean)
-            / (comp_n + F.lit(prior_weight)).cast("double"),
-            9,
-        )
-    else:
-        enc = F.when(
-            comp_n > 0, F.round(comp_s.cast("double") / comp_n.cast("double"), 9)
-        )
+    enc = F.when(
+        comp_n > 0, F.round(comp_s.cast("double") / comp_n.cast("double"), 9)
+    )
     return cells.select("category", "fold", "n", enc.alias("encoded"))
 

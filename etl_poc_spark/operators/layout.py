@@ -8,9 +8,7 @@ Two operators cover the maintenance loop:
                            files, and the file count a compaction would
                            leave (one metadata-weight aggregate)
   compact_files         -> rewrite a dataset into ceil(n_rows / target)
-                           files, optionally range-partitioned and sorted
-                           on a key so each file holds a disjoint, ordered
-                           key range
+                           files
 
 Reference parity: the reference materializes plain JSON lists
 (`airflow/dags/zara_hybrid_etl.py` save steps) with no layout contract;
@@ -73,7 +71,6 @@ def compact_files(
     spark: SparkSession,
     path: str,
     target_rows_per_file: int,
-    sort_col: str | None = None,
 ) -> dict:
     """Small-file compaction: rewrite the parquet dataset at `path` into
     ceil(n_rows / target_rows_per_file) files. The lakehouse maintenance
@@ -82,12 +79,10 @@ def compact_files(
     scans (a 100k-file day partition reads slower than one 10-file one).
 
     Shape: count (metadata-weight) -> repartition(k) (round-robin, the
-    ONLY shuffle) or, with `sort_col`, repartitionByRange+sort (compact
-    AND leave disjoint, ordered per-file key ranges in one pass) -> write to a
-    staging dir -> SWAP the staging dir into place (delete target +
-    filesystem rename, metadata-only). The staging hop exists because
-    Spark cannot overwrite a path it is lazily reading from; the
-    swap-by-rename (r16) replaces the pre-r16 re-read-and-rewrite
+    ONLY shuffle) -> write to a staging dir -> SWAP the staging dir into
+    place (delete target + filesystem rename, metadata-only). The staging
+    hop exists because Spark cannot overwrite a path it is lazily reading
+    from; the swap-by-rename (r16) replaces the pre-r16 re-read-and-rewrite
     finish, which both paid a second full table write AND re-coalesced
     the staged files by the session's maxPartitionBytes — under a
     default-config session the final file count silently diverged from
@@ -123,11 +118,7 @@ def compact_files(
     k = max(1, math.ceil(n_rows / max(1, target_rows_per_file)))
 
     staging = f"{path}__compact_staging"
-    if sort_col is not None:
-        staged_df = df.repartitionByRange(k, F.col(sort_col)).sortWithinPartitions(sort_col)
-    else:
-        staged_df = df.repartition(k)
-    staged_df.write.mode("overwrite").parquet(staging)
+    df.repartition(k).write.mode("overwrite").parquet(staging)
 
     P = spark._jvm.org.apache.hadoop.fs.Path
     fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())

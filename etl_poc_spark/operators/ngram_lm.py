@@ -179,24 +179,19 @@ def perplexity_filter(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: float = 1.0,
-    max_ppl: float | None = None,
     reference: DataFrame | None = None,
 ) -> DataFrame:
     """Train, then score-per-doc in one call. Default trains on `docs`
     itself; pass `reference` to train on a held-out/high-quality corpus
     and gate `docs` against it — the true CCNet setup (the Wikipedia-
-    trained LM scores the crawl, arXiv:1911.00359 §4.3). Adds a `keep`
-    flag when `max_ppl` is given; otherwise returns the scores for a
-    downstream threshold choice."""
+    trained LM scores the crawl, arXiv:1911.00359 §4.3). Returns the
+    scores for a downstream threshold choice."""
     bi, uni, v = train_bigram_lm(
         reference if reference is not None else docs, text_col=text_col
     )
-    out = score_bigram_logprob(
+    return score_bigram_logprob(
         docs, bi, uni, v, id_col=id_col, text_col=text_col, k=k
     )
-    if max_ppl is not None:
-        out = out.withColumn("keep", F.col("ppl") <= F.lit(float(max_ppl)))
-    return out
 
 
 # ---------------------------------------------------------------------------

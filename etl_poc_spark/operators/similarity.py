@@ -166,21 +166,13 @@ def cosine_for_pairs(
     pairs: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "exact",
 ) -> DataFrame:
     """Cosine for an EXPLICIT (query_id, neighbor_id) candidate-pair
     frame over one vector table — the composition seam for callers that
     already bounded their pairs (near-dup verdicts, LSH buckets): cost is
-    O(|pairs|), never all-pairs. mode='exact' (default) is the decimal
-    bit-stable scorer returning (query_id, neighbor_id, dot, qn, bn,
-    cos_sim); mode='float' is the Arrow-batched numpy production scorer
-    returning (query_id, neighbor_id, cos_sim) only — ~10-40x less work
-    per pair (see semdedup verify and SCALING.md's measured smoke)."""
-    if mode == "exact":
-        return _pair_cosine(vectors, vectors, pairs, id_col, vec_col)
-    if mode == "float":
-        return _pair_cosine_float(vectors, vectors, pairs, id_col, vec_col)
-    raise ValueError(f"mode must be 'exact' or 'float', got {mode!r}")
+    O(|pairs|), never all-pairs. The decimal bit-stable scorer returns
+    (query_id, neighbor_id, dot, qn, bn, cos_sim)."""
+    return _pair_cosine(vectors, vectors, pairs, id_col, vec_col)
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -264,58 +256,6 @@ def ivf_cosine_topk(
 # --- KMeans-trained IVF ------------------------------------------------------
 
 
-def _pair_cosine_float(
-    queries: DataFrame,
-    base: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    vec_col: str,
-    round_digits: int | None = 7,
-) -> DataFrame:
-    """Arrow-batched FLOAT cosine for candidate pairs — the production
-    fast path beside `_pair_cosine`'s decimal-exact scorer. Same joins
-    attach both whole vectors to each pair; the per-pair dot/norm then
-    runs as one numpy kernel per batch instead of a 64-dim explode
-    through decimal aggregation (~10-40x less work per pair). Results
-    match the exact scorer to float64 rounding — use for dedup/ANN
-    screening at scale; keep the decimal scorer where bit-stable,
-    oracle-checkable cosines are required."""
-    import numpy as np
-    import pandas as pd
-
-    va = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__va"))
-    vb = base.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vb"))
-    j = pairs.join(va, "query_id").join(vb, "neighbor_id")
-    qt = dict(pairs.dtypes)["query_id"]
-    nt = dict(pairs.dtypes)["neighbor_id"]
-    out_schema = f"query_id {qt}, neighbor_id {nt}, cos_sim double"
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.stack(pdf["__va"].apply(lambda a: np.asarray(a, dtype=np.float64)))
-            n = np.stack(pdf["__vb"].apply(lambda a: np.asarray(a, dtype=np.float64)))
-            qn = np.linalg.norm(q, axis=1)
-            nn = np.linalg.norm(n, axis=1)
-            dot = np.einsum("ij,ij->i", q, n)
-            # zero-norm guard: a zero vector has no direction — define its
-            # cosine as 0.0 rather than NaN/inf from a 0/0 division
-            denom = qn * nn
-            cos = np.where(denom == 0, 0.0, dot / np.where(denom == 0, 1.0, denom))
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": pdf["neighbor_id"],
-                    "cos_sim": np.round(cos, round_digits)
-                    if round_digits is not None
-                    else cos,
-                }
-            )
-
-    return j.mapInPandas(fn, out_schema)
-
-
 def _cluster_dup_pairs_float(
     members: DataFrame,
     threshold: float,
@@ -336,8 +276,9 @@ def _cluster_dup_pairs_float(
     before calling. Determinism: rows sort by id inside the kernel and
     each cosine is a pure function of the pair's two vectors (fixed-K
     dot products are order-independent in BLAS), so the emitted set and
-    values are partition-independent. Zero-norm vectors score 0.0
-    (same guard as _pair_cosine_float)."""
+    values are partition-independent. Zero-norm vectors score 0.0 (a
+    zero vector has no direction; 0/0 would be NaN), so they are never
+    flagged."""
     import numpy as np
     import pandas as pd
 
@@ -443,9 +384,9 @@ def auto_centroids(n_rows: int, target_cluster_size: int = 200, floor: int = 16)
     return max(floor, n_rows // max(1, target_cluster_size))
 
 
-def _super_quantize(centroids, n_super: int, n_iters: int = 5):
+def _super_quantize(centroids, n_super: int):
     """Driver-side k-means over the CENTROIDS themselves (cosine metric,
-    unit-sphere Lloyd): returns (super_unit_matrix k1 x dim, members)
+    five rounds of unit-sphere Lloyd): returns (super_unit_matrix k1 x dim, members)
     where members[s] is the ASC-sorted array of centroid indices assigned
     to super-centroid s. The input is the KB-sized model artifact, so
     this is microseconds of numpy — deterministic: init takes every
@@ -460,7 +401,7 @@ def _super_quantize(centroids, n_super: int, n_iters: int = 5):
     cunit = cmat / norms[:, None]
     step = max(1, k // n_super)
     sup = cunit[::step][:n_super].copy()
-    for _ in range(n_iters):
+    for _ in range(5):
         sims = cunit @ sup.T
         a = np.argmax(sims, axis=1)  # first-max: lower super index wins ties
         for s in range(len(sup)):
@@ -482,7 +423,6 @@ def _assign_centroid_two_level(
     id_col: str,
     vec_col: str,
     probe_superclusters: int = 4,
-    n_super: int | None = None,
     with_sim: bool = False,
 ) -> DataFrame:
     """IMI-style two-level nearest-centroid assignment — the flat
@@ -509,9 +449,8 @@ def _assign_centroid_two_level(
     norms = np.linalg.norm(cmat, axis=1)
     norms[norms == 0] = 1.0
     cunit = cmat / norms[:, None]
-    k1 = n_super or max(1, int(round(k ** 0.5)))
-    sup, members = _super_quantize(centroids, k1)
-    k1 = len(sup)  # _super_quantize caps at k supers when n_super > k
+    sup, members = _super_quantize(centroids, max(1, int(round(k ** 0.5))))
+    k1 = len(sup)
     w = min(probe_superclusters, k1)
 
     fields = [df.schema[id_col], T.StructField("cluster", T.IntegerType())]
@@ -618,7 +557,6 @@ def train_kmeans_centroids(
     n_iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_train_rows: int | None = None,
 ) -> list[list[float]]:
     """Lloyd iterations, Spark-first and deterministic:
 
@@ -628,23 +566,8 @@ def train_kmeans_centroids(
       means, so centroids are bit-identical across partitionings
 
     The centroid matrix (n_centroids x dim) is the only thing that touches
-    the driver — it is the model artifact, a few KB.
-
-    `max_train_rows` bounds the training set to a DETERMINISTIC md5-hash
-    sample of the corpus (seed-free, partitioning-independent) — a coarse
-    quantizer only needs a representative sample, and at 100 TB training
-    on the full corpus would dominate the whole dedup run. Assignment of
-    the full corpus is unaffected (it happens in semdedup, not here)."""
-    if max_train_rows is not None:
-        # smallest md5(id) prefix = a uniform deterministic sample; the
-        # sort is over the hash STRING on the id-grained frame, bounded
-        # by the take
-        base = (
-            base.withColumn("__h", F.md5(F.col(id_col).cast("string")))
-            .orderBy("__h")
-            .limit(int(max_train_rows))
-            .drop("__h")
-        )
+    the driver — it is the model artifact, a few KB. For a bounded
+    training sample at scale use train_kmeans_centroids_minibatch."""
     init_rows = base.orderBy(id_col).limit(n_centroids).select(vec_col).collect()
     centroids = [list(map(float, r[0])) for r in init_rows]
     dim = len(centroids[0])
@@ -766,24 +689,18 @@ def train_kmeans_centroids_minibatch(
 def kmeans_ivf_topk(
     queries: DataFrame,
     base: DataFrame,
+    centroids: list[list[float]],
     k: int = 5,
-    n_centroids: int = 16,
-    n_iters: int = 2,
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Approximate top-k with TRAINED coarse centroids (real IVF): queries
-    probe their `nprobe` nearest clusters, so the candidate space shrinks
-    ~n_centroids/nprobe versus brute force while recall stays high where
-    sign-bit buckets would split dense regions arbitrarily.
-
-    Pass `centroids` to serve from a pre-trained quantizer (the production
-    shape: train offline once, probe many times); omitted, the model is
-    trained inline from `base`."""
-    if centroids is None:
-        centroids = train_kmeans_centroids(base, n_centroids, n_iters, id_col, vec_col)
+    """Approximate top-k with TRAINED coarse centroids (real IVF, e.g.
+    from train_kmeans_centroids): queries probe their `nprobe` nearest
+    clusters, so the candidate space shrinks ~len(centroids)/nprobe versus
+    brute force while recall stays high where sign-bit buckets would split
+    dense regions arbitrarily. The model is trained once, offline, and
+    probed many times."""
     b_tag = _assign_centroid(base, centroids, id_col, vec_col, nprobe=1) \
         .withColumnRenamed(id_col, "neighbor_id")
     q_tag = _assign_centroid(queries, centroids, id_col, vec_col, nprobe=nprobe) \
@@ -1004,19 +921,15 @@ def pq_adc_topk(
 def ivfpq_topk(
     queries: DataFrame,
     base: DataFrame,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
     k: int = 5,
     nprobe: int = 2,
-    n_centroids: int = 16,
-    n_iters: int = 2,
-    m: int = 4,
-    n_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """FAISS-style IVF-PQ: the trained coarse quantizer gates candidates
-    FIRST (queries probe their `nprobe` nearest of `n_centroids` clusters,
+    FIRST (queries probe their `nprobe` nearest of the `centroids`,
     base vectors live in exactly one), then only the gated candidates
     ADC-score — true query vector against the candidate's PQ-reconstructed
     vector, decoded in-plan from the literal codebooks. This composes
@@ -1025,16 +938,12 @@ def ivfpq_topk(
     variant), so the codebooks are shared across clusters and the decode
     expression stays cluster-independent.
 
-    Scale shape: candidate space shrinks ~n_centroids/nprobe via the
+    Scale shape: candidate space shrinks ~len(centroids)/nprobe via the
     cluster equi-join (never all-pairs), base-side payload per candidate
     is the code row (m small ints, ~21x under the float vector at the
     registered 16x64 config), and both models are KB-sized driver
-    artifacts (train offline once, probe many times — pass `centroids` /
-    `codebooks` to serve from a pre-trained index)."""
-    if centroids is None:
-        centroids = train_kmeans_centroids(base, n_centroids, n_iters, id_col, vec_col)
-    if codebooks is None:
-        codebooks = train_pq_codebooks(base, m, n_codes, 1, id_col, vec_col)
+    artifacts from train_kmeans_centroids / train_pq_codebooks (train
+    offline once, probe many times)."""
     b_tag = _assign_centroid(base, centroids, id_col, vec_col, nprobe=1) \
         .withColumnRenamed(id_col, "neighbor_id")
     q_tag = _assign_centroid(queries, centroids, id_col, vec_col, nprobe=nprobe) \
@@ -1240,6 +1149,53 @@ def sq8_quantize_expr(
     )
 
 
+def _sq8_rank(
+    queries: DataFrame,
+    base: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_bits: int | None,
+) -> DataFrame:
+    """The one SQ8 scoring body: bounds trained on `base`, both sides
+    quantized, candidates formed by a cross join (`n_bits` None) or an
+    equi-join on the `n_bits` sign-bit bucket, scored by the exact integer
+    code dot and ranked (ties by neighbor_id)."""
+    mn, mx = sq8_train_bounds(base, vec_col, dim)
+
+    def tag() -> list[F.Column]:
+        return [] if n_bits is None else [sign_bucket_expr(vec_col, n_bits).alias("bucket")]
+
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        *tag(),
+        sq8_quantize_expr(vec_col, mn, mx).alias("__qc"),
+    )
+    b = base.select(
+        F.col(id_col).alias("neighbor_id"),
+        *tag(),
+        sq8_quantize_expr(vec_col, mn, mx).alias("__bc"),
+    )
+    hint_q = F.broadcast if _provably_small(queries) else (lambda df: df)
+    cand = hint_q(q).crossJoin(b) if n_bits is None else hint_q(q).join(b, "bucket")
+    scored = cand.select(
+        "query_id",
+        "neighbor_id",
+        F.aggregate(
+            F.zip_with(F.col("__qc"), F.col("__bc"), lambda a, c: (a * c).cast("long")),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ).alias("score"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "score")
+    )
+
+
 def sq8_topk(
     queries: DataFrame,
     base: DataFrame,
@@ -1247,7 +1203,6 @@ def sq8_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    bounds: tuple[list[float], list[float]] | None = None,
 ) -> DataFrame:
     """SQ8 approximate top-k by symmetric quantized dot product — the
     scalar-quantization tier of the FAISS family (IVF / PQ / IVF-PQ are
@@ -1260,39 +1215,13 @@ def sq8_topk(
     Output: (query_id, neighbor_id, rank, score) — ties broken by
     neighbor_id, ranking total and deterministic.
 
-    Scale shape: bounds are ONE 1-row aggregation; quantization is
-    map-only literal arithmetic; the candidate space here is brute-force
-    (queries broadcast over the base scan — right for ≤ thousands of
-    queries); at billions of base rows compose with the IVF bucket join
-    (quantize within `ivf_cosine_topk`'s bucketed candidates) — the
-    memory win is what makes the in-partition scan feasible there."""
-    if bounds is None:
-        bounds = sq8_train_bounds(base, vec_col, dim)
-    mn, mx = bounds
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        sq8_quantize_expr(vec_col, mn, mx).alias("__qc"),
-    )
-    b = base.select(
-        F.col(id_col).alias("neighbor_id"),
-        sq8_quantize_expr(vec_col, mn, mx).alias("__bc"),
-    )
-    hint_q = F.broadcast if _provably_small(queries) else (lambda df: df)
-    scored = hint_q(q).crossJoin(b).select(
-        "query_id",
-        "neighbor_id",
-        F.aggregate(
-            F.zip_with(F.col("__qc"), F.col("__bc"), lambda a, c: (a * c).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    Scale shape: the bounds are trained on `base` by sq8_train_bounds,
+    ONE 1-row aggregation; quantization is map-only literal arithmetic;
+    the candidate space here is brute-force (queries broadcast over the
+    base scan — right for ≤ thousands of queries); at billions of base
+    rows use ivf_sq8_topk, which quantizes within the sign-bit bucketed
+    candidates."""
+    return _sq8_rank(queries, base, k, id_col, vec_col, dim, None)
 
 
 def ivf_sq8_topk(
@@ -1303,45 +1232,17 @@ def ivf_sq8_topk(
     vec_col: str = "embedding",
     n_bits: int = 6,
     dim: int = 64,
-    bounds: tuple[list[float], list[float]] | None = None,
 ) -> DataFrame:
     """IVF + SQ8: the composed scale path the SQ8 docstring promises —
     the sign-bit coarse quantizer shrinks the candidate space ~2^n_bits
     (an equi-join on bucket, never a cross join), and candidates are
     scored by the symmetric INTEGER dot of their uint8 codes (4× less
-    memory scanned per candidate than float32). Both halves are
-    deterministic, so the whole query is hash-exact cross-engine.
+    memory scanned per candidate than float32), with bounds trained on
+    `base` as in sq8_topk. Both halves are deterministic, so the whole
+    query is hash-exact cross-engine.
 
     Output: (query_id, neighbor_id, rank, score), ties by neighbor_id."""
-    if bounds is None:
-        bounds = sq8_train_bounds(base, vec_col, dim)
-    mn, mx = bounds
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        sign_bucket_expr(vec_col, n_bits).alias("bucket"),
-        sq8_quantize_expr(vec_col, mn, mx).alias("__qc"),
-    )
-    b = base.select(
-        F.col(id_col).alias("neighbor_id"),
-        sign_bucket_expr(vec_col, n_bits).alias("bucket"),
-        sq8_quantize_expr(vec_col, mn, mx).alias("__bc"),
-    )
-    hint_q = F.broadcast if _provably_small(queries) else (lambda df: df)
-    scored = hint_q(q).join(b, "bucket").select(
-        "query_id",
-        "neighbor_id",
-        F.aggregate(
-            F.zip_with(F.col("__qc"), F.col("__bc"), lambda a, c: (a * c).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _sq8_rank(queries, base, k, id_col, vec_col, dim, n_bits)
 
 
 def bitext_margin_mine(
@@ -1351,8 +1252,6 @@ def bitext_margin_mine(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 1.0,
-    pairs: DataFrame | None = None,
-    mode: str = "exact",
 ) -> DataFrame:
     """Margin-based bitext mining (Artetxe & Schwenk 2019, the LASER/
     CCMatrix primitive): score every (src, tgt) candidate by the RATIO
@@ -1369,42 +1268,21 @@ def bitext_margin_mine(
     rounded to 7 — hash-exact cross-engine (gate query
     `bitext_margin_pairs`). Ties break by id, so the mined set is total.
 
-    Scale shape: pass `pairs` to bound candidates (e.g. the IVF sign-
-    bucket join or an SQ8 prefilter) — the default all-pairs grid is for
-    a bounded src side (broadcast) only; the margin statistics are then
-    computed WITHIN the candidate set, as in blocked CCMatrix mining.
-    mode='float' swaps in the Arrow-batched numpy scorer
-    (`_pair_cosine_float`, ~10-40× less work per pair — the semdedup
-    verify discipline) for production mining; 'exact' keeps the decimal
-    bit-stable scorer the oracle gate checks.
+    Scale shape: the candidates are the all-pairs grid, so the src side
+    must be bounded (it is broadcast when provably small); the margin
+    statistics are computed over that grid.
 
     Output: (src_id, tgt_id, cos_sim, margin, mutual_best)."""
-    if mode not in ("exact", "float"):
-        raise ValueError(f"mode must be 'exact' or 'float', got {mode!r}")
-    if pairs is None and mode == "exact":
-        # r16: the default all-pairs grid CARRIES both whole vectors, so
-        # the exact scorer needs no re-attach joins (guide §2.4/§8); one
-        # probe decides the src-side broadcast hint.
-        small_q = _provably_small(src)
-        hint_q = F.broadcast if small_q else (lambda df: df)
-        va = src.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__va"))
-        vb = tgt.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vb")
-        )
-        scored = _pair_cosine_carried(
-            hint_q(va).crossJoin(vb), src, tgt, id_col, vec_col, small_q=small_q
-        )
-    else:
-        if pairs is None:
-            pairs = (
-                src.select(F.col(id_col).alias("query_id"))
-                .crossJoin(tgt.select(F.col(id_col).alias("neighbor_id")))
-            )
-        if mode == "exact":
-            scored = _pair_cosine(src, tgt, pairs, id_col, vec_col)
-        else:
-            scored = _pair_cosine_float(src, tgt, pairs, id_col, vec_col)
-    scored = scored.select("query_id", "neighbor_id", "cos_sim")
+    # the all-pairs grid CARRIES both whole vectors, so the exact scorer
+    # needs no re-attach joins; one probe decides the src-side broadcast
+    # hint.
+    small_q = _provably_small(src)
+    hint_q = F.broadcast if small_q else (lambda df: df)
+    va = src.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__va"))
+    vb = tgt.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vb"))
+    scored = _pair_cosine_carried(
+        hint_q(va).crossJoin(vb), src, tgt, id_col, vec_col, small_q=small_q
+    ).select("query_id", "neighbor_id", "cos_sim")
     d187 = "decimal(18,7)"
     w_q = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")

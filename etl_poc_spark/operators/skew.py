@@ -19,30 +19,19 @@ def salted_join(
     small: DataFrame,
     on: str,
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join `large` with `small` on column `on`, spreading each key of
-    `large` across `n_salts` partitions. `small` is replicated n_salts
-    times (keep it the dimension side). Deterministic: the salt is a hash
-    of the large side's full row spread via pmod.
-
-    Only `how` in ("inner", "left") is accepted: those are exactly the
-    joins where the result is identical to the unsalted join. For
-    "right"/"full", an unmatched small-side key survives in all n_salts
-    replicas and would emit n_salts duplicate null-padded rows — refuse
-    rather than silently break the equivalence contract."""
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how='inner'|'left', got {how!r}: outer small-side "
-            "rows would be duplicated once per salt replica"
-        )
+    """Inner equi-join of `large` with `small` on column `on`, spreading
+    each key of `large` across `n_salts` partitions. `small` is replicated
+    n_salts times (keep it the dimension side). Deterministic: the salt is
+    a hash of the large side's full row spread via pmod. Each large row
+    meets exactly one replica, so the result equals the unsalted inner
+    join (an outer join would keep every unmatched replica)."""
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in large.columns]), F.lit(n_salts)).alias("__salt")
     salted_large = large.select("*", salt)
     replicas = small.select(
         "*", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("__salt")
     )
-    out = salted_large.join(replicas, [on, "__salt"], how)
-    return out.drop("__salt")
+    return salted_large.join(replicas, [on, "__salt"]).drop("__salt")
 
 
 def key_skew_report(df: DataFrame, key_col: str) -> DataFrame:

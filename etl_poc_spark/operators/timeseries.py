@@ -55,19 +55,17 @@ def gap_fill_daily(
     day_col: str = "day",
     zero_cols: list[str] | None = None,
     ffill_cols: list[str] | None = None,
-    spine: DataFrame | None = None,
 ) -> DataFrame:
-    """Densify an aggregated (group, day, metrics...) frame against a
-    spine (default: each group's own span): missing days appear with
-    `zero_cols` filled to 0 and `ffill_cols` carried forward from the
-    last observed day (NULL before the first observation). One left join
-    + one group-windowed pass."""
-    if spine is None:
-        spine = daily_spine(
-            observed.select(*group_cols, F.col(day_col).cast("timestamp").alias("__ts")),
-            "__ts",
-            group_cols,
-        ).withColumnRenamed("day", day_col)
+    """Densify an aggregated (group, day, metrics...) frame against each
+    group's own day span: missing days appear with `zero_cols` filled to
+    0 and `ffill_cols` carried forward from the last observed day (NULL
+    before the first observation). One left join + one group-windowed
+    pass."""
+    spine = daily_spine(
+        observed.select(*group_cols, F.col(day_col).cast("timestamp").alias("__ts")),
+        "__ts",
+        group_cols,
+    ).withColumnRenamed("day", day_col)
     dense = spine.join(observed, [*group_cols, day_col], "left")
     out = dense
     for c in zero_cols or []:

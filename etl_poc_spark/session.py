@@ -19,7 +19,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# SPARK_GRAFT_CPUS is the deployment override; unset, size to the CPUs
+# this process may run on.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _default_driver_memory() -> str:
@@ -36,9 +38,9 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """`extra_conf` overlays/overrides the tuned defaults — used by
-    tooling that needs a non-default knob (e.g. tools/scale_smoke.py
-    re-enables the UI to read per-task durations from the status REST
-    API). Ignored if a session already exists (getOrCreate semantics)."""
+    tooling that needs a non-default knob (e.g. perfbench keeps Spark's
+    scratch files in its work dir). Ignored if a session already exists
+    (getOrCreate semantics)."""
     cpus = cpus or DEFAULT_CPUS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

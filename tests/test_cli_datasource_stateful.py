@@ -3,10 +3,14 @@
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
 import pytest
+
+# the checkout under test: its CLI, not whatever the working directory holds
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_cli_end_to_end(tmp_path):
@@ -30,7 +34,7 @@ def test_cli_end_to_end(tmp_path):
         [sys.executable, "-m", "etl_poc_spark.cli", "--config", str(cfg_path),
          "--input", "/root/testdata/sf0.001", "--output", str(out_path),
          "--summary", str(sum_path), "--cpus", "4"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO_ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     summary = json.loads(sum_path.read_text())
@@ -120,7 +124,7 @@ pipeline:
          "--var", "default_model=stub",
          "--var", "dataset_path=/root/testdata/sf0.001/documents.parquet",
          "--output", str(out_path), "--summary", str(sum_path), "--cpus", "4"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO_ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     summary = json.loads(sum_path.read_text())

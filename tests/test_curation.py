@@ -84,42 +84,6 @@ def test_pack_stream_cut_exact_past_double_mantissa(spark):
     assert rows[2]["seq_id"] == big // 2048 == (1 << 42)
 
 
-def test_pack_sequences_greedy_subshards_mega_stratum(spark):
-    """max_group_rows splits a dominant stratum into hash shards so no task
-    holds the whole language; all packing invariants survive sharding."""
-    from etl_poc_spark.operators.curation import _SHARD_BIN_STRIDE
-
-    rows = [("en", i, 100 + (i * 13) % 200) for i in range(900)]  # 90% one lang
-    rows += [("de", 10_000 + i, 150) for i in range(100)]
-    df = spark.createDataFrame(rows, "lang string, doc_id int, n_tokens int")
-    out = pack_sequences_greedy(df, cap=512, group_cols=["lang"], max_group_rows=50)
-    got = out.collect()
-    assert len(got) == 1000  # every doc packed exactly once
-    assert len({r["doc_id"] for r in got}) == 1000
-
-    by_bin: dict = {}
-    shards_per_lang: dict = {}
-    for r in got:
-        by_bin.setdefault((r["lang"], r["bin_id"]), []).append(r)
-        shards_per_lang.setdefault(r["lang"], set()).add(r["bin_id"] // _SHARD_BIN_STRIDE)
-    # the hot stratum really was split: ceil(900/50) = 18 hash shards
-    assert len(shards_per_lang["en"]) == 18
-    assert len(shards_per_lang["de"]) == 2
-    # hash sharding is approximately uniform: no shard holds the stratum
-    from collections import Counter
-
-    en_shard_rows = Counter(r["bin_id"] // _SHARD_BIN_STRIDE for r in got if r["lang"] == "en")
-    assert max(en_shard_rows.values()) <= 3 * 50  # bounded per-task rows
-    # packing invariants inside every bin: id order, restart-cumsum fill, cap
-    for (_, _bin), rs in by_bin.items():
-        rs.sort(key=lambda r: r["doc_id"])
-        fill = 0
-        for r in rs:
-            fill += r["n_tokens"]
-            assert r["bin_fill"] == fill
-        assert fill <= 512 or len(rs) == 1
-
-
 def test_pack_sequences_greedy_invariants(spark):
     df = spark.createDataFrame(
         [("en", i, 150 + (i * 37) % 300) for i in range(40)]

@@ -12,6 +12,9 @@ import pytest
 
 from etl_poc_spark.plans.harness import PipelineTimeoutError, run_with_harness
 
+# the checkout under test: its CLI, not whatever the working directory holds
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_harness_returns_body_result(spark):
     assert run_with_harness(spark, lambda: 42, timeout_seconds=30, retries=0) == 42
@@ -82,7 +85,7 @@ def test_cli_failing_pipeline_quarantines_and_exits_nonzero(tmp_path):
         [sys.executable, "-m", "etl_poc_spark.cli", "--config", str(cfg_path),
          "--input", "/root/testdata/sf0.001", "--cpus", "2",
          "--retries", "0", "--errors-dir", str(errors_dir)],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO_ROOT,
     )
     assert proc.returncode == 1
     err = json.loads(proc.stderr.strip().splitlines()[-1])

@@ -1,30 +1,29 @@
 """Incremental stores: the bigram-LM count store and its perplexity
-monitor, plus the float-cosine guard."""
+monitor, plus the float-cosine zero-norm guard."""
 
 from __future__ import annotations
 
 
 def test_float_cosine_zero_norm_guard(spark):
-    """cosine_for_pairs(mode='float') on a zero vector: cos_sim is 0.0 by
-    definition (no direction), never NaN/inf from the 0/0 division."""
+    """semdedup's float verify kernel on a cluster holding a zero vector:
+    its cos_sim is 0.0 by definition (no direction), never NaN/inf from
+    the 0/0 division, so it is never flagged as a duplicate."""
     import math
 
-    from etl_poc_spark.operators.similarity import cosine_for_pairs
+    from etl_poc_spark.operators.similarity import _cluster_dup_pairs_float
 
-    vecs = spark.createDataFrame(
-        [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 1)], "query_id long, neighbor_id long"
+    members = spark.createDataFrame(
+        [(0, 1, [0.0, 0.0]), (0, 2, [1.0, 0.0]), (0, 3, [1.0, 0.0])],
+        "cluster int, vec_id long, embedding array<double>",
     )
     got = {
         (r.query_id, r.neighbor_id): r.cos_sim
-        for r in cosine_for_pairs(vecs, pairs, mode="float").collect()
+        for r in _cluster_dup_pairs_float(members, 0.0, "vec_id", "embedding").collect()
     }
-    assert got[(1, 2)] == 0.0 and got[(1, 1)] == 0.0
-    assert got[(2, 3)] == 1.0
+    assert got == {(1, 2): 0.0, (1, 3): 0.0, (2, 3): 1.0}
     assert all(not math.isnan(v) and not math.isinf(v) for v in got.values())
+    flagged = _cluster_dup_pairs_float(members, 0.99, "vec_id", "embedding").collect()
+    assert [(r.query_id, r.neighbor_id) for r in flagged] == [(2, 3)]
 
 
 def test_incremental_bigram_lm_store_folds_bit_equal(spark, tmp_path):

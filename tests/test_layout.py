@@ -1,6 +1,5 @@
 """Layout maintenance: fragmentation_report flags small files and
-compact_files rewrites them, optionally into disjoint, ordered per-file
-key ranges."""
+compact_files rewrites them."""
 
 from __future__ import annotations
 
@@ -25,19 +24,6 @@ def test_compact_files(spark, sf_dir, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == n
     assert back.select("o_orderkey").distinct().count() == n  # keys intact
-
-    # compact-and-sort leaves disjoint, ordered key ranges per file
-    stats2 = compact_files(spark, out, target_rows_per_file=n // 3, sort_col="o_orderkey")
-    man = (
-        spark.read.parquet(out)
-        .groupBy(F.input_file_name())
-        .agg(F.min("o_orderkey").alias("min_key"), F.max("o_orderkey").alias("max_key"))
-        .orderBy("min_key")
-        .collect()
-    )
-    assert stats2["n_rows"] == n and len(man) == stats2["files_after"]
-    for a, b in zip(man, man[1:]):
-        assert a.max_key < b.min_key
 
 
 def test_fragmentation_report_drives_compaction(spark, sf_dir, tmp_path):

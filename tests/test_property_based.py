@@ -183,54 +183,6 @@ def test_asof_join_matches_python_reference(spark):
     assert got == expected
 
 
-def test_star_components_property_random_graphs(spark):
-    """Star contraction must match exact union-find on arbitrary edge
-    lists. One Spark run over a union of generated graphs (id-offset so
-    components can't bleed across examples)."""
-    edge_lists = collect_examples(
-        st.lists(
-            st.tuples(st.integers(0, 40), st.integers(0, 40)),
-            min_size=1,
-            max_size=60,
-        ),
-        n=12,
-    )
-    all_edges = []
-    for g, edges in enumerate(edge_lists):
-        base = g * 1000
-        all_edges += [(base + a, base + b) for a, b in edges if a != b]
-    if not all_edges:
-        return
-
-    # python reference union-find
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent.get(x, x) != x:
-            parent[x] = parent.get(parent[x], parent[x])
-            x = parent[x]
-        return x
-
-    for a, b in all_edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    nodes = {v for e in all_edges for v in e}
-    expected = {n: find(n) for n in sorted(nodes)}
-
-    from etl_poc_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(all_edges, "id_a long, id_b long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            pairs, driver_edge_cap=0, algorithm="star", max_iters=30
-        ).collect()
-    }
-    assert got == expected
-
-
 def test_blocked_fuzzy_pairs_matches_bruteforce_reference(spark):
     """Hypothesis: within the blocking recall boundary, the operator finds
     EXACTLY the brute-force edit-distance pairs — same-block candidate

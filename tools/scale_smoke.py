@@ -332,37 +332,39 @@ def semdedup_phase_split(spark, scratch: str) -> dict:
     return out
 
 
-def _max_task_ms(spark, stage_floor: int) -> tuple[int, int]:
-    """(max task duration ms, last stage id) across completed stages with
-    id > stage_floor, via the status REST API (requires spark.ui.enabled).
-    The max-task number is the one wall-clock can't show on local[32]:
-    a whale-key window partition serializes onto ONE task, so the
-    straggler time is what a 1000-executor cluster would actually wait."""
-    import json as _j
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    stages = _j.load(
-        urllib.request.urlopen(f"{base}/api/v1/applications/{app}/stages?status=complete")
-    )
-    mx, last = 0, stage_floor
-    for st in stages:
-        sid = st["stageId"]
+def _stage_stats(spark, stage_floor: int) -> tuple[int, int, int, int]:
+    """(max task duration ms, last stage id, memory spill bytes, disk spill
+    bytes) over the completed stages with id > stage_floor, read from the
+    in-process status store (the last stage id never drops below
+    stage_floor, so it is the next call's floor). The max-task number is
+    the one wall-clock can't show on a local session: a whale-key window
+    partition serializes onto ONE task, so the straggler time is what a
+    1000-executor cluster would actually wait."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    jvm = spark._jvm
+    max_q = sc._gateway.new_array(jvm.double, 1)
+    max_q[0] = 1.0
+    stages = store.stageList(
+        None, False, False, sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList()
+    ).iterator()
+    mx, last, mem_sp, disk_sp = 0, stage_floor, 0, 0
+    while stages.hasNext():
+        st = stages.next()
+        if st.status().toString() != "COMPLETE":
+            continue
+        sid = int(st.stageId())
         last = max(last, sid)
         if sid <= stage_floor:
             continue
-        try:
-            s = _j.load(
-                urllib.request.urlopen(
-                    f"{base}/api/v1/applications/{app}/stages/{sid}/"
-                    f"{st['attemptId']}/taskSummary?quantiles=1.0"
-                )
-            )
-            mx = max(mx, int(s["duration"][0]))
-        except Exception:  # noqa: BLE001 — summary not retained; skip stage
-            continue
-    return mx, last
+        mem_sp += int(st.memoryBytesSpilled())
+        disk_sp += int(st.diskBytesSpilled())
+        summary = store.taskSummary(sid, st.attemptId(), max_q)
+        if summary.isDefined():  # not retained -> skip the stage
+            mx = max(mx, int(summary.get().duration().apply(0)))
+    return mx, last, mem_sp, disk_sp
 
 
 def asof_whale_measure(spark, src_sf: str, copies: int, whale_share: float = 0.5) -> dict:
@@ -409,14 +411,14 @@ def asof_whale_measure(spark, src_sf: str, copies: int, whale_share: float = 0.5
         "ts_span_days": round(span / 86400, 1),
         "runs": {},
     }
-    _, floor = _max_task_ms(spark, -1)
+    floor = _stage_stats(spark, -1)[1]
 
     def run(label, fn):
         nonlocal floor
         t0 = time.perf_counter()
         fn().write.format("noop").mode("overwrite").save()
         wall = round(time.perf_counter() - t0, 1)
-        mx, floor = _max_task_ms(spark, floor)
+        mx, floor, _, _ = _stage_stats(spark, floor)
         out["runs"][label] = {"wall_s": wall, "max_task_s": round(mx / 1000, 1)}
         print(json.dumps({label: out["runs"][label]}), flush=True)
 
@@ -451,8 +453,6 @@ def span_hot_hash_measure(
     baseline, the salted two-phase verdict guard is warranted; flat
     readings mean the narrow (id, start, 16-byte-md5) window rows keep
     the buffer benign at this scale."""
-    import urllib.request
-
     from pyspark.sql import functions as F
 
     from etl_poc_spark.io import load_table
@@ -475,37 +475,7 @@ def span_hot_hash_measure(
     n = hot.count()
     n_hot = hot.filter(F.col("text").endswith(footer)).count()
     out = {"n_docs": n, "n_hot_docs": n_hot, "runs": {}}
-    _, floor = _max_task_ms(spark, -1)
-
-    def _max_task_and_spill(stage_floor: int) -> tuple[int, int, int, int]:
-        import json as _j
-
-        base_url = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        stages = _j.load(
-            urllib.request.urlopen(
-                f"{base_url}/api/v1/applications/{app}/stages?status=complete"
-            )
-        )
-        mx, last, mem_sp, disk_sp = 0, stage_floor, 0, 0
-        for st in stages:
-            sid = st["stageId"]
-            last = max(last, sid)
-            if sid <= stage_floor:
-                continue
-            mem_sp += int(st.get("memoryBytesSpilled", 0))
-            disk_sp += int(st.get("diskBytesSpilled", 0))
-            try:
-                s = _j.load(
-                    urllib.request.urlopen(
-                        f"{base_url}/api/v1/applications/{app}/stages/{sid}/"
-                        f"{st['attemptId']}/taskSummary?quantiles=1.0"
-                    )
-                )
-                mx = max(mx, int(s["duration"][0]))
-            except Exception:  # noqa: BLE001 — summary not retained; skip
-                continue
-        return mx, last, mem_sp, disk_sp
+    floor = _stage_stats(spark, -1)[1]
 
     def run(label, df):
         nonlocal floor
@@ -514,7 +484,7 @@ def span_hot_hash_measure(
             "overwrite"
         ).save()
         wall = round(time.perf_counter() - t0, 1)
-        mx, floor, mem_sp, disk_sp = _max_task_and_spill(floor)
+        mx, floor, mem_sp, disk_sp = _stage_stats(spark, floor)
         out["runs"][label] = {
             "wall_s": wall,
             "max_task_s": round(mx / 1000, 1),
@@ -596,17 +566,13 @@ def main() -> int:
 
     registry.load_all()
     if args.asof_whale:
-        spark = get_spark(
-            "scale_smoke", extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4049"}
-        )
+        spark = get_spark("scale_smoke")
         report = asof_whale_measure(spark, args.src, args.copies)
         report["copies"] = args.copies
         print(json.dumps({"asof_whale": report}))
         return 0
     if args.span_hot_hash:
-        spark = get_spark(
-            "scale_smoke", extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4049"}
-        )
+        spark = get_spark("scale_smoke")
         report = span_hot_hash_measure(spark, args.src, args.copies)
         report["copies"] = args.copies
         print(json.dumps({"span_hot_hash": report}))
