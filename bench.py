@@ -50,10 +50,6 @@ BENCH_QUERIES = [
     "events_sliding_windows",
 ]
 
-# Every other registered query is benched too (after the headline set), so a
-# regression anywhere in the surface is visible round over round.
-BENCH_ALL_REGISTERED = True
-
 # Per-query timing = MEDIAN of 3 runs: the first run eats plan compilation /
 # codegen / cache warmup, a single best-of can still catch a lucky OS-cache
 # hit — the median is the noise-robust round-over-round number.
@@ -192,9 +188,9 @@ def main() -> None:
     except (OSError, ValueError):
         pass
 
-    names = list(BENCH_QUERIES)
-    if BENCH_ALL_REGISTERED:
-        names += sorted(set(registry.QUERIES) - set(BENCH_QUERIES))
+    # every other registered query is benched too (after the headline set),
+    # so a regression anywhere in the surface is visible round over round
+    names = list(BENCH_QUERIES) + sorted(set(registry.QUERIES) - set(BENCH_QUERIES))
 
     # fault-isolated per query: one broken query records an {"err": ...}
     # entry and the sweep continues — a single analysis error must never

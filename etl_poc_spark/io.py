@@ -11,14 +11,15 @@ API shape (name -> DataFrame) is the same, so nothing downstream changes.
 Schema memo: `spark.read.parquet` without a schema runs one Spark job per
 call to infer it from the footers. `_SCHEMAS` plays the catalog: the first
 load of a file in this process infers, later loads hand that schema to the
-reader and start no job. The key is the absolute path, `st_mtime_ns` and
-`st_size` (for a table directory also each top-level entry's name, mtime
-and size) and the `nanosAsLong` conf, which decides whether a
-TIMESTAMP(NANOS) column infers as bigint. A rewritten file changes its
-stat and is inferred again; a path that cannot be stat'ed (a remote URI)
-is never memoized. `pins.clear_memos` leaves this memo alone: it empties
-trained-model memos so each benchmark run pays its training, while a
-schema is catalog metadata a production table would not re-infer.
+reader and start no job. The key is the file's `file_stamp` (absolute
+path, `st_mtime_ns` and `st_size`, for a table directory also each
+top-level entry's name, mtime and size) and the `nanosAsLong` conf, which
+decides whether a TIMESTAMP(NANOS) column infers as bigint. A rewritten
+file changes its stamp and is inferred again; a path that cannot be
+stat'ed (a remote URI) is never memoized. The same stamp keys the trained
+models of `pins.memo_model`. `pins.clear_memos` leaves this memo alone: it
+empties trained-model memos so each benchmark run pays its training, while
+a schema is catalog metadata a production table would not re-infer.
 """
 
 from __future__ import annotations
@@ -40,17 +41,27 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """`spark.read.parquet(path)`, reusing the schema this process inferred
-    for the unchanged file (see the module docstring)."""
+def file_stamp(path: str) -> tuple | None:
+    """The file's identity for a process-level memo: absolute path,
+    `st_mtime_ns` and `st_size`, and for a table directory each top-level
+    entry's name, mtime and size. None when the path cannot be stat'ed."""
     try:
         st = os.stat(path)
         stamp = [(st.st_mtime_ns, st.st_size)]
         if os.path.isdir(path):
             stamp += sorted((e.name, e.stat().st_mtime_ns, e.stat().st_size) for e in os.scandir(path))
     except OSError:
+        return None
+    return (os.path.abspath(path), tuple(stamp))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, reusing the schema this process inferred
+    for the unchanged file (see the module docstring)."""
+    stamp = file_stamp(path)
+    if stamp is None:
         return spark.read.parquet(path)
-    key = (os.path.abspath(path), tuple(stamp), spark.conf.get(_NANOS_AS_LONG, None))
+    key = (stamp, spark.conf.get(_NANOS_AS_LONG, None))
     if key in _SCHEMAS:
         return spark.read.schema(_SCHEMAS[key]).parquet(path)
     df = spark.read.parquet(path)

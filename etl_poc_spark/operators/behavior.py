@@ -4,7 +4,7 @@ averages, ABC classes, grouping sets, column profiles, association rules
 and PPS sampling.
 
 Each algorithm has exactly one body here. The registered queries
-(queries/behavior_q.py, behavior2_q.py, profile_q.py) call it with their
+(queries/behavior_q.py, profile_q.py) call it with their
 table's column names and add their own projection or rollup; the YAML
 pipeline ops (plans/yaml_pipeline.py) call it with the op's parameters.
 No function here sorts its output: ordering belongs to the caller, so a

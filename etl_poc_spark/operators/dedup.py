@@ -224,7 +224,7 @@ def simhash64_signatures(
     """64-bit SimHash per document, packed into one BIGINT column `sig`.
 
     This is the production/scale variant of the 16-bit md5 demo
-    (queries/dedup2_q.py): bit j of word w is bit j of hash64(w), and
+    (queries/dedup_q.py): bit j of word w is bit j of hash64(w), and
     signature bit j is the sign of the count-weighted vote over the
     document's words. Everything is JVM-side integer math:
 

@@ -17,38 +17,53 @@ everything registered. Callers run their action on the returned query frame
 
 Releasing BEFORE the action is safe too — the frames just lose caching and
 branches recompute (correctness is unaffected).
+
+The module also holds the one trained-model memo: `memo_model(name, path,
+train)` trains once per (name, `io.file_stamp(path)`), the stamp that also
+keys `io.load_table`'s schema memo, and `clear_memos()` empties it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import TypeVar
+
 from pyspark.sql import DataFrame
+
+from etl_poc_spark.io import file_stamp
+
+T = TypeVar("T")
 
 _PINNED: list[DataFrame] = []
 
-# Process-level trained-model memos (kmeans centroids, PQ codebooks, BPE
-# merges) registered by the query modules that own them. They exist so a
-# long-lived SESSION (gates, entry, production serving) trains once per
-# data fingerprint — but a BENCHMARK that keeps them warm across its
-# repeated runs amortizes training out of runs 2..N and publishes medians
-# that understate cold-run cost (r16 verdict item 3). bench.py and
-# tools/time_query.py call clear_memos() between timed runs so every run
-# pays training; nothing else should call it.
-_MEMOS: list[dict] = []
+# Process-level trained-model memo (kmeans centroids, PQ codebooks, BPE
+# merges), one dict keyed by (model name, file stamp of the table it was
+# trained on). It exists so a long-lived SESSION (gates, entry, production
+# serving) trains once per table version — but a BENCHMARK that keeps it
+# warm across its repeated runs amortizes training out of runs 2..N and
+# publishes medians that understate cold-run cost (r16 verdict item 3).
+# bench.py and tools/time_query.py call clear_memos() between timed runs so
+# every run pays training; nothing else should call it.
+_MODELS: dict[tuple, object] = {}
 
 
-def register_memo(memo: dict) -> dict:
-    """Track a process-level model memo dict for clear_memos()."""
-    _MEMOS.append(memo)
-    return memo
+def memo_model(name: str, path: str, train: Callable[[], T]) -> T:
+    """The model `name` trained on the file at `path`: `train()` runs once
+    per `io.file_stamp(path)`, so a rewritten file trains again. A path
+    that cannot be stat'ed has no stamp and trains on every call."""
+    stamp = file_stamp(path)
+    if stamp is None:
+        return train()
+    key = (name, stamp)
+    if key not in _MODELS:
+        _MODELS[key] = train()
+    return _MODELS[key]
 
 
 def clear_memos() -> int:
-    """Empty every registered model memo; returns how many held entries."""
-    n = 0
-    for m in _MEMOS:
-        if m:
-            n += 1
-            m.clear()
+    """Empty the model memo; returns how many model names held an entry."""
+    n = len({name for name, _ in _MODELS})
+    _MODELS.clear()
     return n
 
 

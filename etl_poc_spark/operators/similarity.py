@@ -256,6 +256,24 @@ def ivf_cosine_topk(
 # --- KMeans-trained IVF ------------------------------------------------------
 
 
+def _unit_rows(m):
+    """The float64 matrix `m` with every nonzero row scaled to unit norm
+    (zero rows stay zero)."""
+    import numpy as np
+
+    n = np.linalg.norm(m, axis=1)
+    n[n == 0] = 1.0
+    return m / n[:, None]
+
+
+def _batch_vectors(pdf, vec_col: str):
+    """An Arrow batch's vector column as one float64 matrix, a row per
+    vector."""
+    import numpy as np
+
+    return np.stack(pdf[vec_col].apply(lambda a: np.asarray(a, dtype=np.float64)))
+
+
 def _cluster_dup_pairs_float(
     members: DataFrame,
     threshold: float,
@@ -290,7 +308,7 @@ def _cluster_dup_pairs_float(
         if len(pdf) < 2:
             return empty
         pdf = pdf.sort_values(id_col, kind="stable")
-        v = np.stack(pdf[vec_col].apply(lambda a: np.asarray(a, dtype=np.float64)))
+        v = _batch_vectors(pdf, vec_col)
         ids = pdf[id_col].to_numpy()
         norms = np.linalg.norm(v, axis=1)
         g = v @ v.T
@@ -329,10 +347,7 @@ def _assign_centroid(
     import numpy as np
     import pandas as pd
 
-    cmat = np.asarray(centroids, dtype=np.float64)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    cnorm[cnorm == 0] = 1.0
-    cunit = cmat / cnorm[:, None]
+    cunit = _unit_rows(np.asarray(centroids, dtype=np.float64))
     fields = [df.schema[id_col], T.StructField("cluster", T.IntegerType())]
     if with_sim:
         fields.append(T.StructField("cent_sim", T.DoubleType()))
@@ -342,10 +357,7 @@ def _assign_centroid(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.stack(pdf[vec_col].apply(lambda a: np.asarray(a, dtype=np.float64)))
-            vn = np.linalg.norm(v, axis=1)
-            vn[vn == 0] = 1.0
-            sims = (v / vn[:, None]) @ cunit.T
+            sims = _unit_rows(_batch_vectors(pdf, vec_col)) @ cunit.T
             # top-nprobe clusters per vector, deterministic tie-break by
             # index. nprobe=1 (every base-side assignment) takes argmax —
             # first-max tie-break, identical to the stable argsort's head
@@ -394,11 +406,8 @@ def _super_quantize(centroids, n_super: int):
     empty supers keep their previous direction."""
     import numpy as np
 
-    cmat = np.asarray(centroids, dtype=np.float64)
-    k = len(cmat)
-    norms = np.linalg.norm(cmat, axis=1)
-    norms[norms == 0] = 1.0
-    cunit = cmat / norms[:, None]
+    cunit = _unit_rows(np.asarray(centroids, dtype=np.float64))
+    k = len(cunit)
     step = max(1, k // n_super)
     sup = cunit[::step][:n_super].copy()
     for _ in range(5):
@@ -444,11 +453,8 @@ def _assign_centroid_two_level(
     import numpy as np
     import pandas as pd
 
-    cmat = np.asarray(centroids, dtype=np.float64)
-    k = len(cmat)
-    norms = np.linalg.norm(cmat, axis=1)
-    norms[norms == 0] = 1.0
-    cunit = cmat / norms[:, None]
+    cunit = _unit_rows(np.asarray(centroids, dtype=np.float64))
+    k = len(cunit)
     sup, members = _super_quantize(centroids, max(1, int(round(k ** 0.5))))
     k1 = len(sup)
     w = min(probe_superclusters, k1)
@@ -462,10 +468,7 @@ def _assign_centroid_two_level(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.stack(pdf[vec_col].apply(lambda a: np.asarray(a, dtype=np.float64)))
-            vn = np.linalg.norm(v, axis=1)
-            vn[vn == 0] = 1.0
-            vu = v / vn[:, None]
+            vu = _unit_rows(_batch_vectors(pdf, vec_col))
             n = len(vu)
             probes = np.argsort(-(vu @ sup.T), axis=1, kind="stable")[:, :w]
             best = np.full(n, -np.inf)
@@ -522,10 +525,7 @@ def _assign_explode_vec(
     import numpy as np
     import pandas as pd
 
-    cmat = np.asarray(centroids, dtype=np.float64)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    cnorm[cnorm == 0] = 1.0
-    cunit = cmat / cnorm[:, None]
+    cunit = _unit_rows(np.asarray(centroids, dtype=np.float64))
     out_schema = T.StructType(
         [
             T.StructField("cluster", T.IntegerType()),
@@ -537,10 +537,8 @@ def _assign_explode_vec(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.stack(pdf[vec_col].apply(lambda a: np.asarray(a, dtype=np.float64)))
-            vn = np.linalg.norm(v, axis=1)
-            vn[vn == 0] = 1.0
-            sims = (v / vn[:, None]) @ cunit.T
+            v = _batch_vectors(pdf, vec_col)
+            sims = _unit_rows(v) @ cunit.T
             besti = np.argmax(sims, axis=1)  # first-max, as _assign_centroid
             yield pd.DataFrame({"cluster": besti.astype("int32"), "__v": list(v)})
 
@@ -762,26 +760,16 @@ def train_pq_codebooks(
         ]
     )
     for _ in range(n_iters):
-        units = []
-        for book in books:
-            cmat = np.asarray(book, dtype=np.float64)
-            cn = np.linalg.norm(cmat, axis=1)
-            cn[cn == 0] = 1.0
-            units.append(cmat / cn[:, None])
+        units = [_unit_rows(np.asarray(book, dtype=np.float64)) for book in books]
 
         def fn(batches, units=units):
             for pdf in batches:
                 if not len(pdf):
                     continue
-                v = np.stack(
-                    pdf[vec_col].apply(lambda a: np.asarray(a, dtype=np.float64))
-                )
+                v = _batch_vectors(pdf, vec_col)
                 cl = np.empty((len(v), m), dtype=np.int32)
                 for s in range(m):
-                    sv = v[:, s * sub : (s + 1) * sub]
-                    svn = np.linalg.norm(sv, axis=1)
-                    svn[svn == 0] = 1.0
-                    sims = (sv / svn[:, None]) @ units[s].T
+                    sims = _unit_rows(v[:, s * sub : (s + 1) * sub]) @ units[s].T
                     cl[:, s] = np.argmax(sims, axis=1)  # first-max tie-break
                 yield pd.DataFrame({"__cl": list(cl), "__v": list(v)})
 
@@ -835,12 +823,7 @@ def pq_encode(
     import pandas as pd
 
     m = len(codebooks)
-    units = []
-    for book in codebooks:
-        cmat = np.asarray(book, dtype=np.float64)
-        cn = np.linalg.norm(cmat, axis=1)
-        cn[cn == 0] = 1.0
-        units.append(cmat / cn[:, None])
+    units = [_unit_rows(np.asarray(book, dtype=np.float64)) for book in codebooks]
     sub = units[0].shape[1]
     out_schema = T.StructType(
         [df.schema[id_col], T.StructField("codes", T.ArrayType(T.IntegerType()))]
@@ -850,13 +833,10 @@ def pq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.stack(pdf[vec_col].apply(lambda a: np.asarray(a, dtype=np.float64)))
+            v = _batch_vectors(pdf, vec_col)
             codes = np.empty((len(v), m), dtype=np.int32)
             for s in range(m):
-                sv = v[:, s * sub : (s + 1) * sub]
-                svn = np.linalg.norm(sv, axis=1)
-                svn[svn == 0] = 1.0
-                sims = (sv / svn[:, None]) @ units[s].T
+                sims = _unit_rows(v[:, s * sub : (s + 1) * sub]) @ units[s].T
                 order = np.argsort(-sims, axis=1, kind="stable")
                 codes[:, s] = order[:, 0]
             yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes)})

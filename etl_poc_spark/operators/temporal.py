@@ -24,6 +24,83 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _tag_sides(
+    left: DataFrame,
+    right: DataFrame,
+    by: list[str],
+    left_ts: str,
+    right_ts: str,
+    right_cols: list[str],
+    l_payload: list[str],
+    tiebreaks: list[str],
+) -> tuple[DataFrame, DataFrame]:
+    """(l_tag, r_tag): both sides in one union-ready shape — `by`, `__ts`,
+    `__side` (1 left, 0 right), the left payload (null on right rows), the
+    right tiebreaks as `__tb_<i>` (null on left rows) and the right payload
+    struct `__p` (the right ts as `__rts` plus `right_cols`; null on left
+    rows)."""
+    payload = F.struct(
+        F.col(right_ts).alias("__rts"),
+        *[F.col(c).alias(c) for c in right_cols],
+    )
+    r_tag = right.select(
+        *by,
+        F.col(right_ts).alias("__ts"),
+        F.lit(0).alias("__side"),
+        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in l_payload if c != left_ts],
+        F.lit(None).cast(left.schema[left_ts].dataType).alias(left_ts),
+        *[F.col(c).alias(f"__tb_{i}") for i, c in enumerate(tiebreaks)],
+        payload.alias("__p"),
+    )
+    l_tag = left.select(
+        *by,
+        F.col(left_ts).alias("__ts"),
+        F.lit(1).alias("__side"),
+        *[F.col(c) for c in l_payload if c != left_ts],
+        F.col(left_ts),
+        *[
+            F.lit(None).cast(right.schema[c].dataType).alias(f"__tb_{i}")
+            for i, c in enumerate(tiebreaks)
+        ],
+        F.lit(None).cast(r_tag.schema["__p"].dataType).alias("__p"),
+    )
+    return l_tag, r_tag
+
+
+def _project_match(
+    out: DataFrame,
+    by: list[str],
+    l_payload: list[str],
+    right_cols: list[str],
+    tolerance_seconds: int | None,
+    include_matched_ts: bool,
+) -> DataFrame:
+    """The left rows of `out` with their matched right payload `__m`
+    (nulled past `tolerance_seconds` from the left `__ts`) projected to
+    `asof_<col>` columns."""
+    m_ts = F.col("__m").getField("__rts")
+    if tolerance_seconds is not None:
+        # timestamp keys compare in integer microseconds; plain numeric
+        # keys compare raw (tolerance then reads in the key's own units)
+        if dict(out.dtypes)["__ts"].startswith("timestamp"):
+            gap = F.abs(F.unix_micros(F.col("__ts")) - F.unix_micros(m_ts))
+            # precompute in Python: an INT literal times 1e6 overflows
+            # int32 under ANSI for tolerances over ~35 minutes
+            tol = F.lit(int(tolerance_seconds) * 1_000_000).cast("long")
+        else:
+            gap = F.abs(F.col("__ts") - m_ts)
+            tol = F.lit(tolerance_seconds)
+        out = out.withColumn(
+            "__m", F.when(m_ts.isNotNull() & (gap <= tol), F.col("__m"))
+        )
+    extra = [m_ts.alias("asof_matched_ts")] if include_matched_ts else []
+    return out.select(
+        *by,
+        *[F.col(c) for c in l_payload],
+        *extra,
+        *[F.col("__m").getField(c).alias(f"asof_{c}") for c in right_cols],
+    )
+
 
 def asof_join(
     left: DataFrame,
@@ -67,30 +144,8 @@ def asof_join(
     l_payload = [c for c in left.columns if c not in (*by,)]
     tiebreaks = list(tiebreak_cols)
 
-    payload = F.struct(
-        F.col(right_ts).alias("__rts"),
-        *[F.col(c).alias(c) for c in right_cols],
-    )
-    r_tag = right.select(
-        *by,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in l_payload if c != left_ts],
-        F.lit(None).cast(left.schema[left_ts].dataType).alias(left_ts),
-        *[F.col(c).alias(f"__tb_{i}") for i, c in enumerate(tiebreaks)],
-        payload.alias("__p"),
-    )
-    l_tag = left.select(
-        *by,
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        *[F.col(c) for c in l_payload if c != left_ts],
-        F.col(left_ts),
-        *[
-            F.lit(None).cast(right.schema[c].dataType).alias(f"__tb_{i}")
-            for i, c in enumerate(tiebreaks)
-        ],
-        F.lit(None).cast(r_tag.schema["__p"].dataType).alias("__p"),
+    l_tag, r_tag = _tag_sides(
+        left, right, by, left_ts, right_ts, right_cols, l_payload, tiebreaks
     )
     if direction == "backward":
         # right rows (side 0) sort before left at equal ts -> inclusive;
@@ -116,27 +171,8 @@ def asof_join(
         pick = lambda c: F.first(F.col(c), ignorenulls=True)  # noqa: E731
     matched = l_tag.unionByName(r_tag).withColumn("__m", pick("__p").over(w))
     out = matched.filter(F.col("__side") == 1)
-    m_ts = F.col("__m").getField("__rts")
-    if tolerance_seconds is not None:
-        # timestamp keys compare in integer microseconds; plain numeric
-        # keys compare raw (tolerance then reads in the key's own units)
-        if dict(matched.dtypes)["__ts"].startswith("timestamp"):
-            gap = F.abs(F.unix_micros(F.col("__ts")) - F.unix_micros(m_ts))
-            # precompute in Python: an INT literal times 1e6 overflows
-            # int32 under ANSI for tolerances over ~35 minutes
-            tol = F.lit(int(tolerance_seconds) * 1_000_000).cast("long")
-        else:
-            gap = F.abs(F.col("__ts") - m_ts)
-            tol = F.lit(tolerance_seconds)
-        out = out.withColumn(
-            "__m", F.when(m_ts.isNotNull() & (gap <= tol), F.col("__m"))
-        )
-    extra = [m_ts.alias("asof_matched_ts")] if include_matched_ts else []
-    return out.select(
-        *by,
-        *[F.col(c) for c in l_payload],
-        *extra,
-        *[F.col("__m").getField(c).alias(f"asof_{c}") for c in right_cols],
+    return _project_match(
+        out, by, l_payload, right_cols, tolerance_seconds, include_matched_ts
     )
 
 
@@ -184,30 +220,8 @@ def asof_join_bucketed(
     l_payload = [c for c in left.columns if c not in (*by,)]
     tiebreaks = list(tiebreak_cols)
 
-    payload = F.struct(
-        F.col(right_ts).alias("__rts"),
-        *[F.col(c).alias(c) for c in right_cols],
-    )
-    r_tag = right.select(
-        *by,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in l_payload if c != left_ts],
-        F.lit(None).cast(left.schema[left_ts].dataType).alias(left_ts),
-        *[F.col(c).alias(f"__tb_{i}") for i, c in enumerate(tiebreaks)],
-        payload.alias("__p"),
-    )
-    l_tag = left.select(
-        *by,
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        *[F.col(c) for c in l_payload if c != left_ts],
-        F.col(left_ts),
-        *[
-            F.lit(None).cast(right.schema[c].dataType).alias(f"__tb_{i}")
-            for i, c in enumerate(tiebreaks)
-        ],
-        F.lit(None).cast(r_tag.schema["__p"].dataType).alias("__p"),
+    l_tag, r_tag = _tag_sides(
+        left, right, by, left_ts, right_ts, right_cols, l_payload, tiebreaks
     )
     u = l_tag.unionByName(r_tag)
     if dict(u.dtypes)["__ts"].startswith("timestamp"):
@@ -272,21 +286,6 @@ def asof_join_bucketed(
         .join(carry, [*by, "__b"], "left")
         .withColumn("__m", F.coalesce(F.col("__m"), F.col("__c")))
     )
-    m_ts = F.col("__m").getField("__rts")
-    if tolerance_seconds is not None:
-        if dict(matched.dtypes)["__ts"].startswith("timestamp"):
-            gap = F.abs(F.unix_micros(F.col("__ts")) - F.unix_micros(m_ts))
-            tol = F.lit(int(tolerance_seconds) * 1_000_000).cast("long")
-        else:
-            gap = F.abs(F.col("__ts") - m_ts)
-            tol = F.lit(tolerance_seconds)
-        out = out.withColumn(
-            "__m", F.when(m_ts.isNotNull() & (gap <= tol), F.col("__m"))
-        )
-    extra = [m_ts.alias("asof_matched_ts")] if include_matched_ts else []
-    return out.select(
-        *by,
-        *[F.col(c) for c in l_payload],
-        *extra,
-        *[F.col("__m").getField(c).alias(f"asof_{c}") for c in right_cols],
+    return _project_match(
+        out, by, l_payload, right_cols, tolerance_seconds, include_matched_ts
     )

@@ -957,7 +957,7 @@ def _asof_join(df: DataFrame, p: dict[str, Any], ctx: _OpContext) -> DataFrame:
 
 
 # --- analytics vocabulary (round 9): the behavioral/profiling tier of
-# queries/behavior_q.py, behavior2_q.py and profile_q.py as declarative
+# queries/behavior_q.py and profile_q.py as declarative
 # ops — each calls the same operators/behavior.py function as its query
 # and adds only its own ordering or rollup ---
 

@@ -130,9 +130,9 @@ def tf_idf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "price_quantity_correlation",
-    oracle="""
+# the five exact decimal moment sums of (x = quantity, y = price) per
+# return flag, shared by the correlation and regression queries
+_MOMENTS_SQL = """
     WITH s AS (
       SELECT l_returnflag,
              COUNT(*) AS n,
@@ -145,7 +145,34 @@ def tf_idf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                       * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS syy
       FROM lineitem GROUP BY l_returnflag
+    )"""
+
+
+def _moment_sums(spark: SparkSession, sf_dir: str) -> tuple:
+    """_MOMENTS_SQL's `s` frame, plus n as a double and the n-scaled
+    covariance and the two variances over its columns."""
+    li = load_table(spark, sf_dir, "lineitem")
+    x = F.col("l_quantity").cast("decimal(18,2)")
+    y = F.col("l_extendedprice").cast("decimal(18,2)")
+    s = li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x).cast("double").alias("sx"),
+        F.sum(y).cast("double").alias("sy"),
+        F.sum(x * y).cast("double").alias("sxy"),
+        F.sum(x * x).cast("double").alias("sxx"),
+        F.sum(y * y).cast("double").alias("syy"),
     )
+    nd = F.col("n").cast("double")
+    cov_n = nd * F.col("sxy") - F.col("sx") * F.col("sy")
+    var_x_n = nd * F.col("sxx") - F.col("sx") * F.col("sx")
+    var_y_n = nd * F.col("syy") - F.col("sy") * F.col("sy")
+    return s, nd, cov_n, var_x_n, var_y_n
+
+
+@query(
+    "price_quantity_correlation",
+    oracle=_MOMENTS_SQL
+    + """
     SELECT l_returnflag, n,
            round((CAST(n AS DOUBLE) * sxy - sx * sy)
              / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
@@ -173,21 +200,7 @@ def price_quantity_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine numerically, but not bit-reproducible; this formulation is. One
     groupBy with map-side combine; the moment sums are the mergeable
     sketch (same pattern the incremental rollup store would persist)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x = F.col("l_quantity").cast("decimal(18,2)")
-    y = F.col("l_extendedprice").cast("decimal(18,2)")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).cast("double").alias("sx"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x * y).cast("double").alias("sxy"),
-        F.sum(x * x).cast("double").alias("sxx"),
-        F.sum(y * y).cast("double").alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    cov_n = nd * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx_n = nd * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary_n = nd * F.col("syy") - F.col("sy") * F.col("sy")
+    s, nd, cov_n, varx_n, vary_n = _moment_sums(spark, sf_dir)
     return s.select(
         "l_returnflag",
         "n",
@@ -238,21 +251,30 @@ def customer_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "events_funnel",
-    oracle="""
+def _funnel_sql(max_gap_seconds: int | None = None) -> str:
+    """The ordered view -> click -> purchase funnel CTEs (v, c, p, funnel)
+    and its step counts and rates; each step optionally within
+    `max_gap_seconds` of the previous one. The caller closes the SELECT."""
+
+    def within(prev: str) -> str:
+        if max_gap_seconds is None:
+            return ""
+        return f"""
+        AND epoch_us(e.ts) - epoch_us({prev}) <= CAST({max_gap_seconds} AS BIGINT) * 1000000"""
+
+    return f"""
     WITH v AS (
       SELECT user_id, MIN(ts) FILTER (WHERE event_type = 'view') AS t_view
       FROM events GROUP BY user_id
     ), c AS (
       SELECT e.user_id, MIN(e.ts) AS t_click
       FROM events e JOIN v USING (user_id)
-      WHERE e.event_type = 'click' AND e.ts > v.t_view
+      WHERE e.event_type = 'click' AND e.ts > v.t_view{within("v.t_view")}
       GROUP BY e.user_id
     ), p AS (
       SELECT e.user_id, MIN(e.ts) AS t_purchase
       FROM events e JOIN c USING (user_id)
-      WHERE e.event_type = 'purchase' AND e.ts > c.t_click
+      WHERE e.event_type = 'purchase' AND e.ts > c.t_click{within("c.t_click")}
       GROUP BY e.user_id
     ), funnel AS (
       SELECT v.user_id, v.t_view, c.t_click, p.t_purchase
@@ -263,7 +285,29 @@ def customer_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(t_click) AS BIGINT) AS reached_click,
            CAST(COUNT(t_purchase) AS BIGINT) AS reached_purchase,
            CAST(COUNT(t_click) AS DOUBLE) / COUNT(t_view) AS view_to_click,
-           CAST(COUNT(t_purchase) AS DOUBLE) / COUNT(t_click) AS click_to_purchase,
+           CAST(COUNT(t_purchase) AS DOUBLE) / COUNT(t_click) AS click_to_purchase"""
+
+
+def _funnel_per_user(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
+    """Per-user view/click/purchase times (operators/funnel.py::funnel_times,
+    `kwargs` passed through)."""
+    from etl_poc_spark.operators.funnel import funnel_times
+
+    return funnel_times(
+        load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts"),
+        steps=[
+            ("view", F.col("event_type") == "view"),
+            ("click", F.col("event_type") == "click"),
+            ("purchase", F.col("event_type") == "purchase"),
+        ],
+        **kwargs,
+    )
+
+
+@query(
+    "events_funnel",
+    oracle=_funnel_sql()
+    + """,
            CAST(SUM(epoch_us(t_purchase) - epoch_us(t_view)) AS BIGINT)
              / CAST(COUNT(t_purchase) AS DOUBLE) AS avg_us_to_convert
     FROM funnel
@@ -288,16 +332,8 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Implementation lives in operators/funnel.py::funnel_times (generic
     ordered-step operator; semantics pinned on a constructed sequence in
     tests/test_operators.py)."""
-    from etl_poc_spark.operators.funnel import funnel_times
-
-    per_user = funnel_times(
-        load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts"),
-        steps=[
-            ("view", F.col("event_type") == "view"),
-            ("click", F.col("event_type") == "click"),
-            ("purchase", F.col("event_type") == "purchase"),
-        ],
-    )  # keeps no-view users: n_users is every user with ANY event, as in the oracle
+    # keeps no-view users: n_users is every user with ANY event, as in the oracle
+    per_user = _funnel_per_user(spark, sf_dir)
     lat_us = F.unix_micros(F.col("t_purchase")) - F.unix_micros(F.col("t_view"))
     return per_user.agg(
         F.count(F.lit(1)).alias("n_users"),
@@ -442,32 +478,8 @@ def session_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_funnel_windowed",
-    oracle="""
-    WITH v AS (
-      SELECT user_id, MIN(ts) FILTER (WHERE event_type = 'view') AS t_view
-      FROM events GROUP BY user_id
-    ), c AS (
-      SELECT e.user_id, MIN(e.ts) AS t_click
-      FROM events e JOIN v USING (user_id)
-      WHERE e.event_type = 'click' AND e.ts > v.t_view
-        AND epoch_us(e.ts) - epoch_us(v.t_view) <= CAST(3600 AS BIGINT) * 1000000
-      GROUP BY e.user_id
-    ), p AS (
-      SELECT e.user_id, MIN(e.ts) AS t_purchase
-      FROM events e JOIN c USING (user_id)
-      WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-        AND epoch_us(e.ts) - epoch_us(c.t_click) <= CAST(3600 AS BIGINT) * 1000000
-      GROUP BY e.user_id
-    ), funnel AS (
-      SELECT v.user_id, v.t_view, c.t_click, p.t_purchase
-      FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
-           CAST(COUNT(t_view) AS BIGINT) AS reached_view,
-           CAST(COUNT(t_click) AS BIGINT) AS reached_click,
-           CAST(COUNT(t_purchase) AS BIGINT) AS reached_purchase,
-           CAST(COUNT(t_click) AS DOUBLE) / COUNT(t_view) AS view_to_click,
-           CAST(COUNT(t_purchase) AS DOUBLE) / COUNT(t_click) AS click_to_purchase
+    oracle=_funnel_sql(3600)
+    + """
     FROM funnel
     """,
 )
@@ -477,17 +489,9 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (operators/funnel.py::funnel_times max_gap_seconds). Same
     one-shuffle plan as events_funnel; compare the two queries' rates to
     read attribution-window sensitivity directly off the gate."""
-    from etl_poc_spark.operators.funnel import funnel_rollup, funnel_times
+    from etl_poc_spark.operators.funnel import funnel_rollup
 
-    per_user = funnel_times(
-        load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts"),
-        steps=[
-            ("view", F.col("event_type") == "view"),
-            ("click", F.col("event_type") == "click"),
-            ("purchase", F.col("event_type") == "purchase"),
-        ],
-        max_gap_seconds=3600,
-    )
+    per_user = _funnel_per_user(spark, sf_dir, max_gap_seconds=3600)
     return funnel_rollup(per_user, ["view", "click", "purchase"]).withColumnRenamed(
         "n_entities", "n_users"
     )
@@ -564,20 +568,8 @@ def segment_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quantity_price_regression",
-    oracle="""
-    WITH s AS (
-      SELECT l_returnflag,
-             COUNT(*) AS n,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))
-                      * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sxy,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))
-                      * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                      * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS syy
-      FROM lineitem GROUP BY l_returnflag
-    )
+    oracle=_MOMENTS_SQL
+    + """
     SELECT l_returnflag, CAST(n AS BIGINT) AS n,
            round((CAST(n AS DOUBLE) * sxy - sx * sy)
                  / (CAST(n AS DOUBLE) * sxx - sx * sx), 9) AS slope,
@@ -598,21 +590,7 @@ def quantity_price_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-dependent float accumulators. One map-side-combined groupBy;
     finals rounded (9/12 places) to absorb the documented
     decimal->double cast ulp."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x = F.col("l_quantity").cast("decimal(18,2)")
-    y = F.col("l_extendedprice").cast("decimal(18,2)")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).cast("double").alias("sx"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x * y).cast("double").alias("sxy"),
-        F.sum(x * x).cast("double").alias("sxx"),
-        F.sum(y * y).cast("double").alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    cov_n = nd * F.col("sxy") - F.col("sx") * F.col("sy")
-    var_x_n = nd * F.col("sxx") - F.col("sx") * F.col("sx")
-    var_y_n = nd * F.col("syy") - F.col("sy") * F.col("sy")
+    s, nd, cov_n, var_x_n, var_y_n = _moment_sums(spark, sf_dir)
     slope = cov_n / var_x_n
     return s.select(
         "l_returnflag",

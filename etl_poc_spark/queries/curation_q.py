@@ -794,6 +794,16 @@ def doc_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lang_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Whitespace-token mass per language: (lang, n_tokens)."""
+    d = load_table(spark, sf_dir, "documents")
+    return d.groupBy("lang").agg(
+        F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+")))
+        .cast("bigint")
+        .alias("n_tokens")
+    )
+
+
 @query(
     "unimax_lang_budgets",
     oracle="""
@@ -839,20 +849,18 @@ def unimax_lang_budgets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-model-frame class)."""
     from etl_poc_spark.operators.curation import unimax_budgets
 
-    d = load_table(spark, sf_dir, "documents")
-    t = d.groupBy("lang").agg(
-        F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+")))
-        .cast("bigint")
-        .alias("n_tokens")
-    )
+    t = _lang_tokens(spark, sf_dir)
     return unimax_budgets(t, "lang", "n_tokens", 18000, 1).orderBy("lang")
 
 
-@query(
-    "doremi_domain_weights",
-    oracle="""
+def _doremi_sql(per_doc_cols: str) -> str:
+    """DoReMi over the documents table with source as the domain: the
+    per-document excess-loss proxy (per_doc, with `per_doc_cols` in front),
+    per-domain examples and floor (t), the 256-offset moments m1..m4 (m,
+    p) and their cross-domain sums (s)."""
+    return f"""
     WITH per_doc AS (
-      SELECT source,
+      SELECT {per_doc_cols}source,
              CAST(FLOOR(CAST(1000 AS DOUBLE) * n_chars
                         / len(string_split_regex(trim(text), '\\s+'))) AS BIGINT)
                - 5500 AS ex
@@ -871,9 +879,11 @@ def unimax_lang_budgets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), s AS (
       SELECT *, SUM(m1) OVER () AS s1, SUM(m2) OVER () AS s2,
              SUM(m3) OVER () AS s3, SUM(m4) OVER () AS s4 FROM p
-    )
-    SELECT source, n_examples, lambda_floor,
-      (((((CAST(0.984375 AS DOUBLE) * (CAST(m1 AS DOUBLE) / CAST(s1 AS DOUBLE)))
+    )"""
+
+
+# the smoothed T=4 multiplicative-weights domain weight over an `s` row
+_DOREMI_ALPHA_SQL = """(((((CAST(0.984375 AS DOUBLE) * (CAST(m1 AS DOUBLE) / CAST(s1 AS DOUBLE)))
             + (CAST(0.015625 AS DOUBLE) / CAST(k AS DOUBLE)))
         + ((CAST(0.984375 AS DOUBLE) * (CAST(m2 AS DOUBLE) / CAST(s2 AS DOUBLE)))
             + (CAST(0.015625 AS DOUBLE) / CAST(k AS DOUBLE))))
@@ -881,7 +891,37 @@ def unimax_lang_budgets(spark: SparkSession, sf_dir: str) -> DataFrame:
             + (CAST(0.015625 AS DOUBLE) / CAST(k AS DOUBLE))))
       + ((CAST(0.984375 AS DOUBLE) * (CAST(m4 AS DOUBLE) / CAST(s4 AS DOUBLE)))
             + (CAST(0.015625 AS DOUBLE) / CAST(k AS DOUBLE))))
-      / CAST(4 AS DOUBLE) AS alpha
+      / CAST(4 AS DOUBLE)"""
+
+
+def _doremi_weights(
+    spark: SparkSession, sf_dir: str, *keep: str
+) -> tuple[DataFrame, DataFrame]:
+    """(per_doc, weights): the per-document excess-loss proxy `ex`
+    (milli-bytes-per-token above 5500) by source, with the `keep` columns
+    in front, and its DoReMi domain weights (T=4, eta=2^-8, eps=2^-6)."""
+    from etl_poc_spark.operators.curation import doremi_domain_weights
+
+    d = load_table(spark, sf_dir, "documents")
+    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    bpt = F.floor(
+        F.lit(1000.0) * F.col("n_chars") / n_tok.cast("double")
+    ).cast("bigint")
+    per_doc = d.select(*keep, "source", (bpt - F.lit(5500)).alias("ex"))
+    weights = doremi_domain_weights(
+        per_doc, "source", "ex", n_steps=4, eta_shift=8, smoothing_shift=6
+    )
+    return per_doc, weights
+
+
+@query(
+    "doremi_domain_weights",
+    oracle=_doremi_sql("")
+    + """
+    SELECT source, n_examples, lambda_floor,
+      """
+    + _DOREMI_ALPHA_SQL
+    + """ AS alpha
     FROM s ORDER BY source
     """,
 )
@@ -899,17 +939,8 @@ def doremi_domain_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one scan + one map-side-combined groupBy(source); the T-step
     recurrence runs as windows over the ≤20-domain frame."""
-    from etl_poc_spark.operators.curation import doremi_domain_weights
-
-    d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    bpt = F.floor(
-        F.lit(1000.0) * F.col("n_chars") / n_tok.cast("double")
-    ).cast("bigint")
-    per_doc = d.select(F.col("source"), (bpt - F.lit(5500)).alias("ex"))
-    return doremi_domain_weights(
-        per_doc, "source", "ex", n_steps=4, eta_shift=8, smoothing_shift=6
-    ).orderBy("source")
+    _, weights = _doremi_weights(spark, sf_dir)
+    return weights.orderBy("source")
 
 
 @query(
@@ -956,12 +987,7 @@ def mixture_anneal_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤4k-row frame."""
     from etl_poc_spark.operators.curation import temperature_schedule
 
-    d = load_table(spark, sf_dir, "documents")
-    t = d.groupBy("lang").agg(
-        F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+")))
-        .cast("bigint")
-        .alias("n_tokens")
-    )
+    t = _lang_tokens(spark, sf_dir)
     return temperature_schedule(t, "lang", "n_tokens", [1.0, 0.75, 0.5, 0.25])
 
 
@@ -1003,38 +1029,12 @@ def pack_sequences_bfd_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doremi_resample_counts",
-    oracle="""
-    WITH per_doc AS (
-      SELECT doc_id, source,
-             CAST(FLOOR(CAST(1000 AS DOUBLE) * n_chars
-                        / len(string_split_regex(trim(text), '\\s+'))) AS BIGINT)
-               - 5500 AS ex
-      FROM documents
-    ), t AS (
-      SELECT source, COUNT(*) AS n_examples,
-             CAST(SUM(GREATEST(ex, 0)) AS BIGINT) // COUNT(*)
-               AS lambda_floor
-      FROM per_doc GROUP BY source
-    ), m AS (
-      SELECT *, CAST(256 + lambda_floor AS HUGEINT) AS m1,
-             COUNT(*) OVER () AS k
-      FROM t
-    ), p AS (
-      SELECT *, m1*m1 AS m2, (m1*m1)*m1 AS m3, ((m1*m1)*m1)*m1 AS m4 FROM m
-    ), s AS (
-      SELECT *, SUM(m1) OVER () AS s1, SUM(m2) OVER () AS s2,
-             SUM(m3) OVER () AS s3, SUM(m4) OVER () AS s4 FROM p
-    ), alpha AS (
+    oracle=_doremi_sql("doc_id, ")
+    + """, alpha AS (
       SELECT source, n_examples,
-        (((((CAST(0.984375 AS DOUBLE) * (CAST(m1 AS DOUBLE) / CAST(s1 AS DOUBLE)))
-              + (CAST(0.015625 AS DOUBLE) / CAST(k AS DOUBLE)))
-          + ((CAST(0.984375 AS DOUBLE) * (CAST(m2 AS DOUBLE) / CAST(s2 AS DOUBLE)))
-              + (CAST(0.015625 AS DOUBLE) / CAST(k AS DOUBLE))))
-         + ((CAST(0.984375 AS DOUBLE) * (CAST(m3 AS DOUBLE) / CAST(s3 AS DOUBLE)))
-              + (CAST(0.015625 AS DOUBLE) / CAST(k AS DOUBLE))))
-        + ((CAST(0.984375 AS DOUBLE) * (CAST(m4 AS DOUBLE) / CAST(s4 AS DOUBLE)))
-              + (CAST(0.015625 AS DOUBLE) / CAST(k AS DOUBLE))))
-        / CAST(4 AS DOUBLE) AS a
+        """
+    + _DOREMI_ALPHA_SQL
+    + """ AS a
       FROM s
     ), rates AS (
       SELECT source,
@@ -1062,20 +1062,9 @@ def doremi_resample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors per source. Every stage — solver, rate divisions, uniform
     draw, counts — is engine-portable, so the whole resample is
     hash-exact."""
-    from etl_poc_spark.operators.curation import (
-        doremi_domain_weights,
-        max_normalized_rates,
-    )
+    from etl_poc_spark.operators.curation import max_normalized_rates
 
-    d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    bpt = F.floor(
-        F.lit(1000.0) * F.col("n_chars") / n_tok.cast("double")
-    ).cast("bigint")
-    per_doc = d.select("doc_id", "source", (bpt - F.lit(5500)).alias("ex"))
-    weights = doremi_domain_weights(
-        per_doc, "source", "ex", n_steps=4, eta_shift=8, smoothing_shift=6
-    )
+    per_doc, weights = _doremi_weights(spark, sf_dir, "doc_id")
     rates = max_normalized_rates(
         weights, "source", F.col("alpha") / F.col("n_examples").cast("double")
     )

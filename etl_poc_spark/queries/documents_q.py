@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_poc_spark.functions.scoring import article_quality_score_expr, paper_validation_exprs
+from etl_poc_spark.functions.scoring import paper_validation_exprs
 from etl_poc_spark.functions.text import extract_id, field_completeness, safe_filename, slugify, word_count
 from etl_poc_spark.io import load_table
 from etl_poc_spark.operators.chunker import chunk_by_tokens

@@ -1,7 +1,8 @@
 """Event/stream-shaped analytics over the `events` table (SURVEY.md §2.10).
 
 These are batch formulations (hourly windows, sessionization, JSON
-properties, pivots, time rollups), each one plan over the finite table.
+properties, pivots, time rollups, sliding windows), each one plan over the
+finite table.
 
 Timestamps in outputs are formatted to strings so the oracle comparison is
 engine-representation-independent.
@@ -179,6 +180,40 @@ def events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "grain",
             F.coalesce("minute", "hour", "day", F.lit("total")).alias("bucket"),
+            "n_events",
+            "total_value",
+        )
+    )
+
+
+@query(
+    "events_sliding_windows",
+    oracle="""
+    WITH expanded AS (
+      SELECT e.*,
+             to_timestamp((CAST(floor(epoch(ts) / 900) AS BIGINT) - k.k) * 900) AS window_start
+      FROM events e CROSS JOIN (SELECT unnest(range(4)) AS k) k
+    )
+    SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
+           COUNT(*) AS n_events,
+           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+    FROM expanded
+    GROUP BY 1
+    """,
+)
+def events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding windows (1h window, 15min slide) in batch via the built-in
+    F.window — each event lands in exactly 4 overlapping epoch-aligned
+    windows (the oracle derives the same 4 starts arithmetically)."""
+    e = load_table(spark, sf_dir, "events")
+    return (
+        e.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
+        )
+        .select(
+            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "n_events",
             "total_value",
         )

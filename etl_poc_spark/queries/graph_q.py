@@ -2,7 +2,8 @@
 co-purchase graph: parts are linked when they appear together in at
 least 2 orders — a sparse, organically-clustered projection of the
 order-lineitem bipartite graph (the same co-occurrence construction
-market-basket analysis uses).
+market-basket analysis uses) — and PageRank over the customer->supplier
+purchase graph (operators/pagerank.py).
 """
 
 from __future__ import annotations
@@ -168,3 +169,81 @@ def part_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_poc_spark.operators.graph import k_core
 
     return k_core(_co_edges(spark, sf_dir), k=3)
+
+
+def _pagerank_oracle_sql(n_iter: int = 5, damping: str = "CAST(0.85 AS DOUBLE)") -> str:
+    """Unrolled power-method oracle (the unrolled-Lloyd pattern): one CTE
+    pair (contribution sum + dangling mass) per iteration, arithmetic
+    mirroring operators/pagerank.py term by term — constants cast to
+    DOUBLE so DuckDB's decimal literals don't produce a different binary
+    0.15 than Python's `1.0 - 0.85`. The only cross-engine divergence is
+    SUM association order (~1e-16 relative), absorbed by the query's
+    round(rank, 9) — which is WHY the emitted rank is rounded."""
+    parts = [
+        """
+    WITH e AS MATERIALIZED (
+      SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
+             's' || CAST(l_suppkey AS VARCHAR) AS dst
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    ), verts AS MATERIALIZED (
+      SELECT src AS vertex FROM e UNION SELECT dst FROM e
+    ), nv AS (
+      SELECT COUNT(*) AS n FROM verts
+    ), outdeg AS MATERIALIZED (
+      SELECT src, COUNT(*) AS deg FROM e GROUP BY src
+    ), pr0 AS (
+      SELECT vertex, CAST(1 AS DOUBLE) / nv.n AS rank FROM verts CROSS JOIN nv
+    )"""
+    ]
+    for i in range(1, n_iter + 1):
+        p = f"pr{i - 1}"
+        parts.append(f"""
+    , contrib{i} AS (
+      SELECT e.dst AS vertex, SUM(p.rank / od.deg) AS s
+      FROM {p} p JOIN outdeg od ON od.src = p.vertex
+      JOIN e ON e.src = p.vertex
+      GROUP BY e.dst
+    ), dang{i} AS (
+      SELECT COALESCE(SUM(p.rank), CAST(0 AS DOUBLE)) AS m
+      FROM {p} p LEFT JOIN outdeg od ON od.src = p.vertex
+      WHERE od.src IS NULL
+    ), pr{i} AS (
+      SELECT v.vertex,
+             (CAST(1 AS DOUBLE) - {damping}) / nv.n
+             + {damping} * d.m / nv.n
+             + {damping} * COALESCE(c.s, CAST(0 AS DOUBLE)) AS rank
+      FROM verts v CROSS JOIN nv CROSS JOIN dang{i} d
+      LEFT JOIN contrib{i} c ON c.vertex = v.vertex
+    )""")
+    parts.append(f"""
+    SELECT vertex, round(rank, 9) AS rank
+    FROM pr{n_iter}
+    WHERE vertex LIKE 's%'
+    ORDER BY round(rank, 9) DESC, vertex
+    LIMIT 20
+    """)
+    return "".join(parts)
+
+
+@query("supplier_pagerank", oracle=_pagerank_oracle_sql(5))
+def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PageRank over the bipartite customer->supplier purchase graph
+    (edge = customer bought from supplier, via orders x lineitem):
+    supplier centrality weighted by how central their customers are —
+    the iterative-algorithm tier (power method, operators/pagerank.py)
+    exercised on relational data. Top 20 suppliers by rounded rank."""
+    from etl_poc_spark.operators.pagerank import pagerank
+
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    # parallel edges count once inside pagerank (its adjacency is a set)
+    edges = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
+        F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
+    )
+    ranks = pagerank(edges, n_iter=5).withColumn("rank", F.round("rank", 9))
+    return (
+        ranks.where(F.col("vertex").startswith("s"))
+        .orderBy(F.desc("rank"), F.asc("vertex"))
+        .limit(20)
+    )

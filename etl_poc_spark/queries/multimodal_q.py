@@ -14,7 +14,7 @@ live in tests/test_multimodal_features.py property tests instead.
 
 Reference parity: parhampr/ETL-POC treats media as opaque payloads and has
 no image dedup; this is the training-data-curation extension of the dedup
-stack (same banding geometry as queries/dedup2_q.py).
+stack (same banding geometry as queries/dedup_q.py).
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from etl_poc_spark.multimodal.media import (
     image_near_dup_pairs,
     perceptual_hashes,
 )
+from etl_poc_spark.queries.dedup_q import PLANTED_ID_OFFSET
 from etl_poc_spark.registry import query
 
 # r15 (r14 verdict ask #5): grown from 16x16/0.05s so the 32-task decode
@@ -130,9 +131,9 @@ def phash_stats_from_docs(docs: DataFrame) -> DataFrame:
 
 def _image_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents plus planted IMAGE near-duplicates (r15): every doc_id%10
-    doc gains an exact copy at +100000 (byte-identical tiled image —
-    Hamming 0 must pair) and every doc_id%20 doc an ALIGNED-EDIT copy at
-    +200000 (chars 100-119 overwritten with 'Z'*20 — the edit repeats at
+    doc gains an exact copy at +PLANTED_ID_OFFSET (byte-identical tiled
+    image — Hamming 0 must pair) and every doc_id%20 doc an ALIGNED-EDIT
+    copy at +2 * PLANTED_ID_OFFSET (chars 100-119 overwritten with 'Z'*20 — the edit repeats at
     tile positions, flipping at most a few of the 72 sampled dHash pixels:
     a small, deterministic Hamming). The word-soup corpus has no natural
     FULL-document image near-dups once the payload tiles the whole text
@@ -142,10 +143,10 @@ def _image_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately do NOT pair: image near-dup is alignment-sensitive."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     exact = d.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
+        (F.col("doc_id") + PLANTED_ID_OFFSET).alias("doc_id"), "text"
     )
     edited = d.filter((F.col("doc_id") % 20 == 0) & (F.length("text") >= 140)).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
+        (F.col("doc_id") + 2 * PLANTED_ID_OFFSET).alias("doc_id"),
         F.concat(
             F.substring("text", 1, 100),
             F.lit("Z" * 20),

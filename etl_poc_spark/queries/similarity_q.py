@@ -10,47 +10,54 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_poc_spark.io import load_table
+from etl_poc_spark.io import load_table, table_path
+from etl_poc_spark.operators.pins import memo_model, pin
 from etl_poc_spark.operators.similarity import cosine_topk, ivf_cosine_topk
+from etl_poc_spark.queries.dedup_q import (
+    PLANTED_ID_OFFSET,
+    SIGN_TAGGED_CTE,
+    cosine_dots_sql,
+)
 from etl_poc_spark.registry import query
 
-# trained coarse-quantizer cache: training is deterministic so the reuse is
-# exact (see embedding_kmeans_ivf_topk docstring). Keyed by sf_dir PLUS a
-# cheap fingerprint of the embeddings parquet (mtime+size) so a long-lived
-# process retrains if the data at the same path is regenerated — serving
-# centroids trained on the old table would silently drift from an oracle
-# trained on the new one.
-from etl_poc_spark.operators.pins import register_memo as _register_memo
-
-_KMEANS_MODELS: dict[tuple, list[list[float]]] = _register_memo({})
+# Trained models (kmeans centroids, PQ codebooks) are memoized per
+# embeddings-table version (pins.memo_model): training is deterministic, so
+# the reuse is exact, and a long-lived process retrains if the table at the
+# same path is regenerated — serving centroids trained on the old table
+# would silently drift from an oracle trained on the new one.
 
 
-def _model_key(sf_dir: str) -> tuple:
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(path)
-        return (sf_dir, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (sf_dir,)
+def _embeddings_path(sf_dir: str) -> str:
+    return table_path(sf_dir, "embeddings")
 
 
-@query(
-    "embedding_topk",
-    oracle="""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-    b AS (SELECT vec_id AS neighbor_id, embedding AS bv FROM embeddings WHERE vec_id >= 10),
-    expanded AS (
-      SELECT query_id, neighbor_id, qv, bv, unnest(range(1, 65)) AS i
-      FROM q CROSS JOIN b
-    ), dots AS (
-      SELECT query_id, neighbor_id,
-             CAST(SUM(CAST(CAST(qv[i] AS DOUBLE) * CAST(bv[i] AS DOUBLE) AS DECIMAL(25,15))) AS DOUBLE) AS dot,
-             CAST(SUM(CAST(CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE) AS DECIMAL(25,15))) AS DOUBLE) AS qn2,
-             CAST(SUM(CAST(CAST(bv[i] AS DOUBLE) * CAST(bv[i] AS DOUBLE) AS DECIMAL(25,15))) AS DOUBLE) AS bn2
-      FROM expanded GROUP BY query_id, neighbor_id
-    ), ranked AS (
+def _kmeans_centroids(sf_dir: str, base: DataFrame) -> list[list[float]]:
+    """The 8-centroid coarse quantizer (2 Lloyd iterations) trained on the
+    base split — one model shared by the kmeans-IVF and IVF-PQ queries."""
+    from etl_poc_spark.operators.similarity import train_kmeans_centroids
+
+    return memo_model(
+        "kmeans",
+        _embeddings_path(sf_dir),
+        lambda: train_kmeans_centroids(base, n_centroids=8, n_iters=2),
+    )
+
+
+def _pq_codebooks(sf_dir: str, base: DataFrame) -> list[list[list[float]]]:
+    """The 16 x 64 PQ codebooks (one Lloyd iteration) trained on the base
+    split — shared by the PQ and IVF-PQ queries."""
+    from etl_poc_spark.operators.similarity import train_pq_codebooks
+
+    return memo_model(
+        "pq",
+        _embeddings_path(sf_dir),
+        lambda: train_pq_codebooks(base, m=_PQ_M, k=_PQ_K, n_iters=1),
+    )
+
+
+# the exact-decimal cosine top-5 readout over a `dots` CTE
+# (dedup_q.cosine_dots_sql)
+_RANKED_TOP5_SQL = """, ranked AS (
       SELECT query_id, neighbor_id,
              round(dot / (sqrt(qn2) * sqrt(bn2)), 7) AS cos_sim,
              row_number() OVER (PARTITION BY query_id
@@ -58,7 +65,17 @@ def _model_key(sf_dir: str) -> tuple:
       FROM dots
     )
     SELECT query_id, neighbor_id, rank, cos_sim FROM ranked WHERE rank <= 5
-    """,
+    """
+
+
+@query(
+    "embedding_topk",
+    oracle="""
+    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
+    b AS (SELECT vec_id AS neighbor_id, embedding AS bv FROM embeddings WHERE vec_id >= 10),
+    """
+    + cosine_dots_sql("FROM q CROSS JOIN b")
+    + _RANKED_TOP5_SQL,
 )
 def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-5: 10 query vectors (vec_id < 10)
@@ -71,37 +88,13 @@ def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_ivf_topk",
-    oracle="""
-    WITH tagged AS (
-      SELECT vec_id, embedding,
-             (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END ||
-              CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END ||
-              CASE WHEN embedding[3] >= 0 THEN '1' ELSE '0' END ||
-              CASE WHEN embedding[4] >= 0 THEN '1' ELSE '0' END ||
-              CASE WHEN embedding[5] >= 0 THEN '1' ELSE '0' END ||
-              CASE WHEN embedding[6] >= 0 THEN '1' ELSE '0' END) AS bucket
-      FROM embeddings
-    ),
+    oracle=SIGN_TAGGED_CTE
+    + """,
     q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM tagged WHERE vec_id < 10),
     b AS (SELECT vec_id AS neighbor_id, embedding AS bv, bucket FROM tagged WHERE vec_id >= 10),
-    expanded AS (
-      SELECT query_id, neighbor_id, qv, bv, unnest(range(1, 65)) AS i
-      FROM q JOIN b USING (bucket)
-    ), dots AS (
-      SELECT query_id, neighbor_id,
-             CAST(SUM(CAST(CAST(qv[i] AS DOUBLE) * CAST(bv[i] AS DOUBLE) AS DECIMAL(25,15))) AS DOUBLE) AS dot,
-             CAST(SUM(CAST(CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE) AS DECIMAL(25,15))) AS DOUBLE) AS qn2,
-             CAST(SUM(CAST(CAST(bv[i] AS DOUBLE) * CAST(bv[i] AS DOUBLE) AS DECIMAL(25,15))) AS DOUBLE) AS bn2
-      FROM expanded GROUP BY query_id, neighbor_id
-    ), ranked AS (
-      SELECT query_id, neighbor_id,
-             round(dot / (sqrt(qn2) * sqrt(bn2)), 7) AS cos_sim,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY round(dot / (sqrt(qn2) * sqrt(bn2)), 7) DESC, neighbor_id) AS rank
-      FROM dots
-    )
-    SELECT query_id, neighbor_id, rank, cos_sim FROM ranked WHERE rank <= 5
-    """,
+    """
+    + cosine_dots_sql("FROM q JOIN b USING (bucket)")
+    + _RANKED_TOP5_SQL,
 )
 def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style approximate top-5: sign-bit coarse quantizer (6 bits ->
@@ -183,18 +176,13 @@ def _lloyd_iter_sql(n: int, prev: str) -> str:
     )"""
 
 
-# shared between _KMEANS_IVF_ORACLE and _IVFPQ_ORACLE: coarse-quantizer
-# training (init + norms) and the trained base/query cluster assignments
-_KM_HEADER = """
-    WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-    b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
-    dims AS (SELECT unnest(range(1, 65)) AS i),
-    -- init: the vectors of the 8 smallest base ids, cluster = rank order
-    -- (rank the 8 vectors FIRST, then expand dims — ranking after the dim
-    -- expansion would number all 512 (vec, dim) rows)
-    ce0v AS (
+def _kmeans_init_sql(k: int) -> str:
+    """Lloyd init over the base CTE `b` (and `dims`): the vectors of the k
+    smallest ids, cluster = rank order, with the centroid and base-vector
+    norms the first iteration divides by."""
+    return f"""ce0v AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cluster, embedding
-      FROM (SELECT vec_id, embedding FROM b ORDER BY vec_id LIMIT 8)
+      FROM (SELECT vec_id, embedding FROM b ORDER BY vec_id LIMIT {k})
     ), ce0 AS (
       SELECT cluster, d.i, CAST(embedding[d.i] AS DOUBLE) AS c FROM ce0v, dims d
     ), ce0_norm AS (
@@ -207,13 +195,29 @@ _KM_HEADER = """
                   THEN 1
                   ELSE sqrt(SUM(CAST(b.embedding[d.i] AS DOUBLE) * CAST(b.embedding[d.i] AS DOUBLE))) END AS n
       FROM b, dims d GROUP BY b.vec_id
-    ), qnorm AS (
+    )"""
+
+
+# shared between _KMEANS_IVF_ORACLE and _IVFPQ_ORACLE: coarse-quantizer
+# training (init + norms) and the trained base/query cluster assignments
+_KM_HEADER = (
+    """
+    WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
+    b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
+    dims AS (SELECT unnest(range(1, 65)) AS i),
+    -- init: the vectors of the 8 smallest base ids, cluster = rank order
+    -- (rank the 8 vectors FIRST, then expand dims — ranking after the dim
+    -- expansion would number all 512 (vec, dim) rows)
+    """
+    + _kmeans_init_sql(8)
+    + """, qnorm AS (
       SELECT q.vec_id,
              CASE WHEN sqrt(SUM(CAST(q.embedding[d.i] AS DOUBLE) * CAST(q.embedding[d.i] AS DOUBLE))) = 0
                   THEN 1
                   ELSE sqrt(SUM(CAST(q.embedding[d.i] AS DOUBLE) * CAST(q.embedding[d.i] AS DOUBLE))) END AS n
       FROM q, dims d GROUP BY q.vec_id
     )"""
+)
 
 _KM_ASSIGN = """
     , ba AS (
@@ -251,23 +255,9 @@ _KMEANS_IVF_ORACLE = (
       FROM qa JOIN ba USING (cluster)
       JOIN q ON q.vec_id = qa.query_id
       JOIN b ON b.vec_id = ba.neighbor_id
-    ), expanded AS (
-      SELECT query_id, neighbor_id, qv, bv, unnest(range(1, 65)) AS i FROM cand
-    ), dots AS (
-      SELECT query_id, neighbor_id,
-             CAST(SUM(CAST(CAST(qv[i] AS DOUBLE) * CAST(bv[i] AS DOUBLE) AS DECIMAL(25,15))) AS DOUBLE) AS dot,
-             CAST(SUM(CAST(CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE) AS DECIMAL(25,15))) AS DOUBLE) AS qn2,
-             CAST(SUM(CAST(CAST(bv[i] AS DOUBLE) * CAST(bv[i] AS DOUBLE) AS DECIMAL(25,15))) AS DOUBLE) AS bn2
-      FROM expanded GROUP BY query_id, neighbor_id
-    ), ranked AS (
-      SELECT query_id, neighbor_id,
-             round(dot / (sqrt(qn2) * sqrt(bn2)), 7) AS cos_sim,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY round(dot / (sqrt(qn2) * sqrt(bn2)), 7) DESC, neighbor_id) AS rank
-      FROM dots
-    )
-    SELECT query_id, neighbor_id, rank, cos_sim FROM ranked WHERE rank <= 5
-    """
+    ), """
+    + cosine_dots_sql("FROM cand")
+    + _RANKED_TOP5_SQL
 )
 
 
@@ -298,13 +288,7 @@ def embedding_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # calls over the same table reuse the centroids instead of re-running
     # two Lloyd collects per query — exactly how a production IVF serves
     # (train offline once, probe many times)
-    key = _model_key(sf_dir)
-    centroids = _KMEANS_MODELS.get(key)
-    if centroids is None:
-        from etl_poc_spark.operators.similarity import train_kmeans_centroids
-
-        centroids = train_kmeans_centroids(b, n_centroids=8, n_iters=2)
-        _KMEANS_MODELS[key] = centroids
+    centroids = _kmeans_centroids(sf_dir, b)
     return kmeans_ivf_topk(q, b, k=5, nprobe=3, centroids=centroids)
 
 
@@ -319,9 +303,6 @@ def embedding_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M = 16  # subspaces
 _PQ_SUB = 4  # dims per subspace (64 / 16)
 _PQ_K = 64  # codewords per subspace
-
-_PQ_MODELS: dict[tuple, list[list[list[float]]]] = _register_memo({})
-
 
 def _pq_sub_sql(s: int) -> str:
     """Unrolled per-subspace PQ training + encode as DuckDB CTEs: slice ->
@@ -446,20 +427,12 @@ def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     values, cosines, and ranks all match bit-for-bit. Compose with the
     trained coarse quantizer (embedding_kmeans_ivf_topk) for candidate
     pruning to get the full FAISS-style IVF-PQ at cluster scale."""
-    from etl_poc_spark.operators.similarity import (
-        pq_adc_topk,
-        pq_encode,
-        train_pq_codebooks,
-    )
+    from etl_poc_spark.operators.similarity import pq_adc_topk, pq_encode
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     b = emb.filter(F.col("vec_id") >= 10)
-    key = _model_key(sf_dir)
-    books = _PQ_MODELS.get(key)
-    if books is None:
-        books = train_pq_codebooks(b, m=_PQ_M, k=_PQ_K, n_iters=1)
-        _PQ_MODELS[key] = books
+    books = _pq_codebooks(sf_dir, b)
     codes = pq_encode(b, books)
     return pq_adc_topk(q, codes, books, k=5)
 
@@ -526,28 +499,17 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     b = emb.filter(F.col("vec_id") >= 10)
-    key = _model_key(sf_dir)
-    centroids = _KMEANS_MODELS.get(key)
-    if centroids is None:
-        from etl_poc_spark.operators.similarity import train_kmeans_centroids
-
-        centroids = train_kmeans_centroids(b, n_centroids=8, n_iters=2)
-        _KMEANS_MODELS[key] = centroids
-    books = _PQ_MODELS.get(key)
-    if books is None:
-        from etl_poc_spark.operators.similarity import train_pq_codebooks
-
-        books = train_pq_codebooks(b, m=_PQ_M, k=_PQ_K, n_iters=1)
-        _PQ_MODELS[key] = books
-    return ivfpq_topk(q, b, k=5, nprobe=3, centroids=centroids, codebooks=books)
+    return ivfpq_topk(
+        q,
+        b,
+        k=5,
+        nprobe=3,
+        centroids=_kmeans_centroids(sf_dir, b),
+        codebooks=_pq_codebooks(sf_dir, b),
+    )
 
 
 # --- SemDeDup: semantic dedup via cluster-bounded pairwise cosine ----------
-
-# trained-on-corpus quantizer cache (distinct from _KMEANS_MODELS: SemDeDup
-# trains on the duplicated corpus, not the base split); same data-fingerprint
-# key so regenerated testdata retrains
-_SEMDEDUP_MODELS: dict[tuple, list[list[float]]] = _register_memo({})
 
 _SEMDEDUP_K = 64  # coarse clusters: pair work is sum(c^2)/2 per cluster
 _SEMDEDUP_CLUSTER_CAP = 2000  # degenerate-cluster guard (inert at test SFs)
@@ -568,30 +530,15 @@ _SEMDEDUP_ORACLE = (
     WITH emb_d AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding
       FROM embeddings WHERE vec_id < {_SEMDEDUP_DEMO_CAP}
-    ), b AS ("""
-    + """
+    ), b AS (
       SELECT vec_id, embedding FROM emb_d
       UNION ALL
-      SELECT vec_id + 100000 AS vec_id, list_transform(embedding, x -> x * 1.5) AS embedding
+      SELECT vec_id + {PLANTED_ID_OFFSET} AS vec_id, list_transform(embedding, x -> x * 1.5) AS embedding
       FROM emb_d WHERE vec_id % 10 = 0
     ),
     dims AS (SELECT unnest(range(1, 65)) AS i),
-    ce0v AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cluster, embedding
-      FROM (SELECT vec_id, embedding FROM b ORDER BY vec_id LIMIT 64)
-    ), ce0 AS (
-      SELECT cluster, d.i, CAST(embedding[d.i] AS DOUBLE) AS c FROM ce0v, dims d
-    ), ce0_norm AS (
-      SELECT cluster,
-             CASE WHEN sqrt(SUM(c * c)) = 0 THEN 1 ELSE sqrt(SUM(c * c)) END AS n
-      FROM ce0 GROUP BY cluster
-    ), bnorm AS (
-      SELECT b.vec_id,
-             CASE WHEN sqrt(SUM(CAST(b.embedding[d.i] AS DOUBLE) * CAST(b.embedding[d.i] AS DOUBLE))) = 0
-                  THEN 1
-                  ELSE sqrt(SUM(CAST(b.embedding[d.i] AS DOUBLE) * CAST(b.embedding[d.i] AS DOUBLE))) END AS n
-      FROM b, dims d GROUP BY b.vec_id
-    )"""
+    """
+    + _kmeans_init_sql(64)
     + _lloyd_iter_sql(1, "ce0")
     + """
     , ba AS (
@@ -644,7 +591,7 @@ def _semdedup_corpus(
     spark: SparkSession, sf_dir: str, cap: int | None = None
 ) -> DataFrame:
     """Embeddings plus exact-direction duplicates: every vec_id % 10 == 0
-    vector reappears at vec_id + 100000 scaled by 1.5 — scaling preserves
+    vector reappears at vec_id + PLANTED_ID_OFFSET scaled by 1.5 — scaling preserves
     direction, so each copy has cosine 1.0 with its original (well above
     the 0.99 threshold) while the near-uniform synthetic vectors keep all
     OTHER pairs far below it.
@@ -659,7 +606,7 @@ def _semdedup_corpus(
     if cap is not None:
         emb = emb.filter(F.col("vec_id") < int(cap))
     dups = emb.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
+        (F.col("vec_id") + PLANTED_ID_OFFSET).alias("vec_id"),
         F.expr("transform(embedding, x -> x * CAST(1.5 AS DOUBLE))").alias("embedding"),
     )
     return emb.unionByName(dups)
@@ -688,7 +635,6 @@ def semdedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery, 64 centroids) + per-cluster self-join + the same decimal
     dot/norm arithmetic, so cluster ids, cosines, and drop flags all
     match bit-for-bit."""
-    from etl_poc_spark.operators.pins import pin
     from etl_poc_spark.operators.similarity import semdedup, train_kmeans_centroids
 
     # the corpus feeds MANY driver actions (training collects, broadcast
@@ -698,19 +644,45 @@ def semdedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel bit-for-bit against DuckDB at every scale; the production
     # configs below carry the scale posture on the full corpus.
     corpus = pin(_semdedup_corpus(spark, sf_dir, cap=_SEMDEDUP_DEMO_CAP))
-    key = _model_key(sf_dir)
-    centroids = _SEMDEDUP_MODELS.get(key)
-    if centroids is None:
-        centroids = train_kmeans_centroids(corpus, n_centroids=_SEMDEDUP_K, n_iters=1)
-        _SEMDEDUP_MODELS[key] = centroids
+    # trained on the duplicated corpus, not the base split: its own model
+    centroids = memo_model(
+        "semdedup",
+        _embeddings_path(sf_dir),
+        lambda: train_kmeans_centroids(corpus, n_centroids=_SEMDEDUP_K, n_iters=1),
+    )
     return semdedup(
         corpus, centroids, threshold=0.99, max_cluster_size=_SEMDEDUP_CLUSTER_CAP
     )
 
 
-# separate cache: the production path trains with the minibatch trainer at
-# adaptive k, a different model from the oracle-demo 64-centroid quantizer
-_SEMDEDUP_PROD_MODELS: dict[tuple, list[list[float]]] = _register_memo({})
+def _semdedup_production(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
+    """SemDeDup in its production configuration over the full duplicated
+    corpus: adaptive k (n/200) trained by the minibatch trainer — a
+    different model from the oracle-demo 64-centroid quantizer, shared by
+    the three production queries — and the float pair verify. `kwargs`
+    pick the assignment path (`semdedup`'s `assign`,
+    `probe_superclusters`)."""
+    from etl_poc_spark.operators.similarity import (
+        auto_centroids,
+        semdedup,
+        train_kmeans_centroids_minibatch,
+    )
+
+    corpus = pin(_semdedup_corpus(spark, sf_dir))
+
+    def train() -> list[list[float]]:
+        k = auto_centroids(corpus.count(), target_cluster_size=200)
+        return train_kmeans_centroids_minibatch(corpus, n_centroids=k, n_iters=4)
+
+    centroids = memo_model("semdedup_prod", _embeddings_path(sf_dir), train)
+    return semdedup(
+        corpus,
+        centroids,
+        threshold=0.99,
+        max_cluster_size=_SEMDEDUP_CLUSTER_CAP,
+        verify="float",
+        **kwargs,
+    )
 
 
 @query("semdedup_flags_adaptive_float")
@@ -736,27 +708,7 @@ def semdedup_flags_adaptive_float(spark: SparkSession, sf_dir: str) -> DataFrame
     per-row float dot), so the output is pinned-exact: gen_pins.py
     verifies bit-stability under the adversarial session and the gate
     value-checks it. Flag parity with the exact path is pytest-pinned."""
-    from etl_poc_spark.operators.pins import pin
-    from etl_poc_spark.operators.similarity import (
-        auto_centroids,
-        semdedup,
-        train_kmeans_centroids_minibatch,
-    )
-
-    corpus = pin(_semdedup_corpus(spark, sf_dir))
-    key = _model_key(sf_dir)
-    centroids = _SEMDEDUP_PROD_MODELS.get(key)
-    if centroids is None:
-        k = auto_centroids(corpus.count(), target_cluster_size=200)
-        centroids = train_kmeans_centroids_minibatch(corpus, n_centroids=k, n_iters=4)
-        _SEMDEDUP_PROD_MODELS[key] = centroids
-    return semdedup(
-        corpus,
-        centroids,
-        threshold=0.99,
-        max_cluster_size=_SEMDEDUP_CLUSTER_CAP,
-        verify="float",
-    )
+    return _semdedup_production(spark, sf_dir)
 
 
 @query("semdedup_flags_adaptive_two_level")
@@ -765,35 +717,14 @@ def semdedup_flags_adaptive_two_level(spark: SparkSession, sf_dir: str) -> DataF
     the configuration a 100-TB run would use once auto_centroids makes
     the flat O(n·k) assignment matmul the dominant phase (measured:
     SCALING.md r11, 10x faster at 100x). Same trained minibatch
-    quantizer as `semdedup_flags_adaptive_float` (shared model cache);
+    quantizer as `semdedup_flags_adaptive_float` (shared model memo);
     only the assignment path differs: vectors probe ~sqrt(k)
     super-centroids and argmax over their members. Deterministic
     end-to-end (stable super-quantization of the KB-sized model,
     first-max tie-breaks at both levels, grouped float verify), so the
     output is pinned-exact like its flat sibling; flag parity with flat
     is pytest-pinned on the planted-duplicate corpus."""
-    from etl_poc_spark.operators.pins import pin
-    from etl_poc_spark.operators.similarity import (
-        auto_centroids,
-        semdedup,
-        train_kmeans_centroids_minibatch,
-    )
-
-    corpus = pin(_semdedup_corpus(spark, sf_dir))
-    key = _model_key(sf_dir)
-    centroids = _SEMDEDUP_PROD_MODELS.get(key)
-    if centroids is None:
-        k = auto_centroids(corpus.count(), target_cluster_size=200)
-        centroids = train_kmeans_centroids_minibatch(corpus, n_centroids=k, n_iters=4)
-        _SEMDEDUP_PROD_MODELS[key] = centroids
-    return semdedup(
-        corpus,
-        centroids,
-        threshold=0.99,
-        max_cluster_size=_SEMDEDUP_CLUSTER_CAP,
-        verify="float",
-        assign="two_level",
-    )
+    return _semdedup_production(spark, sf_dir, assign="two_level")
 
 
 @query("semdedup_flags_two_level_p2")
@@ -804,55 +735,38 @@ def semdedup_flags_two_level_p2(spark: SparkSession, sf_dir: str) -> DataFrame:
     of w; cost ~(√k + w·√k) dots/vector, so w=2 is ~3√k). Pinned-exact
     like its siblings: every stage is deterministic, only the probe
     fan-out differs."""
-    from etl_poc_spark.operators.pins import pin
-    from etl_poc_spark.operators.similarity import (
-        auto_centroids,
-        semdedup,
-        train_kmeans_centroids_minibatch,
+    return _semdedup_production(
+        spark, sf_dir, assign="two_level", probe_superclusters=2
     )
 
-    corpus = pin(_semdedup_corpus(spark, sf_dir))
-    key = _model_key(sf_dir)
-    centroids = _SEMDEDUP_PROD_MODELS.get(key)
-    if centroids is None:
-        k = auto_centroids(corpus.count(), target_cluster_size=200)
-        centroids = train_kmeans_centroids_minibatch(corpus, n_centroids=k, n_iters=4)
-        _SEMDEDUP_PROD_MODELS[key] = centroids
-    return semdedup(
-        corpus,
-        centroids,
-        threshold=0.99,
-        max_cluster_size=_SEMDEDUP_CLUSTER_CAP,
-        verify="float",
-        assign="two_level",
-        probe_superclusters=2,
-    )
+
+# SQ8 quantizer: per-dim min/max of the base side `b`, and the uint8 code
+# of `t.v` against the bounds `s` of its dim
+_SQ8_STATS_SQL = """stats AS (
+      SELECT i, MIN(CAST(v AS DOUBLE)) AS mn, MAX(CAST(v AS DOUBLE)) AS mx
+      FROM (SELECT unnest(embedding) AS v, unnest(range(1, 65)) AS i FROM b)
+      GROUP BY i
+    )"""
+_SQ8_CODE_SQL = """CASE WHEN s.mx > s.mn THEN LEAST(255, GREATEST(0,
+               CAST(FLOOR((CAST(t.v AS DOUBLE) - s.mn) * CAST(255 AS DOUBLE)
+                          / (s.mx - s.mn)) AS INTEGER)))
+             ELSE 0 END AS c"""
 
 
 @query(
     "embedding_sq8_topk",
-    oracle="""
+    oracle=f"""
     WITH b AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 4),
     q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 4),
-    stats AS (
-      SELECT i, MIN(CAST(v AS DOUBLE)) AS mn, MAX(CAST(v AS DOUBLE)) AS mx
-      FROM (SELECT unnest(embedding) AS v, unnest(range(1, 65)) AS i FROM b)
-      GROUP BY i
-    ), bz AS (
+    {_SQ8_STATS_SQL}, bz AS (
       SELECT t.vec_id, t.i,
-             CASE WHEN s.mx > s.mn THEN LEAST(255, GREATEST(0,
-               CAST(FLOOR((CAST(t.v AS DOUBLE) - s.mn) * CAST(255 AS DOUBLE)
-                          / (s.mx - s.mn)) AS INTEGER)))
-             ELSE 0 END AS c
+             {_SQ8_CODE_SQL}
       FROM (SELECT vec_id, unnest(embedding) AS v, unnest(range(1, 65)) AS i
             FROM b) t
       JOIN stats s USING (i)
     ), qz AS (
       SELECT t.vec_id, t.i,
-             CASE WHEN s.mx > s.mn THEN LEAST(255, GREATEST(0,
-               CAST(FLOOR((CAST(t.v AS DOUBLE) - s.mn) * CAST(255 AS DOUBLE)
-                          / (s.mx - s.mn)) AS INTEGER)))
-             ELSE 0 END AS c
+             {_SQ8_CODE_SQL}
       FROM (SELECT vec_id, unnest(embedding) AS v, unnest(range(1, 65)) AS i
             FROM q) t
       JOIN stats s USING (i)
@@ -888,38 +802,19 @@ def embedding_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_ivf_sq8_topk",
-    oracle="""
-    WITH tagged AS (
-      SELECT vec_id, embedding,
-             (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END ||
-              CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END ||
-              CASE WHEN embedding[3] >= 0 THEN '1' ELSE '0' END ||
-              CASE WHEN embedding[4] >= 0 THEN '1' ELSE '0' END ||
-              CASE WHEN embedding[5] >= 0 THEN '1' ELSE '0' END ||
-              CASE WHEN embedding[6] >= 0 THEN '1' ELSE '0' END) AS bucket
-      FROM embeddings
-    ),
+    oracle=SIGN_TAGGED_CTE
+    + f""",
     b AS (SELECT vec_id, embedding, bucket FROM tagged WHERE vec_id >= 10),
     q AS (SELECT vec_id, embedding, bucket FROM tagged WHERE vec_id < 10),
-    stats AS (
-      SELECT i, MIN(CAST(v AS DOUBLE)) AS mn, MAX(CAST(v AS DOUBLE)) AS mx
-      FROM (SELECT unnest(embedding) AS v, unnest(range(1, 65)) AS i FROM b)
-      GROUP BY i
-    ), bz AS (
+    {_SQ8_STATS_SQL}, bz AS (
       SELECT t.vec_id, t.bucket, t.i,
-             CASE WHEN s.mx > s.mn THEN LEAST(255, GREATEST(0,
-               CAST(FLOOR((CAST(t.v AS DOUBLE) - s.mn) * CAST(255 AS DOUBLE)
-                          / (s.mx - s.mn)) AS INTEGER)))
-             ELSE 0 END AS c
+             {_SQ8_CODE_SQL}
       FROM (SELECT vec_id, bucket, unnest(embedding) AS v,
                    unnest(range(1, 65)) AS i FROM b) t
       JOIN stats s USING (i)
     ), qz AS (
       SELECT t.vec_id, t.bucket, t.i,
-             CASE WHEN s.mx > s.mn THEN LEAST(255, GREATEST(0,
-               CAST(FLOOR((CAST(t.v AS DOUBLE) - s.mn) * CAST(255 AS DOUBLE)
-                          / (s.mx - s.mn)) AS INTEGER)))
-             ELSE 0 END AS c
+             {_SQ8_CODE_SQL}
       FROM (SELECT vec_id, bucket, unnest(embedding) AS v,
                    unnest(range(1, 65)) AS i FROM q) t
       JOIN stats s USING (i)

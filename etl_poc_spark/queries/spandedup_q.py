@@ -180,9 +180,15 @@ def doc_self_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "duplicate_span_removal_stats",
-    oracle=f"""
+def _span_intervals_sql(keep_first: bool) -> str:
+    """The span-removal CTE chain over the documents table: d (tokens), w
+    (window hashes), dup (hashes in >= 2 docs), fl/isl (island starts and
+    ids of each doc's duplicated windows) and ivs (merged token intervals
+    [s, e) to remove). With `keep_first` the smallest doc_id holding a
+    hash keeps its copy."""
+    first_id = ", MIN(doc_id) AS first_id" if keep_first else ""
+    not_first = "\n      WHERE w.doc_id <> dup.first_id" if keep_first else ""
+    return f"""
     WITH d AS (
       SELECT doc_id, source,
              list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '') AS arr
@@ -193,21 +199,27 @@ def doc_self_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM d, LATERAL unnest(range(len(arr) - {_W - 1})) AS t(i)
       WHERE len(arr) >= {_W}
     ), dup AS (
-      SELECT h FROM w GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
+      SELECT h{first_id} FROM w GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
     ), fl AS (
       SELECT w.doc_id, start,
              CASE WHEN lag(start) OVER (PARTITION BY w.doc_id ORDER BY start) IS NULL
                   THEN 1
                   WHEN start - lag(start) OVER (PARTITION BY w.doc_id ORDER BY start) > {_W}
                   THEN 1 ELSE 0 END AS ni
-      FROM w JOIN dup USING (h)
+      FROM w JOIN dup USING (h){not_first}
     ), isl AS (
       SELECT doc_id, start, SUM(ni) OVER (PARTITION BY doc_id ORDER BY start) AS g
       FROM fl
     ), ivs AS (
       SELECT doc_id, g, MIN(start) AS s, MAX(start) + {_W} AS e
       FROM isl GROUP BY doc_id, g
-    ), toks AS (
+    )"""
+
+
+@query(
+    "duplicate_span_removal_stats",
+    oracle=_span_intervals_sql(keep_first=False)
+    + """, toks AS (
       SELECT d.doc_id, t.i AS pos, d.arr[t.i + 1] AS tok
       FROM d, LATERAL unnest(range(len(d.arr))) AS t(i)
     ), kept AS (
@@ -271,34 +283,8 @@ def duplicate_span_removal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "duplicate_span_removal_keep_first_stats",
-    oracle=f"""
-    WITH d AS (
-      SELECT doc_id, source,
-             list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '') AS arr
-      FROM documents
-    ), w AS (
-      SELECT doc_id, i AS start,
-             md5(lower(array_to_string(arr[i+1:i+{_W}], ' '))) AS h
-      FROM d, LATERAL unnest(range(len(arr) - {_W - 1})) AS t(i)
-      WHERE len(arr) >= {_W}
-    ), dup AS (
-      SELECT h, MIN(doc_id) AS first_id FROM w
-      GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
-    ), fl AS (
-      SELECT w.doc_id, start,
-             CASE WHEN lag(start) OVER (PARTITION BY w.doc_id ORDER BY start) IS NULL
-                  THEN 1
-                  WHEN start - lag(start) OVER (PARTITION BY w.doc_id ORDER BY start) > {_W}
-                  THEN 1 ELSE 0 END AS ni
-      FROM w JOIN dup USING (h)
-      WHERE w.doc_id <> dup.first_id
-    ), isl AS (
-      SELECT doc_id, start, SUM(ni) OVER (PARTITION BY doc_id ORDER BY start) AS g
-      FROM fl
-    ), ivs AS (
-      SELECT doc_id, g, MIN(start) AS s, MAX(start) + {_W} AS e
-      FROM isl GROUP BY doc_id, g
-    ), rb AS (
+    oracle=_span_intervals_sql(keep_first=True)
+    + """, rb AS (
       SELECT d.doc_id, d.source, len(d.arr) AS n_tokens,
              COALESCE(r.n_removed, 0) AS removed_tokens
       FROM d

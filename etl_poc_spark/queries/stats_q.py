@@ -1,7 +1,7 @@
 """Round-10 statistics tier: categorical-association tests and
 higher-order sequence motifs — the profiling/experimentation workloads
 that sit beside the A/B z-test + CUPED and the KS statistic
-(queries/behavior_q.py, behavior2_q.py).
+(queries/behavior_q.py).
 
 Oracle-exactness discipline: every statistic is built from exact BIGINT
 contingency counts; the only floating step is a single division whose

@@ -1,7 +1,9 @@
 """Temporal join queries: as-of join and range join over the TPC-H-ish
 tables — operators Spark's API lacks as primitives, expressed Spark-first
 (union + window for as-of; broadcast non-equi join for ranges) with exact
-DuckDB oracles (ASOF JOIN / BETWEEN join).
+DuckDB oracles (ASOF JOIN / BETWEEN join) — plus the purchase-feature
+as-of queries: the last purchase before each event (plain and hot-key
+bucketed) and the time to the next one (forward direction).
 """
 
 from __future__ import annotations
@@ -10,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_poc_spark.io import load_table
-from etl_poc_spark.operators.temporal import asof_join
+from etl_poc_spark.operators.temporal import asof_join, asof_join_bucketed
 from etl_poc_spark.registry import query
 
 
@@ -131,4 +133,186 @@ def events_asof_next_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("asof_error_event_id"),
         (F.unix_micros(F.col("asof_error_ts")) - F.unix_micros(F.col("ts"))).alias("gap_us"),
+    )
+
+
+_ASOF_LAST_PURCHASE_ORACLE = """
+    WITH u AS (
+      SELECT user_id, ts, 0 AS is_left, event_id AS tb,
+             CAST(NULL AS VARCHAR) AS etype,
+             ts AS rts, CAST(value AS DECIMAL(18,2)) AS rval
+      FROM events WHERE event_type = 'purchase'
+      UNION ALL
+      SELECT user_id, ts, 1, NULL, event_type, NULL, NULL
+      FROM events WHERE event_type <> 'purchase'
+    ), c AS (
+      SELECT etype, ts, is_left,
+             last_value(rts IGNORE NULLS) OVER w AS mts,
+             last_value(rval IGNORE NULLS) OVER w AS mval
+      FROM u
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, is_left, tb
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+    ), m AS (
+      SELECT etype,
+             CASE WHEN mts IS NOT NULL
+                   AND epoch_us(ts) - epoch_us(mts) <= 604800000000
+                  THEN mval END AS v,
+             CASE WHEN mts IS NOT NULL
+                   AND epoch_us(ts) - epoch_us(mts) <= 604800000000
+                  THEN epoch_us(ts) - epoch_us(mts) END AS gap_us
+      FROM c WHERE is_left = 1
+    )
+    SELECT etype AS event_type,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(COUNT(v) AS BIGINT) AS n_matched,
+           CAST(SUM(v) AS DOUBLE) AS matched_value,
+           round(CAST(SUM(gap_us) AS DOUBLE)
+                 / (CAST(COUNT(v) AS DOUBLE) * 1000000.0), 9) AS avg_gap_seconds
+    FROM m GROUP BY etype ORDER BY etype
+    """
+
+
+def _asof_last_purchase(
+    spark: SparkSession, sf_dir: str, bucket_seconds: int | None = None
+) -> DataFrame:
+    e = load_table(spark, sf_dir, "events")
+    purchases = e.where(F.col("event_type") == "purchase").select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.col("value").cast("decimal(18,2)").alias("purchase_value"),
+    )
+    touches = e.where(F.col("event_type") != "purchase").select(
+        "user_id", "ts", "event_type"
+    )
+    kwargs = dict(
+        by=["user_id"],
+        left_ts="ts",
+        right_ts="ts",
+        right_cols=["purchase_value"],
+        tolerance_seconds=7 * 86400,
+        tiebreak_cols=["event_id"],
+        include_matched_ts=True,
+    )
+    if bucket_seconds is None:
+        joined = asof_join(touches, purchases, **kwargs)
+    else:
+        joined = asof_join_bucketed(
+            touches, purchases, bucket_seconds=bucket_seconds, **kwargs
+        )
+    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.col("asof_matched_ts"))
+    m = joined.select(
+        "event_type",
+        F.col("asof_purchase_value").alias("v"),
+        F.when(F.col("asof_purchase_value").isNotNull(), gap_us).alias("gap_us"),
+    )
+    return (
+        m.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.count("v").alias("n_matched"),
+            F.sum("v").cast("double").alias("matched_value"),
+            F.round(
+                F.sum("gap_us").cast("double")
+                / (F.count("v").cast("double") * F.lit(1000000.0)),
+                9,
+            ).alias("avg_gap_seconds"),
+        )
+    )
+
+
+@query("events_asof_last_purchase", oracle=_ASOF_LAST_PURCHASE_ORACLE)
+def events_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Backward as-of join (operators/temporal.py): every non-purchase event
+    gets the value of the user's most recent purchase at-or-before it,
+    within a 7-day tolerance — the feature-engineering join every
+    behavioral model wants ("context at event time"). The plan is ONE
+    user shuffle (union-window carry, no interval theta-join); tolerance
+    is a free post-filter in integer microseconds. The oracle mirrors the
+    exact union-window ordering (ts, is_left, event_id tiebreak)."""
+    return _asof_last_purchase(spark, sf_dir)
+
+
+@query("events_asof_last_purchase_bucketed", oracle=_ASOF_LAST_PURCHASE_ORACLE)
+def events_asof_last_purchase_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SAME as-of semantics through the hot-key-safe bucketed form
+    (operators/temporal.py::asof_join_bucketed, bucket_seconds=86400):
+    per-(user, day) windows plus a bucket-granular carry, so one whale
+    user cannot serialize a task (straggler measurements: SCALING.md r11,
+    SCALE_SMOKE_r11.json). Sharing the plain query's oracle IS the
+    point — the mitigation is results-identical by construction, and
+    this row makes that an engine-vs-DuckDB gate check rather than only
+    a pytest property."""
+    return _asof_last_purchase(spark, sf_dir, bucket_seconds=86400)
+
+
+@query(
+    "events_time_to_next_purchase",
+    oracle="""
+    WITH u AS (
+      SELECT user_id, ts, 0 AS is_right, event_id AS tb,
+             CAST(NULL AS VARCHAR) AS etype, ts AS rts
+      FROM events WHERE event_type = 'purchase'
+      UNION ALL
+      SELECT user_id, ts, 1, NULL, event_type, NULL
+      FROM events WHERE event_type <> 'purchase'
+    ), c AS (
+      SELECT etype, ts, is_right,
+             first_value(rts IGNORE NULLS) OVER w AS mts
+      FROM u
+      WINDOW w AS (PARTITION BY user_id
+                   ORDER BY ts, (1 - is_right), tb
+                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+    ), m AS (
+      SELECT etype, epoch_us(mts) - epoch_us(ts) AS gap_us
+      FROM c WHERE is_right = 1
+    )
+    SELECT etype AS event_type,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(COUNT(gap_us) AS BIGINT) AS n_converted,
+           round(CAST(SUM(gap_us) AS DOUBLE)
+                 / (CAST(COUNT(gap_us) AS DOUBLE) * 1000000.0), 9)
+             AS avg_seconds_to_purchase
+    FROM m GROUP BY etype ORDER BY etype
+    """,
+)
+def events_time_to_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FORWARD as-of join (the direction the backward query doesn't
+    cover): each non-purchase event gets the user's NEXT purchase at-or-
+    after it — time-to-conversion, the latency readout behind every
+    conversion-window choice. Same single union-window plan, frame
+    flipped to look ahead; the oracle mirrors it with first_value IGNORE
+    NULLS over the following frame. Unconverted touches (no later
+    purchase) count in n_events but not n_converted."""
+    e = load_table(spark, sf_dir, "events")
+    purchases = e.where(F.col("event_type") == "purchase").select(
+        "user_id", "ts", "event_id"
+    )
+    touches = e.where(F.col("event_type") != "purchase").select(
+        "user_id", "ts", "event_type"
+    )
+    joined = asof_join(
+        touches,
+        purchases,
+        by=["user_id"],
+        left_ts="ts",
+        right_ts="ts",
+        right_cols=[],
+        direction="forward",
+        tiebreak_cols=["event_id"],
+        include_matched_ts=True,
+    )
+    gap_us = F.unix_micros(F.col("asof_matched_ts")) - F.unix_micros(F.col("ts"))
+    return (
+        joined.select("event_type", gap_us.alias("gap_us"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.count("gap_us").alias("n_converted"),
+            F.round(
+                F.sum("gap_us").cast("double")
+                / (F.count("gap_us").cast("double") * F.lit(1000000.0)),
+                9,
+            ).alias("avg_seconds_to_purchase"),
+        )
     )

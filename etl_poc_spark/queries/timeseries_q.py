@@ -23,6 +23,15 @@ _DAILY_SQL = """
       GROUP BY 1, 2
 """
 
+# daily plus each segment's dense day spine between its first and last day
+_DAILY_SPINE_SQL = f"""WITH daily AS ({_DAILY_SQL}),
+    bounds AS (
+      SELECT segment, MIN(day) AS d0, MAX(day) AS d1 FROM daily GROUP BY segment
+    ), spine AS (
+      SELECT segment, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
+      FROM bounds
+    )"""
+
 
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -43,13 +52,7 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "segment_daily_gapfill",
     oracle=f"""
-    WITH daily AS ({_DAILY_SQL}),
-    bounds AS (
-      SELECT segment, MIN(day) AS d0, MAX(day) AS d1 FROM daily GROUP BY segment
-    ), spine AS (
-      SELECT segment, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-      FROM bounds
-    )
+    {_DAILY_SPINE_SQL}
     SELECT s.segment, s.day,
            COALESCE(d.n_orders, 0) AS n_orders,
            CAST(COALESCE(d.rev_dec, 0) AS DOUBLE) AS revenue,
@@ -130,13 +133,7 @@ def segment_rolling_7day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "segment_daily_interpolate",
     oracle=f"""
-    WITH daily AS ({_DAILY_SQL}),
-    bounds AS (
-      SELECT segment, MIN(day) AS d0, MAX(day) AS d1 FROM daily GROUP BY segment
-    ), spine AS (
-      SELECT segment, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-      FROM bounds
-    ), dense AS (
+    {_DAILY_SPINE_SQL}, dense AS (
       SELECT s.segment, s.day,
              CAST(d.rev_dec AS DOUBLE) / d.n_orders AS avg_price,
              s.day - DATE '1970-01-01' AS di

@@ -25,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_poc_spark.io import load_table
+from etl_poc_spark.io import load_table, table_path
+from etl_poc_spark.operators.pins import memo_model
 from etl_poc_spark.registry import query
 
 # shared split: whitespace tokens of the trimmed body (same idiom as
@@ -258,37 +259,18 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# trained-merge-list cache: training is deterministic (exact integer
-# counts, lexicographic tie-break), keyed by a mtime+size fingerprint of
-# the documents parquet (the similarity_q.py centroid-cache pattern) so a
-# long-lived process retrains when the table regenerates
-from etl_poc_spark.operators.pins import register_memo as _register_memo
-
-_BPE_MODELS: dict[tuple, list[tuple[str, str, int]]] = _register_memo({})
-
-
-def _bpe_key(sf_dir: str) -> tuple:
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(path)
-        return (sf_dir, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (sf_dir,)
-
-
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int]]:
+    """The 8-merge BPE model, trained once per documents-table version
+    (pins.memo_model): training is deterministic (exact integer counts,
+    lexicographic tie-break), so the reuse is exact."""
     from etl_poc_spark.operators.bpe import train_bpe
 
-    key = _bpe_key(sf_dir)
-    merges = _BPE_MODELS.get(key)
-    if merges is None:
+    def train() -> list[tuple[str, str, int]]:
         d = load_table(spark, sf_dir, "documents")
         w = d.select(F.explode(_words()).alias("word"))
-        merges, _ = train_bpe(w, n_merges=8)
-        _BPE_MODELS[key] = merges
-    return merges
+        return train_bpe(w, n_merges=8)[0]
+
+    return memo_model("bpe", table_path(sf_dir, "documents"), train)
 
 
 @query("bpe_trained_merges")  # no oracle: iterative training loop (the

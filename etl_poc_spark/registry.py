@@ -44,19 +44,16 @@ def load_all() -> None:
     the committed `tools/check_oracle.py` gate log, which runs every query."""
     from etl_poc_spark.queries import (  # noqa: F401
         analytics_q,
-        behavior2_q,
         behavior_q,
         bloom_q,
         curation_q,
         dates_q,
-        dedup2_q,
         dedup_q,
         diff_q,
         documents_q,
         dsir_q,
         events_q,
         expectations_q,
-        extra_q,
         graph_q,
         layout_q,
         linededup_q,
@@ -66,11 +63,7 @@ def load_all() -> None:
         pipeline_q,
         pivot_q,
         profile_q,
-        relational,
-        relational2_q,
-        relational3_q,
-        relational4_q,
-        relational5_q,
+        relational_q,
         scd_q,
         similarity_q,
         spandedup_q,

@@ -17,13 +17,15 @@ import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "etl_poc_spark"
-SCANNED = (PACKAGE, "tools", "perfbench")
+SCANNED = (PACKAGE, "tools", "perfbench", "bench.py", "__spark_entry__.py")
 
 
 def _package_imports():
     """(file:line, module, name-or-None) for every import of the package."""
     for top in SCANNED:
-        for d, _dirs, files in os.walk(os.path.join(REPO, top)):
+        root = os.path.join(REPO, top)
+        walk = [(REPO, [], [top])] if os.path.isfile(root) else os.walk(root)
+        for d, _dirs, files in walk:
             for f in sorted(files):
                 if not f.endswith(".py"):
                     continue

@@ -20,11 +20,12 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import resource
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.trace import tree_peak_rss_bytes  # noqa: E402
 
 SMOKE_QUERIES = [
     "supplier_pagerank",
@@ -499,30 +500,11 @@ def span_hot_hash_measure(
     return out
 
 
-def _jvm_peak_rss_mb() -> int | None:
-    """Peak RSS (VmHWM) of the local-mode JVM — the number that actually
-    bounds whether a stage fits, since executors live inside it. Scans
-    /proc for the largest java process (the driver's child gateway)."""
-    best = None
-    try:
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit():
-                continue
-            try:
-                with open(f"/proc/{pid}/comm") as fh:
-                    if fh.read().strip() != "java":
-                        continue
-                with open(f"/proc/{pid}/status") as fh:
-                    for line in fh:
-                        if line.startswith("VmHWM:"):
-                            kb = int(line.split()[1])
-                            best = max(best or 0, kb // 1024)
-                            break
-            except OSError:
-                continue
-    except OSError:
-        return None
-    return best
+def _peak_rss_mb() -> int:
+    """Peak RSS of this process tree (the Spark JVM, Python daemon and
+    workers) — perfbench's `peak_rss_mb`, so no other process on the
+    host is counted."""
+    return tree_peak_rss_bytes(os.getpid()) // (1024 * 1024)
 
 
 def main() -> int:
@@ -583,9 +565,7 @@ def main() -> int:
             build_embeddings_jittered(spark, args.src, args.scratch, args.copies)
         report = semdedup_phase_split(spark, args.scratch)
         report["copies"] = args.copies
-        report["jvm_peak_rss_mb"] = _jvm_peak_rss_mb() or (
-            resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
-        )
+        report["peak_rss_mb"] = _peak_rss_mb()
         print(json.dumps({"semdedup_realistic_phase_split": report}))
         return 0
     if not args.skip_build:
@@ -687,10 +667,7 @@ def main() -> int:
         finally:
             release_pins()
             spark.catalog.clearCache()
-        peak_mb = _jvm_peak_rss_mb() or (
-            resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
-        )
-        row = {"query": name, "seconds": sec, "jvm_peak_rss_mb": peak_mb}
+        row = {"query": name, "seconds": sec, "peak_rss_mb": _peak_rss_mb()}
         if err:
             row["err"] = err
         results[name] = row
